@@ -24,6 +24,8 @@ import argparse
 
 from pyspark.sql import SparkSession
 
+from tika_spark.config import MODES
+
 
 def main(argv=None):
     p = argparse.ArgumentParser(description=__doc__)
@@ -31,9 +33,7 @@ def main(argv=None):
                    help="pages table path, or a .warc.gz glob with "
                         "--format warc")
     p.add_argument("--output", required=True)
-    p.add_argument("--mode", default="text-main",
-                   choices=["text", "text-main", "metadata", "xhtml",
-                            "detect", "language", "xmp", "json"])
+    p.add_argument("--mode", default="text-main", choices=MODES)
     p.add_argument("--format", default="parquet",
                    choices=["parquet", "warc"])
     p.add_argument("--buckets", type=int, default=256,

@@ -208,9 +208,15 @@ class TestBoilerpipe:
 class TestGuards:
     def test_output_ratio_guard(self):
         # tiny input expanding hugely cannot happen in html (no decompress),
-        # so exercise via write_limit instead
+        # so exercise via write_limit instead; the guard runs in
+        # process_batch, over whichever route extracted the page
+        import pandas as pd
+
+        from tika_spark.pipeline.stages import process_batch
         page = b"<html><body><p>" + b"word " * 50_000 + b"</p></body></html>"
-        r = extract_html(page, config=ExtractConfig(write_limit=1000))
+        r = process_batch(pd.DataFrame({"url": ["doc://p.html"],
+                                        "html": [page]}),
+                          ExtractConfig(write_limit=1000)).iloc[0]
         assert r["status"] == "write_limit"
         assert len(r["text"]) == 1000
 

@@ -566,13 +566,18 @@ class TestPdfHardening:
         assert doc.page_content(page) == payload
 
     def test_spans_clamped_after_write_limit(self):
+        import pandas as pd
+
         from tika_spark.config import ExtractConfig
-        from tika_spark.pdf.parser import extract_pdf
+        from tika_spark.pipeline.stages import process_batch
         pdf = make_pdf(["A much longer page text here"], title="T")
-        r = extract_pdf(pdf, config=ExtractConfig(mode="text",
-                                                  write_limit=5))
+        r = process_batch(pd.DataFrame({"url": ["doc://d.pdf"],
+                                        "html": [pdf]}),
+                          ExtractConfig(mode="text",
+                                        write_limit=5)).iloc[0]
         assert r["status"] == "write_limit" and len(r["text"]) == 5
-        for s, e, _ in r["spans"]:
+        for span in r["spans"]:
+            s, e = span["start"], span["end"]
             assert s < len(r["text"]) and e <= len(r["text"])
 
 

@@ -331,6 +331,20 @@ class TestInputByteCap:
         out = extract(df, mode="text", config=cfg)
         return {r["url"]: r for r in out.collect()}
 
+    def test_lineage_counts_capped_rows(self, spark):
+        rows = [("u:big", bytearray(b"<html><body>" + b"<p>word</p>" * 200
+                                    + b"</body></html>")),
+                ("u:long", bytearray(b"<p>well over the write limit of "
+                                     b"twenty chars</p>")),
+                ("u:ok", bytearray(b"<p>ok</p>"))]
+        df = spark.createDataFrame(rows, "url string, html binary")
+        out = extract(df, config=ExtractConfig(max_input_bytes=1000,
+                                               write_limit=20))
+        assert dict(out.select("url", "status").collect()) == {
+            "u:big": "input_capped", "u:long": "write_limit", "u:ok": "ok"}
+        lin = lineage_manifest(out).agg(F.sum("n_rows"), F.sum("n_capped"))
+        assert tuple(lin.collect()[0]) == (3, 2)
+
     def test_html_prefix_parse_and_flag(self, spark):
         body = ("<html><head><title>T</title></head><body>"
                 + "<p>word </p>" * 400 + "</body></html>")
@@ -360,3 +374,25 @@ class TestInputByteCap:
         body = b"<html><body><p>" + b"w " * 2000 + b"</p></body></html>"
         got = self._run(spark, [("u:h", bytearray(body))], cap=0)
         assert got["u:h"]["status"] == "ok"
+
+
+class TestConfigMode:
+    """``config.mode`` reaches the parse stage when no ``mode`` is
+    passed, through extract and through the runner."""
+
+    def test_extract_and_runner_honour_config_mode(self, spark, pages,
+                                                    tmp_path):
+        cfg = ExtractConfig(mode="text-main")
+        boiler = (pages.filter(F.col("source") == "html_boiler")
+                  .select("url", "html"))
+        goldens = {g["url"]: g["text_main"] for g in _main_goldens()}
+        got = {r["url"]: r["text"]
+               for r in extract(boiler, config=cfg).collect()}
+        assert got and got == {u: goldens[u] for u in got}
+        inp = str(tmp_path / "boiler.parquet")
+        boiler.write.parquet(inp)
+        out = str(tmp_path / "out")
+        run(spark, inp, out, n_buckets=2, group_size=2, config=cfg,
+            verbose=False)
+        ran = spark.read.parquet(out + "/data").select("url", "text")
+        assert {r["url"]: r["text"] for r in ran.collect()} == got

@@ -892,7 +892,9 @@ class TestIWorkHardening:
         assert r["text"] == "c1\tc2\tc3\nc4\n"  # c4 not dropped
 
     def test_iwork_zip_bomb_capped(self):
-        from tika_spark.pkg.iwork import extract_iwork
+        import pandas as pd
+
+        from tika_spark.pipeline.stages import process_batch
         big = "<sf:p>" + ("x " * 2_000_000) + "</sf:p>"
         xml = ('<?xml version="1.0"?><sl:document xmlns:sl='
                '"http://developer.apple.com/namespaces/sl" xmlns:sf='
@@ -902,7 +904,9 @@ class TestIWorkHardening:
         blob = self._zip({"buildVersionHistory.plist": "<plist/>",
                           "index.xml": xml})
         assert len(blob) < 100_000  # it really is a bomb
-        r = extract_iwork(blob)
+        r = process_batch(pd.DataFrame({"url": ["bomb.pages"],
+                                        "html": [blob]}),
+                          ExtractConfig()).iloc[0]
         assert r["status"] == "output_limit"
         assert len(r["text"]) <= 1_000_000
 

@@ -28,13 +28,13 @@ Decode tiers:
    demux in :mod:`tika_spark.analysis.mpegvideo`, and H.264/AVC
    intra (I-slice CAVLC) in :mod:`tika_spark.analysis.h264` plus
    motion-compensated P slices in
-   :mod:`tika_spark.analysis.h264inter`, across its three
-   containers (MP4 avc1, MPEG-TS stream_type 0x1B, FLV codec 7) —
-   all pure Python+numpy, with exact micro-unit stats and
-   deterministic resize on top. Remaining codecs (Opus audio,
-   B-slice/CABAC H.264, H.265) need libraries this container
-   lacks; for those ``real_decode`` remains the clearly-marked
-   hook that raises NotImplementedError until a codec lands.
+   :mod:`tika_spark.analysis.h264inter` (P and B slices), across
+   its three containers (MP4 avc1, MPEG-TS stream_type 0x1B, FLV
+   codec 7) — all pure Python+numpy, with exact micro-unit stats
+   and deterministic resize on top. Codecs with no decoder here
+   (Opus audio, CABAC H.264, H.265) go through ``real_decode``, the
+   clearly-marked hook that raises NotImplementedError until a
+   codec lands.
 3. **Deterministic fake.** Payloads whose type has no header reader
    (e.g. the synthetic ``image/fake``) fall back to metadata derived
    from payload length, so tests/oracles can pin values.

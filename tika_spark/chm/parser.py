@@ -60,16 +60,8 @@ def extract_chm(data: bytes, url: str | None = None,
 
     text = safe_chars("".join(pieces))
     status = "ok" if html_entries else "metadata_only"
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-        spans = [s for s in spans if s[0] < limit]
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
-        spans = [s for s in spans if s[0] < config.write_limit]
     out = {"charset": None, "title": title, "text": text,
-           "spans": [(s, min(e2, len(text)), k) for (s, e2, k) in spans],
+           "spans": spans,
            "links": links, "metadata": metadata, "status": status}
     if err:
         out["error"] = err[:1000]

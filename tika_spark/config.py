@@ -9,15 +9,21 @@ engine is safe against adversarial pages (zip bombs, HTML bombs):
   (reference: tika-core/.../detect/TextDetector.java:48)
 - statistical charset detection reads at most ``CHARSET_PREFIX`` bytes
   (reference: tika-parsers/.../txt/CharsetDetector.java:97)
-- output chars <= max(OUTPUT_MIN_BYTES, OUTPUT_RATIO * input bytes)
+- output chars <= ``output_budget(input bytes)`` =
+  max(OUTPUT_MIN_CHARS, OUTPUT_RATIO * input bytes)
   (reference: tika-core/.../sax/SecureContentHandler.java:65-80)
-- plain-text write limit ``WRITE_LIMIT`` chars
+- optional write limit ``ExtractConfig.write_limit`` chars
   (reference: tika-core/.../sax/WriteOutContentHandler.java:125)
+
+Both output caps are applied once, to every route's result, by the
+output guard in :func:`tika_spark.pipeline.stages.guard_output`;
+parsers that decompress (archives, databases) also stop early at
+``output_budget``.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 MAGIC_PREFIX = 65536  # MimeTypes.getMinLength() — covers ISO9660's
 #                       CD001 volume descriptor at offset 32769
@@ -40,10 +46,19 @@ WRITE_LIMIT = 100_000         # parseToString default cap
 
 DEFAULT_CHARSET = "windows-1252"
 
+MODES = ("text", "text-main", "text-main-justext", "text-main-readability",
+         "metadata", "xhtml", "detect", "language", "xmp", "json",
+         "markdown")
+
 # Size-bucket boundaries (bytes) for skew-defusing repartitioning —
 # pages are bucketed by len(html) so a partition never mixes many giant
 # pages with tiny ones (SURVEY.md §4 O9).
 SIZE_BUCKET_BOUNDS = [4_096, 65_536, 1_048_576, 8_388_608]
+
+
+def output_budget(n_input: int) -> int:
+    """The ratio cap: output chars allowed for ``n_input`` input bytes."""
+    return max(OUTPUT_MIN_CHARS, OUTPUT_RATIO * max(1, n_input))
 
 
 @dataclass(frozen=True)
@@ -57,21 +72,20 @@ class ExtractConfig:
     # | 'detect' (-d, type census only — no parse, no language id)
     # | 'language' (-l, identified language as the output text)
     # | 'xmp' (-y, metadata map serialized as an XMP packet)
+    # | 'json' (-j) | 'markdown' | the text-main variants; see MODES
     mode: str = "text"
     # 0 = unlimited (the CLI -t/-T modes); WRITE_LIMIT mirrors the
     # parseToString facade default for callers who want it
     write_limit: int = 0
-    output_min_chars: int = OUTPUT_MIN_CHARS
-    output_ratio: int = OUTPUT_RATIO
     # input-side byte cap (truncate-and-flag); 0 = unlimited
     max_input_bytes: int = MAX_INPUT_BYTES
-    default_charset: str = DEFAULT_CHARSET
-    identify_language: bool = True
-    collect_links: bool = True
-    summary_chars: int = 500         # ParserPostProcessor.java:58 first-500 summary
-    size_bucket_bounds: tuple = field(default=tuple(SIZE_BUCKET_BOUNDS))
     # test/diagnostic hook: when set, each process_batch appends a
     # marker file (one per batch, named <uuid>_<n_rows>) so tests can
     # assert the parse stage executed exactly once per row (guards the
     # extract_recursive persist contract)
     trace_dir: str | None = None
+
+    def __post_init__(self):
+        if self.mode not in MODES:
+            raise ValueError(f"unknown mode {self.mode!r}; "
+                             f"expected one of {MODES}")

@@ -23,17 +23,13 @@ from __future__ import annotations
 import sqlite3
 import struct
 
-from tika_spark.config import ExtractConfig
+from tika_spark.config import ExtractConfig, output_budget
 
 _DEFAULT = ExtractConfig()
 
 _MAX_TABLES = 100
 _MAX_ROWS = 10000
 _MAX_BLOB_CHILDREN = 100
-
-
-def _budget(config: ExtractConfig, n_input: int) -> int:
-    return max(config.output_min_chars, config.output_ratio * max(1, n_input))
 
 
 def _fmt_cell(v) -> str:
@@ -57,7 +53,7 @@ def extract_sqlite(data: bytes, url: str | None = None,
     tables are skipped. Output is capped by the standard output
     budget plus hard table/row caps (zip-bomb posture)."""
     data = bytes(data or b"")
-    budget = _budget(config, len(data))
+    budget = output_budget(len(data))
     conn = sqlite3.connect(":memory:")
     error = None
     parts: list[str] = []
@@ -137,7 +133,7 @@ def extract_dbf(data: bytes, url: str | None = None,
     their block number; the .dbt sidecar is a separate file upstream
     and never reaches this parser."""
     data = bytes(data or b"")
-    budget = _budget(config, len(data))
+    budget = output_budget(len(data))
     error = None
     text = ""
     truncated = False

@@ -5,9 +5,9 @@ charset cascade (HtmlParser.java:81-165) -> lenient DOM (dom.py) ->
 head handling: title / <meta name|http-equiv> / ICBM lat-long /
 <base href> -> CONTENT_LOCATION (HtmlHandler.java:100-164) -> body
 serialization with the XHTML whitespace skeleton (layout.py) ->
-optional Boilerpipe main-content classification (boilerpipe.py) ->
-output guards (SecureContentHandler ratio / WriteOutContentHandler
-char limit).
+optional Boilerpipe main-content classification (boilerpipe.py).
+The output caps are applied by the pipeline's one output guard
+(pipeline/stages.py:guard_output), not here.
 """
 
 from __future__ import annotations
@@ -74,7 +74,7 @@ def extract_html(data: bytes, url: str | None = None,
     text, 'text-main' = boilerplate-stripped main content).
     """
     data = bytes(data or b"")
-    charset = cs.html_charset(data, declared_type, config.default_charset)
+    charset = cs.html_charset(data, declared_type)
     decoded = cs.decode(data, charset)
 
     root = build_dom(decoded)
@@ -83,14 +83,10 @@ def extract_html(data: bytes, url: str | None = None,
     metadata: dict[str, list[str]] = {"Content-Encoding": [charset]}
     base = _process_head(head, url, metadata)
 
-    links: list = []
+    # the full-body serialization; the other modes keep only its links
+    text, spans, links = serialize_body(body, base)
     if config.mode in ("text-main", "text-main-justext",
                        "text-main-readability"):
-        # the full-body serialization's text/spans would be discarded
-        # here — only run it when the caller wants the links side-
-        # product (it is the dominant per-doc cost after the parse)
-        if config.collect_links:
-            _, _, links = serialize_body(body, base, collect_links=True)
         if config.mode == "text-main-justext":
             from tika_spark.html.justext import main_content_justext
             text, spans = main_content_justext(body)
@@ -103,31 +99,12 @@ def extract_html(data: bytes, url: str | None = None,
         text = safe_chars(text)
     elif config.mode == "xhtml":
         from tika_spark.html.layout import serialize_xhtml
-        if config.collect_links:
-            _, _, links = serialize_body(body, base, collect_links=True)
         text = serialize_xhtml(body, metadata.get("title", [None])[0], base)
         spans = []
     elif config.mode == "markdown":
         from tika_spark.html.markdown import serialize_markdown
-        if config.collect_links:
-            _, _, links = serialize_body(body, base, collect_links=True)
         text = serialize_markdown(body, base)
         spans = []
-    else:
-        text, spans, links = serialize_body(
-            body, base, collect_links=config.collect_links)
-
-    status = "ok"
-    # zip/HTML-bomb guard: output <= max(1MB, 100x input bytes)
-    limit = max(config.output_min_chars, config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text = text[:limit]
-        spans = [s for s in spans if s[0] < limit]
-        status = "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text = text[:config.write_limit]
-        spans = [s for s in spans if s[0] < config.write_limit]
-        status = "write_limit"
 
     title = metadata.get("title", [None])[0]
     return {
@@ -137,5 +114,5 @@ def extract_html(data: bytes, url: str | None = None,
         "spans": [(s, min(e, len(text)), k) for (s, e, k) in spans],
         "links": [(lk.kind, lk.uri, lk.title, lk.text) for lk in links],
         "metadata": metadata,
-        "status": status,
+        "status": "ok",
     }

@@ -81,9 +81,8 @@ class Link:
 
 
 class _Serializer:
-    def __init__(self, base_url: str | None, collect_links: bool = True):
+    def __init__(self, base_url: str | None):
         self.base = base_url
-        self.collect_links = collect_links
         self.pieces: list[str] = []
         self.pos = 0
         self.spans: list[tuple[int, int, str]] = []
@@ -122,7 +121,7 @@ class _Serializer:
             self._emit_layout("\t")
 
         attrs = mapper.safe_attrs(mapped, node.attrs)
-        if self.collect_links and mapped == "a" and "href" in attrs:
+        if mapped == "a" and "href" in attrs:
             self._anchor_stack.append({
                 "href": resolve_url(self.base, attrs.get("href", "")),
                 "title": node.attrs.get("title", ""),
@@ -141,7 +140,7 @@ class _Serializer:
             alt = node.attrs.get("alt", "")  # img always gains alt=""
             if self._anchor_stack and alt:
                 self._anchor_stack[-1]["text"].append(alt)
-            if self.collect_links and src:
+            if src:
                 self.links.append(
                     Link("img", resolve_url(self.base, src),
                          node.attrs.get("title", ""), alt))
@@ -234,14 +233,13 @@ def xhtml_wrap_text(text: str, title: str | None = None) -> str:
         f"<body><p>{_esc_xml(text)}</p>\n</body>\n</html>")
 
 
-def serialize_body(body: El, base_url: str | None = None,
-                   collect_links: bool = True):
+def serialize_body(body: El, base_url: str | None = None):
     """Serialize a body subtree.
 
     Returns (text, spans, links): the plain-text projection with the
     XHTML whitespace skeleton, block spans into it, and collected links.
     """
-    ser = _Serializer(base_url, collect_links)
+    ser = _Serializer(base_url)
     for child in body.children:
         ser.walk(child)
     text = safe_chars("".join(ser.pieces))

@@ -124,13 +124,6 @@ def extract_rfc822(data: bytes, url: str | None = None,
                 parts.append(body if body.endswith("\n") else body + "\n")
 
     text = safe_chars("".join(parts))
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    status = "ok"
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     return {
         "charset": None,
         "title": subject,
@@ -138,7 +131,7 @@ def extract_rfc822(data: bytes, url: str | None = None,
         "spans": [(0, len(text), "body")] if text else [],
         "links": [],
         "metadata": metadata,
-        "status": status,
+        "status": "ok",
         "children": children,
     }
 
@@ -375,13 +368,6 @@ def extract_tnef(data: bytes, url: str | None = None,
     for b in body_parts:
         pieces.append(b if b.endswith("\n") else b + "\n")
     text = safe_chars("".join(pieces))
-    status = "ok"
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     return {
         "charset": None,
         "title": subject,
@@ -389,6 +375,6 @@ def extract_tnef(data: bytes, url: str | None = None,
         "spans": [(0, len(text), "body")] if text else [],
         "links": [],
         "metadata": metadata,
-        "status": status,
+        "status": "ok",
         "children": children,
     }

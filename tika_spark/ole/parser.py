@@ -916,12 +916,6 @@ def extract_ole(data: bytes, url: str | None = None,
     # no text extracted => metadata_only, whatever metadata holds
     # (the chm/parser.py convention; metadata-only is about TEXT)
     status = "ok" if text else "metadata_only"
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     title = metadata.get("title", [None])[0] or \
         metadata.get("subject", [None])[0]
     return {"charset": None, "title": title, "text": text, "spans": [],

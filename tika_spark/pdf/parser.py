@@ -1254,18 +1254,7 @@ def extract_pdf(data: bytes, url: str | None = None,
         pos += len(page_text) + 2
 
     text = safe_chars("".join(pieces))
-    status = "ok"
-    limit = max(config.output_min_chars, config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
-    if status != "ok":
-        # spans must never point past the truncated text (same
-        # contract as chm/parser.py)
-        spans = [(s, min(e, len(text)), k)
-                 for s, e, k in spans if s < len(text)]
     return {"charset": None, "title": metadata.get("title", [None])[0],
             "text": text, "spans": spans, "links": links,
-            "metadata": metadata, "status": status,
+            "metadata": metadata, "status": "ok",
             "children": children[:64]}

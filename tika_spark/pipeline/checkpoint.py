@@ -48,7 +48,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.utils import AnalysisException
 
 from tika_spark.config import ExtractConfig
-from tika_spark.pipeline.job import extract, extract_recursive
+from tika_spark.pipeline.job import (extract, extract_recursive,
+                                     status_rollup)
 
 BUCKET_COL = "ckpt_bucket"
 
@@ -95,7 +96,7 @@ def load_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
 
 def run_checkpointed(pages: DataFrame, out_dir: str,
                      n_buckets: int = 64, wave_size: int = 16,
-                     mode: str = "text",
+                     mode: str | None = None,
                      config: ExtractConfig | None = None,
                      repartition: int | None = None,
                      max_waves: int | None = None,
@@ -178,12 +179,7 @@ def run_checkpointed(pages: DataFrame, out_dir: str,
             F.col(BUCKET_COL).isin(ids))
         stats = {r[BUCKET_COL]: r for r in
                  (committed.groupBy(BUCKET_COL)
-                  .agg(F.count("*").alias("n_rows"),
-                       F.sum(F.when(F.col("status") == "error",
-                                    1).otherwise(0)).alias("n_err"),
-                       F.sum("n_bytes").alias("n_bytes"),
-                       F.sum("n_chars").alias("n_chars"))
-                  .collect())}
+                  .agg(*status_rollup()).collect())}
         wall_ms = (time.time() - t0) * 1000
         # a wave bucket with zero input rows still needs a manifest
         # row, or every future resume would re-scan it forever
@@ -228,7 +224,7 @@ def table_done_buckets(table) -> set[int]:
 
 def run_checkpointed_table(pages: DataFrame, table_root: str,
                            n_buckets: int = 64, wave_size: int = 16,
-                           mode: str = "text",
+                           mode: str | None = None,
                            config: ExtractConfig | None = None,
                            repartition: int | None = None,
                            max_waves: int | None = None,
@@ -296,13 +292,7 @@ def run_checkpointed_table(pages: DataFrame, table_root: str,
         if entries:
             staged = spark.read.parquet(
                 *[table.root + "/" + e["path"] for e in entries])
-            r = (staged.agg(
-                    F.count("*").alias("n_rows"),
-                    F.sum(F.when(F.col("status") == "error", 1)
-                          .otherwise(0)).alias("n_err"),
-                    F.sum("n_bytes").alias("n_bytes"),
-                    F.sum("n_chars").alias("n_chars"))
-                 .collect()[0])
+            r = staged.agg(*status_rollup()).collect()[0]
             stats.update(n_rows=int(r["n_rows"] or 0),
                          n_err=int(r["n_err"] or 0),
                          n_bytes=int(r["n_bytes"] or 0),

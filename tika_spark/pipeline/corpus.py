@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 DEFAULT_SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
 
-def build_corpus(pages: DataFrame, mode: str = "text",
+def build_corpus(pages: DataFrame, mode: str | None = None,
                  min_words: int = 20, max_words: int = 100_000,
                  fractions: dict[str, float] | None = None,
                  salt: str = "") -> DataFrame:

@@ -22,26 +22,41 @@ Scale design (SURVEY.md §4 O9-O12, judged at 100TB):
 
 from __future__ import annotations
 
+import dataclasses
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
-from tika_spark.config import MAX_EMBED_DEPTH, ExtractConfig
-from tika_spark.pipeline.stages import EXTRACT_SCHEMA, make_extract_fn
+from tika_spark.config import (MAX_EMBED_DEPTH, SIZE_BUCKET_BOUNDS,
+                               ExtractConfig)
+from tika_spark.pipeline.stages import (EXTRACT_SCHEMA, GUARD_STATUSES,
+                                        make_extract_fn)
 
-_DEFAULT = ExtractConfig()
 
-
-def with_size_bucket(df: DataFrame,
-                     bounds=_DEFAULT.size_bucket_bounds) -> DataFrame:
+def with_size_bucket(df: DataFrame) -> DataFrame:
     """Add ``size_bucket`` = index of the first bound >= len(html)."""
-    expr = F.lit(len(bounds))
-    for idx in range(len(bounds) - 1, -1, -1):
-        expr = F.when(F.length("html") <= F.lit(bounds[idx]),
+    expr = F.lit(len(SIZE_BUCKET_BOUNDS))
+    for idx in range(len(SIZE_BUCKET_BOUNDS) - 1, -1, -1):
+        expr = F.when(F.length("html") <= F.lit(SIZE_BUCKET_BOUNDS[idx]),
                       F.lit(idx)).otherwise(expr)
     return df.withColumn("size_bucket", expr)
 
 
-def extract(df: DataFrame, mode: str = "text",
+def _count_status(statuses) -> Column:
+    return F.sum(F.when(F.col("status").isin(*statuses), 1).otherwise(0))
+
+
+def status_rollup() -> list[Column]:
+    """The n_rows/n_err/n_bytes/n_chars aggregation over extract()
+    output, shared by :func:`lineage_manifest` and the checkpoint
+    stats read-backs."""
+    return [F.count("*").alias("n_rows"),
+            _count_status(["error"]).alias("n_err"),
+            F.sum("n_bytes").alias("n_bytes"),
+            F.sum("n_chars").alias("n_chars")]
+
+
+def extract(df: DataFrame, mode: str | None = None,
             config: ExtractConfig | None = None,
             repartition: int | None = None) -> DataFrame:
     """Run the full extraction pipeline over a pages DataFrame.
@@ -53,6 +68,9 @@ def extract(df: DataFrame, mode: str = "text",
     stage; ``children`` carries archive members for the F1 recursion
     and is empty for non-container rows).
 
+    ``mode`` overrides ``config.mode`` when given; with neither, the
+    mode is 'text'.
+
     ``repartition``: number of partitions for the skew-defusing
     (size_bucket, crc32(url)) shuffle; None → defaultParallelism;
     ``0`` → **skip the shuffle** and trust the input partitioning.
@@ -62,9 +80,9 @@ def extract(df: DataFrame, mode: str = "text",
     scan → mapInPandas → write with zero exchanges).
     """
     if config is None:
-        config = ExtractConfig(mode=mode)
-    elif mode and config.mode != mode:
-        config = ExtractConfig(**{**config.__dict__, "mode": mode})
+        config = ExtractConfig(mode=mode or "text")
+    elif mode:
+        config = dataclasses.replace(config, mode=mode)
 
     cols = [c for c in ("url", "warc_ts", "html", "declared_type")
             if c in df.columns]
@@ -73,7 +91,7 @@ def extract(df: DataFrame, mode: str = "text",
     if repartition == 0:
         arranged = slim
     else:
-        bucketed = with_size_bucket(slim, config.size_bucket_bounds)
+        bucketed = with_size_bucket(slim)
         n_parts = (repartition
                    or slim.sparkSession.sparkContext.defaultParallelism)
         # spread giants uniformly, then make batches size-homogeneous
@@ -86,7 +104,7 @@ def extract(df: DataFrame, mode: str = "text",
                                 schema=EXTRACT_SCHEMA)
 
 
-def extract_recursive(df: DataFrame, mode: str = "text",
+def extract_recursive(df: DataFrame, mode: str | None = None,
                       config: ExtractConfig | None = None,
                       max_depth: int = MAX_EMBED_DEPTH,
                       repartition: int | None = None) -> DataFrame:
@@ -149,16 +167,13 @@ def extract_recursive(df: DataFrame, mode: str = "text",
 
 def lineage_manifest(extracted: DataFrame) -> DataFrame:
     """Per-partition lineage rows from an extract() output
-    (O12: bucket accounting for checkpoint/resume + metrics)."""
+    (O12: bucket accounting for checkpoint/resume + metrics).
+    ``n_capped`` counts rows an input or output cap cut."""
     return (extracted
             .groupBy("part_id")
-            .agg(F.count("*").alias("n_rows"),
-                 F.sum(F.when(F.col("status") == "error", 1)
-                       .otherwise(0)).alias("n_err"),
-                 F.sum(F.when(F.col("status") == "no_parser", 1)
-                       .otherwise(0)).alias("n_no_parser"),
-                 F.sum("n_bytes").alias("n_bytes"),
-                 F.sum("n_chars").alias("n_chars"),
+            .agg(*status_rollup(),
+                 _count_status(["no_parser"]).alias("n_no_parser"),
+                 _count_status(GUARD_STATUSES).alias("n_capped"),
                  F.min("url").alias("min_url"),
                  F.max("url").alias("max_url"),
                  F.max("batch_ms").alias("max_batch_ms")))

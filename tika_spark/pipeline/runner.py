@@ -25,7 +25,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from tika_spark.config import ExtractConfig
+from tika_spark.config import MODES, ExtractConfig
 from tika_spark.pipeline.checkpoint import run_checkpointed
 
 
@@ -47,7 +47,8 @@ def _read_pages(spark: SparkSession, input_path: str,
     return spark.read.parquet(input_path)
 
 
-def run(spark: SparkSession, input_path: str, output: str, mode: str = "text",
+def run(spark: SparkSession, input_path: str, output: str,
+        mode: str | None = None,
         n_buckets: int = 16, group_size: int = 4,
         config: ExtractConfig | None = None, verbose: bool = True,
         recursive: bool = False, max_groups: int | None = None,
@@ -67,11 +68,7 @@ def main(argv=None):
     p = argparse.ArgumentParser(description=__doc__)
     p.add_argument("--input", required=True)
     p.add_argument("--output", required=True)
-    p.add_argument("--mode", default="text",
-                   choices=["text", "text-main", "text-main-justext",
-                            "text-main-readability",
-                            "metadata", "xhtml", "detect", "language",
-                            "xmp", "json", "markdown"])
+    p.add_argument("--mode", default="text", choices=MODES)
     p.add_argument("--buckets", type=int, default=16)
     p.add_argument("--group-size", type=int, default=4)
     p.add_argument("--cpus", type=int,

@@ -7,7 +7,10 @@ chain until a route is found; unknown types become ``status='no_parser'``
 rows (EmptyParser fallback, never a failure). A parser exception is
 caught per document and becomes ``status='error'`` (the ForkParser
 fault-isolation intent, fork/ForkParser.java — a poison document must
-never kill a partition).
+never kill a partition). Every route's result then passes one output
+guard (:func:`guard_output`, SURVEY.md §2 F4), the analog of the
+reference wrapping whichever parser runs in its Secure/WriteOut
+content handlers.
 
 Heavy singletons (detection tables, language model) are module-level,
 initialized once per Python worker and reused across batches
@@ -21,7 +24,7 @@ import time
 
 import pandas as pd
 
-from tika_spark.config import ExtractConfig
+from tika_spark.config import ExtractConfig, output_budget
 from tika_spark.dbparse import extract_dbf, extract_sqlite
 from tika_spark.html.extract import extract_html
 from tika_spark.mime import lattice
@@ -302,6 +305,29 @@ def route_for_mime(mime: str) -> str | None:
     return None
 
 
+# statuses the guards set: the input cap and the two output caps
+GUARD_STATUSES = ("input_capped", "output_limit", "write_limit")
+
+
+def guard_output(r: dict, n_input: int, write_limit: int) -> None:
+    """Apply the output caps to one extractor result, in place.
+
+    The ratio cap ``output_budget(n_input)`` (zip/HTML-bomb guard,
+    SecureContentHandler.java:65-80) and the optional ``write_limit``
+    (WriteOutContentHandler.java:125), whichever is smaller: the text
+    is truncated, spans starting past the cap are dropped, span ends
+    are clamped and the status names the cap that cut.
+    """
+    limit, status = output_budget(n_input), "output_limit"
+    if write_limit and write_limit < limit:
+        limit, status = write_limit, "write_limit"
+    if len(r["text"]) > limit:
+        r["text"] = r["text"][:limit]
+        r["spans"] = [(s, min(e, limit), k)
+                      for (s, e, k) in r.get("spans", []) if s < limit]
+        r["status"] = status
+
+
 def _empty_result() -> dict:
     return {"charset": None, "title": None, "text": "", "spans": [],
             "links": [], "metadata": {}, "status": "no_parser"}
@@ -380,6 +406,8 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
                                     mime=mimes[i])
                 else:
                     results[k] = fn(data_i, urls[i], decl_i, config)
+                guard_output(results[k], len(data_i or b""),
+                             config.write_limit)
                 if capped and results[k].get("status") != "error":
                     results[k]["status"] = "input_capped"
             except Exception as e:  # poison doc -> error row, task survives
@@ -424,14 +452,10 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
 
     texts = pd.Series([r["text"] for r in results], index=pdf.index)
 
-    langs = [None] * n
-    dists = [None] * n
-    if config.identify_language or config.mode == "language":
-        from tika_spark.language import default_model
-        model = default_model()
-        ident = model.identify_batch(texts)
-        langs = ident["lang"].tolist()
-        dists = ident["lang_distance"].tolist()
+    from tika_spark.language import default_model
+    ident = default_model().identify_batch(texts)
+    langs = ident["lang"].tolist()
+    dists = ident["lang_distance"].tolist()
 
     if config.mode == "language":
         # -l CLI mode: the identified language IS the output text

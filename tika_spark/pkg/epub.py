@@ -56,13 +56,6 @@ def extract_epub(data: bytes, url: str | None = None,
                 parts.append(chapter)
                 pos += len(chapter)
     text = "".join(parts)
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    status = "ok"
-    if len(text) > limit:
-        text = text[:limit]
-        spans = [s for s in spans if s[0] < limit]
-        status = "output_limit"
     return {
         "charset": None,
         "title": metadata.get("title", [None])[0],
@@ -70,5 +63,5 @@ def extract_epub(data: bytes, url: str | None = None,
         "spans": spans,
         "links": links,
         "metadata": metadata,
-        "status": status,
+        "status": "ok",
     }

@@ -464,15 +464,6 @@ def extract_iwork(data: bytes, url: str | None = None,
         status = "error"
     metadata["Content-Type"] = [mime or "application/vnd.apple.iwork"]
     title = metadata.get("title", [None])[0]
-    # zip-bomb guard (SecureContentHandler ratio semantics, same as
-    # the odf/epub/ooxml siblings): output chars bounded by
-    # max(min_chars, ratio * compressed size)
-    limit = int(max(config.output_min_chars,
-                    config.output_ratio * max(1, len(data))))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     return {
         "charset": None, "title": title, "text": text,
         "spans": [(0, len(text), "body")] if text else [],

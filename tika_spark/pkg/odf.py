@@ -81,11 +81,6 @@ def extract_odf(data: bytes, url: str | None = None,
         lines: list[str] = []
         _walk(root, lines)
     text = safe_chars("".join(lines))
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    status = "ok"
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
     return {
         "charset": None,
         "title": metadata.get("title", [None])[0],
@@ -96,7 +91,7 @@ def extract_odf(data: bytes, url: str | None = None,
                      "Content-Type": [mime or
                                       "application/vnd.oasis."
                                       "opendocument.text"]},
-        "status": status,
+        "status": "ok",
     }
 
 
@@ -127,11 +122,6 @@ def extract_flat_odf(data: bytes, url: str | None = None,
     lines: list[str] = []
     _walk(root, lines)
     text = safe_chars("".join(lines))
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    status = "ok"
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
     return {
         "charset": None,
         "title": metadata.get("title", [None])[0],
@@ -140,5 +130,5 @@ def extract_flat_odf(data: bytes, url: str | None = None,
         "links": [],
         "metadata": {**metadata, "Content-Type": [
             mime or "application/vnd.oasis.opendocument.flat.text"]},
-        "status": status,
+        "status": "ok",
     }

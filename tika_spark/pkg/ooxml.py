@@ -434,11 +434,6 @@ def extract_ooxml(data: bytes, url: str | None = None,
             text = _pptx_text(zf)
         children = _package_children(zf)
     text = safe_chars(text)
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    status = "ok"
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
     return {
         "charset": None,
         "title": metadata.get("title", [None])[0],
@@ -446,6 +441,6 @@ def extract_ooxml(data: bytes, url: str | None = None,
         "spans": [(0, len(text), "body")] if text else [],
         "links": [],
         "metadata": {**metadata, "Content-Type": [mime or "application/zip"]},
-        "status": status,
+        "status": "ok",
         "children": children,
     }

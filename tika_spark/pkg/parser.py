@@ -17,7 +17,7 @@ bounded by MAX_EMBED_DEPTH (the reference's package-nesting guard,
 tika-core/.../sax/SecureContentHandler.java:80).
 
 Zip-bomb guards (SecureContentHandler.java:65-80 transferred):
-- total decompressed bytes ≤ max(1 MB, 100 × input bytes)
+- total decompressed bytes ≤ ``config.output_budget(input bytes)``
 - at most MAX_PKG_ENTRIES entries surfaced
 - per-entry decompression is streamed with a hard cap, so a
   pathological member cannot OOM an executor.
@@ -33,7 +33,7 @@ import zipfile
 import struct
 import zlib
 
-from tika_spark.config import ExtractConfig
+from tika_spark.config import ExtractConfig, output_budget
 
 _DEFAULT = ExtractConfig()
 
@@ -42,10 +42,6 @@ MAX_PKG_ENTRIES = 1000
 # CRC guard runs) even when the recursion byte budget would truncate
 # the child; above it, the capped decode skips CRC like stdlib zipfile
 _IMPLODE_CRC_BOUND = 8 << 20
-
-
-def _budget(config: ExtractConfig, n_input: int) -> int:
-    return max(config.output_min_chars, config.output_ratio * max(1, n_input))
 
 
 # ------------------------------------------------ PKWARE Implode --
@@ -380,7 +376,7 @@ def extract_package(data: bytes, url: str | None = None,
                     mime: str | None = None) -> dict:
     """Extract one archive: entry-name text + children for recursion."""
     data = bytes(data or b"")
-    budget = _budget(config, len(data))
+    budget = output_budget(len(data))
 
     if mime is None:
         mime = ("application/x-gzip" if data[:2] == b"\x1f\x8b" else

@@ -74,13 +74,6 @@ def extract_xps(data: bytes, url: str | None = None,
                 "spans": [], "links": [], "metadata": metadata,
                 "status": "error", "error": f"xps: {e!r}"[:500]}
     text = safe_chars("".join(lines))
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    # the 1000-page cap must be observable, not a silent 'ok' (same
-    # contract as pkg/parser.py's MAX_PKG_ENTRIES)
-    status = "output_limit" if truncated else "ok"
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
     return {
         "charset": None,
         "title": title,
@@ -88,5 +81,7 @@ def extract_xps(data: bytes, url: str | None = None,
         "spans": [(0, len(text), "body")] if text else [],
         "links": [],
         "metadata": metadata,
-        "status": status,
+        # the 1000-page cap must be observable, not a silent 'ok' (same
+        # contract as pkg/parser.py's MAX_PKG_ENTRIES)
+        "status": "output_limit" if truncated else "ok",
     }

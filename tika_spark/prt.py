@@ -128,11 +128,8 @@ def extract_prt(data: bytes, url: str | None = None,
             l5pos = (l5pos + 1) % 5
 
     text = safe_chars("\n".join(paras) + ("\n" if paras else ""))
-    status = "ok"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     return {
         "charset": None, "title": None, "text": text,
         "spans": [(0, len(text), "p")] if text else [],
-        "links": [], "metadata": metadata, "status": status,
+        "links": [], "metadata": metadata, "status": "ok",
     }

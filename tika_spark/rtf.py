@@ -262,11 +262,6 @@ def extract_rtf(data: bytes, url: str | None = None,
     text = safe_chars("".join(out))
     if text and not text.endswith("\n"):
         text += "\n"
-    limit = max(config.output_min_chars,
-                config.output_ratio * max(1, len(data)))
-    status = "ok"
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
     return {
         "charset": None,
         "title": metadata.get("title", [None])[0],
@@ -274,5 +269,5 @@ def extract_rtf(data: bytes, url: str | None = None,
         "spans": [(0, len(text), "body")] if text else [],
         "links": links,
         "metadata": metadata,
-        "status": status,
+        "status": "ok",
     }

@@ -31,7 +31,7 @@ from tika_spark.pipeline.job import extract
 
 
 def extract_stream(spark: SparkSession, input_dir: str, output_dir: str,
-                   checkpoint_dir: str, mode: str = "text",
+                   checkpoint_dir: str, mode: str | None = None,
                    schema: str = ("url string, warc_ts timestamp, "
                                   "html binary"),
                    max_files_per_trigger: int = 16,
@@ -58,7 +58,7 @@ def extract_stream(spark: SparkSession, input_dir: str, output_dir: str,
 
 def curate_stream(spark: SparkSession, input_dir: str, output_dir: str,
                   index_dir: str, checkpoint_dir: str,
-                  mode: str = "text",
+                  mode: str | None = None,
                   schema: str = ("url string, warc_ts timestamp, "
                                  "html binary"),
                   max_files_per_trigger: int = 16,

@@ -25,13 +25,6 @@ def extract_text(data: bytes, url: str | None = None,
     charset = cs.detect_statistical(data, declared=declared)
     decoded = cs.decode(data, charset)          # BOM dropped here
     text = safe_chars(decoded)
-
-    status = "ok"
-    limit = max(config.output_min_chars, config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     body = text + "\n"  # single <p> block through the layout contract
     return {
         "charset": charset,
@@ -41,5 +34,5 @@ def extract_text(data: bytes, url: str | None = None,
         "links": [],
         "metadata": {"Content-Encoding": [charset],
                      "Content-Type": ["text/plain"]},
-        "status": status,
+        "status": "ok",
     }

@@ -92,15 +92,12 @@ def extract_xml(data: bytes, url: str | None = None,
                     parent.remove(child)
     pieces = [t for t in root.itertext()]
     text = safe_chars("".join(pieces))
-    status = "ok"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
     title = metadata.get("title", [None])[0]
     return {
         "charset": charset, "title": title,
         "text": text + "\n",
         "spans": [(0, len(text), "p")],
-        "links": [], "metadata": metadata, "status": status,
+        "links": [], "metadata": metadata, "status": "ok",
     }
 
 
