@@ -31,18 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from tika_spark.analysis.spread import spread_for_decode
 from tika_spark.analysis.textstats import fingerprint, tokens, word_shingles
-
-
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition when the scan gave fewer partitions than
-    cores (a small-file artifact: a 2 MB parquet scans as 1 split and
-    would serialize a CPU-heavy projection on one task). No-op at real
-    scale, where inputs already have >= cores partitions."""
-    want = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < want:
-        return df.repartition(want)
-    return df
 
 
 # ---------------------------------------------------------------- exact
@@ -87,7 +77,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id",
     Output: (id_a, id_b, sim_micro) with id_a < id_b; similarity is an
     exact integer (micro-units) so results hash identically everywhere.
     """
-    sh = ensure_parallelism(df).select(
+    sh = spread_for_decode(df).select(
         F.col(id_col).alias("id"),
         *[F.col(c) for c in block_cols],
         word_shingles(F.col(text_col), k).alias("sh"))
@@ -130,7 +120,7 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
     bounded pair fan-out per shingle, one equi-join back to the
     shingle arrays. Never an all-pairs join.
     """
-    sh = ensure_parallelism(df).select(
+    sh = spread_for_decode(df).select(
         F.col(id_col).alias("id"),
         word_shingles(F.col(text_col), k).alias("sh"))
     posts = (sh.select(F.col("id"), F.explode("sh").alias("g"))
@@ -238,8 +228,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
       4. verify join back to shingle sets for candidate ids only
     """
     base = with_minhash_signature(
-        ensure_parallelism(df.select(F.col(id_col).alias("id"),
-                                     F.col(text_col))),
+        spread_for_decode(df.select(F.col(id_col).alias("id"),
+                                    F.col(text_col))),
         text_col, num_perm, k, keep_shingles="sh").drop(text_col)
     # the signature+shingle pass feeds two branches (banding, verify
     # join); persist so it is computed once, not once per branch — at
@@ -308,7 +298,7 @@ def hash64(s: str) -> int:
 
 def simhash(df: DataFrame, id_col: str = "doc_id",
             text_col: str = "text") -> DataFrame:
-    return ensure_parallelism(df).select(
+    return spread_for_decode(df).select(
         F.col(id_col).alias("id"),
         _simhash64(tokens(F.col(text_col))).alias("simhash"))
 
@@ -478,7 +468,7 @@ def substring_dup_spans(df: DataFrame, id_col: str = "doc_id",
     dedup, this operator marks spans in place).
     """
     toks = tokens(F.col(text_col))
-    base = (ensure_parallelism(df.select(F.col(id_col), text_col))
+    base = (spread_for_decode(df.select(F.col(id_col), text_col))
             .select(F.col(id_col), toks.alias("w"))
             .withColumn("n_toks", F.size("w")))
 
@@ -565,7 +555,7 @@ def remove_dup_spans(df: DataFrame, id_col: str = "doc_id",
     output column, once.
     """
     toks = tokens(F.col(text_col))
-    base = (ensure_parallelism(df.select(F.col(id_col), text_col))
+    base = (spread_for_decode(df.select(F.col(id_col), text_col))
             .select(F.col(id_col), toks.alias("w"))
             .withColumn("n_toks", F.size("w")))
     idx = F.when(F.col("n_toks") >= k,

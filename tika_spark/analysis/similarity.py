@@ -73,7 +73,7 @@ def brute_force_topk(base: DataFrame, queries: DataFrame, k: int = 10,
     from pyspark.sql.pandas.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    from tika_spark.analysis.dedup import ensure_parallelism
+    from tika_spark.analysis.spread import spread_for_decode
 
     qrows = queries.select(id_col, vec_col) \
         .limit(MAX_BRUTE_QUERIES + 1).collect()
@@ -108,7 +108,7 @@ def brute_force_topk(base: DataFrame, queries: DataFrame, k: int = 10,
         return pd.Series(out)
 
     qid_arr = F.array(*[F.lit(q) for q in qids])
-    b = ensure_parallelism(base).select(
+    b = spread_for_decode(base).select(
         F.col(id_col).alias("vec_id"),
         F.posexplode(sims(F.col(vec_col))).alias("qidx", "sim_micro"))
     scored = b.select(

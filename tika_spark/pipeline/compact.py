@@ -38,6 +38,7 @@ from pyspark.sql import SparkSession
 
 
 def _fs_for(spark: SparkSession, path: str):
+    """(FileSystem, Path, jvm) for ``path`` via the Hadoop API."""
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())

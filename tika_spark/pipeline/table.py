@@ -66,6 +66,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from tika_spark.pipeline.compact import _fs_for
+
 _SNAP_FMT = "snap-%08d.json"
 _COMMIT_RETRIES = 20
 # per-file Bloom filter geometry (bloom_cols): 32768 bits / 5 hashes
@@ -120,13 +122,6 @@ def zorder_key(df: DataFrame, cols: list[str],
 
 class CommitConflict(RuntimeError):
     """Another writer committed the same snapshot id repeatedly."""
-
-
-def _fs_for(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
 
 
 class SnapshotTable:

@@ -2,7 +2,9 @@
 __spark_entry__ query at a given sf and compare against its DuckDB
 oracle (row count, column names, order-insensitive value hash).
 
-    python tools/check_oracles.py [sf_dir] [query ...]
+    python tools/check_oracles.py [sf_dir] [query ...] [--json out.json]
+
+An unregistered query name exits 2 before the Spark session starts.
 """
 
 from __future__ import annotations
@@ -47,6 +49,15 @@ def main():
     only = set(argv[1:])
     results: dict[str, dict] = {}
 
+    import __spark_entry__ as entrymod
+    qs = entrymod.queries()
+    oracles = entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query name(s): {', '.join(unknown)}",
+              file=sys.stderr)
+        sys.exit(2)
+
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local[8]")
              .appName("check_oracles")
@@ -64,9 +75,6 @@ def main():
         except Exception:
             pass
 
-    import __spark_entry__ as entrymod
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
