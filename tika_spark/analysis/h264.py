@@ -1453,12 +1453,16 @@ def slice_census_annexb(data: bytes) -> list[dict]:
 def cabac_slice_nals(pattern: str, seed: int = 0,
                      payload_bytes: int = 64) -> list[bytes]:
     """Fixture: a Main-profile NAL sequence whose PPS flags CABAC
-    entropy coding and whose slice HEADERS are spec-valid Exp-Golomb
-    (type/frame_num/POC per ``pattern``, e.g. "IPBBP"), followed by
-    deterministic opaque payload standing in for the CABAC-coded
-    slice data. The census tier never reads slice data — exactly as
-    with real Main/High web MP4 — so this exercises the real parse
-    path end-to-end; pixel decoders must cleanly refuse these.
+    entropy coding and whose slices open with the Exp-Golomb slice
+    header prefix the census reads (type/frame_num/POC per
+    ``pattern``, e.g. "IPBBP"), then zero bits to the byte boundary,
+    then deterministic opaque payload standing in for the CABAC-coded
+    slice data. Not a spec-valid slice: the header stops after the
+    POC fields, and the pad is zero bits where ITU-T H.264 puts
+    ``cabac_alignment_one_bit`` (1-bits). The census tier never reads
+    past that prefix — exactly as with real Main/High web MP4 — so
+    this exercises the real parse path end-to-end; pixel decoders
+    must cleanly refuse these.
 
     CABAC slice-data decode itself stays out of scope: the ~1,000
     context-initialization constants of ITU-T H.264 §9.3.1 tables

@@ -23,12 +23,18 @@ Scale design:
   waves amortize job-launch overhead; smaller waves bound the work
   lost to a crash. The input is re-scanned once per wave, which at
   crawl scale is partition-pruned I/O, not a full pass.
+- **Stats are observed on the write, not read back.** The wave's
+  output carries a ``DataFrame.observe`` of the ``status_rollup``
+  fields per wave bucket, so the one data write also yields every
+  manifest number. Metrics of failed or retried task attempts are
+  dropped by Spark, so a retried task counts its rows once.
 - **The manifest is data, not driver state.** One parquet row per
-  completed bucket (rows/errors/chars/bytes + wall time), appended
-  after the wave's data write and probed through Spark's file-system
-  layer — NOT ``os.path`` — so HDFS/S3-style ``out_dir`` URIs resume
-  correctly. Any driver anywhere can pick the run up; nothing lives
-  in memory.
+  completed bucket (rows/errors/chars/bytes + wall time), built from
+  JVM literals and appended after the wave's data write, partitioned
+  by ``ckpt_bucket``. Resume planning is one listing of
+  ``manifest/ckpt_bucket=*`` through the Hadoop file system — NOT
+  ``os.path`` — so HDFS/S3-style ``out_dir`` URIs resume correctly.
+  Any driver anywhere can pick the run up; nothing lives in memory.
 - **No binary in the output.** The persisted schema is the extract()
   output minus ``children`` — page bytes cross into Python once inside
   extract() and are never written back.
@@ -44,10 +50,10 @@ import time
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql.utils import AnalysisException
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from tika_spark.config import ExtractConfig
+from tika_spark.pipeline.compact import _fs_for
 from tika_spark.pipeline.job import (extract, extract_recursive,
                                      status_rollup)
 
@@ -55,6 +61,8 @@ BUCKET_COL = "ckpt_bucket"
 
 MANIFEST_SCHEMA = ("ckpt_bucket int, n_rows long, n_err long, "
                    "n_bytes long, n_chars long, wall_ms double")
+MANIFEST_COLS = [f.split()[0] for f in MANIFEST_SCHEMA.split(", ")]
+STATS = MANIFEST_COLS[1:5]          # the status_rollup fields
 
 
 def md5_bucket_fn(n_buckets: int) -> Callable[[Column], Column]:
@@ -71,22 +79,45 @@ def md5_bucket_fn(n_buckets: int) -> Callable[[Column], Column]:
 
 
 def manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    """The committed-bucket manifest (empty DataFrame when none).
+    """The committed-bucket manifest, columns in ``MANIFEST_SCHEMA``
+    order (empty DataFrame when none).
 
-    Probed through Spark (NOT ``os.path``) so object-store URIs work —
-    a local-only probe would silently read as empty and re-run the
-    whole table.
+    Existence comes from the :func:`done_buckets` listing, so a fresh
+    ``out_dir`` costs no failed Spark read.
     """
-    try:
-        return spark.read.parquet(f"{out_dir}/manifest")
-    except AnalysisException:
+    if not done_buckets(spark, out_dir):
         return spark.createDataFrame([], MANIFEST_SCHEMA)
+    return (spark.read.schema(MANIFEST_SCHEMA)
+            .parquet(f"{out_dir}/manifest").select(*MANIFEST_COLS))
 
 
 def done_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    """Bucket ids already committed (empty set on a fresh out_dir)."""
-    return {r[0] for r in
-            manifest(spark, out_dir).select(BUCKET_COL).collect()}
+    """Bucket ids already committed (empty set on a fresh out_dir).
+
+    One glob listing of ``manifest/ckpt_bucket=*/`` through the Hadoop
+    file system (NOT ``os.path``: a local-only probe of an object-store
+    URI would read as empty and re-run the whole table). A bucket is
+    done when its directory holds a parquet file; ``_``- and
+    ``.``-prefixed files never count, and neither does anything under
+    ``_temporary/`` (a torn append). Part files directly under
+    ``manifest/`` are an unpartitioned manifest and raise
+    ``ValueError``.
+    """
+    fs, pattern, _ = _fs_for(spark, f"{out_dir}/manifest/"
+                             f"{{*.parquet,{BUCKET_COL}=*/*.parquet}}")
+    done: set[int] = set()
+    for st in fs.globStatus(pattern) or []:
+        *_, parent, name = st.getPath().toString().split("/")
+        if name.startswith(("_", ".")):
+            continue
+        if not parent.startswith(BUCKET_COL + "="):
+            raise ValueError(
+                f"{out_dir}/manifest holds unpartitioned part files "
+                f"({name}); it predates the {BUCKET_COL}-partitioned "
+                f"manifest — rewrite it partitioned by {BUCKET_COL} "
+                "or start a fresh output directory")
+        done.add(int(parent.split("=", 1)[1]))
+    return done
 
 
 def load_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -94,51 +125,76 @@ def load_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     return spark.read.parquet(f"{out_dir}/data")
 
 
-def run_checkpointed(pages: DataFrame, out_dir: str,
-                     n_buckets: int = 64, wave_size: int = 16,
-                     mode: str | None = None,
-                     config: ExtractConfig | None = None,
-                     repartition: int | None = None,
-                     max_waves: int | None = None,
-                     bucket_fn: Callable[[Column], Column] | None = None,
-                     recursive: bool = False,
-                     verbose: bool = False) -> dict:
-    """Run (or resume) a checkpointed extraction over ``pages``.
+class _DirCommit:
+    """Directory backend: dynamic-overwrite bucket partitions under
+    ``out_dir/data``, then one manifest row per bucket appended under
+    ``out_dir/manifest`` — data first, so a crash between the two
+    leaves the bucket un-manifested and it is simply redone."""
 
-    Reads the manifest, processes only missing buckets in waves of
-    ``wave_size``, writes each wave's output under
-    ``out_dir/data/ckpt_bucket=<b>/`` with dynamic partition overwrite
-    (a retried half-written bucket is replaced, never duplicated),
-    then commits the wave's manifest rows. ``max_waves`` bounds this
-    invocation (time-boxed operation / crash simulation in tests);
-    the next call continues where it stopped.
+    label = "[checkpoint] buckets {} done in {:.0f} ms"
 
-    ``bucket_fn`` maps a URL column to its int bucket id (default:
-    md5-prefix). ``recursive`` explodes archive/mail members into
-    child rows via :func:`extract_recursive`; children are bucketed by
-    their parent url (see module docstring).
+    def __init__(self, spark: SparkSession, out_dir: str):
+        self.spark, self.out_dir = spark, out_dir
+        self.done = done_buckets(spark, out_dir)
 
-    If ``pages`` already carries a ``ckpt_bucket`` column (a table
-    written partitioned by it — the recommended layout), the wave
-    filter uses the column and the scan partition-prunes. The
-    materialized values MUST equal ``bucket_fn(url)`` (produce the
-    column with :func:`md5_bucket_fn`): the output/manifest side
-    recomputes the bucket through ``bucket_fn``, so a divergent
-    column would commit buckets the input filter never selected.
+    def write(self, out: DataFrame) -> None:
+        (out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL).parquet(f"{self.out_dir}/data"))
 
-    Returns a summary dict: buckets already committed, buckets
-    processed now, waves run, rows written, wall seconds, docs/sec.
-    """
-    spark = pages.sparkSession
+    def commit(self, stats: dict[int, dict], wall_ms: float) -> None:
+        rows = [F.struct(F.lit(b).alias(BUCKET_COL),
+                         *[F.lit(s[k]).cast("long").alias(k)
+                           for k in STATS],
+                         F.lit(wall_ms).alias("wall_ms"))
+                for b, s in stats.items()]
+        (self.spark.range(1, numPartitions=1)
+         .select(F.inline(F.array(*rows)))
+         .write.mode("append").partitionBy(BUCKET_COL)
+         .parquet(f"{self.out_dir}/manifest"))
+
+
+class _TableCommit:
+    """Snapshot-table backend: stage the wave's files (invisible),
+    then ONE atomic snapshot commit publishes them with the wave's
+    bucket ids and stats in its summary."""
+
+    label = "[checkpoint/table] buckets {} committed in {:.0f} ms"
+
+    def __init__(self, spark: SparkSession, table_root: str):
+        from tika_spark.pipeline.table import SnapshotTable
+        try:
+            self.table = SnapshotTable.load(spark, table_root)
+        except ValueError:
+            self.table = SnapshotTable.create(spark, table_root)
+        self.done = table_done_buckets(self.table)
+
+    def write(self, out: DataFrame) -> None:
+        self.entries, self.schema = self.table.stage(out), out.schema
+
+    def commit(self, stats: dict[int, dict], wall_ms: float) -> None:
+        summary = {"buckets": list(stats),
+                   **{k: sum(s[k] for s in stats.values())
+                      for k in STATS},
+                   "wall_ms": wall_ms}
+        self.table.commit_staged(self.entries, self.schema.json(),
+                                 "append", summary=summary)
+
+
+def _run_waves(pages: DataFrame, backend, n_buckets: int,
+               wave_size: int, mode: str | None,
+               config: ExtractConfig | None, repartition: int | None,
+               max_waves: int | None,
+               bucket_fn: Callable[[Column], Column] | None,
+               recursive: bool, verbose: bool) -> dict:
+    """The wave loop behind both public runners: per wave, one
+    observed data write, then one manifest commit by ``backend``."""
     if bucket_fn is None:
         bucket_fn = md5_bucket_fn(n_buckets)
-
-    done = done_buckets(spark, out_dir)
+    done = backend.done
     todo = sorted(set(range(n_buckets)) - done)
     waves = [todo[i:i + wave_size]
-             for i in range(0, len(todo), wave_size)]
-    if max_waves is not None:
-        waves = waves[:max_waves]
+             for i in range(0, len(todo), wave_size)][:max_waves]
 
     t_start = time.time()
     rows_written = 0
@@ -166,36 +222,22 @@ def run_checkpointed(pages: DataFrame, out_dir: str,
         # children (url = "parent!/name") bucket by their PARENT url
         root_url = F.substring_index(F.col("url"), "!/", 1)
         out = out.withColumn(BUCKET_COL, bucket_fn(root_url))
-        # data first ...
-        (out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(f"{out_dir}/data"))
-        # ... manifest commit second: a crash between the two writes
-        # leaves the bucket un-manifested and it is simply redone.
-        # Stats come from the written snapshot, so the manifest
-        # reflects durable state, not in-flight counts.
-        committed = spark.read.parquet(f"{out_dir}/data").filter(
-            F.col(BUCKET_COL).isin(ids))
-        stats = {r[BUCKET_COL]: r for r in
-                 (committed.groupBy(BUCKET_COL)
-                  .agg(*status_rollup()).collect())}
+        # the write itself yields every bucket's stats; a wave bucket
+        # with zero rows still gets its (all-zero) manifest row, or
+        # every future resume would re-scan it forever
+        obs = Observation()
+        backend.write(out.observe(obs, *[
+            c.alias(f"{c_name}_{b}") for b in ids
+            for c_name, c in zip(STATS, status_rollup(
+                F.col(BUCKET_COL) == b))]))
+        got = obs.get
+        stats = {b: {k: int(got[f"{k}_{b}"] or 0) for k in STATS}
+                 for b in ids}
         wall_ms = (time.time() - t0) * 1000
-        # a wave bucket with zero input rows still needs a manifest
-        # row, or every future resume would re-scan it forever
-        rows = [(b,
-                 int(stats[b]["n_rows"]) if b in stats else 0,
-                 int(stats[b]["n_err"]) if b in stats else 0,
-                 int(stats[b]["n_bytes"]) if b in stats else 0,
-                 int(stats[b]["n_chars"]) if b in stats else 0,
-                 wall_ms)
-                for b in ids]
-        rows_written += sum(r[1] for r in rows)
-        (spark.createDataFrame(rows, MANIFEST_SCHEMA)
-         .coalesce(1).write.mode("append")
-         .parquet(f"{out_dir}/manifest"))
+        backend.commit(stats, wall_ms)
+        rows_written += sum(s["n_rows"] for s in stats.values())
         if verbose:
-            print(f"[checkpoint] buckets {ids} done in {wall_ms:.0f} ms")
+            print(backend.label.format(ids, wall_ms))
 
     wall = time.time() - t_start
     n_processed = sum(len(w) for w in waves)
@@ -209,6 +251,47 @@ def run_checkpointed(pages: DataFrame, out_dir: str,
             "wall_sec": wall,
             "docs_per_sec": rows_written / wall if wall > 0 else None,
             "complete": len(done) + n_processed == n_buckets}
+
+
+def run_checkpointed(pages: DataFrame, out_dir: str,
+                     n_buckets: int = 64, wave_size: int = 16,
+                     mode: str | None = None,
+                     config: ExtractConfig | None = None,
+                     repartition: int | None = None,
+                     max_waves: int | None = None,
+                     bucket_fn: Callable[[Column], Column] | None = None,
+                     recursive: bool = False,
+                     verbose: bool = False) -> dict:
+    """Run (or resume) a checkpointed extraction over ``pages``.
+
+    Reads the manifest, processes only missing buckets in waves of
+    ``wave_size``, writes each wave's output under
+    ``out_dir/data/ckpt_bucket=<b>/`` with dynamic partition overwrite
+    (a retried half-written bucket is replaced, never duplicated),
+    then commits the wave's manifest rows under
+    ``out_dir/manifest/ckpt_bucket=<b>/``. ``max_waves`` bounds this
+    invocation (time-boxed operation / crash simulation in tests);
+    the next call continues where it stopped.
+
+    ``bucket_fn`` maps a URL column to its int bucket id (default:
+    md5-prefix). ``recursive`` explodes archive/mail members into
+    child rows via :func:`extract_recursive`; children are bucketed by
+    their parent url (see module docstring).
+
+    If ``pages`` already carries a ``ckpt_bucket`` column (a table
+    written partitioned by it — the recommended layout), the wave
+    filter uses the column and the scan partition-prunes. The
+    materialized values MUST equal ``bucket_fn(url)`` (produce the
+    column with :func:`md5_bucket_fn`): the output/manifest side
+    recomputes the bucket through ``bucket_fn``, so a divergent
+    column would commit buckets the input filter never selected.
+
+    Returns a summary dict: buckets already committed, buckets
+    processed now, waves run, rows written, wall seconds, docs/sec.
+    """
+    return _run_waves(pages, _DirCommit(pages.sparkSession, out_dir),
+                      n_buckets, wave_size, mode, config, repartition,
+                      max_waves, bucket_fn, recursive, verbose)
 
 
 # ------------------------------------------- snapshot-table variant
@@ -245,73 +328,9 @@ def run_checkpointed_table(pages: DataFrame, table_root: str,
     see a complete prefix of waves, and resume is exactly the diff
     between the bucket universe and the committed snapshots' wave
     summaries. Per-file lineage (rows/bytes) rides each snapshot
-    manifest; per-bucket stats ride its summary.
+    manifest; the wave's observed stats ride its summary.
     """
-    from tika_spark.pipeline.table import SnapshotTable
-    spark = pages.sparkSession
-    if bucket_fn is None:
-        bucket_fn = md5_bucket_fn(n_buckets)
-    try:
-        table = SnapshotTable.load(spark, table_root)
-    except ValueError:
-        table = SnapshotTable.create(spark, table_root)
-
-    done = table_done_buckets(table)
-    todo = sorted(set(range(n_buckets)) - done)
-    waves = [todo[i:i + wave_size]
-             for i in range(0, len(todo), wave_size)]
-    if max_waves is not None:
-        waves = waves[:max_waves]
-
-    t_start = time.time()
-    rows_written = 0
-    has_col = BUCKET_COL in pages.columns
-    for wave in waves:
-        t0 = time.time()
-        ids = [int(b) for b in wave]
-        wave_pages = pages.filter(
-            F.col(BUCKET_COL).isin(ids) if has_col
-            else bucket_fn(F.col("url")).isin(ids))
-        if has_col:
-            wave_pages = wave_pages.drop(BUCKET_COL)
-        if recursive:
-            out = extract_recursive(wave_pages, mode=mode,
-                                    config=config,
-                                    repartition=repartition)
-        else:
-            out = extract(wave_pages, mode=mode, config=config,
-                          repartition=repartition).drop("children")
-        root_url = F.substring_index(F.col("url"), "!/", 1)
-        out = out.withColumn(BUCKET_COL, bucket_fn(root_url))
-        # stage (invisible), read the STAGED files for durable
-        # stats, then the snapshot commit publishes data + manifest
-        # + wave summary in one atomic rename
-        entries = table.stage(out)
-        stats = {"buckets": ids, "n_rows": 0, "n_err": 0,
-                 "n_bytes": 0, "n_chars": 0}
-        if entries:
-            staged = spark.read.parquet(
-                *[table.root + "/" + e["path"] for e in entries])
-            r = staged.agg(*status_rollup()).collect()[0]
-            stats.update(n_rows=int(r["n_rows"] or 0),
-                         n_err=int(r["n_err"] or 0),
-                         n_bytes=int(r["n_bytes"] or 0),
-                         n_chars=int(r["n_chars"] or 0))
-        stats["wall_ms"] = (time.time() - t0) * 1000
-        table.commit_staged(entries, out.schema.json(), "append",
-                            summary=stats)
-        rows_written += stats["n_rows"]
-        if verbose:
-            print(f"[checkpoint/table] buckets {ids} committed in "
-                  f"{stats['wall_ms']:.0f} ms")
-
-    wall = time.time() - t_start
-    n_processed = sum(len(w) for w in waves)
-    return {"buckets_total": n_buckets,
-            "buckets_done_before": len(done),
-            "buckets_processed": n_processed,
-            "waves": len(waves),
-            "rows_written": rows_written,
-            "wall_sec": wall,
-            "docs_per_sec": rows_written / wall if wall > 0 else None,
-            "complete": len(done) + n_processed == n_buckets}
+    return _run_waves(pages,
+                      _TableCommit(pages.sparkSession, table_root),
+                      n_buckets, wave_size, mode, config, repartition,
+                      max_waves, bucket_fn, recursive, verbose)

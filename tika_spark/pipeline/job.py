@@ -46,14 +46,18 @@ def _count_status(statuses) -> Column:
     return F.sum(F.when(F.col("status").isin(*statuses), 1).otherwise(0))
 
 
-def status_rollup() -> list[Column]:
+def status_rollup(where: Column | None = None) -> list[Column]:
     """The n_rows/n_err/n_bytes/n_chars aggregation over extract()
     output, shared by :func:`lineage_manifest` and the checkpoint
-    stats read-backs."""
-    return [F.count("*").alias("n_rows"),
-            _count_status(["error"]).alias("n_err"),
-            F.sum("n_bytes").alias("n_bytes"),
-            F.sum("n_chars").alias("n_chars")]
+    per-bucket stats. With ``where``, only the rows it holds for are
+    counted (the sums are null when there are none)."""
+    def only(c: Column) -> Column:
+        return c if where is None else F.when(where, c)
+    is_err = F.when(F.col("status") == "error", 1).otherwise(0)
+    return [F.count(only(F.lit(1))).alias("n_rows"),
+            F.sum(only(is_err)).alias("n_err"),
+            F.sum(only(F.col("n_bytes"))).alias("n_bytes"),
+            F.sum(only(F.col("n_chars"))).alias("n_chars")]
 
 
 def extract(df: DataFrame, mode: str | None = None,

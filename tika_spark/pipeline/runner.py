@@ -6,14 +6,17 @@
 
 A thin CLI over :mod:`tika_spark.pipeline.checkpoint`: rows are
 assigned a deterministic md5-prefix bucket, buckets are processed in
-groups, each group written with dynamic partition overwrite (the
+groups, each group written once with dynamic partition overwrite (the
 parquet stand-in for Iceberg's overwrite-by-partition commit — the
-production target), then acknowledged with one manifest row per
-bucket under ``<output>/manifest/``. On restart, manifested buckets
-are skipped via a pushed-down filter, so a killed run resumes
-idempotently: deterministic bucketing + pure per-row extraction +
-per-partition overwrite => byte-identical final snapshot regardless
-of kill/resume history (tested in tests/test_checkpoint.py and
+production target). The per-bucket stats are observed on that write,
+and the group is then acknowledged with one manifest row per bucket
+under ``<output>/manifest/ckpt_bucket=<b>/``. On restart, one listing
+of the manifest finds the committed buckets, which are skipped via a
+pushed-down filter, so a killed run resumes idempotently:
+deterministic bucketing + pure per-row extraction + per-partition
+overwrite => byte-identical final snapshot regardless of kill/resume
+history (tested in tests/test_checkpoint.py,
+tests/test_checkpoint_chaos.py and
 tests/test_pipeline.py::test_resume_after_kill).
 """
 
