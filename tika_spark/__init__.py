@@ -18,7 +18,13 @@ Public API:
     tika_spark.analysis.runner     -- corpus-op batch driver
 """
 
+from tika_spark import _zipcache
+
 __version__ = "0.1.0"
+
+# every UDF's pickled closure imports this package in the Python worker,
+# so the worker's later task starts skip re-reading unchanged archives
+_zipcache.install()
 
 
 def __getattr__(name):

@@ -15,7 +15,13 @@ content handlers.
 Heavy singletons (detection tables, language model) are module-level,
 initialized once per Python worker and reused across batches
 (the reference's amortized-singleton pattern, HtmlParser.java:66-69;
-requires spark.python.worker.reuse=true, the default).
+requires spark.python.worker.reuse=true, the default). A reused worker
+still pays a start-up per task: PySpark calls
+``importlib.invalidate_caches()``, which on Python 3.11 re-reads the
+central directory of every zip archive on ``sys.path`` (pyspark.zip
+holds 16 importers). Importing ``tika_spark`` installs
+``tika_spark._zipcache``, which skips the re-read for an archive that
+has not changed, so only a worker's first tasks pay it.
 """
 
 from __future__ import annotations
