@@ -396,3 +396,169 @@ class TestConfigMode:
             verbose=False)
         ran = spark.read.parquet(out + "/data").select("url", "text")
         assert {r["url"]: r["text"] for r in ran.collect()} == got
+
+
+def _exchanges(df) -> list[int]:
+    """Partition counts of the shuffles in ``df``'s own physical plan,
+    outermost first (a cached relation it reads is not descended)."""
+    def walk(node):
+        if node.nodeName() == "AdaptiveSparkPlan":
+            return walk(node.inputPlan())
+        kids = node.children()
+        own = ([node.outputPartitioning().numPartitions()]
+               if node.nodeName() == "Exchange" else [])
+        return own + [n for i in range(kids.size())
+                      for n in walk(kids.apply(i))]
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
+def _zip(entries: dict[str, bytes]) -> bytes:
+    import io
+    import zipfile
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as z:
+        for name, data in entries.items():
+            z.writestr(name, data)
+    return buf.getvalue()
+
+
+class TestWidthGuard:
+    """extract(), the checkpoint wave loop and spread_for_decode shuffle
+    page bytes only for an input narrower than the cluster, decided
+    from plan metadata without running a job."""
+
+    def test_wide_parquet_scan_has_no_exchange(self, spark, pages,
+                                               tmp_path):
+        dp = spark.sparkContext.defaultParallelism
+        src = tmp_path / "wide"
+        pages.repartition(dp).write.parquet(str(src))
+        assert len(list(src.glob("*.parquet"))) >= dp
+        plan = extract(spark.read.parquet(str(src)), mode="text")._jdf \
+            .queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan
+        assert "MapInPandas" in plan
+
+    def test_one_file_input_spreads_to_cluster_width(self, spark, pages,
+                                                     tmp_path):
+        src = tmp_path / "one"
+        pages.coalesce(1).write.parquet(str(src))
+        assert len(list(src.glob("*.parquet"))) == 1
+        out = extract(spark.read.parquet(str(src)), mode="text")
+        assert _exchanges(out) == [spark.sparkContext.defaultParallelism]
+
+    def test_member_levels_keep_their_exchange(self, spark, monkeypatch):
+        import tika_spark.pipeline.job as job
+        inner = _zip({"deep.txt": b"deep text"})
+        df = spark.createDataFrame(
+            [("http://e.com/a.zip",
+              _zip({"page.html": b"<html><body><p>in</p></body></html>",
+                    "nested.zip": inner})),
+             ("http://e.com/p.html", b"<html><body><p>top</p></body>")],
+            "url string, html binary")
+        levels, real = [], job.extract
+
+        def spy(*args, **kwargs):
+            out = real(*args, **kwargs)
+            levels.append(_exchanges(out))  # while ancestors are cached
+            return out
+
+        monkeypatch.setattr(job, "extract", spy)
+        got = job.extract_recursive(df, mode="text")
+        assert got.filter("depth = 2").count() == 1
+        dp = spark.sparkContext.defaultParallelism
+        assert len(levels) == 3 and levels[1:] == [[dp], [dp]]
+
+    def test_guard_builds_without_a_job(self, spark):
+        from tika_spark.analysis.spread import spread_for_decode
+        sc = spark.sparkContext
+        dp = sc.defaultParallelism
+        # an upstream exchange narrower than the cluster: under AQE,
+        # reading its width through .rdd would run that shuffle
+        narrow = (spark.range(20_000, numPartitions=2)
+                  .repartition(dp - 1, "id").filter("id % 3 > 0"))
+        pages = narrow.select(
+            F.concat(F.lit("u://"), F.col("id")).alias("url"),
+            F.encode(F.col("id").cast("string"), "UTF-8").alias("html"))
+        sc.setJobGroup("width-guard", "plan building only")
+        try:
+            spread = spread_for_decode(narrow, "id")
+            extracted = extract(pages, mode="text")
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = sc.statusTracker().getJobIdsForGroup("width-guard")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert jobs == []
+        assert _exchanges(spread)[0] == dp
+        assert _exchanges(extracted)[0] == dp
+
+    def test_wave_loop_resolves_the_guard_once(self, spark, pages,
+                                               tmp_path, monkeypatch):
+        from tika_spark.analysis import spread
+        from tika_spark.pipeline import checkpoint as ck
+        calls, real = [], spread.scan_width
+        monkeypatch.setattr(spread, "scan_width",
+                            lambda df: calls.append(1) or real(df))
+        src = str(tmp_path / "pages")
+        pages.select("url", "warc_ts", "html").write.parquet(src)
+        rows = spark.read.parquet(src)
+        s = ck.run_checkpointed(rows, str(tmp_path / "a"), n_buckets=3,
+                                wave_size=1)
+        assert s["waves"] == 3 and len(calls) == 1
+
+        calls.clear()
+        src_b = str(tmp_path / "pages_bucketed")
+        (rows.withColumn("ckpt_bucket", ck.md5_bucket_fn(3)(F.col("url")))
+         .write.partitionBy("ckpt_bucket").parquet(src_b))
+        s = ck.run_checkpointed(spark.read.parquet(src_b),
+                                str(tmp_path / "b"), n_buckets=3,
+                                wave_size=1)
+        assert s["waves"] == 3 and len(calls) == 3
+
+    def test_guarded_waves_commit_what_a_forced_shuffle_commits(
+            self, spark, pages, tmp_path):
+        from tika_spark.pipeline import checkpoint as ck
+        src = str(tmp_path / "pages")
+        pages.select("url", "warc_ts", "html").write.parquet(src)
+        rows = spark.read.parquet(src)
+        dp = spark.sparkContext.defaultParallelism
+        forced, resumed = str(tmp_path / "forced"), str(tmp_path / "res")
+        ck.run_checkpointed(rows, forced, n_buckets=3, wave_size=1,
+                            repartition=dp)
+        ck.run_checkpointed(rows, resumed, n_buckets=3, wave_size=1,
+                            max_waves=1)
+        ck.run_checkpointed(rows, resumed, n_buckets=3, wave_size=1)
+
+        assert ck.done_buckets(spark, forced) \
+            == ck.done_buckets(spark, resumed) == {0, 1, 2}
+
+        def manifest(out):
+            return sorted(tuple(r)[:-1]          # all but wall_ms
+                          for r in ck.manifest(spark, out).collect())
+        assert manifest(forced) == manifest(resumed)
+
+        def committed(out):
+            got = ck.load_extracted(spark, out)
+            return got.select(
+                *[F.to_json(c).alias(c) if c in ("spans", "links",
+                                                  "metadata") else c
+                  for c in got.columns if c not in ("part_id",
+                                                     "batch_ms")])
+        a, b = committed(forced), committed(resumed)
+        assert a.count() == N_ROWS
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_resumed_waves_reuse_compiled_code(spark, pages, tmp_path):
+    """Bucket ids reach generated code by reference, so a wave over a
+    new bucket compiles nothing the first wave did not."""
+    from tika_spark.pipeline import checkpoint as ck
+    src = str(tmp_path / "pages")
+    pages.select("url", "warc_ts", "html").write.parquet(src)
+    rows, out = spark.read.parquet(src), str(tmp_path / "out")
+    ck.run_checkpointed(rows, out, n_buckets=4, wave_size=1, max_waves=1)
+    compiles = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    before = compiles.getCount()
+    s = ck.run_checkpointed(rows, out, n_buckets=4, wave_size=1)
+    assert s["waves"] == 3 and s["complete"]
+    assert compiles.getCount() == before

@@ -1,39 +1,71 @@
-"""Parallelism guard for CPU-heavy maps.
+"""The width guard: shuffle an input only when it is narrower than the
+cluster.
 
-The decode stages (pixel/PCM/frame/census) and the dedup/similarity
-signature maps are CPU-per-row-bound projections or ``mapInPandas``
-maps with NO shuffle of their own -- the right shape at crawl scale,
-where the source table arrives in thousands of splits and the stage
-inherits that parallelism for free.  But when the SOURCE is narrower
-than the cluster (one small parquet file scans as one split, a
+The decode stages (pixel/PCM/frame/census), the dedup/similarity
+signature maps and the extraction job itself are CPU-per-row-bound
+``mapInPandas`` maps with NO shuffle of their own -- the right shape at
+crawl scale, where the source table arrives in thousands of splits and
+the stage inherits that parallelism for free.  But when the SOURCE is
+narrower than the cluster (one small parquet file scans as one split, a
 driver-built fixture, a filtered slice), the shuffle-free plan quietly
 serializes the whole map on the few input partitions: 500 VP8
 inter-frame decodes on ONE core took 12.7 s, 1.8 s after spreading.
 
-``spread_for_decode`` repartitions (by the given key columns, else
-round-robin) ONLY when the input has fewer partitions than the default
-parallelism, so the common crawl-scale path stays exchange-free while
-narrow inputs fan out.  The byte cost of the exchange is bounded by the
-columns the map was going to move into Python anyway; the CPU per row
-is the dominant term by construction.
+:func:`scan_width` reads how many partitions an input will run with
+from its physical plan -- file splits, an upstream exchange's partition
+count, a cached relation's plan -- and never runs a Spark job (not even
+under AQE, where materializing ``df.rdd`` runs every upstream shuffle).
+:func:`spread_width` turns that into the decision: spread to
+``defaultParallelism`` partitions, or keep the input's own splits.
 """
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+
+
+def _plan_width(node) -> int:
+    """Partitions a physical plan node produces, from metadata only."""
+    n = node.outputPartitioning().numPartitions()
+    if n > 0:
+        return n
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":      # reports UnknownPartitioning(0)
+        return _plan_width(node.inputPlan())
+    if name == "InMemoryTableScan":
+        return _plan_width(node.relation().cachedPlan())
+    kids = node.children()
+    if kids.size() == 0:                 # a scan: its splits, unread
+        rdds = node.inputRDDs()
+        return sum(len(rdds.apply(i).partitions())
+                   for i in range(rdds.size()))
+    widths = [_plan_width(kids.apply(i)) for i in range(kids.size())]
+    return sum(widths) if name == "Union" else max(widths)
+
+
+def scan_width(df: DataFrame) -> int:
+    """Number of partitions ``df`` will scan, read from its physical
+    plan through ``queryExecution`` without running a Spark job; 0 when
+    the plan does not say."""
+    try:
+        return _plan_width(df._jdf.queryExecution().executedPlan())
+    except Py4JError:
+        return 0
+
+
+def spread_width(df: DataFrame) -> int:
+    """``defaultParallelism`` when ``df`` scans fewer partitions than
+    that (spread it), else 0 (keep its splits)."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return target if target > 1 and scan_width(df) < target else 0
 
 
 def spread_for_decode(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition a narrow input of a CPU-heavy map up to cluster
-    parallelism; no-op (and no exchange) when the source already has
-    enough splits."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        have = df.rdd.getNumPartitions()
-    except Exception:
+    parallelism (by ``key_cols``, else round-robin); no-op (and no
+    exchange) when the source already has enough splits."""
+    n = spread_width(df)
+    if not n:
         return df
-    if have >= target or target <= 1:
-        return df
-    return df.repartition(target, *key_cols) if key_cols \
-        else df.repartition(target)
+    return df.repartition(n, *key_cols) if key_cols else df.repartition(n)

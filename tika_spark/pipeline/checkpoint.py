@@ -23,6 +23,16 @@ Scale design:
   waves amortize job-launch overhead; smaller waves bound the work
   lost to a crash. The input is re-scanned once per wave, which at
   crawl scale is partition-pruned I/O, not a full pass.
+- **One width decision per run.** Whether a wave's pages are shuffled
+  before the parse (see :func:`~tika_spark.pipeline.job.extract`) is
+  read from the input's plan once per run: a row filter leaves every
+  wave on the input's own splits, so a scan at least as wide as the
+  cluster writes each wave with no exchange at all. An input carrying
+  ``ckpt_bucket`` is partition-pruned to different splits per wave,
+  so there each wave decides for itself. The wave filter and the
+  output bucket Column are built once per run, a wave's output is one
+  ``select``, and bucket ids enter the plan as array literals, so every
+  wave after the first reuses its generated code.
 - **Stats are observed on the write, not read back.** The wave's
   output carries a ``DataFrame.observe`` of the ``status_rollup``
   fields per wave bucket, so the one data write also yields every
@@ -52,10 +62,12 @@ from collections.abc import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
+from tika_spark.analysis.spread import spread_width
 from tika_spark.config import ExtractConfig
 from tika_spark.pipeline.compact import _fs_for
 from tika_spark.pipeline.job import (extract, extract_recursive,
                                      status_rollup)
+from tika_spark.pipeline.stages import OUTPUT_COLUMNS
 
 BUCKET_COL = "ckpt_bucket"
 
@@ -143,13 +155,14 @@ class _DirCommit:
             .partitionBy(BUCKET_COL).parquet(f"{self.out_dir}/data"))
 
     def commit(self, stats: dict[int, dict], wall_ms: float) -> None:
-        rows = [F.struct(F.lit(b).alias(BUCKET_COL),
-                         *[F.lit(s[k]).cast("long").alias(k)
-                           for k in STATS],
-                         F.lit(wall_ms).alias("wall_ms"))
-                for b, s in stats.items()]
+        # SQL literals: one parse, not a py4j round trip per F.lit
+        rows = ", ".join(
+            f"named_struct('{BUCKET_COL}', {b}, "
+            + "".join(f"'{k}', {s[k]}L, " for k in STATS)
+            + f"'wall_ms', CAST({wall_ms!r} AS DOUBLE))"
+            for b, s in stats.items())
         (self.spark.range(1, numPartitions=1)
-         .select(F.inline(F.array(*rows)))
+         .selectExpr(f"inline(array({rows}))")
          .write.mode("append").partitionBy(BUCKET_COL)
          .parquet(f"{self.out_dir}/manifest"))
 
@@ -202,26 +215,31 @@ def _run_waves(pages: DataFrame, backend, n_buckets: int,
     # recommended layout: write the crawl table partitioned/bucketed
     # by ckpt_bucket), filter on the COLUMN — Catalyst pushes it to
     # the scan as a partition filter and each wave reads only its own
-    # partitions. Otherwise the bucket is computed per row (a cheap
-    # md5 over the url, still evaluated before the parse stage).
+    # partitions, so its width is judged per wave (extract's default).
+    # Otherwise the bucket is computed per row (a cheap md5 over the
+    # url, still evaluated before the parse stage); a row filter keeps
+    # every wave on the same splits, so the width guard runs once.
     has_col = BUCKET_COL in pages.columns
+    in_wave = F.col(BUCKET_COL) if has_col else bucket_fn(F.col("url"))
+    if repartition is None and not has_col and waves:
+        repartition = spread_width(pages)
+    # children (url = "parent!/name") bucket by their PARENT url
+    out_cols = [*(c for c in OUTPUT_COLUMNS if c != "children"),
+                *(["depth"] if recursive else []),
+                bucket_fn(F.substring_index(F.col("url"), "!/", 1))
+                .alias(BUCKET_COL)]
+    run_extract = extract_recursive if recursive else extract
     for wave in waves:
         t0 = time.time()
         ids = [int(b) for b in wave]
-        wave_pages = pages.filter(
-            F.col(BUCKET_COL).isin(ids) if has_col
-            else bucket_fn(F.col("url")).isin(ids))
-        if has_col:
-            wave_pages = wave_pages.drop(BUCKET_COL)
-        if recursive:
-            out = extract_recursive(wave_pages, mode=mode, config=config,
-                                    repartition=repartition)
-        else:
-            out = extract(wave_pages, mode=mode, config=config,
-                          repartition=repartition).drop("children")
-        # children (url = "parent!/name") bucket by their PARENT url
-        root_url = F.substring_index(F.col("url"), "!/", 1)
-        out = out.withColumn(BUCKET_COL, bucket_fn(root_url))
+        # bucket ids enter each plan as ARRAY literals, which generated
+        # code reads by reference: every wave reuses the compiled code,
+        # where an int literal is inlined into the source and costs a
+        # fresh Janino compile per bucket
+        out = run_extract(pages.filter(F.array_contains(F.lit(ids),
+                                                        in_wave)),
+                          mode=mode, config=config,
+                          repartition=repartition).select(*out_cols)
         # the write itself yields every bucket's stats; a wave bucket
         # with zero rows still gets its (all-zero) manifest row, or
         # every future resume would re-scan it forever
@@ -229,7 +247,7 @@ def _run_waves(pages: DataFrame, backend, n_buckets: int,
         backend.write(out.observe(obs, *[
             c.alias(f"{c_name}_{b}") for b in ids
             for c_name, c in zip(STATS, status_rollup(
-                F.col(BUCKET_COL) == b))]))
+                f"array_contains(array({b}), {BUCKET_COL})"))]))
         got = obs.get
         stats = {b: {k: int(got[f"{k}_{b}"] or 0) for k in STATS}
                  for b in ids}

@@ -6,9 +6,19 @@ Scale design (SURVEY.md §4 O9-O12, judged at 100TB):
   single ``mapInPandas``; the multi-MB ``html`` column crosses into
   Python exactly once and does NOT appear in the output schema, so no
   downstream stage or shuffle ever carries page bytes.
-- **Skew defusal by size buckets.** Rows are repartitioned by
-  ``(size_bucket, hash(url))`` so giant pages spread uniformly across
-  tasks instead of serializing one straggler partition, then sorted by
+- **Skew defusal only where skew can exist.** A scan at least as wide
+  as the cluster (``defaultParallelism`` partitions or more, read from
+  the plan by :func:`~tika_spark.analysis.spread.spread_width`) goes
+  straight into the parse stage: file splits are byte-bounded
+  (``spark.sql.files.maxPartitionBytes``), so no task reads more than
+  one split however the page sizes fall, and ``max_input_bytes`` bounds
+  the parse of any one page, so a giant costs one capped parse in the
+  task that holds it while every other core has splits of its own.
+  Shuffling the binary column there would move every page byte to
+  buy nothing. A NARROWER input (one file, a driver-built fixture, a
+  filtered slice) is repartitioned by ``(size_bucket, crc32(url))``
+  to ``defaultParallelism`` tasks, so giant pages spread uniformly
+  instead of serializing one straggler partition, then sorted by
   bucket within partitions so each Arrow batch is size-homogeneous.
 - **Bounded batches.** Callers should keep
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` moderate (<=1024);
@@ -27,6 +37,7 @@ import dataclasses
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from tika_spark.analysis.spread import spread_width
 from tika_spark.config import (MAX_EMBED_DEPTH, SIZE_BUCKET_BOUNDS,
                                ExtractConfig)
 from tika_spark.pipeline.stages import (EXTRACT_SCHEMA, GUARD_STATUSES,
@@ -46,18 +57,23 @@ def _count_status(statuses) -> Column:
     return F.sum(F.when(F.col("status").isin(*statuses), 1).otherwise(0))
 
 
-def status_rollup(where: Column | None = None) -> list[Column]:
+def status_rollup(where: str | None = None) -> list[Column]:
     """The n_rows/n_err/n_bytes/n_chars aggregation over extract()
     output, shared by :func:`lineage_manifest` and the checkpoint
-    per-bucket stats. With ``where``, only the rows it holds for are
-    counted (the sums are null when there are none)."""
-    def only(c: Column) -> Column:
-        return c if where is None else F.when(where, c)
-    is_err = F.when(F.col("status") == "error", 1).otherwise(0)
-    return [F.count(only(F.lit(1))).alias("n_rows"),
-            F.sum(only(is_err)).alias("n_err"),
-            F.sum(only(F.col("n_bytes"))).alias("n_bytes"),
-            F.sum(only(F.col("n_chars"))).alias("n_chars")]
+    per-bucket stats. With ``where`` (a SQL predicate), only the rows
+    it holds for are counted (the sums are null when there are none).
+
+    Each aggregate is parsed from SQL text: one JVM call per column,
+    where composing it from Column operations costs a py4j round trip
+    per operation (~60 ms per call of this function on a 4-vCPU host),
+    and the checkpoint wave loop builds it once per bucket."""
+    def only(e: str) -> str:
+        return e if where is None else f"IF({where}, {e}, NULL)"
+    is_err = "IF(status = 'error', 1, 0)"
+    return [F.expr(f"count({only('1')}) AS n_rows"),
+            F.expr(f"sum({only(is_err)}) AS n_err"),
+            F.expr(f"sum({only('n_bytes')}) AS n_bytes"),
+            F.expr(f"sum({only('n_chars')}) AS n_chars")]
 
 
 def extract(df: DataFrame, mode: str | None = None,
@@ -76,12 +92,14 @@ def extract(df: DataFrame, mode: str | None = None,
     mode is 'text'.
 
     ``repartition``: number of partitions for the skew-defusing
-    (size_bucket, crc32(url)) shuffle; None → defaultParallelism;
-    ``0`` → **skip the shuffle** and trust the input partitioning.
-    Use 0 when the source table is already written bucketed by content
-    size (the recommended Iceberg layout at crawl scale — then the
-    heavy binary column is never shuffled at all and the whole job is
-    scan → mapInPandas → write with zero exchanges).
+    (size_bucket, crc32(url)) shuffle. ``None`` (the default) shuffles
+    to defaultParallelism only when the input scans fewer partitions
+    than that, decided from plan metadata without running a job; a
+    wide scan is scan → mapInPandas with zero exchanges (see the module
+    docstring for why its byte-bounded splits and ``max_input_bytes``
+    need no shuffle). ``n > 0`` always shuffles to ``n`` partitions.
+    ``0`` never shuffles and trusts the input partitioning — for a
+    source table already written bucketed by content size.
     """
     if config is None:
         config = ExtractConfig(mode=mode or "text")
@@ -92,15 +110,14 @@ def extract(df: DataFrame, mode: str | None = None,
             if c in df.columns]
     slim = df.select(*cols)  # column pruning before the python stage
 
+    if repartition is None:
+        repartition = spread_width(slim)
     if repartition == 0:
         arranged = slim
     else:
-        bucketed = with_size_bucket(slim)
-        n_parts = (repartition
-                   or slim.sparkSession.sparkContext.defaultParallelism)
         # spread giants uniformly, then make batches size-homogeneous
-        arranged = (bucketed
-                    .repartition(n_parts, F.col("size_bucket"),
+        arranged = (with_size_bucket(slim)
+                    .repartition(repartition, F.col("size_bucket"),
                                  F.crc32("url"))
                     .sortWithinPartitions("size_bucket")
                     .drop("size_bucket"))
@@ -125,9 +142,13 @@ def extract_recursive(df: DataFrame, mode: str | None = None,
 
     The per-level ``isEmpty()`` is the deliberate driver-side fixpoint
     check (no recursion inside a UDF); levels after the first are tiny
-    (only container members), so the extra jobs are cheap. Each level
-    re-applies the size-bucket repartitioning so a zip full of giant
-    members cannot skew one task.
+    (only container members), so the extra jobs are cheap.
+    ``repartition`` governs level 0 exactly as in :func:`extract`. Every
+    member level (depth 1 and deeper) shuffles by size bucket to
+    ``repartition or defaultParallelism`` partitions whatever the
+    input's width: members are a new population the input layout says
+    nothing about, and the exchange keeps a zip full of giant members
+    from skewing one task.
 
     Each level is **persisted (MEMORY_AND_DISK) before the fixpoint
     probe** so the expensive mapInPandas parse runs exactly once per
@@ -141,6 +162,8 @@ def extract_recursive(df: DataFrame, mode: str | None = None,
 
     persisted: list[DataFrame] = []
     out = extract(df, mode=mode, config=config, repartition=repartition)
+    member_parts = (repartition
+                    or df.sparkSession.sparkContext.defaultParallelism)
     level = (out.withColumn("depth", F.lit(0))
              .persist(StorageLevel.MEMORY_AND_DISK))
     persisted.append(level)
@@ -155,7 +178,7 @@ def extract_recursive(df: DataFrame, mode: str | None = None,
         if children.isEmpty():
             break
         out = extract(children, mode=mode, config=config,
-                      repartition=repartition)
+                      repartition=member_parts)
         level = (out.withColumn("depth", F.lit(depth))
                  .persist(StorageLevel.MEMORY_AND_DISK))
         persisted.append(level)
