@@ -12,23 +12,24 @@ from hypothesis import strategies as st
 
 from tika_spark.analysis import brotlicodec as br
 from tika_spark.analysis import woff2
+from tika_spark.analysis.bitio import LsbReader, LsbWriter, canonical_codes
 
 
 class TestBits:
     def test_lsb_first(self):
-        w = br._BitWriter()
+        w = LsbWriter()
         w.write(0b101, 3)
         w.write(0b01, 2)
         w.write(0xAB, 8)
         data = w.bytes()
-        r = br._Bits(data)
+        r = LsbReader(data)
         assert r.read(3) == 0b101
         assert r.read(2) == 0b01
         assert r.read(8) == 0xAB
 
     def test_truncation(self):
         with pytest.raises(ValueError):
-            br._Bits(b"\x01").read(16)
+            LsbReader(b"\x01").read(16)
 
 
 class TestPrefixCodes:
@@ -37,26 +38,32 @@ class TestPrefixCodes:
     @settings(max_examples=60, deadline=None)
     def test_emit_read_roundtrip(self, freqs):
         lens = br._huffman_lengths(freqs)
-        w = br._BitWriter()
+        w = LsbWriter()
         br._emit_prefix_code(w, lens, 256)
         # pad so the reader never hits EOF mid-walk
-        code = br._read_prefix_code(br._Bits(w.bytes() + b"\x00" * 8),
+        code = br._read_prefix_code(LsbReader(w.bytes() + b"\x00" * 8),
                                     256)
         # decode every symbol's canonical code through the reader
-        codes = br._canonical_codes(
-            [lens.get(s, 0) for s in range(256)])
+        codes = canonical_codes(sorted(lens.items()))
         if len(lens) == 1:
             (only,) = lens
             assert code.single == only
             return
         for sym, (cw, ln) in codes.items():
-            w2 = br._BitWriter()
-            br._emit_code(w2, cw, ln)
-            assert code.read(br._Bits(w2.bytes() + b"\x00" * 4)) == sym
+            w2 = LsbWriter()
+            w2.write_code(cw, ln)
+            assert code.read(LsbReader(w2.bytes() + b"\x00" * 4)) == sym
 
     def test_kraft_violation_rejected(self):
-        with pytest.raises(ValueError):
-            br._Prefix([1, 2, 2, 2])  # over-subscribed
+        # over-subscribed, then incomplete, code-length codes
+        for clc in ({1: 2, 2: 2, 3: 2, 4: 1}, {1: 2, 2: 2}):
+            w = LsbWriter()
+            w.write(0, 2)                            # HSKIP = 0
+            for slot in br.CLC_ORDER:
+                br._write_clc_len(w, clc.get(slot, 0))
+            with pytest.raises(ValueError):
+                br._read_prefix_code(LsbReader(w.bytes() + b"\x00" * 8),
+                                     256)
 
 
 class TestRoundTrip:
@@ -93,7 +100,7 @@ class TestRoundTrip:
 
     def test_dictionary_reference_raises(self):
         # a distance beyond produced output = static dictionary ref
-        w = br._BitWriter()
+        w = LsbWriter()
         w.write(0, 1)            # wbits 16
         w.write(1, 1)            # ISLAST
         w.write(0, 1)            # not empty
@@ -237,7 +244,7 @@ class TestBlockSwitching:
     def test_metadata_metablock_skipped(self):
         # hand-build: metadata meta-block (MNIBBLES=0) skipping 3
         # bytes, then an uncompressed block, then last-empty
-        w = br._BitWriter()
+        w = LsbWriter()
         w.write(0, 1)        # wbits 16
         w.write(0, 1)        # not last
         w.write(3, 2)        # MNIBBLES code 3 -> metadata
@@ -260,7 +267,7 @@ class TestBlockSwitching:
         # cmd < 128: the decoder must take ring[0] WITHOUT reading a
         # distance symbol. Stream: insert "ab", copy 4 @ dist 2
         # (explicit), then an implicit-zone command copying 4 more.
-        w = br._BitWriter()
+        w = LsbWriter()
         w.write(0, 1)        # wbits
         w.write(1, 1)        # ISLAST
         w.write(0, 1)        # not empty
@@ -353,13 +360,10 @@ class TestStaticDictionary:
     def test_decode_dictionary_reference_stream(self):
         # crafted single-metablock stream: 8 literals then an explicit
         # distance 9 at position 8 -> static dictionary word 0 ("time")
-        from tika_spark.analysis.brotlicodec import (_BitWriter,
-                                                     _write_var_mlen,
+        from tika_spark.analysis.brotlicodec import (_write_var_mlen,
                                                      _write_count,
                                                      _huffman_lengths,
                                                      _emit_prefix_code,
-                                                     _canonical_codes,
-                                                     _emit_code,
                                                      _cmd_symbol,
                                                      _LSB6,
                                                      INSERT_BASE,
@@ -367,7 +371,7 @@ class TestStaticDictionary:
                                                      COPY_BASE,
                                                      COPY_EXTRA,
                                                      decompress)
-        w = _BitWriter()
+        w = LsbWriter()
         w.write(0, 1)            # WBITS 16
         w.write(1, 1)            # ISLAST
         w.write(0, 1)
@@ -390,15 +394,12 @@ class TestStaticDictionary:
         _emit_prefix_code(w, lit_lens, 256)
         _emit_prefix_code(w, cmd_lens, 704)
         _emit_prefix_code(w, dist_lens, 64)
-        lit_codes = _canonical_codes(
-            [lit_lens.get(s, 0) for s in range(256)])
-        code_w = _canonical_codes([cmd_lens.get(s, 0)
-                                   for s in range(704)])
+        lit_codes = canonical_codes(sorted(lit_lens.items()))
+        code_w = canonical_codes(sorted(cmd_lens.items()))
         w.write(8 - INSERT_BASE[ic], INSERT_EXTRA[ic])
         w.write(4 - COPY_BASE[cc], COPY_EXTRA[cc])
         for b in lits:
-            c, ln = lit_codes[b]
-            _emit_code(w, c, ln)
+            w.write_code(*lit_codes[b])
         w.write(9 - 1 - 8, 2)    # distance extra for sym 19 -> 9
         out = decompress(w.bytes())
         assert out == b"abcdefghtime"

@@ -24,7 +24,7 @@ def test_expgolomb_roundtrip():
     for v in svals:
         w.se(v)
     w.rbsp_trailing()
-    r = BitReader(w.getvalue())
+    r = BitReader(w.bytes())
     assert [r.ue() for _ in vals] == vals
     assert [r.se() for _ in svals] == svals
 
@@ -64,7 +64,7 @@ def _rt_residual(coeffs, nc, max_coeff):
     tc = write_residual_block(w, np.asarray(coeffs, np.int64), nc,
                               max_coeff)
     w.rbsp_trailing()
-    r = BitReader(w.getvalue())
+    r = BitReader(w.bytes())
     out, tc2 = read_residual_block(r, nc, max_coeff)
     assert tc == tc2
     return out
@@ -182,10 +182,10 @@ def test_unsupported_features_raise():
     w = BitWriter()
     w.ue(0)
     w.ue(0)
-    w.u(1, 1)                              # entropy_coding_mode=CABAC
+    w.write(1, 1)                              # entropy_coding_mode=CABAC
     w.rbsp_trailing()
     with pytest.raises(H264Error):
-        parse_pps(w.getvalue())
+        parse_pps(w.bytes())
     # P slice
     from tika_spark.analysis.h264 import H264Encoder, _nal
     enc = H264Encoder(16, 16)
@@ -196,10 +196,10 @@ def test_unsupported_features_raise():
     w.ue(0)
     w.ue(0)                                # slice_type P
     w.ue(0)
-    w.u(0, 4)
+    w.write(0, 4)
     w.rbsp_trailing()
     with pytest.raises(H264Error):
-        dec.push(_nal(1, w.getvalue(), ref=2))
+        dec.push(_nal(1, w.bytes(), ref=2))
     # truncated slice data
     y = np.full((16, 16), 9, np.uint8)
     c = np.full((8, 8), 128, np.uint8)

@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from tika_spark.analysis import mpegvideo as m
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
 
 
 def _decode_fixture(doc_id):
@@ -287,11 +288,10 @@ class TestMpeg2:
         # even coefficient sum → F[7][7] flips 0→1; the ripple is
         # sub-half so pixels stay flat, but the raw dequant output
         # must show the toggle
-        bits = m._BitWriter()
+        bits = MsbWriter()
         m._w_dc(bits, 10, 0)
         m._wbits(bits, m.DCT_EOB)
-        bits.align()
-        rd = m._Bits(bytes(bits.out), 0)
+        rd = MsbReader(bits.bytes())
         dc_pred = [128, 128, 128]
         coeff = m._decode_block(rd, True, 0, dc_pred, 2,
                                 m.DEFAULT_NONINTRA_Q,

@@ -14,7 +14,7 @@ import pytest
 
 from tika_spark.config import ExtractConfig
 from tika_spark.fixtures.pages import generate_pages_df, generate_pages_pandas
-from tika_spark.pipeline.job import extract, lineage_manifest
+from tika_spark.pipeline.job import extract, lineage_manifest, with_size_bucket
 from tika_spark.pipeline.checkpoint import done_buckets
 from tika_spark.pipeline.runner import run
 
@@ -147,6 +147,18 @@ def _main_goldens():
         r = gen_row(i)
         if r["text_main"] is not None:
             yield r
+
+
+def test_size_bucket_bounds(spark):
+    # a page exactly at a bound stays in its bucket, one byte more moves
+    # it up; the pages are built in the JVM so no page bytes cross py4j
+    sizes = [0, 4_096, 4_097, 65_536, 65_537, 1_048_576, 1_048_577,
+             8_388_608, 8_388_609]
+    df = spark.createDataFrame([(n,) for n in sizes], "n long").select(
+        "n", F.expr("cast(repeat('a', n) as binary)").alias("html"))
+    got = dict(with_size_bucket(df).select("n", "size_bucket").collect())
+    assert got == {0: 0, 4_096: 0, 4_097: 1, 65_536: 1, 65_537: 2,
+                   1_048_576: 2, 1_048_577: 3, 8_388_608: 3, 8_388_609: 4}
 
 
 class TestRunnerResume:

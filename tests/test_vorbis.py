@@ -4,6 +4,7 @@ import numpy as np
 import pytest
 
 from tika_spark.analysis import vorbis as vb
+from tika_spark.analysis.bitio import LsbWriter
 
 
 class TestFoundations:
@@ -31,10 +32,10 @@ class TestFoundations:
             assert vb.float32_unpack(vb.float32_pack(v)) == v
 
     def test_lsb_bitpack(self):
-        w = vb._LBitWriter()
+        w = LsbWriter()
         for val, n in ((5, 3), (1, 1), (300, 10), (0xABCDE, 20)):
             w.write(val, n)
-        r = vb._LBits(w.bytes())
+        r = vb._VorbisBits(w.bytes())
         for val, n in ((5, 3), (1, 1), (300, 10), (0xABCDE, 20)):
             assert r.read(n) == val
 

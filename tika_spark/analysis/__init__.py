@@ -7,6 +7,4 @@ multimodal plumbing). All hot paths are native ``pyspark.sql.functions``
 (SimHash bit packing, multimodal decode) — never per-row.
 """
 
-from tika_spark.analysis import dedup, multimodal, similarity, textstats
-
 __all__ = ["dedup", "multimodal", "similarity", "textstats"]

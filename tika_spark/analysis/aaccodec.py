@@ -69,8 +69,8 @@ import math
 
 import numpy as np
 
-from tika_spark.analysis.flac import _BitWriter, _Bits
-from tika_spark.analysis.mp3codec import _canonical, _huffman_from_freqs
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
+from tika_spark.analysis.mp3codec import _huffman_from_freqs
 
 
 class AacError(ValueError):
@@ -271,7 +271,7 @@ def _decode_grouping(grouping: int) -> list[int]:
     return lens
 
 
-def _read_hcb(bits: _Bits, table: dict, what: str):
+def _read_hcb(bits: MsbReader, table: dict, what: str):
     code, ln = 0, 0
     while ln < 24:
         code = (code << 1) | bits.read(1)
@@ -293,7 +293,7 @@ class _Ics:
         self.tns = None
 
 
-def _ics_info(bits: _Bits, ics: _Ics):
+def _ics_info(bits: MsbReader, ics: _Ics):
     bits.read(1)                         # ics_reserved_bit
     ics.window_sequence = bits.read(2)
     ics.window_shape = bits.read(1)
@@ -314,7 +314,7 @@ def _ics_info(bits: _Bits, ics: _Ics):
         raise AacError("max_sfb beyond band table")
 
 
-def _section_data(bits: _Bits, ics: _Ics):
+def _section_data(bits: MsbReader, ics: _Ics):
     sect_bits = 3 if ics.window_sequence == EIGHT_SHORT else 5
     esc = (1 << sect_bits) - 1
     ics.sect = []
@@ -336,7 +336,7 @@ def _section_data(bits: _Bits, ics: _Ics):
         ics.sect.append(runs)
 
 
-def _scale_factor_data(bits: _Bits, ics: _Ics, global_gain: int):
+def _scale_factor_data(bits: MsbReader, ics: _Ics, global_gain: int):
     sf = global_gain
     intensity_pos = 0
     ics.sfs = []
@@ -359,14 +359,14 @@ def _scale_factor_data(bits: _Bits, ics: _Ics, global_gain: int):
         ics.sfs.append(row)
 
 
-def _pulse_data(bits: _Bits):
+def _pulse_data(bits: MsbReader):
     n = bits.read(2) + 1
     start_sfb = bits.read(6)
     pulses = [(bits.read(5), bits.read(4)) for _ in range(n)]
     return start_sfb, pulses
 
 
-def _tns_data(bits: _Bits, ics: _Ics):
+def _tns_data(bits: MsbReader, ics: _Ics):
     short = ics.window_sequence == EIGHT_SHORT
     filt = []
     for _w in range(ics.n_windows):
@@ -443,7 +443,7 @@ def _apply_tns(ics: _Ics, spec: np.ndarray):
                 prev.append(y)
 
 
-def _spectral_data(bits: _Bits, ics: _Ics):
+def _spectral_data(bits: MsbReader, ics: _Ics):
     """Huffman spectral decode → quantized ints, grouped layout
     [group][window-in-group interleaved by band] per spec §4.6.3."""
     ics.quant = []
@@ -481,7 +481,7 @@ def _spectral_data(bits: _Bits, ics: _Ics):
         ics.quant.append(arr)
 
 
-def _individual_channel_stream(bits: _Bits, common: bool,
+def _individual_channel_stream(bits: MsbReader, common: bool,
                                shared: _Ics | None) -> tuple[int, _Ics]:
     global_gain = bits.read(8)
     if common:
@@ -625,7 +625,7 @@ def decode_aac_raw(blocks: list[bytes],
     prev_shape: list[int] = []
     pcm: list[np.ndarray] = []
     for body in blocks:
-        bits = _Bits(body)
+        bits = MsbReader(body)
         ch_specs: list[tuple[_Ics, np.ndarray]] = []
         while True:
             ide = bits.read(3)
@@ -707,14 +707,14 @@ def decode_aac_raw(blocks: list[bytes],
 # ----------------------------------------------------- bitstream out
 
 
-def _write_hcb(w: _BitWriter, table: dict, sym, what: str):
+def _write_hcb(w: MsbWriter, table: dict, sym, what: str):
     cl = table.get(sym)
     if cl is None:
         raise AacError(f"{what}: symbol {sym!r} not in codebook")
     w.write(*cl)
 
 
-def _encode_ics(w: _BitWriter, quant: np.ndarray, *,
+def _encode_ics(w: MsbWriter, quant: np.ndarray, *,
                 window_sequence: int, window_shape: int,
                 max_sfb: int, grouping: int, codebook: int,
                 global_gain: int, scalefactors, common: bool,
@@ -841,7 +841,7 @@ def aac_bytes(frames, *, rate_index: int = 4, window_sequence: int = 0,
         frame = [[ch] if isinstance(ch, np.ndarray) and ch.ndim == 1
                  else list(ch) for ch in frame]
         nch = len(frame)
-        w = _BitWriter()
+        w = MsbWriter()
         if nch == 1:
             w.write(0, 3)                # SCE
             w.write(0, 4)
@@ -882,10 +882,9 @@ def aac_bytes(frames, *, rate_index: int = 4, window_sequence: int = 0,
         else:
             raise AacError("1 or 2 channels only")
         w.write(7, 3)                    # END
-        w.align()
-        body = bytes(w.out)
+        body = w.bytes()
         frame_length = 7 + len(body)
-        h = _BitWriter()
+        h = MsbWriter()
         h.write(0xFFF, 12)               # sync
         h.write(0, 1)                    # MPEG-4
         h.write(0, 2)                    # layer
@@ -901,5 +900,5 @@ def aac_bytes(frames, *, rate_index: int = 4, window_sequence: int = 0,
         h.write(frame_length, 13)
         h.write(0x7FF, 11)               # buffer fullness: VBR
         h.write(0, 2)                    # raw blocks − 1
-        out += bytes(h.out) + body
+        out += h.bytes() + body
     return bytes(out)

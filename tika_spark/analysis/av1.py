@@ -4,8 +4,8 @@ AV1 is the web's ascendant video codec (WebM/MP4 `av01`, AVIF
 stills); its decode loop is out of scope (the perceptual-codec hook
 tier), but the METADATA every pipeline wants — profile, level, tier,
 coded size — lives in the sequence-header OBU and parses with a
-plain MSB-first bit reader (AV1 bitstream spec §5.3/§5.5, public
-AOM document).
+shared MSB-first bit reader (analysis/bitio.py; AV1 bitstream spec
+§5.3/§5.5, public AOM document).
 
 Supported carriage: raw low-overhead OBU streams and IVF files
 (``DKIF``/``AV01``); the IVF header's own width/height are returned
@@ -23,6 +23,8 @@ from __future__ import annotations
 
 import struct
 
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
+
 
 class Av1Error(ValueError):
     pass
@@ -31,39 +33,9 @@ class Av1Error(ValueError):
 OBU_SEQUENCE_HEADER = 1
 
 
-class _Bits:
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0                      # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.d):
-                raise Av1Error("sequence header truncated")
-            bit = (self.d[byte] >> (7 - (self.pos & 7))) & 1
-            v = (v << 1) | bit
-            self.pos += 1
-        return v
-
-
-class _BitW:
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def write(self, v: int, n: int):
-        for i in range(n - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def bytes(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for j, bit in enumerate(self.bits[i:i + 8]):
-                b |= bit << (7 - j)
-            out.append(b)
-        return bytes(out)
+class _Av1Bits(MsbReader):
+    __slots__ = ()
+    error = Av1Error
 
 
 def _leb128(data: bytes, pos: int) -> tuple[int, int]:
@@ -107,7 +79,7 @@ def parse_obus(data: bytes) -> list[tuple[int, bytes]]:
 
 def parse_sequence_header(payload: bytes) -> dict:
     """profile / level / tier / still / coded size (spec §5.5.1)."""
-    b = _Bits(payload)
+    b = _Av1Bits(payload)
     profile = b.read(3)
     still = b.read(1)
     reduced = b.read(1)
@@ -169,7 +141,7 @@ def av1_meta(data: bytes) -> dict:
 def seq_header_obu(profile: int, level: int, width: int,
                    height: int, reduced: bool = True,
                    still: bool = True, tier: int = 0) -> bytes:
-    w = _BitW()
+    w = MsbWriter()
     w.write(profile, 3)
     w.write(1 if still else 0, 1)
     w.write(1 if reduced else 0, 1)

@@ -50,151 +50,17 @@ become status rows; no shuffle.
 
 from __future__ import annotations
 
-# --------------------------------------------------------------- bits
-
-
-class _Bits:
-    """LSB-first bit reader over bytes."""
-
-    __slots__ = ("data", "pos", "buf", "n")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.buf = 0
-        self.n = 0
-
-    def read(self, nbits: int) -> int:
-        while self.n < nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated brotli stream")
-            self.buf |= self.data[self.pos] << self.n
-            self.pos += 1
-            self.n += 8
-        v = self.buf & ((1 << nbits) - 1)
-        self.buf >>= nbits
-        self.n -= nbits
-        return v
-
-    def align(self):
-        if self.n and (self.buf & ((1 << self.n) - 1)):
-            raise ValueError("non-zero padding at byte alignment")
-        self.buf = 0
-        self.n = 0
-
-    def raw(self, nbytes: int) -> bytes:
-        if self.pos + nbytes > len(self.data):
-            raise ValueError("truncated brotli raw span")
-        out = self.data[self.pos:self.pos + nbytes]
-        self.pos += nbytes
-        return out
-
-
-class _BitWriter:
-    __slots__ = ("out", "buf", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.n = 0
-
-    def write(self, v: int, nbits: int):
-        self.buf |= (v & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.buf & 0xFF)
-            self.buf >>= 8
-            self.n -= 8
-
-    def align(self):
-        if self.n:
-            self.out.append(self.buf & 0xFF)
-            self.buf = 0
-            self.n = 0
-
-    def raw(self, data: bytes):
-        assert self.n == 0
-        self.out += data
-
-    def bytes(self) -> bytes:
-        b = bytearray(self.out)
-        if self.n:
-            b.append(self.buf & 0xFF)
-        return bytes(b)
-
+from tika_spark.analysis.bitio import (LsbReader, LsbWriter, PrefixCode,
+                                       canonical_codes, huffman_lengths)
 
 # ------------------------------------------------------- prefix codes
 
 
-class _Prefix:
-    """Canonical prefix decoder (symbol-ordered tie-break per RFC
-    7932 section 3.2), table-free bit-at-a-time walk (streams here
-    are small font tables)."""
-
-    __slots__ = ("count", "offset", "sorted_syms", "max_len", "single")
-
-    def __init__(self, lengths: list[int]):
-        max_len = max(lengths) if lengths else 0
-        nz = [(ln, s) for s, ln in enumerate(lengths) if ln > 0]
-        if not nz:
-            self.single = None
-            self.max_len = 0
-            return
-        if len(nz) == 1:
-            self.single = nz[0][1]
-            self.max_len = 0
-            return
-        self.single = None
-        count = [0] * (max_len + 1)
-        for ln, _ in nz:
-            count[ln] += 1
-        # Kraft check: must be exactly complete
-        total = 0
-        for ln in range(1, max_len + 1):
-            total += count[ln] << (max_len - ln)
-        if total != (1 << max_len):
-            raise ValueError("invalid (non-canonical) brotli prefix code")
-        self.count = count
-        self.sorted_syms = [s for _, s in sorted(nz)]
-        offset = [0] * (max_len + 2)
-        for ln in range(1, max_len + 1):
-            offset[ln + 1] = offset[ln] + count[ln]
-        self.offset = offset
-        self.max_len = max_len
-
-    def read(self, bits: _Bits) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        first = 0
-        index = 0
-        for ln in range(1, self.max_len + 1):
-            code = (code << 1) | bits.read(1)
-            cnt = self.count[ln]
-            if code - first < cnt:
-                return self.sorted_syms[index + (code - first)]
-            index += cnt
-            first = (first + cnt) << 1
-        raise ValueError("invalid brotli prefix code word")
-
-
-def _canonical_codes(lengths: list[int]) -> dict[int, tuple[int, int]]:
-    """symbol -> (code, len), canonical MSB-first ordering."""
-    nz = sorted((ln, s) for s, ln in enumerate(lengths) if ln > 0)
-    codes = {}
-    code = 0
-    prev = 0
-    for ln, s in nz:
-        code <<= (ln - prev)
-        codes[s] = (code, ln)
-        code += 1
-        prev = ln
-    return codes
-
-
 CLC_ORDER = (1, 2, 3, 4, 0, 5, 17, 6, 16, 7, 8, 9, 10,
              11, 12, 13, 14, 15)
-def _read_clc_len(bits: _Bits) -> int:
+
+
+def _read_clc_len(bits: LsbReader) -> int:
     # variable code: 00->0, 01->4, 10->3, 110->2, 1110->1, 1111->5
     if bits.read(1) == 0:
         return 0 if bits.read(1) == 0 else 3
@@ -207,14 +73,14 @@ def _read_clc_len(bits: _Bits) -> int:
     return 1 if bits.read(1) == 0 else 5
 
 
-def _write_clc_len(w: _BitWriter, v: int):
+def _write_clc_len(w: LsbWriter, v: int):
     # mirror of _read_clc_len's bit order (LSB-first reads)
     pattern = {0: (0b00, 2), 3: (0b10, 2), 4: (0b01, 2),
                2: (0b011, 3), 1: (0b0111, 4), 5: (0b1111, 4)}[v]
     w.write(pattern[0], pattern[1])
 
 
-def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
+def _read_prefix_code(bits: LsbReader, alphabet_size: int) -> PrefixCode:
     """RFC 7932 section 3.4/3.5: simple or complex prefix code."""
     ident = bits.read(2)
     if ident == 1:
@@ -231,10 +97,7 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
             raise ValueError("duplicate simple-code symbols")
         lengths = [0] * alphabet_size
         if nsym == 1:
-            lengths[syms[0]] = 1
-            p = _Prefix(lengths)
-            p.single = syms[0]
-            return p
+            return PrefixCode(((syms[0], 1),))
         if nsym == 2:
             syms.sort()
             lengths[syms[0]] = lengths[syms[1]] = 1
@@ -254,7 +117,7 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
                 syms.sort()
                 for s in syms:
                     lengths[s] = 2
-        return _Prefix(lengths)
+        return PrefixCode(enumerate(lengths))
     # complex code: ident = HSKIP (number of skipped CLC slots)
     hskip = ident
     clc_lens = [0] * 18
@@ -270,7 +133,9 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
                 break
     if space < 0:
         raise ValueError("over-subscribed code-length code")
-    clc = _Prefix(clc_lens)
+    clc = PrefixCode(enumerate(clc_lens))
+    if clc.single is None and space != 0:
+        raise ValueError("incomplete brotli code-length code")
     # read symbol code lengths with 16/17 repeats
     lengths = [0] * alphabet_size
     symbol = 0
@@ -318,14 +183,10 @@ def _read_prefix_code(bits: _Bits, alphabet_size: int) -> _Prefix:
                     raise ValueError("brotli repeat overruns alphabet")
                 lengths[symbol] = 0
                 symbol += 1
-    nonzero = [sym for sym, ln in enumerate(lengths) if ln > 0]
-    if len(nonzero) == 1:
-        p = _Prefix([0] * alphabet_size)
-        p.single = nonzero[0]
-        return p
-    if space != 0:
+    code = PrefixCode(enumerate(lengths))
+    if code.single is None and space != 0:
         raise ValueError("under/over-subscribed brotli prefix code")
-    return _Prefix(lengths)
+    return code
 
 
 # ------------------------------------------------ alphabets and tables
@@ -496,7 +357,7 @@ class _BlockState:
     __slots__ = ("ntypes", "type_code", "count_code", "btype",
                  "prev", "count")
 
-    def __init__(self, bits: _Bits):
+    def __init__(self, bits: LsbReader):
         self.ntypes = _read_count(bits)
         self.btype = 0
         self.prev = 1
@@ -509,7 +370,7 @@ class _BlockState:
             self.count_code = None
             self.count = 1 << 60
 
-    def tick(self, bits: _Bits):
+    def tick(self, bits: LsbReader):
         if self.count == 0:
             sym = self.type_code.read(bits)
             if sym == 0:
@@ -524,7 +385,7 @@ class _BlockState:
         self.count -= 1
 
 
-def _read_count(bits: _Bits) -> int:
+def _read_count(bits: LsbReader) -> int:
     """NBLTYPES / NTREES variable-length count (1..256)."""
     if bits.read(1) == 0:
         return 1
@@ -532,7 +393,7 @@ def _read_count(bits: _Bits) -> int:
     return (1 << n) + 1 + bits.read(n)
 
 
-def _write_count(w: _BitWriter, v: int):
+def _write_count(w: LsbWriter, v: int):
     if v == 1:
         w.write(0, 1)
         return
@@ -542,12 +403,12 @@ def _write_count(w: _BitWriter, v: int):
     w.write(v - 1 - (1 << n), n)
 
 
-def _read_block_count(bits: _Bits, code: _Prefix) -> int:
+def _read_block_count(bits: LsbReader, code: PrefixCode) -> int:
     sym = code.read(bits)
     return BLOCK_COUNT_BASE[sym] + bits.read(BLOCK_COUNT_EXTRA[sym])
 
 
-def _read_context_map(bits: _Bits, ntrees: int, size: int) -> list[int]:
+def _read_context_map(bits: LsbReader, ntrees: int, size: int) -> list[int]:
     if ntrees == 1:
         return [0] * size
     rlemax = (bits.read(4) + 1) if bits.read(1) else 0
@@ -585,7 +446,7 @@ def decompress(data: bytes, max_out: int = 1 << 26) -> bytes:
     input, on output beyond ``max_out`` (inflate-bomb guard), and on
     static-dictionary references (documented drop, see module
     docstring)."""
-    bits = _Bits(bytes(data or b""))
+    bits = LsbReader(bytes(data or b""))
     # window size (value only bounds back-references; we keep all out)
     if bits.read(1) == 0:
         wbits = 16
@@ -611,7 +472,8 @@ def decompress(data: bytes, max_out: int = 1 << 26) -> bytes:
             skip = (bits.read(8 * mskip) + 1) if mskip else 0
             if mskip > 1 and ((skip - 1) >> (8 * (mskip - 1))) == 0:
                 raise ValueError("non-minimal brotli MSKIPLEN")
-            bits.align()
+            if bits.align():
+                raise ValueError("non-zero padding at byte alignment")
             bits.raw(skip)
             continue
         mlen = bits.read(16 + 4 * mnibbles) + 1
@@ -619,14 +481,15 @@ def decompress(data: bytes, max_out: int = 1 << 26) -> bytes:
             raise ValueError("brotli output exceeds max_out guard")
         if not islast and bits.read(1):
             # uncompressed
-            bits.align()
+            if bits.align():
+                raise ValueError("non-zero padding at byte alignment")
             out += bits.raw(mlen)
             continue
         _decode_meta_block(bits, mlen, out, wbits)
     return bytes(out)
 
 
-def _decode_meta_block(bits: _Bits, mlen: int, out: bytearray,
+def _decode_meta_block(bits: LsbReader, mlen: int, out: bytearray,
                        wbits: int):
     bl = _BlockState(bits)   # literals
     bi = _BlockState(bits)   # insert-and-copy
@@ -733,35 +596,16 @@ def _distance_value(bits, sym, ring, ndirect, npostfix) -> int:
 # ------------------------------------------------------------- encoder
 
 
-def _emit_code(w: _BitWriter, code: int, ln: int):
-    """Write a canonical prefix code word MSB-first (the read order)."""
-    for k in range(ln - 1, -1, -1):
-        w.write((code >> k) & 1, 1)
-
-
 def _huffman_lengths(freqs: dict[int, int], max_len: int = 15
                      ) -> dict[int, int]:
-    """Package-merge-free simple Huffman with depth cap: build the
-    tree, then flatten overlong codes by promoting (fixture-tier
-    compression quality; correctness only needs a complete code)."""
-    import heapq
-    items = sorted(freqs.items())
-    if len(items) == 1:
-        return {items[0][0]: 1}
-    heap = [(f, i, (s,)) for i, (s, f) in enumerate(items)]
-    heapq.heapify(heap)
-    depth = {s: 0 for s, _ in items}
-    nxt = len(items)
-    while len(heap) > 1:
-        fa, _, sa = heapq.heappop(heap)
-        fb, _, sb = heapq.heappop(heap)
-        for s in sa + sb:
-            depth[s] += 1
-        heapq.heappush(heap, (fa + fb, nxt, sa + sb))
-        nxt += 1
+    """Huffman lengths; past ``max_len`` a flat code instead
+    (fixture-tier compression quality; correctness only needs a
+    complete code)."""
+    depth = huffman_lengths(freqs)
     if max(depth.values()) > max_len:
         # flat fallback: ceil(log2(n)) bits for everyone, padded to a
         # complete code by giving the first few symbols shorter codes
+        items = sorted(freqs.items())
         n = len(items)
         bits_ = (n - 1).bit_length()
         depth = {s: bits_ for s, _ in items}
@@ -772,11 +616,10 @@ def _huffman_lengths(freqs: dict[int, int], max_len: int = 15
             # promoting one symbol a level frees one slot
             depth[s] = bits_ - 1 if bits_ > 1 else 1
             slack -= 1
-    # ensure completeness (kraft == 1) by demoting if over
     return depth
 
 
-def _emit_prefix_code(w: _BitWriter, lengths: dict[int, int],
+def _emit_prefix_code(w: LsbWriter, lengths: dict[int, int],
                       alphabet_size: int):
     """Emit a prefix code header (simple for <= 4 symbols, complex
     otherwise) such that _read_prefix_code reproduces ``lengths``."""
@@ -861,7 +704,7 @@ def _emit_prefix_code(w: _BitWriter, lengths: dict[int, int],
     if len(clc_lens) == 1:
         (only,) = clc_lens
         clc_lens = {only: 1}
-        # single-length CLC: _Prefix treats as single symbol; the
+        # single-length CLC: PrefixCode treats as single symbol; the
         # reader consumes no bits per token, so emit nothing below
     w.write(0, 2)  # HSKIP = 0 (complex)
     space = 32
@@ -874,20 +717,18 @@ def _emit_prefix_code(w: _BitWriter, lengths: dict[int, int],
             space -= 32 >> ln
             if space <= 0:
                 break
-    clc_codes = _canonical_codes(
-        [clc_lens.get(s, 0) for s in range(18)])
+    clc_codes = canonical_codes(sorted(clc_lens.items()))
     single_clc = len(clc_lens) == 1
     for tok, extra in tokens:
         if not single_clc:
-            code, ln = clc_codes[tok]
-            _emit_code(w, code, ln)
+            w.write_code(*clc_codes[tok])
         if tok == 17:
             w.write(extra, 3)
         elif tok == 16:
             w.write(extra, 2)
 
 
-def _write_var_mlen(w: _BitWriter, mlen: int):
+def _write_var_mlen(w: LsbWriter, mlen: int):
     if mlen <= (1 << 16):
         w.write(0, 2)
         w.write(mlen - 1, 16)
@@ -911,7 +752,7 @@ def compress(data: bytes, mode: str = "literals") -> bytes:
       commands with explicit distances.
     """
     data = bytes(data)
-    w = _BitWriter()
+    w = LsbWriter()
     w.write(0, 1)  # WBITS = 16
     if not data:
         w.write(1, 1)  # ISLAST
@@ -980,32 +821,26 @@ def compress(data: bytes, mode: str = "literals") -> bytes:
     _emit_prefix_code(w, lit_lens, 256)
     _emit_prefix_code(w, cmd_lens, 704)
     _emit_prefix_code(w, dist_lens, 16 + 0 + (48 << 0))
-    lit_codes = _canonical_codes(
-        [lit_lens.get(s, 0) for s in range(256)])
-    cmd_codes = _canonical_codes(
-        [cmd_lens.get(s, 0) for s in range(704)])
-    dist_codes = _canonical_codes(
-        [dist_lens.get(s, 0) for s in range(16 + 48)])
+    lit_codes = canonical_codes(sorted(lit_lens.items()))
+    cmd_codes = canonical_codes(sorted(cmd_lens.items()))
+    dist_codes = canonical_codes(sorted(dist_lens.items()))
     single_lit = len(lit_lens) == 1
     single_cmd = len(cmd_lens) == 1
     single_dist = len(dist_lens) == 1
     for (ins_len, lits, cop_len, dist), (sym, dsym, extras) in zip(
             cmds, cmd_syms):
         if not single_cmd:
-            code, ln = cmd_codes[sym]
-            _emit_code(w, code, ln)
+            w.write_code(*cmd_codes[sym])
         ins_code, ins_extra, cop_code, cop_extra = extras
         w.write(ins_extra, INSERT_EXTRA[ins_code])
         w.write(cop_extra, COPY_EXTRA[cop_code])
         for b in lits:
             if not single_lit:
-                code, ln = lit_codes[b]
-                _emit_code(w, code, ln)
+                w.write_code(*lit_codes[b])
         if dsym is not None:
             ds, dextra, dbits = dsym
             if not single_dist:
-                code, ln = dist_codes[ds]
-                _emit_code(w, code, ln)
+                w.write_code(*dist_codes[ds])
             if dbits:
                 w.write(dextra, dbits)
     return w.bytes()
@@ -1108,7 +943,7 @@ def compress_blocks(data: bytes, seg: int = 64) -> bytes:
         return compress(data)
     if len(data) > (1 << 24):
         raise ValueError("single-meta-block modes cap at 16 MiB")
-    w = _BitWriter()
+    w = LsbWriter()
     w.write(0, 1)   # WBITS = 16
     w.write(1, 1)   # ISLAST
     w.write(0, 1)   # not empty
@@ -1170,7 +1005,7 @@ def compress_blocks(data: bytes, seg: int = 64) -> bytes:
     # body: the command, then literals with block switches
     w.write(ins_extra, INSERT_EXTRA[ins_code])
     # copy extra bits for copy code 0: none
-    codes = [_canonical_codes([lens.get(s, 0) for s in range(256)])
+    codes = [canonical_codes(sorted(lens.items()))
              for lens in lit_lens]
     singles = [len(lens) == 1 for lens in lit_lens]
     count = seg
@@ -1184,8 +1019,7 @@ def compress_blocks(data: bytes, seg: int = 64) -> bytes:
             count = seg
         count -= 1
         if not singles[btype]:
-            code, ln = codes[btype][b]
-            _emit_code(w, code, ln)
+            w.write_code(*codes[btype][b])
     return w.bytes()
 
 
@@ -1199,7 +1033,7 @@ def compress_ctx(data: bytes) -> bytes:
         return compress(data)
     if len(data) > (1 << 24):
         raise ValueError("single-meta-block modes cap at 16 MiB")
-    w = _BitWriter()
+    w = LsbWriter()
     w.write(0, 1)   # WBITS = 16
     w.write(1, 1)   # ISLAST
     w.write(0, 1)   # not empty
@@ -1236,14 +1070,13 @@ def compress_ctx(data: bytes) -> bytes:
     _emit_prefix_code(w, {cmd_sym: 1}, 704)
     _emit_prefix_code(w, {0: 1}, 64)
     w.write(ins_extra, INSERT_EXTRA[ins_code])
-    codes = [_canonical_codes([ln.get(s, 0) for s in range(256)])
+    codes = [canonical_codes(sorted(ln.items()))
              for ln in lens]
     singles = [len(ln) == 1 for ln in lens]
     prev = 0
     for b in data:
         t = 0 if (prev >> 2) < 32 else 1
         if not singles[t]:
-            code, lnb = codes[t][b]
-            _emit_code(w, code, lnb)
+            w.write_code(*codes[t][b])
         prev = b
     return w.bytes()

@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
+
 _FIXED_COEFFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1],
                  4: [4, -6, 4, -1]}
 
@@ -42,45 +44,21 @@ _RATES = {0: None, 1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000,
 MAX_SAMPLES = 1 << 26            # bomb guard (≈64M samples/channel)
 
 
-class _Bits:
-    __slots__ = ("data", "pos", "buf", "n")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.n = 0
-
-    def read(self, nbits: int) -> int:
-        while self.n < nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated FLAC bitstream")
-            self.buf = (self.buf << 8) | self.data[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= nbits
-        v = (self.buf >> self.n) & ((1 << nbits) - 1)
-        self.buf &= (1 << self.n) - 1
-        return v
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        return v - (1 << nbits) if v >> (nbits - 1) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1 << 24:
-                raise ValueError("runaway unary code")
-        return q
-
-    def align(self):
-        self.n -= self.n % 8
-        self.buf &= (1 << self.n) - 1
+def _signed(bits: MsbReader, nbits: int) -> int:
+    v = bits.read(nbits)
+    return v - (1 << nbits) if v >> (nbits - 1) else v
 
 
-def _utf8_number(bits: _Bits) -> int:
+def _unary(bits: MsbReader) -> int:
+    q = 0
+    while bits.read(1) == 0:
+        q += 1
+        if q > 1 << 24:
+            raise ValueError("runaway unary code")
+    return q
+
+
+def _utf8_number(bits: MsbReader) -> int:
     """The frame header's UTF-8-style extended number (up to 56 bits
     — frame or sample index)."""
     b0 = bits.read(8)
@@ -102,7 +80,7 @@ def _utf8_number(bits: _Bits) -> int:
     return v
 
 
-def _rice_residual(bits: _Bits, blocksize: int, order: int
+def _rice_residual(bits: MsbReader, blocksize: int, order: int
                    ) -> np.ndarray:
     """Rice-coded residual section (methods 0/1: 4/5-bit parameters,
     escape to raw)."""
@@ -125,10 +103,10 @@ def _rice_residual(bits: _Bits, blocksize: int, order: int
         if param == escape:
             raw = bits.read(5)
             for i in range(n):
-                out[k + i] = bits.read_signed(raw) if raw else 0
+                out[k + i] = _signed(bits, raw) if raw else 0
         else:
             for i in range(n):
-                q = bits.unary()
+                q = _unary(bits)
                 r = bits.read(param) if param else 0
                 v = (q << param) | r
                 out[k + i] = (v >> 1) ^ -(v & 1)   # zigzag
@@ -136,24 +114,24 @@ def _rice_residual(bits: _Bits, blocksize: int, order: int
     return out
 
 
-def _subframe(bits: _Bits, blocksize: int, bps: int) -> np.ndarray:
+def _subframe(bits: MsbReader, blocksize: int, bps: int) -> np.ndarray:
     if bits.read(1):
         raise ValueError("bad subframe sync bit")
     stype = bits.read(6)
     wasted = 0
     if bits.read(1):
-        wasted = 1 + bits.unary()
+        wasted = 1 + _unary(bits)
     eff = bps - wasted
     if eff <= 0 or eff > 32:
         raise ValueError("bad effective sample size")
     if stype == 0:                       # CONSTANT
-        out = np.full(blocksize, bits.read_signed(eff), dtype=np.int64)
+        out = np.full(blocksize, _signed(bits, eff), dtype=np.int64)
     elif stype == 1:                     # VERBATIM
-        out = np.array([bits.read_signed(eff)
+        out = np.array([_signed(bits, eff)
                         for _ in range(blocksize)], dtype=np.int64)
     elif 8 <= stype <= 12:               # FIXED order 0-4
         order = stype - 8
-        warm = [bits.read_signed(eff) for _ in range(order)]
+        warm = [_signed(bits, eff) for _ in range(order)]
         resid = _rice_residual(bits, blocksize, order)
         out = np.empty(blocksize, dtype=np.int64)
         out[:order] = warm
@@ -165,15 +143,15 @@ def _subframe(bits: _Bits, blocksize: int, bps: int) -> np.ndarray:
             out[i] = resid[i - order] + pred
     elif stype >= 32:                    # LPC
         order = stype - 31
-        warm = [bits.read_signed(eff) for _ in range(order)]
+        warm = [_signed(bits, eff) for _ in range(order)]
         prec = bits.read(4)
         if prec == 15:
             raise ValueError("invalid LPC precision")
         prec += 1
-        shift = bits.read_signed(5)
+        shift = _signed(bits, 5)
         if shift < 0:
             raise ValueError("negative LPC shift")
-        coeffs = [bits.read_signed(prec) for _ in range(order)]
+        coeffs = [_signed(bits, prec) for _ in range(order)]
         resid = _rice_residual(bits, blocksize, order)
         out = np.empty(blocksize, dtype=np.int64)
         out[:order] = warm
@@ -227,7 +205,7 @@ def decode_flac(data: bytes, verify_md5: bool = True
     if total > MAX_SAMPLES:
         raise ValueError("stream too large")
 
-    bits = _Bits(data, pos)
+    bits = MsbReader(data, pos)
     chunks: list[np.ndarray] = []
     got = 0
     while (total == 0 or got < total) and bits.pos < len(data):
@@ -327,25 +305,6 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.n = 0
-
-    def write(self, v: int, nbits: int):
-        self.buf = (self.buf << nbits) | (v & ((1 << nbits) - 1))
-        self.n += nbits
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.buf >> self.n) & 0xFF)
-        self.buf &= (1 << self.n) - 1
-
-    def align(self):
-        if self.n:
-            self.write(0, 8 - self.n)
-
-
 def flac_bytes(samples: np.ndarray, rate: int = 8000,
                mode: str = "fixed2", rice_param: int = 4) -> bytes:
     """int16 (n[, channels]) → FLAC bytes (fixture/decoder coverage).
@@ -366,7 +325,7 @@ def flac_bytes(samples: np.ndarray, rate: int = 8000,
     for fi, start in enumerate(range(0, n, bs)):
         block = a[start:start + bs]
         blocksize = len(block)
-        hdr = _BitWriter()
+        hdr = MsbWriter()
         hdr.write(0x3FFE, 14)
         hdr.write(0, 1)
         hdr.write(0, 1)                  # fixed blocksize strategy
@@ -382,11 +341,10 @@ def flac_bytes(samples: np.ndarray, rate: int = 8000,
             hdr.write(0xC0 | (fi >> 6), 8)
             hdr.write(0x80 | (fi & 0x3F), 8)
         hdr.write(blocksize - 1, 16)
-        hdr.align()
-        head = bytes(hdr.out)
+        head = hdr.bytes()
         head += bytes([_crc8(head)])
 
-        body = _BitWriter()
+        body = MsbWriter()
         for ch in range(channels):
             sig = block[:, ch].astype(np.int64)
             body.write(0, 1)
@@ -418,8 +376,7 @@ def flac_bytes(samples: np.ndarray, rate: int = 8000,
                 body.write(0, 1)
                 for v in sig:
                     body.write(int(v) & 0xFFFF, 16)
-        body.align()
-        payload = head + bytes(body.out)
+        payload = head + body.bytes()
         payload += struct.pack(">H", _crc16(payload))
         frames += payload
 

@@ -36,6 +36,8 @@ import struct
 
 import numpy as np
 
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
+
 
 class H264Error(ValueError):
     pass
@@ -44,122 +46,69 @@ class H264Error(ValueError):
 # ----------------------------------------------------------- bit I/O
 
 
-class BitReader:
-    """MSB-first bit reader over an RBSP (already unescaped)."""
+class BitReader(MsbReader):
+    """Bit reader over an RBSP (already unescaped) with the
+    Exp-Golomb codes."""
 
-    __slots__ = ("data", "pos", "n", "_last_one")
+    __slots__ = ("_last_one",)
+    error = H264Error
 
     def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0                       # bit position
-        self.n = len(data) * 8
+        super().__init__(data)
         self._last_one = -2                # lazily located stop bit
 
-    def u(self, k: int) -> int:
-        if self.pos + k > self.n:
-            raise H264Error("bitstream underrun")
-        v = 0
-        p = self.pos
-        d = self.data
-        for _ in range(k):
-            v = (v << 1) | ((d[p >> 3] >> (7 - (p & 7))) & 1)
-            p += 1
-        self.pos = p
-        return v
-
     def flag(self) -> int:
-        return self.u(1)
+        return self.read(1)
 
     def ue(self) -> int:
         zeros = 0
-        while self.u(1) == 0:
+        while self.read(1) == 0:
             zeros += 1
             if zeros > 31:
                 raise H264Error("exp-golomb prefix too long")
-        return (1 << zeros) - 1 + (self.u(zeros) if zeros else 0)
+        return (1 << zeros) - 1 + self.read(zeros)
 
     def se(self) -> int:
         k = self.ue()
         return (k + 1) >> 1 if k & 1 else -(k >> 1)
 
-    def byte_align(self) -> None:
-        self.pos = (self.pos + 7) & ~7
-
-    def read_bytes(self, k: int) -> bytes:
-        if self.pos & 7:
-            raise H264Error("unaligned byte read")
-        b = self.pos >> 3
-        if (b + k) * 8 > self.n:
-            raise H264Error("bitstream underrun")
-        self.pos += 8 * k
-        return self.data[b:b + k]
-
     def more_rbsp_data(self) -> bool:
         """True while bits other than the rbsp_stop_one_bit + padding
         remain."""
-        if self.pos >= self.n:
+        pos = self.tell()
+        if pos >= len(self.data) * 8:
             return False
         if self._last_one == -2:
             # locate the last 1 bit (the stop bit) once — rescanning
             # per macroblock would make slice decode quadratic
-            last = self.n - 1
+            last = len(self.data) * 8 - 1
             d = self.data
             while last >= 0 \
                     and not (d[last >> 3] >> (7 - (last & 7))) & 1:
                 last -= 1
             self._last_one = last
-        return self.pos < self._last_one
+        return pos < self._last_one
 
 
-class BitWriter:
-    __slots__ = ("buf", "acc", "nbits")
-
-    def __init__(self):
-        self.buf = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def u(self, v: int, k: int) -> None:
-        if k == 0:
-            return
-        self.acc = (self.acc << k) | (v & ((1 << k) - 1))
-        self.nbits += k
-        while self.nbits >= 8:
-            self.nbits -= 8
-            self.buf.append((self.acc >> self.nbits) & 0xFF)
-        self.acc &= (1 << self.nbits) - 1
+class BitWriter(MsbWriter):
+    __slots__ = ()
 
     def bits(self, s: str) -> None:
         for ch in s:
-            self.u(1 if ch == "1" else 0, 1)
+            self.write(1 if ch == "1" else 0, 1)
 
     def ue(self, v: int) -> None:
         v += 1
         k = v.bit_length() - 1
-        self.u(0, k)
-        self.u(v, k + 1)
+        self.write(0, k)
+        self.write(v, k + 1)
 
     def se(self, v: int) -> None:
         self.ue(2 * v - 1 if v > 0 else -2 * v)
 
-    def byte_align_zero(self) -> None:
-        if self.nbits:
-            self.u(0, 8 - self.nbits)
-
-    def write_bytes(self, b: bytes) -> None:
-        if self.nbits:
-            raise H264Error("unaligned byte write")
-        self.buf.extend(b)
-
     def rbsp_trailing(self) -> None:
-        self.u(1, 1)
-        self.byte_align_zero()
-
-    def getvalue(self) -> bytes:
-        out = bytearray(self.buf)
-        if self.nbits:
-            out.append((self.acc << (8 - self.nbits)) & 0xFF)
-        return bytes(out)
+        self.write(1, 1)
+        self.align()
 
 
 def rbsp_unescape(nal: bytes) -> bytes:
@@ -227,9 +176,9 @@ def split_avcc(sample: bytes, length_size: int = 4) -> list[bytes]:
 
 def parse_sps(rbsp: bytes) -> dict:
     r = BitReader(rbsp)
-    profile = r.u(8)
-    r.u(8)                                  # constraint flags + zeros
-    level = r.u(8)
+    profile = r.read(8)
+    r.read(8)                                  # constraint flags + zeros
+    level = r.read(8)
     sps_id = r.ue()
     chroma_format = 1
     if profile in (100, 110, 122, 244, 44, 83, 86, 118, 128, 138,
@@ -292,7 +241,7 @@ def parse_pps(rbsp: bytes) -> dict:
     r.ue()                                  # num_ref_idx_l0
     r.ue()                                  # num_ref_idx_l1
     r.flag()                                # weighted_pred
-    r.u(2)                                  # weighted_bipred
+    r.read(2)                                  # weighted_bipred
     qp = r.se() + 26
     r.se()                                  # pic_init_qs
     chroma_qp_off = r.se()
@@ -507,7 +456,7 @@ _RB_DEC = {z: _invert(dict(enumerate(v))) for z, v in _RB.items()}
 def _read_vlc(r: BitReader, dec: dict, what: str):
     bits = ""
     for _ in range(20):
-        bits += "1" if r.u(1) else "0"
+        bits += "1" if r.read(1) else "0"
         if bits in dec:
             return dec[bits]
     raise H264Error(f"invalid {what} code")
@@ -624,7 +573,7 @@ def read_residual_block(r: BitReader, nc: int, max_coeff: int
     elif nc < 8:
         dec = _CT_DEC[4]
     else:
-        v = r.u(6)
+        v = r.read(6)
         t1s, tc = v & 3, (v >> 2) + 1
         if v == 3:
             t1s, tc = 0, 0
@@ -640,11 +589,11 @@ def _read_levels(r: BitReader, t1s: int, tc: int, max_coeff: int
         return out, 0
     levels = []
     for _ in range(t1s):
-        levels.append(-1 if r.u(1) else 1)
+        levels.append(-1 if r.read(1) else 1)
     suffix_len = 1 if tc > 10 and t1s < 3 else 0
     for i in range(tc - t1s):
         prefix = 0
-        while r.u(1) == 0:
+        while r.read(1) == 0:
             prefix += 1
             if prefix > 32:
                 raise H264Error("level_prefix too long")
@@ -654,7 +603,7 @@ def _read_levels(r: BitReader, t1s: int, tc: int, max_coeff: int
             sz = prefix - 3
         else:
             sz = suffix_len
-        suffix = r.u(sz) if sz else 0
+        suffix = r.read(sz) if sz else 0
         code = (min(15, prefix) << suffix_len) + suffix
         if prefix >= 15 and suffix_len == 0:
             code += 15
@@ -699,21 +648,21 @@ def _write_level_code(w: BitWriter, code: int, suffix_len: int
     """Inverse of the §9.2.2.1 levelCode derivation."""
     if suffix_len == 0:
         if code < 14:
-            w.u(0, code)
-            w.u(1, 1)
+            w.write(0, code)
+            w.write(1, 1)
             return
         if code < 30:
-            w.u(0, 14)
-            w.u(1, 1)
-            w.u(code - 14, 4)
+            w.write(0, 14)
+            w.write(1, 1)
+            w.write(code - 14, 4)
             return
         code -= 30
     else:
         prefix = code >> suffix_len
         if prefix < 15:
-            w.u(0, prefix)
-            w.u(1, 1)
-            w.u(code & ((1 << suffix_len) - 1), suffix_len)
+            w.write(0, prefix)
+            w.write(1, 1)
+            w.write(code & ((1 << suffix_len) - 1), suffix_len)
             return
         code -= 15 << suffix_len
     prefix = 15
@@ -722,9 +671,9 @@ def _write_level_code(w: BitWriter, code: int, suffix_len: int
         prefix += 1
         if prefix > 32:
             raise H264Error("level too large to encode")
-    w.u(0, prefix)
-    w.u(1, 1)
-    w.u(code, prefix - 3)
+    w.write(0, prefix)
+    w.write(1, 1)
+    w.write(code, prefix - 3)
 
 
 def write_residual_block(w: BitWriter, coeffs: np.ndarray, nc: int,
@@ -754,16 +703,16 @@ def write_residual_block(w: BitWriter, coeffs: np.ndarray, nc: int,
         table = None
     if table is None:
         if tc == 0:
-            w.u(3, 6)
+            w.write(3, 6)
         else:
-            w.u(((tc - 1) << 2) | t1s, 6)
+            w.write(((tc - 1) << 2) | t1s, 6)
     else:
         w.bits(table[(t1s, tc)])
     if tc == 0:
         return 0
     levels = [int(coeffs[p]) for p in reversed(idx)]
     for lv in levels[:t1s]:
-        w.u(0 if lv > 0 else 1, 1)
+        w.write(0 if lv > 0 else 1, 1)
     suffix_len = 1 if tc > 10 and t1s < 3 else 0
     for i, lv in enumerate(levels[t1s:]):
         code = 2 * abs(lv) - 2 if lv > 0 else 2 * abs(lv) - 1
@@ -1164,11 +1113,11 @@ class H264Decoder:
         sps = self.sps.get(pps["sps_id"])
         if sps is None:
             raise H264Error("PPS references unknown SPS")
-        r.u(sps["log2_max_frame_num"])              # frame_num
+        r.read(sps["log2_max_frame_num"])              # frame_num
         if idr:
             r.ue()                                  # idr_pic_id
         if sps["poc_type"] == 0:
-            r.u(sps["log2_max_poc_lsb"])
+            r.read(sps["log2_max_poc_lsb"])
             if pps["bottom_field_poc"]:
                 r.se()
         if pps["redundant_pic_cnt_present"]:
@@ -1216,12 +1165,12 @@ class H264Decoder:
         have_t = mby > 0
 
         if mb_type == 25:                            # I_PCM
-            r.byte_align()
-            y = np.frombuffer(r.read_bytes(256), np.uint8)
+            r.align()
+            y = np.frombuffer(r.raw(256), np.uint8)
             f.y[y0:y0 + 16, x0:x0 + 16] = y.reshape(16, 16)
-            u = np.frombuffer(r.read_bytes(64), np.uint8)
+            u = np.frombuffer(r.raw(64), np.uint8)
             f.u[cy0:cy0 + 8, cx0:cx0 + 8] = u.reshape(8, 8)
-            v = np.frombuffer(r.read_bytes(64), np.uint8)
+            v = np.frombuffer(r.raw(64), np.uint8)
             f.v[cy0:cy0 + 8, cx0:cx0 + 8] = v.reshape(8, 8)
             f.tc_y[by0:by0 + 4, bx0:bx0 + 4] = 16
             f.tc_u[mby * 2:mby * 2 + 2, mbx * 2:mbx * 2 + 2] = 16
@@ -1241,7 +1190,7 @@ class H264Decoder:
                 if r.flag():
                     mode = pred
                 else:
-                    rem = r.u(3)
+                    rem = r.read(3)
                     mode = rem if rem < pred else rem + 1
                 modes.append(mode)
                 f.i4mode[gy, gx] = mode
@@ -1403,11 +1352,11 @@ def parse_slice_header(rbsp: bytes, sps_map: dict, pps_map: dict,
     sps = sps_map.get(pps["sps_id"])
     if sps is None:
         raise H264Error("PPS references unknown SPS")
-    frame_num = r.u(sps["log2_max_frame_num"])
+    frame_num = r.read(sps["log2_max_frame_num"])
     idr_pic_id = r.ue() if idr else None
     poc_lsb = None
     if sps["poc_type"] == 0:
-        poc_lsb = r.u(sps["log2_max_poc_lsb"])
+        poc_lsb = r.read(sps["log2_max_poc_lsb"])
     return {"first_mb": first_mb,
             "slice_type": _SLICE_TYPE_NAMES[slice_type % 5],
             "frame_num": frame_num, "idr": idr,
@@ -1446,10 +1395,6 @@ def slice_census(nals: list[bytes]) -> list[dict]:
     return out
 
 
-def slice_census_annexb(data: bytes) -> list[dict]:
-    return slice_census(split_annexb(bytes(data or b"")))
-
-
 def cabac_slice_nals(pattern: str, seed: int = 0,
                      payload_bytes: int = 64) -> list[bytes]:
     """Fixture: a Main-profile NAL sequence whose PPS flags CABAC
@@ -1471,41 +1416,41 @@ def cabac_slice_nals(pattern: str, seed: int = 0,
     MIS-decode real streams silently instead of status-rowing —
     worse than honest refusal. See BENCH/CONFORMANCE.md."""
     w = BitWriter()
-    w.u(77, 8)                               # Main profile
-    w.u(0, 8)
-    w.u(30, 8)
+    w.write(77, 8)                               # Main profile
+    w.write(0, 8)
+    w.write(30, 8)
     w.ue(0)                                  # sps_id
     w.ue(0)                                  # log2_max_frame_num = 4
     w.ue(0)                                  # poc_type 0
     w.ue(4)                                  # log2_max_poc_lsb = 8
     w.ue(2)
-    w.u(0, 1)
+    w.write(0, 1)
     w.ue(0)                                  # mb_w 1
     w.ue(0)                                  # mb_h 1
-    w.u(1, 1)                                # frame_mbs_only
-    w.u(0, 1)
-    w.u(0, 1)                                # no crop
-    w.u(0, 1)                                # no VUI
+    w.write(1, 1)                                # frame_mbs_only
+    w.write(0, 1)
+    w.write(0, 1)                                # no crop
+    w.write(0, 1)                                # no VUI
     w.rbsp_trailing()
-    sps = w.getvalue()
+    sps = w.bytes()
     w = BitWriter()
     w.ue(0)                                  # pps_id
     w.ue(0)                                  # sps_id
-    w.u(1, 1)                                # entropy_coding_mode=CABAC
-    w.u(1, 1)                                # bottom-field POC present
+    w.write(1, 1)                                # entropy_coding_mode=CABAC
+    w.write(1, 1)                                # bottom-field POC present
     w.ue(0)
     w.ue(0)
     w.ue(0)
-    w.u(0, 1)
-    w.u(0, 2)
+    w.write(0, 1)
+    w.write(0, 2)
     w.se(0)                                  # pic_init_qp 26
     w.se(0)
     w.se(0)
-    w.u(0, 1)
-    w.u(0, 1)
-    w.u(0, 1)
+    w.write(0, 1)
+    w.write(0, 1)
+    w.write(0, 1)
     w.rbsp_trailing()
-    pps = w.getvalue()
+    pps = w.bytes()
     nals = [_nal(7, sps), _nal(8, pps)]
     type_code = {"P": 5, "B": 6, "I": 7}     # all-slices-same variants
     for k, ch in enumerate(pattern):
@@ -1514,16 +1459,16 @@ def cabac_slice_nals(pattern: str, seed: int = 0,
         w.ue(0)                              # first_mb_in_slice
         w.ue(type_code[ch if not idr else "I"])
         w.ue(0)                              # pps_id
-        w.u((seed + k) % 16, 4)              # frame_num
+        w.write((seed + k) % 16, 4)              # frame_num
         if idr:
             w.ue(seed % 4)                   # idr_pic_id
-        w.u((2 * k) % 256, 8)                # pic_order_cnt_lsb
+        w.write((2 * k) % 256, 8)                # pic_order_cnt_lsb
         w.se(0)                              # delta_poc_bottom
         # opaque stand-in for CABAC slice data (never parsed)
         body = bytes((seed * 31 + k * 7 + i) % 251
                      for i in range(payload_bytes))
-        w.byte_align_zero()
-        nals.append(_nal(5 if idr else 1, w.getvalue() + body))
+        w.align()
+        nals.append(_nal(5 if idr else 1, w.bytes() + body))
     return nals
 
 
@@ -1578,53 +1523,53 @@ class H264Encoder:
 
     def sps_rbsp(self) -> bytes:
         w = BitWriter()
-        w.u(66, 8)                           # Baseline
-        w.u(0, 8)
-        w.u(30, 8)                           # level 3.0
+        w.write(66, 8)                           # Baseline
+        w.write(0, 8)
+        w.write(30, 8)                           # level 3.0
         w.ue(0)                              # sps_id
         w.ue(0)                              # log2_max_frame_num = 4
         w.ue(self.poc_type)
         if self.poc_type == 0:
             w.ue(4)                          # log2_max_poc_lsb = 8
         w.ue(2 if self.poc_type == 0 else 1)  # max_num_ref_frames
-        w.u(0, 1)                            # gaps allowed
+        w.write(0, 1)                            # gaps allowed
         w.ue(self.mb_w - 1)
         w.ue(self.mb_h - 1)
-        w.u(1, 1)                            # frame_mbs_only
-        w.u(1, 1)                            # direct_8x8_inference
+        w.write(1, 1)                            # frame_mbs_only
+        w.write(1, 1)                            # direct_8x8_inference
         crop_r = (self.mb_w * 16 - self.w) // 2
         crop_b = (self.mb_h * 16 - self.h) // 2
         if crop_r or crop_b:
-            w.u(1, 1)
+            w.write(1, 1)
             w.ue(0)
             w.ue(crop_r)
             w.ue(0)
             w.ue(crop_b)
         else:
-            w.u(0, 1)
-        w.u(0, 1)                            # no VUI
+            w.write(0, 1)
+        w.write(0, 1)                            # no VUI
         w.rbsp_trailing()
-        return w.getvalue()
+        return w.bytes()
 
     def pps_rbsp(self) -> bytes:
         w = BitWriter()
         w.ue(0)                              # pps_id
         w.ue(0)                              # sps_id
-        w.u(0, 1)                            # CAVLC
-        w.u(0, 1)                            # no bottom-field POC
+        w.write(0, 1)                            # CAVLC
+        w.write(0, 1)                            # no bottom-field POC
         w.ue(0)                              # one slice group
         w.ue(0)
         w.ue(0)
-        w.u(0, 1)                            # weighted_pred
-        w.u(0, 2)
+        w.write(0, 1)                            # weighted_pred
+        w.write(0, 2)
         w.se(self.qp - 26)                   # pic_init_qp
         w.se(0)
         w.se(0)                              # chroma_qp_offset
-        w.u(1, 1)                            # deblock control present
-        w.u(0, 1)                            # constrained_intra
-        w.u(0, 1)                            # redundant_pic_cnt
+        w.write(1, 1)                            # deblock control present
+        w.write(0, 1)                            # constrained_intra
+        w.write(0, 1)                            # redundant_pic_cnt
         w.rbsp_trailing()
-        return w.getvalue()
+        return w.bytes()
 
     # -- frame ----------------------------------------------------------
 
@@ -1653,10 +1598,10 @@ class H264Encoder:
         w.ue(0)                              # first_mb_in_slice
         w.ue(7)                              # slice_type I (all)
         w.ue(0)                              # pps_id
-        w.u(0, 4)                            # frame_num
+        w.write(0, 4)                            # frame_num
         w.ue(0)                              # idr_pic_id
         if self.poc_type == 0:
-            w.u(self._poc_lsb & 255, 8)      # pic_order_cnt_lsb
+            w.write(self._poc_lsb & 255, 8)      # pic_order_cnt_lsb
         w.se(0)                              # slice_qp_delta
         w.ue(1)                              # disable deblocking
         plans = ("pcm", "i16dc", "i4dc")
@@ -1676,19 +1621,19 @@ class H264Encoder:
                 raise H264Error(f"unknown plan {p!r}")
         w.rbsp_trailing()
         self._last_f = f          # recon state (P-encoder reference)
-        return w.getvalue()
+        return w.bytes()
 
     def _mb_pcm(self, w, f, addr, py, pu, pv, toff=0):
         mbx, mby = addr % self.mb_w, addr // self.mb_w
         x0, y0, cx0, cy0 = mbx * 16, mby * 16, mbx * 8, mby * 8
         w.ue(25 + toff)
-        w.byte_align_zero()
+        w.align()
         yblk = py[y0:y0 + 16, x0:x0 + 16].astype(np.uint8)
         ublk = pu[cy0:cy0 + 8, cx0:cx0 + 8].astype(np.uint8)
         vblk = pv[cy0:cy0 + 8, cx0:cx0 + 8].astype(np.uint8)
-        w.write_bytes(yblk.tobytes())
-        w.write_bytes(ublk.tobytes())
-        w.write_bytes(vblk.tobytes())
+        w.raw(yblk.tobytes())
+        w.raw(ublk.tobytes())
+        w.raw(vblk.tobytes())
         f.y[y0:y0 + 16, x0:x0 + 16] = yblk
         f.u[cy0:cy0 + 8, cx0:cx0 + 8] = ublk
         f.v[cy0:cy0 + 8, cx0:cx0 + 8] = vblk
@@ -1900,9 +1845,9 @@ class H264Encoder:
             f.y[y:y + 4, x:x + 4] = _clip8(pr + res)
             f.blk_decoded[gy, gx] = True
         for flag, rem in mode_bits:
-            w.u(flag, 1)
+            w.write(flag, 1)
             if not flag:
-                w.u(rem, 3)
+                w.write(rem, 3)
         cbp_luma = 0
         for i in range(16):
             if np.any(zs[i]):
@@ -2089,15 +2034,15 @@ class CabacEncoder:
         self.range = 510
         self.outstanding = 0
         self.first = True
-        self.bits: list[int] = []
+        self.w = MsbWriter()
 
     def _put(self, b: int):
         if self.first:
             self.first = False
         else:
-            self.bits.append(b)
+            self.w.write(b, 1)
         while self.outstanding:
-            self.bits.append(1 - b)
+            self.w.write(1 - b, 1)
             self.outstanding -= 1
 
     def _renorm(self):
@@ -2152,12 +2097,5 @@ class CabacEncoder:
         self._put((self.low >> 9) & 1)
         b = (self.low >> 7) & 3 | 1
         self._put((b >> 1) & 1)
-        self.bits.append(b & 1)
-        out = bytearray()
-        bits = self.bits
-        for i in range(0, len(bits), 8):
-            byte = 0
-            for j, bit in enumerate(bits[i:i + 8]):
-                byte |= bit << (7 - j)
-            out.append(byte)
-        return bytes(out)
+        self.w.write(b & 1, 1)
+        return self.w.bytes()

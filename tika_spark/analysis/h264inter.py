@@ -294,13 +294,13 @@ class H264InterDecoder(H264Decoder):
         sps = self.sps.get(pps["sps_id"])
         if sps is None:
             raise H264Error("PPS references unknown SPS")
-        r.u(sps["log2_max_frame_num"])
+        r.read(sps["log2_max_frame_num"])
         if idr:
             self._refs = []                       # IDR clears the DPB
             r.ue()
         poc = None
         if sps["poc_type"] == 0:
-            poc = r.u(sps["log2_max_poc_lsb"])
+            poc = r.read(sps["log2_max_poc_lsb"])
             if pps["bottom_field_poc"]:
                 r.se()
         if pps["redundant_pic_cnt_present"]:
@@ -694,12 +694,12 @@ class H264InterEncoder(H264Encoder):
         w.ue(0)                               # first_mb_in_slice
         w.ue(5)                               # slice_type P (all)
         w.ue(0)                               # pps_id
-        w.u(frame_num & 15, 4)                # frame_num
+        w.write(frame_num & 15, 4)                # frame_num
         if self.poc_type == 0:
-            w.u(self._poc_lsb & 255, 8)       # pic_order_cnt_lsb
-        w.u(0, 1)                             # no ref-count override
-        w.u(0, 1)                             # no list modification
-        w.u(0, 1)                             # no adaptive marking
+            w.write(self._poc_lsb & 255, 8)       # pic_order_cnt_lsb
+        w.write(0, 1)                             # no ref-count override
+        w.write(0, 1)                             # no list modification
+        w.write(0, 1)                             # no adaptive marking
         w.se(0)                               # slice_qp_delta
         w.ue(1)                               # disable deblocking
         pending_skip = 0
@@ -711,7 +711,7 @@ class H264InterEncoder(H264Encoder):
             w.ue(pending_skip)
         w.rbsp_trailing()
         self._last_f = f
-        return w.getvalue()
+        return w.bytes()
 
     # -- helpers --------------------------------------------------------
 
@@ -980,12 +980,12 @@ class H264BiEncoder(H264InterEncoder):
         w.ue(0)                               # first_mb_in_slice
         w.ue(6)                               # slice_type B (all)
         w.ue(0)                               # pps_id
-        w.u(frame_num & 15, 4)
-        w.u(self._poc_lsb & 255, 8)
-        w.u(1, 1)                             # direct_spatial flag
-        w.u(0, 1)                             # no ref-count override
-        w.u(0, 1)                             # no list0 modification
-        w.u(0, 1)                             # no list1 modification
+        w.write(frame_num & 15, 4)
+        w.write(self._poc_lsb & 255, 8)
+        w.write(1, 1)                             # direct_spatial flag
+        w.write(0, 1)                             # no ref-count override
+        w.write(0, 1)                             # no list0 modification
+        w.write(0, 1)                             # no list1 modification
         # non-reference NAL: no dec_ref_pic_marking
         w.se(0)                               # slice_qp_delta
         w.ue(1)                               # disable deblocking
@@ -994,7 +994,7 @@ class H264BiEncoder(H264InterEncoder):
             self._mb_b_enc(w, f, addr, py, pu, pv, ref0, ref1,
                            mv0, mv1)
         w.rbsp_trailing()
-        return w.getvalue()
+        return w.bytes()
 
     def _mb_b_enc(self, w, f, addr, py, pu, pv, ref0, ref1, mv0,
                   mv1):

@@ -45,6 +45,8 @@ import struct
 
 import numpy as np
 
+from tika_spark.analysis.bitio import canonical_codes
+
 # ---------------------------------------------------------------- constants
 
 ZIGZAG = np.array([
@@ -690,16 +692,8 @@ class _BitWriter:
 
 def _encode_tables(bits: list[int], vals: list[int]) -> dict[int, tuple]:
     """value → (code, length) for the encoder side."""
-    table: dict[int, tuple] = {}
-    code = 0
-    k = 0
-    for ln in range(1, 17):
-        for _ in range(bits[ln - 1]):
-            table[vals[k]] = (code, ln)
-            code += 1
-            k += 1
-        code <<= 1
-    return table
+    lens = [ln for ln in range(1, 17) for _ in range(bits[ln - 1])]
+    return canonical_codes(zip(vals, lens))
 
 
 def _magnitude(v: int) -> tuple[int, int]:

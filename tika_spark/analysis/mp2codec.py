@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from tika_spark.analysis.flac import _Bits, _BitWriter
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
 from tika_spark.analysis.mp3codec import (SAMPLERATES, Mp3Error,
                                           _Synth)
 
@@ -151,7 +151,7 @@ def _decode_frame(hdr: dict, body: bytes, synth: list,
     bound = sblimit
     if hdr["mode"] == "joint":
         bound = min((hdr["mode_ext"] + 1) * 4, sblimit)
-    b = _Bits(body)
+    b = MsbReader(body)
 
     alloc = [[0] * sblimit for _ in range(nch)]
     for sb in range(sblimit):
@@ -314,7 +314,7 @@ def _decode_frame_l1(hdr: dict, body: bytes, synth: list,
     bound = 32
     if hdr["mode"] == "joint":
         bound = min((hdr["mode_ext"] + 1) * 4, 32)
-    b = _Bits(body)
+    b = MsbReader(body)
 
     alloc = [[0] * 32 for _ in range(nch)]
     for sb in range(32):
@@ -437,7 +437,7 @@ def mp1_bytes(frames, rate: int = 44100, mode: str = "mono",
             a = a[:, :, None]
         if a.shape != (12, 32, nch):
             raise ValueError("frame must be (12, 32[, nch])")
-        w = _BitWriter()
+        w = MsbWriter()
         w.write(hdr, 32)
         for sb in range(32):
             code = allocation.get(sb, 0)
@@ -566,7 +566,7 @@ def mp2_bytes(frames, rate: int = 48000, mode: str = "mono",
             a = a[:, :, None]
         if a.shape != (36, 32, nch):
             raise ValueError("frame must be (36, 32[, nch])")
-        w = _BitWriter()
+        w = MsbWriter()
         w.write(hdr, 32)
         for sb in range(sblimit):
             nbal, levels = table[sb]

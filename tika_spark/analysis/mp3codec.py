@@ -70,7 +70,8 @@ import math
 
 import numpy as np
 
-from tika_spark.analysis.flac import _Bits, _BitWriter
+from tika_spark.analysis.bitio import (MsbReader, MsbWriter, canonical_codes,
+                                       huffman_lengths)
 
 
 class Mp3Error(ValueError):
@@ -119,43 +120,13 @@ ALIAS_CS = tuple(1.0 / math.sqrt(1.0 + c * c) for c in _ALIAS_C)
 ALIAS_CA = tuple(c / math.sqrt(1.0 + c * c) for c in _ALIAS_C)
 
 
-def _canonical(lengths: dict) -> dict:
-    """Canonical prefix code over a {symbol: bit-length} profile:
-    symbols sorted by (length, symbol) get increasing code words.
-    Deterministic; used where the spec code WORDS are not
-    reproduced (see module docstring)."""
-    out = {}
-    code = 0
-    prev_len = 0
-    for sym, ln in sorted(lengths.items(), key=lambda kv: (kv[1],
-                                                           kv[0])):
-        code <<= (ln - prev_len)
-        out[sym] = (code, ln)
-        code += 1
-        prev_len = ln
-    return out
-
-
 def _huffman_from_freqs(freqs: dict) -> dict:
-    """Code-length assignment by the plain Huffman algorithm over a
-    deterministic synthetic frequency model, then canonical words.
-    Used for the ESC-family tables whose spec code words we do not
-    reproduce (same self-consistency contract as `_canonical`)."""
-    import heapq
-    heap = [(f, i, (sym,)) for i, (sym, f) in
-            enumerate(sorted(freqs.items()))]
-    heapq.heapify(heap)
-    depth = {sym: 0 for sym in freqs}
-    n = len(heap)
-    while len(heap) > 1:
-        fa, _, a = heapq.heappop(heap)
-        fb, _, b = heapq.heappop(heap)
-        for sym in a + b:
-            depth[sym] += 1
-        n += 1
-        heapq.heappush(heap, (fa + fb, n, a + b))
+    """Canonical code over Huffman lengths of a deterministic
+    synthetic frequency model, for the tables whose spec code words
+    are not reproduced (see module docstring)."""
+    depth = huffman_lengths(freqs)
     assert max(depth.values()) <= 19, "decoder length cap"
-    return _canonical(depth)
+    return canonical_codes(sorted(depth.items()))
 
 
 def _esc_table() -> dict:
@@ -177,12 +148,12 @@ HUFF_TABLES = {
     1: {(0, 0): (0b1, 1), (0, 1): (0b001, 3),
         (1, 0): (0b01, 2), (1, 1): (0b000, 3)},
     # tables 2/3 (3x3) — spec length profiles, canonical words
-    2: _canonical({(0, 0): 1, (0, 1): 3, (0, 2): 6, (1, 0): 3,
-                   (1, 1): 3, (1, 2): 5, (2, 0): 5, (2, 1): 5,
-                   (2, 2): 6}),
-    3: _canonical({(0, 0): 2, (0, 1): 2, (0, 2): 6, (1, 0): 3,
-                   (1, 1): 2, (1, 2): 5, (2, 0): 5, (2, 1): 5,
-                   (2, 2): 6}),
+    2: canonical_codes({(0, 0): 1, (0, 1): 3, (0, 2): 6, (1, 0): 3,
+                        (1, 1): 3, (1, 2): 5, (2, 0): 5, (2, 1): 5,
+                        (2, 2): 6}.items()),
+    3: canonical_codes({(0, 0): 2, (0, 1): 2, (0, 2): 6, (1, 0): 3,
+                        (1, 1): 2, (1, 2): 5, (2, 0): 5, (2, 1): 5,
+                        (2, 2): 6}.items()),
     # ESC family (spec ids 16/24 structure: 16×16 + linbits) —
     # canonical bodies, drop-in-replaceable data like the rest
     16: _ESC_BODY,
@@ -200,7 +171,7 @@ _C1A_LENS = {
     ((_i >> 3) & 1, (_i >> 2) & 1, (_i >> 1) & 1, _i & 1):
     _C1A_PROFILE[_i] for _i in range(16)}
 COUNT1_TABLES = {
-    0: _canonical(_C1A_LENS),                     # "table A" profile
+    0: canonical_codes(_C1A_LENS.items()),        # "table A" profile
     1: {((i >> 3) & 1, (i >> 2) & 1, (i >> 1) & 1, i & 1):
         (15 - i, 4) for i in range(16)},          # "table B": 4-bit
 }
@@ -287,7 +258,7 @@ def parse_frame_header(data: bytes, pos: int):
 
 
 def _parse_side_info(data: bytes, nch: int) -> dict:
-    b = _Bits(data)
+    b = MsbReader(data)
     si = {"main_data_begin": b.read(9)}
     b.read(5 if nch == 1 else 3)                   # private bits
     si["scfsi"] = [[b.read(1) for _ in range(4)] for _ in range(nch)]
@@ -330,7 +301,7 @@ def _parse_side_info(data: bytes, nch: int) -> dict:
 # ------------------------------------------------------- main data
 
 
-def _read_scalefactors(b: _Bits, g: dict, gr: int, scfsi: list,
+def _read_scalefactors(b: MsbReader, g: dict, gr: int, scfsi: list,
                        prev: list | None) -> tuple[list, int]:
     """(scalefactors, part2_bits). Long: 21 values (+0 for band 21);
     short: 12 bands × 3 windows. scfsi only applies to granule 1
@@ -358,7 +329,7 @@ def _read_scalefactors(b: _Bits, g: dict, gr: int, scfsi: list,
     return sf, bits
 
 
-def _huffman_pair(b: _Bits, table_id: int, counter: list) -> tuple:
+def _huffman_pair(b: MsbReader, table_id: int, counter: list) -> tuple:
     dec = _DEC_BIG.get(table_id)
     if dec is None:
         raise Mp3Error(f"huffman table {table_id} unsupported "
@@ -393,7 +364,7 @@ def _huffman_pair(b: _Bits, table_id: int, counter: list) -> tuple:
             raise Mp3Error("bad huffman code")
 
 
-def _huffman_quad(b: _Bits, table_id: int, counter: list) -> tuple:
+def _huffman_quad(b: MsbReader, table_id: int, counter: list) -> tuple:
     dec = _DEC_C1[table_id]
     code, ln = 0, 0
     while True:
@@ -425,7 +396,7 @@ def _region_bounds(g: dict, rate: int = 44100) -> tuple[int, int]:
     return sfb[r0], sfb[r1]
 
 
-def _read_spectra(b: _Bits, g: dict, part2_bits: int,
+def _read_spectra(b: MsbReader, g: dict, part2_bits: int,
                   rate: int = 44100) -> np.ndarray:
     """576 Huffman-decoded quantized values for one granule/channel,
     consuming exactly part2_3_length - part2_bits bits (stuffing
@@ -621,7 +592,7 @@ def decode_mp3(data: bytes) -> tuple[np.ndarray, int]:
         main = (reservoir[len(reservoir) - mdb:] if mdb else b"") \
             + main_part
         reservoir = (reservoir + main_part)[-511:]
-        b = _Bits(main)
+        b = MsbReader(main)
         prev_sf = [None] * nch
         for gr in range(2):
             chans = []
@@ -665,7 +636,7 @@ def decode_mp3(data: bytes) -> tuple[np.ndarray, int]:
 _SCFSI_GROUPS = ((0, 6), (6, 11), (11, 16), (16, 21))
 
 
-def _write_scalefactors(w: _BitWriter, g: dict, sf: list,
+def _write_scalefactors(w: MsbWriter, g: dict, sf: list,
                         skip_groups=()) -> int:
     slen1, slen2 = SLEN[g["scalefac_compress"]]
     bits = 0
@@ -686,7 +657,7 @@ def _write_scalefactors(w: _BitWriter, g: dict, sf: list,
     return bits
 
 
-def _encode_spectra(w: _BitWriter, g: dict, xs,
+def _encode_spectra(w: MsbWriter, g: dict, xs,
                     rate: int = 44100) -> int:
     """Huffman-code one granule's 576 quantized values; returns bit
     count. Caller guarantees |x| fits the selected tables."""
@@ -777,7 +748,7 @@ def mp3_bytes(frames_spectra, rate: int = 44100, mode: str = "mono",
     out = bytearray()
     for frame in frames_spectra:
         # ---- per-granule metadata + main data
-        main = _BitWriter()
+        main = MsbWriter()
         g_list = []
         for gr in range(2):
             for ch in range(nch):
@@ -840,11 +811,10 @@ def mp3_bytes(frames_spectra, rate: int = 44100, mode: str = "mono",
                 g["part2_3_length"] = p2 + p3
                 g["sf"] = sf
                 g_list.append(g)
-        main.align()
-        main_bytes = bytes(main.out)
+        main_bytes = main.bytes()
 
         # ---- side info
-        side = _BitWriter()
+        side = MsbWriter()
         side.write(0, 9)                           # main_data_begin
         side.write(0, 5 if nch == 1 else 3)
         for _ch in range(nch):
@@ -872,8 +842,7 @@ def mp3_bytes(frames_spectra, rate: int = 44100, mode: str = "mono",
             side.write(g["preflag"], 1)
             side.write(g["scalefac_scale"], 1)
             side.write(g["count1table_select"], 1)
-        side.align()
-        side_bytes = bytes(side.out)
+        side_bytes = side.bytes()
         assert len(side_bytes) == (17 if nch == 1 else 32)
 
         frame_len = 144 * bitrate * 1000 // rate

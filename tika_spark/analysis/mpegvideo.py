@@ -45,7 +45,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from tika_spark.analysis.flac import _Bits, _BitWriter
+from tika_spark.analysis.bitio import MsbReader, MsbWriter
 from tika_spark.analysis.jpegcodec import _C, ZIGZAG
 
 
@@ -185,7 +185,7 @@ def _div_to_zero(a: int, b: int) -> int:
     return q if a >= 0 else -q
 
 
-def _read_vlc(bits: _Bits, table: dict[str, object], what: str,
+def _read_vlc(bits: MsbReader, table: dict[str, object], what: str,
               max_len: int = 12):
     code = ""
     for _ in range(max_len):
@@ -208,7 +208,7 @@ def _idct(block: np.ndarray) -> np.ndarray:
         _C.T @ block.astype(np.float64) @ _C).astype(np.int64)
 
 
-def _decode_block(bits: _Bits, intra: bool, comp: int,
+def _decode_block(bits: MsbReader, intra: bool, comp: int,
                   dc_pred: list[int], qscale: int,
                   intra_q: np.ndarray, ninter_q: np.ndarray,
                   mpeg2: bool = False, dc_mult: int = 8,
@@ -415,7 +415,7 @@ def decode_mpeg1(data: bytes, max_frames: int = 0
     codes = _find_start_codes(data)
     if not codes or codes[0][0] != 0xB3:
         raise MpegError("no MPEG sequence header")
-    seq = _Bits(data, codes[0][1])
+    seq = MsbReader(data, codes[0][1])
     width = seq.read(12)
     height = seq.read(12)
     seq.read(4)                                  # aspect
@@ -440,7 +440,7 @@ def decode_mpeg1(data: bytes, max_frames: int = 0
     # header marks an MPEG-2 stream (MPEG-1 has no 0xB5 codes)
     mpeg2 = False
     if len(codes) > 1 and codes[1][0] == 0xB5:
-        ext = _Bits(data, codes[1][1])
+        ext = MsbReader(data, codes[1][1])
         if ext.read(4) == 0b0001:
             mpeg2 = True
             ext.read(8)                          # profile_and_level
@@ -479,7 +479,7 @@ def decode_mpeg1(data: bytes, max_frames: int = 0
         if code != 0x00:                         # picture start only
             i += 1
             continue
-        bits = _Bits(data, off)
+        bits = MsbReader(data, off)
         bits.read(10)                            # temporal reference
         ptype = bits.read(3)
         bits.read(16)                            # vbv delay
@@ -514,7 +514,7 @@ def decode_mpeg1(data: bytes, max_frames: int = 0
             full_pel = [0, 0]
             if i + 1 >= len(codes) or codes[i + 1][0] != 0xB5:
                 raise MpegError("missing picture coding extension")
-            pce = _Bits(data, codes[i + 1][1])
+            pce = MsbReader(data, codes[i + 1][1])
             if pce.read(4) != 0b1000:
                 raise MpegError("missing picture coding extension")
             fc = [[pce.read(4), pce.read(4)],
@@ -604,7 +604,7 @@ def decode_mpeg1(data: bytes, max_frames: int = 0
         decoded_any = False
         while j < len(codes) and 0x01 <= codes[j][0] <= 0xAF:
             srow = codes[j][0] - 1
-            sb = _Bits(data, codes[j][1])
+            sb = MsbReader(data, codes[j][1])
             qscale = qs_val(sb.read(5))
             if mpeg2:
                 if sb.read(1):                   # slice extension
@@ -885,12 +885,12 @@ _DC_LUMA_ENC = {v: k for k, v in DC_LUMA_VLC.items()}
 _DC_CHROMA_ENC = {v: k for k, v in DC_CHROMA_VLC.items()}
 
 
-def _wbits(w: _BitWriter, code: str):
+def _wbits(w: MsbWriter, code: str):
     for c in code:
         w.write(1 if c == "1" else 0, 1)
 
 
-def _w_start(w: _BitWriter, code: int):
+def _w_start(w: MsbWriter, code: int):
     w.align()
     w.write(0, 8)
     w.write(0, 8)
@@ -898,21 +898,21 @@ def _w_start(w: _BitWriter, code: int):
     w.write(code, 8)
 
 
-def _w_mba(w: _BitWriter, inc: int):
+def _w_mba(w: MsbWriter, inc: int):
     while inc > 33:
         _wbits(w, MBA_ESCAPE)
         inc -= 33
     _wbits(w, _MBA_ENC[inc])
 
 
-def _w_dc(w: _BitWriter, diff: int, comp: int):
+def _w_dc(w: MsbWriter, diff: int, comp: int):
     size = abs(diff).bit_length()
     _wbits(w, (_DC_LUMA_ENC if comp == 0 else _DC_CHROMA_ENC)[size])
     if size:
         w.write(diff if diff >= 0 else diff + (1 << size) - 1, size)
 
 
-def _w_motion(w: _BitWriter, code: int):
+def _w_motion(w: MsbWriter, code: int):
     if not -3 <= code <= 3:
         raise MpegError("fixture encoder keeps |motion_code| <= 3")
     _wbits(w, _MOTION_ENC[code])
@@ -946,7 +946,7 @@ def mpeg1_bytes(width: int, height: int, pictures: list[dict],
     Pictures are listed in CODED order (anchors before the B
     pictures that reference them); the decoder reorders to display
     order."""
-    w = _BitWriter()
+    w = MsbWriter()
     _w_start(w, 0xB3)
     w.write(width, 12)
     w.write(height, 12)
@@ -985,11 +985,10 @@ def mpeg1_bytes(width: int, height: int, pictures: list[dict],
         w.write(0, 1)
         _w_picture_mbs(w, ptype, pic["mbs"], mb_w * mb_h)
     _w_start(w, 0xB7)                            # sequence end
-    w.align()
-    return bytes(w.out)
+    return w.bytes()
 
 
-def _w_picture_mbs(w: _BitWriter, ptype: int, mbs: list[dict],
+def _w_picture_mbs(w: MsbWriter, ptype: int, mbs: list[dict],
                    n_mbs: int, mpeg2: bool = False):
     """Shared macroblock-layer writer (the VLC tables are common to
     both standards; ``mpeg2`` switches the AC escape to the signed
@@ -1072,7 +1071,7 @@ def mpeg2_bytes(width: int, height: int, pictures: list[dict],
     quantizer matrices, and one slice at row 0."""
     if intra_dc_precision not in (8, 9, 10, 11):
         raise MpegError("intra_dc_precision must be 8..11")
-    w = _BitWriter()
+    w = MsbWriter()
     _w_start(w, 0xB3)
     w.write(width, 12)
     w.write(height, 12)
@@ -1145,8 +1144,7 @@ def mpeg2_bytes(width: int, height: int, pictures: list[dict],
         _w_picture_mbs(w, ptype, pic["mbs"], mb_w * mb_h,
                        mpeg2=True)
     _w_start(w, 0xB7)                            # sequence end
-    w.align()
-    return bytes(w.out)
+    return w.bytes()
 
 
 def mpeg1_fixture(doc_id: int) -> bytes:

@@ -36,64 +36,19 @@ from __future__ import annotations
 
 import numpy as np
 
+from tika_spark.analysis.bitio import LsbReader, LsbWriter
+
 
 class VorbisError(ValueError):
     pass
 
 
-# ------------------------------------------------- LSb-first bitpack
+class _VorbisBits(LsbReader):
+    """Vorbis bitpack reader (spec section 2); a read past the end of
+    a packet raises VorbisError."""
 
-class _LBits:
-    """Vorbis bitpack reader: bits fill each byte starting at the
-    least-significant bit (spec section 2)."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.limit = len(data) * 8
-
-    def read(self, n: int) -> int:
-        if self.pos + n > self.limit:
-            raise VorbisError("bitpack read past end of packet")
-        v = 0
-        pos = self.pos
-        data = self.data
-        for k in range(n):
-            p = pos + k
-            v |= ((data[p >> 3] >> (p & 7)) & 1) << k
-        self.pos += n
-        return v
-
-    def read_bit(self) -> int:
-        if self.pos >= self.limit:
-            raise VorbisError("bitpack read past end of packet")
-        b = (self.data[self.pos >> 3] >> (self.pos & 7)) & 1
-        self.pos += 1
-        return b
-
-    def eof(self) -> bool:
-        return self.pos >= self.limit
-
-
-class _LBitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def write(self, value: int, n: int):
-        self.acc |= (value & ((1 << n) - 1)) << self.nbits
-        self.nbits += n
-        while self.nbits >= 8:
-            self.out.append(self.acc & 0xFF)
-            self.acc >>= 8
-            self.nbits -= 8
-
-    def bytes(self) -> bytes:
-        out = bytes(self.out)
-        if self.nbits:
-            out += bytes((self.acc & 0xFF,))
-        return out
+    __slots__ = ()
+    error = VorbisError
 
 
 def ilog(x: int) -> int:
@@ -177,11 +132,11 @@ def assign_codewords(lengths: list[int | None]) -> dict[str, int]:
     return codes
 
 
-def _read_codeword(bits: _LBits, codes: dict[str, int],
+def _read_codeword(bits: _VorbisBits, codes: dict[str, int],
                    max_len: int = 32) -> int:
     word = ""
     for _ in range(max_len):
-        word += "1" if bits.read_bit() else "0"
+        word += "1" if bits.read(1) else "0"
         entry = codes.get(word)
         if entry is not None:
             return entry
@@ -207,16 +162,16 @@ class _Codebook:
         self.codes = codes                       # bitstring -> entry
         self.vq = vq                             # (entries, dims) or None
 
-    def scalar(self, bits: _LBits) -> int:
+    def scalar(self, bits: _VorbisBits) -> int:
         return _read_codeword(bits, self.codes)
 
-    def vector(self, bits: _LBits) -> np.ndarray:
+    def vector(self, bits: _VorbisBits) -> np.ndarray:
         if self.vq is None:
             raise VorbisError("scalar codebook used in VQ context")
         return self.vq[_read_codeword(bits, self.codes)]
 
 
-def _parse_codebook(bits: _LBits) -> _Codebook:
+def _parse_codebook(bits: _VorbisBits) -> _Codebook:
     if bits.read(24) != 0x564342:                # 'BCV'
         raise VorbisError("bad codebook sync pattern")
     dims = bits.read(16)
@@ -281,7 +236,7 @@ class _Floor1:
                  "rangebits", "X", "values")
 
 
-def _parse_floor1(bits: _LBits, n_books: int) -> _Floor1:
+def _parse_floor1(bits: _VorbisBits, n_books: int) -> _Floor1:
     fl = _Floor1()
     fl.partitions = bits.read(5)
     fl.pclass = [bits.read(4) for _ in range(fl.partitions)]
@@ -326,7 +281,7 @@ class _Residue:
                  "classbook", "books")
 
 
-def _parse_residue(bits: _LBits, n_books: int) -> _Residue:
+def _parse_residue(bits: _VorbisBits, n_books: int) -> _Residue:
     r = _Residue()
     r.rtype = bits.read(16)
     if r.rtype > 2:
@@ -362,7 +317,7 @@ class _Mapping:
     __slots__ = ("submaps", "coupling", "mux", "floors", "residues")
 
 
-def _parse_mapping(bits: _LBits, channels: int, n_floors: int,
+def _parse_mapping(bits: _VorbisBits, channels: int, n_floors: int,
                    n_residues: int) -> _Mapping:
     if bits.read(16) != 0:
         raise VorbisError("reserved mapping type")
@@ -414,7 +369,7 @@ def parse_headers(packets: list[bytes]) -> VorbisSetup:
     ident, comment, setup = packets[0], packets[1], packets[2]
     if ident[:7] != b"\x01vorbis":
         raise VorbisError("bad identification header")
-    b = _LBits(ident[7:])
+    b = _VorbisBits(ident[7:])
     if b.read(32) != 0:
         raise VorbisError("unsupported Vorbis version")
     s = VorbisSetup()
@@ -452,7 +407,7 @@ def parse_headers(packets: list[bytes]) -> VorbisSetup:
             pass
     if setup[:7] != b"\x05vorbis":
         raise VorbisError("bad setup header")
-    b = _LBits(setup[7:])
+    b = _VorbisBits(setup[7:])
     s.books = [_parse_codebook(b) for _ in range(b.read(8) + 1)]
     for _ in range(b.read(6) + 1):               # time transforms
         if b.read(16) != 0:
@@ -525,7 +480,7 @@ def _render_line(x0, y0, x1, y1, v: np.ndarray):
         v[x] = y
 
 
-def _floor1_decode(bits: _LBits, fl: _Floor1,
+def _floor1_decode(bits: _VorbisBits, fl: _Floor1,
                    books: list[_Codebook]) -> list[int] | None:
     """Audio-packet floor decode → Y value list, or None when the
     'unused' flag marks the channel silent (spec 7.2.3)."""
@@ -608,7 +563,7 @@ def _floor1_curve(fl: _Floor1, ys: list[int], n2: int) -> np.ndarray:
 
 # --------------------------------------------------------- residue
 
-def _residue_decode(bits: _LBits, res: _Residue,
+def _residue_decode(bits: _VorbisBits, res: _Residue,
                     books: list[_Codebook], do_not: list[bool],
                     n2: int, rtype2: bool) -> np.ndarray:
     """Spec 8.6.2 partitioned residue decode → (ch, size) array.
@@ -717,7 +672,7 @@ def decode_vorbis_packets(packets: list[bytes]
     for packet in packets[3:]:
         if not packet:
             continue
-        bits = _LBits(packet)
+        bits = _VorbisBits(packet)
         if bits.read(1):
             raise VorbisError("non-audio packet in audio stream")
         blockflag, map_idx = s.modes[bits.read(mode_bits)]
@@ -802,14 +757,7 @@ def decode_ogg_vorbis(data: bytes) -> tuple[np.ndarray, int]:
 
 # ------------------------------------------------- fixture encoder
 
-def _w_bits_msb(w: _LBitWriter, value: int, nbits: int):
-    """Huffman codewords enter the stream bit-by-bit starting at the
-    codeword's top bit (each written as a 1-bit bitpack write)."""
-    for k in range(nbits - 1, -1, -1):
-        w.write((value >> k) & 1, 1)
-
-
-def _w_scalar_book(w: _LBitWriter, dims: int, entries: int,
+def _w_scalar_book(w: LsbWriter, dims: int, entries: int,
                    length: int):
     """Lookup-0 codebook with every entry at one code length (a
     complete tree when entries == 2**length)."""
@@ -823,7 +771,7 @@ def _w_scalar_book(w: _LBitWriter, dims: int, entries: int,
     w.write(0, 4)                                # lookup type 0
 
 
-def _w_vq_book(w: _LBitWriter):
+def _w_vq_book(w: LsbWriter):
     """The fixture's residue value book: dims 2, 4 entries of 2-bit
     codes, lookup type 1 with quantvals 2 mapping to {-1, +1}."""
     w.write(0x564342, 24)
@@ -849,7 +797,7 @@ def vorbis_headers(channels: int, rate: int,
     floor-1 (multiplier 2, rangebits 6, X = [0, 64, 16, 32]), one
     type-2 residue (psize 8, 2 classes: silent / VQ book)."""
     n2 = (1 << blockshift) // 2
-    ident = _LBitWriter()
+    ident = LsbWriter()
     ident.write(0, 32)
     ident.write(channels, 8)
     ident.write(rate, 32)
@@ -863,7 +811,7 @@ def vorbis_headers(channels: int, rate: int,
                + (1).to_bytes(4, "little")
                + (12).to_bytes(4, "little") + b"TITLE=synth0"
                + b"\x01")
-    w = _LBitWriter()
+    w = LsbWriter()
     w.write(3 - 1, 8)                            # codebook count
     _w_scalar_book(w, 1, 64, 6)                  # book 0: floor Ys
     _w_scalar_book(w, 2, 4, 2)                   # book 1: classwords
@@ -911,7 +859,7 @@ def vorbis_headers(channels: int, rate: int,
 def vorbis_silent_packet(channels: int) -> bytes:
     """Audio packet with every channel's floor flagged unused —
     decodes to exactly zero through the full window machinery."""
-    w = _LBitWriter()
+    w = LsbWriter()
     w.write(0, 1)                                # audio packet
     for _ in range(channels):                    # mode: 0 bits
         w.write(0, 1)                            # floor unused
@@ -925,25 +873,25 @@ def vorbis_tone_packet(channels: int, floor_ys: list[int],
     every residue partition classed to the VQ book, entry at step t
     = (vq_seed + t) % 4."""
     n2 = (1 << blockshift) // 2
-    w = _LBitWriter()
+    w = LsbWriter()
     w.write(0, 1)
     for _ in range(channels):
         w.write(1, 1)                            # floor nonzero
         w.write(floor_ys[0], 7)
         w.write(floor_ys[1], 7)
-        _w_bits_msb(w, floor_ys[2], 6)
-        _w_bits_msb(w, floor_ys[3], 6)
+        w.write_code(floor_ys[2], 6)
+        w.write_code(floor_ys[3], 6)
     size = n2 * channels
     parts = size // 8
     t = 0
     pcount = 0
     while pcount < parts:
-        _w_bits_msb(w, 3, 2)                     # classword: 1,1
+        w.write_code(3, 2)                     # classword: 1,1
         for _ in range(2):
             if pcount >= parts:
                 break
             for _ in range(4):                   # psize 8 / dims 2
-                _w_bits_msb(w, (vq_seed + t) % 4, 2)
+                w.write_code((vq_seed + t) % 4, 2)
                 t += 1
             pcount += 1
     return w.bytes()

@@ -648,6 +648,63 @@ class _FrameHeader:
     )
 
 
+def _read_segment_filter_quant(bd: _BoolDec, h: _FrameHeader):
+    """Segmentation, loop filter, partition count and quantizer
+    indices: the first-partition fields key and inter frames share."""
+    # segmentation (decode-side support; the fixture encoders write 0)
+    h.seg_qi = [0, 0, 0, 0]
+    h.seg_lf = [0, 0, 0, 0]
+    h.seg_abs = 0
+    h.seg_tree_probs = [255, 255, 255]
+    h.seg_map_update = 0
+    h.segmentation = bd.bool()
+    if h.segmentation:
+        h.seg_map_update = bd.bool()
+        if bd.bool():                    # update_data
+            h.seg_abs = bd.bool()
+            for i in range(4):
+                if bd.bool():
+                    h.seg_qi[i] = bd.signed(7)
+            for i in range(4):
+                if bd.bool():
+                    h.seg_lf[i] = bd.signed(6)
+        if h.seg_map_update:
+            for i in range(3):
+                h.seg_tree_probs[i] = bd.literal(8) if bd.bool() else 255
+    h.filter_type = bd.bool()
+    h.filter_level = bd.literal(6)
+    h.sharpness = bd.literal(3)
+    h.lf_delta = bd.bool()
+    h.ref_lf_deltas = [0, 0, 0, 0]
+    h.mode_lf_deltas = [0, 0, 0, 0]
+    if h.lf_delta and bd.bool():
+        for i in range(4):
+            if bd.bool():
+                h.ref_lf_deltas[i] = bd.signed(6)
+        for i in range(4):
+            if bd.bool():
+                h.mode_lf_deltas[i] = bd.signed(6)
+    h.n_parts = 1 << bd.literal(2)
+    h.q_index = bd.literal(7)
+    # y1dc, y2dc, y2ac, uvdc, uvac
+    h.q_deltas = [bd.signed(4) if bd.bool() else 0 for _ in range(5)]
+
+
+def _read_coeff_probs(bd: _BoolDec, h: _FrameHeader):
+    """Coefficient-probability updates and the skip flag."""
+    probs = [[[list(DEFAULT_COEFF_PROBS[t][b][c]) for c in range(3)]
+              for b in range(8)] for t in range(4)]
+    for t in range(4):
+        for b in range(8):
+            for c in range(3):
+                for k in range(11):
+                    if bd.bool(COEFF_UPDATE_PROBS[t][b][c][k]):
+                        probs[t][b][c][k] = bd.literal(8)
+    h.coeff_probs = probs
+    h.skip_enabled = bd.bool()
+    h.skip_prob = bd.literal(8) if h.skip_enabled else 0
+
+
 def _parse_headers(data: bytes):
     if len(data) < 10:
         raise ValueError("short VP8 payload")
@@ -676,57 +733,9 @@ def _parse_headers(data: bytes):
     bd = _BoolDec(data, h.part1_off, h.part1_off + part1_size)
     bd.bool()  # color space (0 = YCbCr per spec)
     bd.bool()  # clamping type
-    # segmentation (decode-side support; the fixture encoder writes 0)
-    h.seg_qi = [0, 0, 0, 0]
-    h.seg_lf = [0, 0, 0, 0]
-    h.seg_abs = 0
-    h.seg_tree_probs = [255, 255, 255]
-    h.seg_map_update = 0
-    h.segmentation = bd.bool()
-    if h.segmentation:
-        h.seg_map_update = bd.bool()
-        update_data = bd.bool()
-        if update_data:
-            h.seg_abs = bd.bool()
-            for i in range(4):
-                if bd.bool():
-                    h.seg_qi[i] = bd.signed(7)
-            for i in range(4):
-                if bd.bool():
-                    h.seg_lf[i] = bd.signed(6)
-        if h.seg_map_update:
-            for i in range(3):
-                h.seg_tree_probs[i] = bd.literal(8) if bd.bool() else 255
-    h.filter_type = bd.bool()
-    h.filter_level = bd.literal(6)
-    h.sharpness = bd.literal(3)
-    h.lf_delta = bd.bool()
-    h.ref_lf_deltas = [0, 0, 0, 0]
-    h.mode_lf_deltas = [0, 0, 0, 0]
-    if h.lf_delta and bd.bool():
-        for i in range(4):
-            if bd.bool():
-                h.ref_lf_deltas[i] = bd.signed(6)
-        for i in range(4):
-            if bd.bool():
-                h.mode_lf_deltas[i] = bd.signed(6)
-    h.n_parts = 1 << bd.literal(2)
-    h.q_index = bd.literal(7)
-    h.q_deltas = []
-    for _ in range(5):  # y1dc, y2dc, y2ac, uvdc, uvac
-        h.q_deltas.append(bd.signed(4) if bd.bool() else 0)
+    _read_segment_filter_quant(bd, h)
     bd.bool()  # refresh_entropy_probs (stateless still-image decode)
-    probs = [[[list(DEFAULT_COEFF_PROBS[t][b][c]) for c in range(3)]
-              for b in range(8)] for t in range(4)]
-    for t in range(4):
-        for b in range(8):
-            for c in range(3):
-                for k in range(11):
-                    if bd.bool(COEFF_UPDATE_PROBS[t][b][c][k]):
-                        probs[t][b][c][k] = bd.literal(8)
-    h.coeff_probs = probs
-    h.skip_enabled = bd.bool()
-    h.skip_prob = bd.literal(8) if h.skip_enabled else 0
+    _read_coeff_probs(bd, h)
     return h, bd
 
 

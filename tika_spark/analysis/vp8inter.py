@@ -48,7 +48,8 @@ from tika_spark.analysis.vp8 import (
     _BoolEnc, _FrameHeader, _MBInfo, _NzCtx, _Quant,
     _apply_loop_filter, _clamp_qi, _dequant, _mb_coeffs,
     _mb_skip_ctx, _pred16, _predict_chroma, _predict_luma,
-    _quantize_block, _token_partitions, _write_block, decode_vp8_yuv,
+    _quantize_block, _read_coeff_probs, _read_segment_filter_quant,
+    _token_partitions, _write_block, decode_vp8_yuv,
     fdct4x4, fwalsh4x4, idct4x4, iwalsh4x4,
 )
 
@@ -150,11 +151,6 @@ def _write_mvcomponent(be, p, v8: int):
             be.put((a >> 3) & 1, p[12])
     if a:
         be.put(1 if v < 0 else 0, p[1])
-
-
-def _read_mv(bd) -> tuple[int, int]:
-    return (_read_mvcomponent(bd, MV_PROBS[0]),
-            _read_mvcomponent(bd, MV_PROBS[1]))
 
 
 def _write_mv(be, mv: tuple[int, int]):
@@ -299,43 +295,7 @@ def _parse_inter_headers(data: bytes, width: int, height: int):
     if 3 + part1_size > len(data):
         raise ValueError("VP8 first partition overruns payload")
     bd = _BoolDec(data, 3, 3 + part1_size)
-    # segmentation (same layout as keyframes)
-    h.seg_qi = [0, 0, 0, 0]
-    h.seg_lf = [0, 0, 0, 0]
-    h.seg_abs = 0
-    h.seg_tree_probs = [255, 255, 255]
-    h.seg_map_update = 0
-    h.segmentation = bd.bool()
-    if h.segmentation:
-        h.seg_map_update = bd.bool()
-        if bd.bool():
-            h.seg_abs = bd.bool()
-            for i in range(4):
-                if bd.bool():
-                    h.seg_qi[i] = bd.signed(7)
-            for i in range(4):
-                if bd.bool():
-                    h.seg_lf[i] = bd.signed(6)
-        if h.seg_map_update:
-            for i in range(3):
-                h.seg_tree_probs[i] = (bd.literal(8) if bd.bool()
-                                       else 255)
-    h.filter_type = bd.bool()
-    h.filter_level = bd.literal(6)
-    h.sharpness = bd.literal(3)
-    h.lf_delta = bd.bool()
-    h.ref_lf_deltas = [0, 0, 0, 0]
-    h.mode_lf_deltas = [0, 0, 0, 0]
-    if h.lf_delta and bd.bool():
-        for i in range(4):
-            if bd.bool():
-                h.ref_lf_deltas[i] = bd.signed(6)
-        for i in range(4):
-            if bd.bool():
-                h.mode_lf_deltas[i] = bd.signed(6)
-    h.n_parts = 1 << bd.literal(2)
-    h.q_index = bd.literal(7)
-    h.q_deltas = [bd.signed(4) if bd.bool() else 0 for _ in range(5)]
+    _read_segment_filter_quant(bd, h)
     inter = {}
     inter["refresh_golden"] = bd.bool()
     inter["refresh_alt"] = bd.bool()
@@ -351,17 +311,7 @@ def _parse_inter_headers(data: bytes, width: int, height: int):
     inter["sign_bias_alt"] = bd.bool()
     bd.bool()                                # refresh_entropy_probs
     inter["refresh_last"] = bd.bool()
-    probs = [[[list(DEFAULT_COEFF_PROBS[t][b][c]) for c in range(3)]
-              for b in range(8)] for t in range(4)]
-    for t in range(4):
-        for b in range(8):
-            for c in range(3):
-                for k in range(11):
-                    if bd.bool(COEFF_UPDATE_PROBS[t][b][c][k]):
-                        probs[t][b][c][k] = bd.literal(8)
-    h.coeff_probs = probs
-    h.skip_enabled = bd.bool()
-    h.skip_prob = bd.literal(8) if h.skip_enabled else 0
+    _read_coeff_probs(bd, h)
     inter["prob_intra"] = bd.literal(8)
     inter["prob_last"] = bd.literal(8)
     inter["prob_gf"] = bd.literal(8)

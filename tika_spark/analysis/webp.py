@@ -43,62 +43,11 @@ status rows; no shuffle.
 
 from __future__ import annotations
 
-import heapq
-
 import numpy as np
 
+from tika_spark.analysis.bitio import (LsbReader, LsbWriter, PrefixCode,
+                                       canonical_codes, huffman_lengths)
 from tika_spark.analysis.pixels import check_dims
-
-# ------------------------------------------------------------ bits
-
-
-class _LsbBits:
-    """LSB-first bit reader (VP8L convention: values are packed from
-    the least-significant end of each byte)."""
-
-    __slots__ = ("data", "pos", "buf", "n")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.n = 0
-
-    def read(self, nbits: int) -> int:
-        while self.n < nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated VP8L bitstream")
-            self.buf |= self.data[self.pos] << self.n
-            self.pos += 1
-            self.n += 8
-        v = self.buf & ((1 << nbits) - 1)
-        self.buf >>= nbits
-        self.n -= nbits
-        return v
-
-
-class _LsbWriter:
-    __slots__ = ("out", "buf", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.n = 0
-
-    def write(self, v: int, nbits: int):
-        self.buf |= (v & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.buf & 0xFF)
-            self.buf >>= 8
-            self.n -= 8
-
-    def align(self):
-        if self.n:
-            self.out.append(self.buf & 0xFF)
-            self.buf = 0
-            self.n = 0
-
 
 # ------------------------------------------------------- prefix codes
 
@@ -110,63 +59,7 @@ CODE_LENGTH_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10,
 MAX_CODE_LENGTH = 15
 
 
-def _canonical(lengths: dict) -> dict:
-    """{symbol: (code, len)} canonical prefix code: symbols sorted by
-    (length, symbol) get increasing code words (DEFLATE convention;
-    codes are read/written most-significant bit first)."""
-    out = {}
-    code = 0
-    prev = 0
-    for sym, ln in sorted(lengths.items(), key=lambda kv: (kv[1],
-                                                           kv[0])):
-        if ln == 0:
-            continue
-        code <<= ln - prev
-        out[sym] = (code, ln)
-        code += 1
-        prev = ln
-    return out
-
-
-class _PrefixCode:
-    """Decode-side prefix code built from a length profile.
-
-    A single-symbol code reads ZERO bits (the spec's degenerate
-    case); otherwise codes are canonical and walked bit-by-bit, the
-    first-read bit being the most significant of the code word."""
-
-    __slots__ = ("table", "single")
-
-    def __init__(self, lengths: dict, explicit: dict | None = None):
-        if explicit is not None:
-            self.single = None
-            self.table = dict(explicit)
-            return
-        nz = {s: l for s, l in lengths.items() if l > 0}
-        if not nz:
-            raise ValueError("empty prefix code")
-        if len(nz) == 1:
-            self.single = next(iter(nz))
-            self.table = None
-            return
-        self.single = None
-        self.table = {}
-        for sym, (code, ln) in _canonical(nz).items():
-            self.table[(ln, code)] = sym
-
-    def read(self, b: _LsbBits) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        for ln in range(1, MAX_CODE_LENGTH + 1):
-            code = (code << 1) | b.read(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid prefix code in VP8L stream")
-
-
-def _read_prefix_code(b: _LsbBits, alphabet_size: int) -> _PrefixCode:
+def _read_prefix_code(b: LsbReader, alphabet_size: int) -> PrefixCode:
     if b.read(1):                                   # simple code
         num_symbols = b.read(1) + 1
         if b.read(1):                               # 8-bit first sym
@@ -176,12 +69,12 @@ def _read_prefix_code(b: _LsbBits, alphabet_size: int) -> _PrefixCode:
         if num_symbols == 1:
             if sym0 >= alphabet_size:
                 raise ValueError("simple-code symbol out of range")
-            return _PrefixCode({sym0: 1})           # 0-bit degenerate
+            return PrefixCode(((sym0, 1),))         # 0-bit degenerate
         sym1 = b.read(8)
         if sym0 >= alphabet_size or sym1 >= alphabet_size:
             raise ValueError("simple-code symbol out of range")
         # one bit each, in TRANSMISSION order (bit 0 = first symbol)
-        return _PrefixCode({}, explicit={(1, 0): sym0, (1, 1): sym1})
+        return PrefixCode(((sym0, 1), (sym1, 1)))
 
     # normal code: code lengths are themselves prefix-coded
     num_cl = 4 + b.read(4)
@@ -192,7 +85,7 @@ def _read_prefix_code(b: _LsbBits, alphabet_size: int) -> _PrefixCode:
         v = b.read(3)
         if v:
             cl_lengths[CODE_LENGTH_ORDER[i]] = v
-    cl_code = _PrefixCode(cl_lengths)
+    cl_code = PrefixCode(sorted(cl_lengths.items()))
 
     max_symbol = alphabet_size
     if b.read(1):                                   # use max_symbol
@@ -224,13 +117,13 @@ def _read_prefix_code(b: _LsbBits, alphabet_size: int) -> _PrefixCode:
             symbol += 11 + b.read(7)
     if symbol > alphabet_size:
         raise ValueError("code-length run overflow")
-    return _PrefixCode(lengths)
+    return PrefixCode(sorted(lengths.items()))
 
 
 # --------------------------------------------------- LZ77 prefixes
 
 
-def _lz77_decode(b: _LsbBits, prefix_sym: int) -> int:
+def _lz77_decode(b: LsbReader, prefix_sym: int) -> int:
     """Length/distance value from its prefix symbol + extra bits."""
     if prefix_sym < 4:
         return prefix_sym + 1
@@ -285,7 +178,7 @@ def _cache_hash(argb: np.ndarray, bits: int) -> np.ndarray:
 _GREEN_EXTRA = 24      # LZ77 length prefix symbols after the 256 greens
 
 
-def _read_groups(b: _LsbBits, n_groups: int, cache_bits: int) -> list:
+def _read_groups(b: LsbReader, n_groups: int, cache_bits: int) -> list:
     groups = []
     green_size = 256 + _GREEN_EXTRA + (1 << cache_bits
                                        if cache_bits else 0)
@@ -300,7 +193,7 @@ def _read_groups(b: _LsbBits, n_groups: int, cache_bits: int) -> list:
     return groups
 
 
-def _decode_image_stream(b: _LsbBits, w: int, h: int,
+def _decode_image_stream(b: LsbReader, w: int, h: int,
                          level0: bool) -> tuple:
     """(argb uint32 array of h*w scan-order pixels, transforms list).
 
@@ -568,7 +461,7 @@ def decode_vp8l(data: bytes) -> np.ndarray:
     """VP8L payload (after the chunk header) → (h, w, 4) RGBA."""
     if not data or data[0] != 0x2F:
         raise ValueError("bad VP8L signature")
-    b = _LsbBits(data, 1)
+    b = LsbReader(data, 1)
     w = b.read(14) + 1
     h = b.read(14) + 1
     b.read(1)                                  # alpha hint
@@ -751,27 +644,14 @@ def webp_anim_bytes(frames: list[tuple], width: int,
 
 
 def _huffman_lengths(freqs: dict) -> dict:
-    if len(freqs) == 1:
-        return {next(iter(freqs)): 1}
-    heap = [(f, i, (s,)) for i, (s, f) in
-            enumerate(sorted(freqs.items()))]
-    heapq.heapify(heap)
-    depth = {s: 0 for s in freqs}
-    n = len(heap)
-    while len(heap) > 1:
-        f1, _, s1 = heapq.heappop(heap)
-        f2, _, s2 = heapq.heappop(heap)
-        for s in s1 + s2:
-            depth[s] += 1
-        n += 1
-        heapq.heappush(heap, (f1 + f2, n, s1 + s2))
+    depth = huffman_lengths(freqs)
     if max(depth.values()) > MAX_CODE_LENGTH:
         flat = max(1, (len(freqs) - 1).bit_length())
         return {s: flat for s in freqs}
     return depth
 
 
-def _write_prefix_code(w: _LsbWriter, lengths: dict,
+def _write_prefix_code(w: LsbWriter, lengths: dict,
                        alphabet_size: int) -> dict:
     """Emit a prefix code for the given {symbol: length} profile and
     return the canonical {symbol: (code, len)} encode table."""
@@ -803,7 +683,7 @@ def _write_prefix_code(w: _LsbWriter, lengths: dict,
         clc_syms.sort()
     clc_len = max(1, (len(clc_syms) - 1).bit_length())
     clc_lengths = {s: clc_len for s in clc_syms}
-    clc = _canonical(clc_lengths)
+    clc = canonical_codes(sorted(clc_lengths.items()))
     num_cl = max(CODE_LENGTH_ORDER.index(s) for s in used) + 1
     num_cl = max(num_cl, 4)
     w.write(num_cl - 4, 4)
@@ -815,24 +695,8 @@ def _write_prefix_code(w: _LsbWriter, lengths: dict,
     w.write(len(lens) - 2, 14)
     for ln in lens:
         code, n = clc[ln]
-        w.write(_rev(code, n), n)
-    return _canonical(lengths)
-
-
-def _rev(code: int, n: int) -> int:
-    """Prefix code words are written/read MSB first; the LSB-first
-    writer needs them bit-reversed."""
-    out = 0
-    for _ in range(n):
-        out = (out << 1) | (code & 1)
-        code >>= 1
-    return out
-
-
-def _emit(w: _LsbWriter, table: dict, sym: int):
-    code, n = table[sym]
-    if n:
-        w.write(_rev(code, n), n)
+        w.write_code(code, n)
+    return canonical_codes(sorted(lengths.items()))
 
 
 def webp_bytes(arr: np.ndarray, palette: bool = False,
@@ -866,7 +730,7 @@ def webp_bytes(arr: np.ndarray, palette: bool = False,
         raise ValueError("uniform transform fixtures cap at 512px "
                          "(single 2^9 block)")
 
-    wtr = _LsbWriter()
+    wtr = LsbWriter()
     wtr.write(0x2F, 8)
     wtr.write(w_ - 1, 14)
     wtr.write(h - 1, 14)
@@ -983,7 +847,7 @@ def webp_bytes(arr: np.ndarray, palette: bool = False,
     return b"RIFF" + len(riff).to_bytes(4, "little") + riff
 
 
-def _encode_substream(wtr: _LsbWriter, px: np.ndarray, w: int, h: int,
+def _encode_substream(wtr: LsbWriter, px: np.ndarray, w: int, h: int,
                       cache_bits: int = 0, row_refs: bool = False,
                       level0: bool = False) -> None:
     """Entropy-coded image for (h*w, 4) [a, r, g, b] pixels: cache
@@ -1063,19 +927,19 @@ def _encode_substream(wtr: _LsbWriter, px: np.ndarray, w: int, h: int,
     for op in ops:
         if op[0] == "lit":
             i = op[1]
-            _emit(wtr, gt, int(px[i, 2]))
-            _emit(wtr, rt, int(px[i, 1]))
-            _emit(wtr, bt, int(px[i, 3]))
-            _emit(wtr, at, int(px[i, 0]))
+            wtr.write_code(*gt[int(px[i, 2])])
+            wtr.write_code(*rt[int(px[i, 1])])
+            wtr.write_code(*bt[int(px[i, 3])])
+            wtr.write_code(*at[int(px[i, 0])])
         elif op[0] == "cache":
-            _emit(wtr, gt, 256 + _GREEN_EXTRA + op[1])
+            wtr.write_code(*gt[256 + _GREEN_EXTRA + op[1]])
         else:
             lcode, leb, lex = _lz77_encode(op[1])
-            _emit(wtr, gt, 256 + lcode)
+            wtr.write_code(*gt[256 + lcode])
             if leb:
                 wtr.write(lex, leb)
             dcode, deb, dex = _lz77_encode(op[2] + 120)
-            _emit(wtr, dt, dcode)
+            wtr.write_code(*dt[dcode])
             if deb:
                 wtr.write(dex, deb)
 
@@ -1174,7 +1038,7 @@ def decode_alpha(body: bytes, w: int, h: int) -> np.ndarray:
         a = np.frombuffer(raw, dtype=np.uint8).astype(np.int32)
         a = a.reshape(h, w).copy()
     elif compression == 1:
-        b = _LsbBits(body, 1)
+        b = LsbReader(body, 1)
         argb, transforms = _decode_image_stream(b, w, h, True)
         px, w2 = _apply_inverse_transforms(argb, w, h, transforms)
         if w2 != w:
@@ -1195,7 +1059,7 @@ def alpha_chunk_bytes(alpha: np.ndarray, compression: int = 1,
     hdr = bytes(((0 << 4) | (filt << 2) | compression,))
     if compression == 0:
         return hdr + res.tobytes()
-    wtr = _LsbWriter()
+    wtr = LsbWriter()
     wtr.write(0, 1)                        # no transforms
     px = np.zeros((h * w, 4), dtype=np.int32)
     px[:, 0] = 255

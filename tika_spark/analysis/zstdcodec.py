@@ -664,10 +664,6 @@ def _huff_stream(huff, body: bytes, want: int) -> bytes:
 # ---------------------------------------------------------- sequences
 
 
-class _SeqTables:
-    __slots__ = ("ll", "of", "ml", "ll_acc", "of_acc", "ml_acc")
-
-
 def _read_seq_table(block, pos, mode, default, default_acc, max_sym,
                     max_acc, prev):
     """One sequence table per its 2-bit mode -> (table, acc, pos)."""

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import struct
 
+from tika_spark.analysis.bitio import canonical_codes
+
 
 class LzxError(ValueError):
     pass
@@ -95,14 +97,8 @@ class _Huff:
 
     def __init__(self, lengths: list[int]):
         self.max_len = max(lengths) if any(lengths) else 0
-        self.table: dict[tuple[int, int], int] = {}
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            for sym, l in enumerate(lengths):
-                if l == ln:
-                    self.table[(ln, code)] = sym
-                    code += 1
-            code <<= 1
+        self.table = {(ln, code): sym for sym, (code, ln)
+                      in canonical_codes(enumerate(lengths)).items()}
         self.empty = not self.table
 
     def decode(self, bits: _Bits) -> int:

@@ -15,12 +15,6 @@ DefaultExtractor pipeline):
 4. NumWordsRulesClassifier — the published word-count decision tree
    over (prev, curr, next) marks each block CONTENT/BOILERPLATE.
 
-``block_proximity_fusion`` and ``density_rules_classify`` implement
-the other two published pipeline pieces (the DefaultExtractor
-variant) as composable building blocks; the default pipeline
-(:func:`classify_blocks`) deliberately classifies un-fused blocks —
-see its docstring.
-
 The text-main output mirrors BoilerpipeContentHandler's emission: one
 paragraph per content block, newline-terminated.
 """
@@ -218,46 +212,6 @@ def simple_block_fusion(blocks: list[TextBlock]) -> list[TextBlock]:
     return out
 
 
-def block_proximity_fusion(blocks: list[TextBlock],
-                           max_distance: int = 1) -> list[TextBlock]:
-    """Merge blocks whose offset gap <= max_distance (no empty block
-    between them)."""
-    if not blocks:
-        return blocks
-    out = [blocks[0]]
-    for b in blocks[1:]:
-        if b.offset_start - out[-1].offset_end <= max_distance:
-            out[-1].merge_next(b)
-        else:
-            out.append(b)
-    return out
-
-
-def density_rules_classify(blocks: list[TextBlock]) -> None:
-    """The published density decision tree (WSDM 2010, fig. 10 analog).
-
-    Marks ``is_content`` per block using (prev, curr, next) features.
-    """
-    empty = TextBlock("", 0, 0, -10)
-    n = len(blocks)
-    for i, curr in enumerate(blocks):
-        prev = blocks[i - 1] if i > 0 else empty
-        nxt = blocks[i + 1] if i < n - 1 else empty
-        if curr.link_density <= 0.333333:
-            if prev.link_density <= 0.555556:
-                if curr.text_density <= 9:
-                    if nxt.text_density <= 10:
-                        curr.is_content = prev.text_density > 4
-                    else:
-                        curr.is_content = True
-                else:
-                    curr.is_content = nxt.text_density != 0
-            else:
-                curr.is_content = nxt.text_density > 11
-        else:
-            curr.is_content = False
-
-
 def num_words_rules_classify(blocks: list[TextBlock]) -> None:
     """The published word-count decision tree (NumWordsRulesClassifier)."""
     empty = TextBlock("", 0, 0, -10)
@@ -293,9 +247,7 @@ def classify_blocks(body: El) -> list[TextBlock]:
     regions into one block and dilute link density; classifying
     un-fused blocks keeps per-paragraph granularity, which is also
     what the reference's pinned test contract exercises
-    (HtmlParserTest.java:392-406). Callers wanting the full
-    DefaultExtractor shape can compose ``block_proximity_fusion`` /
-    ``density_rules_classify`` themselves.
+    (HtmlParserTest.java:392-406).
     """
     blocks = segment_blocks(body)
     blocks = simple_block_fusion(blocks)

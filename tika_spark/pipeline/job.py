@@ -44,13 +44,18 @@ from tika_spark.pipeline.stages import (EXTRACT_SCHEMA, GUARD_STATUSES,
                                         make_extract_fn)
 
 
+# size_bucket = index of the first bound >= len(html), as SQL text: one
+# JVM call, where a chain of F.when Columns costs a py4j round trip per
+# operation
+_SIZE_BUCKET_SQL = "CASE {} ELSE {} END".format(
+    " ".join(f"WHEN length(html) <= {b} THEN {i}"
+             for i, b in enumerate(SIZE_BUCKET_BOUNDS)),
+    len(SIZE_BUCKET_BOUNDS))
+
+
 def with_size_bucket(df: DataFrame) -> DataFrame:
     """Add ``size_bucket`` = index of the first bound >= len(html)."""
-    expr = F.lit(len(SIZE_BUCKET_BOUNDS))
-    for idx in range(len(SIZE_BUCKET_BOUNDS) - 1, -1, -1):
-        expr = F.when(F.length("html") <= F.lit(SIZE_BUCKET_BOUNDS[idx]),
-                      F.lit(idx)).otherwise(expr)
-    return df.withColumn("size_bucket", expr)
+    return df.withColumn("size_bucket", F.expr(_SIZE_BUCKET_SQL))
 
 
 def _count_status(statuses) -> Column:

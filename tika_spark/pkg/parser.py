@@ -33,6 +33,7 @@ import zipfile
 import struct
 import zlib
 
+from tika_spark.analysis.bitio import LsbReader
 from tika_spark.config import ExtractConfig, output_budget
 
 _DEFAULT = ExtractConfig()
@@ -82,37 +83,23 @@ def _sf_read_tree(data: bytes, pos: int) -> tuple[dict, int]:
     return _sf_table(lengths), pos + n
 
 
-class _SfBits:
-    __slots__ = ("data", "pos", "acc", "n")
+class _ImplodeBits(LsbReader):
+    # explode() reports every truncation, tree headers included, as
+    # IndexError
+    __slots__ = ()
+    error = IndexError
 
-    def __init__(self, data: bytes, pos: int):
-        self.data, self.pos, self.acc, self.n = data, pos, 0, 0
 
-    def bit(self) -> int:
-        if self.n == 0:
-            self.acc = self.data[self.pos]
-            self.pos += 1
-            self.n = 8
-        b = self.acc & 1
-        self.acc >>= 1
-        self.n -= 1
-        return b
-
-    def bits(self, k: int) -> int:
-        v = 0
-        for i in range(k):
-            v |= self.bit() << i
-        return v
-
-    def sf(self, table: dict) -> int:
-        v = bl = 0
-        while bl <= 16:
-            v |= self.bit() << bl
-            bl += 1
-            s = table.get((bl, v))
-            if s is not None:
-                return s
-        raise ValueError("bad Shannon-Fano code")
+def _sf(br: LsbReader, table: dict) -> int:
+    """One Shannon-Fano symbol, read first bit lowest."""
+    v = bl = 0
+    while bl <= 16:
+        v |= br.read(1) << bl
+        bl += 1
+        s = table.get((bl, v))
+        if s is not None:
+            return s
+    raise ValueError("bad Shannon-Fano code")
 
 
 def explode(data: bytes, usize: int, flags: int) -> bytes:
@@ -131,19 +118,19 @@ def explode(data: bytes, usize: int, flags: int) -> bytes:
         lit_t, pos = _sf_read_tree(data, pos)
     len_t, pos = _sf_read_tree(data, pos)
     dist_t, pos = _sf_read_tree(data, pos)
-    br = _SfBits(data, pos)
+    br = _ImplodeBits(data, pos)
     low_bits = 7 if big_dict else 6
     minlen = 3 if has_lit else 2
     out = bytearray()
     while len(out) < usize:
-        if br.bit():
-            out.append(br.sf(lit_t) if has_lit else br.bits(8))
+        if br.read(1):
+            out.append(_sf(br, lit_t) if has_lit else br.read(8))
         else:
-            low = br.bits(low_bits)
-            dist = (br.sf(dist_t) << low_bits) | low
-            ln = br.sf(len_t)
+            low = br.read(low_bits)
+            dist = (_sf(br, dist_t) << low_bits) | low
+            ln = _sf(br, len_t)
             if ln == 63:
-                ln += br.bits(8)
+                ln += br.read(8)
             ln += minlen
             start = len(out) - dist - 1
             for i in range(ln):
