@@ -289,18 +289,22 @@ def test_mp3_duration_estimate():
 
 
 def test_real_decode_tiers():
+    from tika_spark.analysis.isobmff import mp4_h264_frames
+    from tika_spark.analysis.pcm import audio_decoders, decode_audio
+    from tika_spark.analysis.pixels import image_decoders
     # Formats with a from-scratch decoder reject garbage loudly...
     with pytest.raises(ValueError):
-        multimodal.real_decode(b"", "image/png")
+        image_decoders()["image/png"](b"")
     with pytest.raises(ValueError):
-        multimodal.real_decode(b"", "image/jpeg")
-    # video/mp4 graduated from hook to from-scratch H.264 decode
-    # (isobmff.mp4_h264_frames); garbage is a loud Mp4Error too
-    with pytest.raises(ValueError):
-        multimodal.real_decode(b"", "video/mp4")
-    # ...while uncovered codecs remain an explicit integration hook.
-    with pytest.raises(NotImplementedError):
-        multimodal.real_decode(b"", "video/x-msvideo-unknown")
+        image_decoders()["image/jpeg"](b"")
+    with pytest.raises(ValueError):       # the MP4 frame route
+        mp4_h264_frames(b"")
+    # ...and a type no decoder table holds is refused, not guessed
+    unknown = "video/x-msvideo-unknown"
+    assert unknown not in image_decoders()
+    assert unknown not in audio_decoders()
+    with pytest.raises(ValueError, match="no audio decoder"):
+        decode_audio(b"RIFF", unknown)
 
 
 def test_minhash_lsh_catches_every_qualifying_pair_sf001(spark):

@@ -74,8 +74,8 @@ class TestAudio:
 
 class TestPipeline:
     def test_real_decode_routes_flv(self):
-        from tika_spark.analysis.multimodal import real_decode
-        s, rate = real_decode(f.flv_fixture(5), "video/x-flv")
+        from tika_spark.analysis.pcm import decode_audio
+        s, rate = decode_audio(f.flv_fixture(5), "video/x-flv")
         assert rate == 44100 and (s == 0).all()
 
     def test_magic_detects_flv(self):

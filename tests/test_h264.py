@@ -83,6 +83,28 @@ def test_cavlc_residual_roundtrip():
             assert (got == c).all(), (nc, c.tolist(), got.tolist())
 
 
+def _levels(bits: str, t1s: int, tc: int, max_coeff: int):
+    from tika_spark.analysis.h264 import _read_levels
+    w = BitWriter()
+    w.bits(bits)
+    w.rbsp_trailing()
+    return _read_levels(BitReader(w.bytes()), t1s, tc, max_coeff)
+
+
+def test_cavlc_corrupt_positions_raise_h264error():
+    # two trailing ones, total_zeros 14 ('000000'), run_before 0: the
+    # first coefficient lands at 14 + 2 - 1 = 15, past a 15-coeff block
+    with pytest.raises(H264Error):
+        _levels("00" + "000000" + "111", 2, 2, 15)
+    # total_zeros 7 ('0011'), run_before 14 (> zeros_left): the second
+    # coefficient's position goes negative
+    with pytest.raises(H264Error):
+        _levels("00" + "0011" + "00000000001", 2, 2, 16)
+    # the same shapes in range decode
+    out, tc = _levels("00" + "0011" + "0001", 2, 2, 16)
+    assert tc == 2 and out[8] == 1 and out[0] == 1
+
+
 def test_cavlc_huge_levels():
     # exercise the escape prefixes (>= 15) incl. prefix >= 16
     for lv in (15, 16, 30, 31, 300, 5000, 60000, -60000):

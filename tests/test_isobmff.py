@@ -103,8 +103,8 @@ class TestDecode:
 
 class TestPipeline:
     def test_real_decode_routes_m4a(self):
-        from tika_spark.analysis.multimodal import real_decode
-        samples, rate = real_decode(b.m4a_fixture(4), "audio/mp4")
+        from tika_spark.analysis.pcm import decode_audio
+        samples, rate = decode_audio(b.m4a_fixture(4), "audio/mp4")
         assert rate == 44100 and (samples == 0).all()
 
     def test_magic_detects_m4a(self):

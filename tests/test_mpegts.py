@@ -90,8 +90,9 @@ class TestPipeline:
         assert kind == "raw" and len(frames) == 3
 
     def test_real_decode_routes_ts(self):
-        from tika_spark.analysis.multimodal import real_decode
-        frames, meta = real_decode(t.mpegts_fixture(3), "video/mp2t")
+        # the TS video route: first video stream -> MPEG-1 decode
+        stype, es = t.ts_video(t.mpegts_fixture(3))
+        frames, meta = m.decode_mpeg1(es)
         assert meta["picture_types"] == [1, 3, 2]
 
     def test_magic_detects_ts(self):

@@ -94,9 +94,9 @@ class TestFlacInOgg:
 
 class TestPipeline:
     def test_real_decode_routes_ogg_flac(self):
-        from tika_spark.analysis.multimodal import real_decode
-        samples, rate = real_decode(o.ogg_flac_fixture(2),
-                                    "audio/ogg")
+        from tika_spark.analysis.pcm import decode_audio
+        samples, rate = decode_audio(o.ogg_flac_fixture(2),
+                                     "audio/ogg")
         assert rate == 8000 * 3
 
     def test_magic_detects_ogg(self):

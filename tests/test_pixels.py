@@ -123,15 +123,19 @@ def test_resize_block_average_and_nearest():
 
 
 def test_real_decode_hook_png(spark):
-    from tika_spark.analysis.multimodal import real_decode
+    # the media tables: image types, the video demuxer, audio types
+    from tika_spark.analysis.pcm import decode_audio
+    from tika_spark.analysis.pixels import image_decoders
+    from tika_spark.analysis.video import _demux
     arr = np.full((3, 2, 3), (1, 2, 3), dtype=np.uint8)
-    assert np.array_equal(real_decode(png_bytes(arr), "image/png"), arr)
+    dec = image_decoders()
+    assert np.array_equal(dec["image/png"](png_bytes(arr)), arr)
     with pytest.raises(ValueError):       # decoded for real, bad data
-        real_decode(b"\xff\xd8junk", "image/jpeg")
+        dec["image/jpeg"](b"\xff\xd8junk")
     with pytest.raises(ValueError):       # PS demux decodes for real
-        real_decode(b"\x00\x00\x01\xba", "video/mpeg")
-    with pytest.raises(NotImplementedError):   # codec hook remains
-        real_decode(b"OggS" + bytes(24), "audio/opus")
+        _demux(b"\x00\x00\x01\xba")
+    with pytest.raises(ValueError):       # no Opus decoder: refused
+        decode_audio(b"OggS" + bytes(24), "audio/opus")
 
 
 def test_image_pixel_stats_operator(spark):
@@ -223,10 +227,9 @@ def test_audio_pcm_stats_operator(spark):
 
 
 def test_real_decode_hook_wav():
-    from tika_spark.analysis.multimodal import real_decode
-    from tika_spark.analysis.pcm import wav_bytes
+    from tika_spark.analysis.pcm import decode_audio, wav_bytes
     wave = np.array([1, 2, 3], dtype=np.int16)
-    arr, rate = real_decode(wav_bytes(wave, 8000), "audio/wav")
+    arr, rate = decode_audio(wav_bytes(wave, 8000), "audio/wav")
     assert rate == 8000 and arr.shape == (3, 1)
 
 
@@ -449,6 +452,24 @@ def test_jpeg_rejects_garbage_truncation_lossless():
     loss[i + 1] = 0xC3  # SOF3: lossless — still unsupported
     with pytest.raises(ValueError):
         decode_jpeg(bytes(loss))
+
+
+def test_jpeg_short_segments_raise_value_error():
+    from tika_spark.analysis.jpegcodec import decode_jpeg, jpeg_bytes
+    good = jpeg_bytes(np.full((8, 8, 3), 90, np.uint8))
+    sof = good.find(b"\xff\xc0")
+    for seglen in (7, 8 + 3 * 3 - 1):   # short header, short components
+        bad = bytearray(good)
+        bad[sof + 2:sof + 4] = struct.pack(">H", seglen)
+        with pytest.raises(ValueError, match="short SOF"):
+            decode_jpeg(bytes(bad))
+    # an empty DRI segment right after SOI
+    with pytest.raises(ValueError, match="short DRI"):
+        decode_jpeg(good[:2] + b"\xff\xdd\x00\x02" + good[2:])
+    # an empty SOS segment in place of the real one
+    sos = good.find(b"\xff\xda")
+    with pytest.raises(ValueError, match="short SOS"):
+        decode_jpeg(good[:sos] + b"\xff\xda\x00\x02\xff\xd9")
 
 
 def test_jpeg_progressive_decodes_identical_to_baseline():

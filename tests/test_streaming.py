@@ -44,6 +44,32 @@ def test_stream_ingests_incrementally(spark, tmp_path):
     assert os.path.isdir(ckpt)
 
 
+def test_stream_replay_idempotent(spark, tmp_path):
+    """A batch replayed after a crash between its write and its commit
+    (offsets logged, commit lost) rewrites its own partition: the
+    output keeps one row per url."""
+    inp = str(tmp_path / "rp_in")
+    out = str(tmp_path / "rp_out")
+    ckpt = str(tmp_path / "rp_ckpt")
+    _write_chunk(spark, generate_pages_pandas(25), inp)
+
+    def urls():
+        return sorted(r["url"] for r in
+                      spark.read.parquet(out).select("url").collect())
+
+    _drain(spark, inp, out, ckpt)
+    first = urls()
+    assert len(first) == 25 and len(set(first)) == 25
+    for name in ("0", ".0.crc"):               # lose batch 0's commit
+        path = os.path.join(ckpt, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    _drain(spark, inp, out, ckpt)
+    assert urls() == first                     # batch 0 replayed once
+    assert [r["batch_id"] for r in spark.read.parquet(out)
+            .select("batch_id").distinct().collect()] == [0]
+
+
 def test_windowed_mime_counts(spark, tmp_path):
     """Event-time tumbling window + watermark over a page stream."""
     import datetime as dt

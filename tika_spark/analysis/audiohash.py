@@ -29,10 +29,7 @@ training-pipeline extension.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -66,47 +63,26 @@ def audio_fingerprint(df: DataFrame, window: int = 256,
                       payload_col: str = "payload",
                       type_col: str = "media_type") -> DataFrame:
     """(id, payload, media_type) -> one row per landmark (windowed
-    dominant-bin pair); corrupt payloads yield status rows."""
-    from tika_spark.analysis.pcm import AUDIO_TYPES, decode_audio
+    dominant-bin pair); unsupported types, clips too short for one
+    landmark and corrupt payloads yield one status row each."""
+    from tika_spark.analysis.pcm import audio_decoders
+    from tika_spark.analysis.spread import decode_stage
 
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(
-        df.select(id_col, payload_col, type_col), id_col)
+    def landmarks(payload: bytes, media_type: str | None):
+        decode = audio_decoders().get(media_type)
+        if decode is None:
+            return [(-1, 0, 0, "unsupported")]
+        arr, _rate = decode(payload)
+        bins = window_peak_bins(arr[:, 0], window)
+        lms = landmarks_of(bins)
+        n = int(len(bins))
+        if len(lms) == 0:
+            return [(-1, n, 0, "short")]
+        return [(t, n, int(lm), "ok") for t, lm in enumerate(lms)]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                mt = mt or ""
-                if mt not in AUDIO_TYPES:
-                    rows.append({"id": i, "t": -1, "n_windows": 0,
-                                 "landmark": 0,
-                                 "status": "unsupported"})
-                    continue
-                try:
-                    arr, _rate = decode_audio(bytes(payload or b""),
-                                              mt)
-                    bins = window_peak_bins(arr[:, 0], window)
-                    lms = landmarks_of(bins)
-                except Exception:
-                    rows.append({"id": i, "t": -1, "n_windows": 0,
-                                 "landmark": 0, "status": "error"})
-                    continue
-                if len(lms) == 0:
-                    rows.append({"id": i, "t": -1,
-                                 "n_windows": int(len(bins)),
-                                 "landmark": 0, "status": "short"})
-                    continue
-                for t, lm in enumerate(lms):
-                    rows.append({"id": i, "t": t,
-                                 "n_windows": int(len(bins)),
-                                 "landmark": int(lm),
-                                 "status": "ok"})
-            yield pd.DataFrame(rows, columns=[
-                "id", "t", "n_windows", "landmark", "status"])
-
-    return slim.mapInPandas(run, schema=AUDIO_FP_SCHEMA)
+    return decode_stage(df, AUDIO_FP_SCHEMA, landmarks,
+                        (-1, 0, 0, "error"), id_col, payload_col,
+                        type_col)
 
 
 def audio_neardup_pairs(fingerprints: DataFrame,

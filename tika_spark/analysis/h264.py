@@ -632,9 +632,13 @@ def _read_levels(r: BitReader, t1s: int, tc: int, max_coeff: int
         if zeros_left <= 0:
             break
         run = _read_vlc(r, _RB_DEC[min(zeros_left, 7)], "run_before")
+        if run > zeros_left:
+            raise H264Error("run_before exceeds zeros_left")
         runs[i] = run
         zeros_left -= run
     pos = tz + tc - 1
+    if pos >= max_coeff:
+        raise H264Error("total_zeros + total_coeff exceed the block")
     for i in range(tc):
         out[pos] = levels[i]
         pos -= 1

@@ -26,10 +26,7 @@ Scale design (100 TB image corpus):
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
@@ -92,6 +89,24 @@ def phash_bits(arr: np.ndarray) -> int:
     return h - (1 << 64) if h >= 1 << 63 else h  # signed long
 
 
+def _image_hash(df: DataFrame, schema: str, hash_bits, id_col: str,
+                payload_col: str, type_col: str) -> DataFrame:
+    """(id, payload, type) -> one (hash, width, height, status) row per
+    image through the image operators' one decoder table."""
+    from tika_spark.analysis.pixels import image_decoders
+    from tika_spark.analysis.spread import decode_stage
+
+    def row(payload: bytes, media_type: str | None):
+        decode = image_decoders().get(media_type)
+        if decode is None:
+            return [(0, 0, 0, "unsupported")]
+        arr = decode(payload)
+        return [(hash_bits(arr), arr.shape[1], arr.shape[0], "ok")]
+
+    return decode_stage(df, schema, row, (0, 0, 0, "error"), id_col,
+                        payload_col, type_col)
+
+
 def image_phash(df: DataFrame, id_col: str = "id",
                 payload_col: str = "payload",
                 type_col: str = "media_type") -> DataFrame:
@@ -100,41 +115,8 @@ def image_phash(df: DataFrame, id_col: str = "id",
     rows. Near-dup pairs: feed the output to :func:`dhash_pairs`
     with ``hash_col='phash'`` (the banded Hamming join is hash-
     agnostic)."""
-    from tika_spark.analysis.jpegcodec import decode_jpeg
-    from tika_spark.analysis.pixels import (decode_bmp, decode_gif,
-                                            decode_ico, decode_png,
-                                            decode_tiff)
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(
-        df.select(id_col, payload_col, type_col), id_col)
-    from tika_spark.analysis.webp import decode_webp
-    decoders = {"image/png": decode_png, "image/gif": decode_gif,
-                "image/bmp": decode_bmp, "image/x-ms-bmp": decode_bmp,
-                "image/jpeg": decode_jpeg, "image/tiff": decode_tiff,
-                "image/webp": decode_webp,
-                "image/x-icon": decode_ico}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                row = {"id": i, "phash": 0, "width": 0, "height": 0,
-                       "status": "unsupported"}
-                dec = decoders.get(mt or "")
-                if dec is not None:
-                    try:
-                        arr = dec(bytes(payload or b""))
-                        row.update(phash=phash_bits(arr),
-                                   width=arr.shape[1],
-                                   height=arr.shape[0], status="ok")
-                    except Exception:
-                        row["status"] = "error"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=["id", "phash", "width",
-                                              "height", "status"])
-
-    return slim.mapInPandas(run, schema=PHASH_SCHEMA)
+    return _image_hash(df, PHASH_SCHEMA, phash_bits, id_col,
+                       payload_col, type_col)
 
 
 def image_dhash(df: DataFrame, id_col: str = "id",
@@ -142,41 +124,8 @@ def image_dhash(df: DataFrame, id_col: str = "id",
                 type_col: str = "media_type") -> DataFrame:
     """mapInPandas: (id, payload, type) → 64-bit perceptual hash via
     the real decoders; corrupt/unsupported rows become status rows."""
-    from tika_spark.analysis.jpegcodec import decode_jpeg
-    from tika_spark.analysis.pixels import (decode_bmp, decode_gif,
-                                            decode_ico, decode_png,
-                                            decode_tiff)
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(
-        df.select(id_col, payload_col, type_col), id_col)
-    from tika_spark.analysis.webp import decode_webp
-    decoders = {"image/png": decode_png, "image/gif": decode_gif,
-                "image/bmp": decode_bmp, "image/x-ms-bmp": decode_bmp,
-                "image/jpeg": decode_jpeg, "image/tiff": decode_tiff,
-                "image/webp": decode_webp,
-                "image/x-icon": decode_ico}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                row = {"id": i, "dhash": 0, "width": 0, "height": 0,
-                       "status": "unsupported"}
-                dec = decoders.get(mt or "")
-                if dec is not None:
-                    try:
-                        arr = dec(bytes(payload or b""))
-                        row.update(dhash=dhash_bits(arr),
-                                   width=arr.shape[1],
-                                   height=arr.shape[0], status="ok")
-                    except Exception:
-                        row["status"] = "error"
-                rows.append(row)
-            yield pd.DataFrame(rows, columns=["id", "dhash", "width",
-                                              "height", "status"])
-
-    return slim.mapInPandas(run, schema=DHASH_SCHEMA)
+    return _image_hash(df, DHASH_SCHEMA, dhash_bits, id_col,
+                       payload_col, type_col)
 
 
 def dhash_pairs(hashes: DataFrame, max_dist: int = 7,

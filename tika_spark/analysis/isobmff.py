@@ -17,8 +17,8 @@ Video tracks decode for REAL when they are H.264/AVC (``avc1``):
 :func:`mp4_h264_frames` resolves the avcC record + length-prefixed
 samples and runs the from-scratch intra+P decoder
 (:mod:`tika_spark.analysis.h264` / ``h264inter``); other video
-fourccs surface codec + sample layout only, with pixel decode the
-documented hook in multimodal.real_decode.
+fourccs surface codec + sample layout only and raise on pixel
+decode.
 
 Reference parity: the reference's MP4 handling is metadata-only
 (mp4/MP4Parser.java via a vendored ISO-BMFF library); sample-level

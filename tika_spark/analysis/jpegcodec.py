@@ -282,6 +282,8 @@ def decode_jpeg(data: bytes, fancy_chroma: bool = False) -> np.ndarray:
                 (huff_dc if cls == 0 else huff_ac)[tid] = _Huff(bits, vals)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2
+            if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+                raise ValueError("short SOF")
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
             if prec != 8:
                 raise ValueError("only 8-bit precision supported")
@@ -297,14 +299,16 @@ def decode_jpeg(data: bytes, fancy_chroma: bool = False) -> np.ndarray:
             raise ValueError("only baseline sequential and "
                              "progressive JPEG supported")
         elif marker == 0xDD:  # DRI
+            if len(seg) < 2:
+                raise ValueError("short DRI")
             (restart,) = struct.unpack_from(">H", seg, 0)
         elif marker == 0xDA:  # SOS
             if frame is None:
                 raise ValueError("SOS before SOF")
+            if not seg or len(seg) < 4 + 2 * seg[0]:
+                raise ValueError("short SOS header")
             ns = seg[0]
             scan = []
-            if len(seg) < 4 + 2 * ns:
-                raise ValueError("short SOS header")
             for c in range(ns):
                 cs, tt = seg[1 + 2 * c], seg[2 + 2 * c]
                 comp = next((x for x in frame["comps"]

@@ -1,51 +1,31 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Media metadata for the multimodal column: binary payloads plus
+typed metadata.
 
-Images/audio/video ride the same pages table as HTML does — an opaque
-``binary`` column plus typed metadata columns — and are processed by
-``mapInPandas`` stages exactly like the extraction job (one Arrow pass,
-binary never re-shuffled, errors become status rows).
+Images, audio and video ride the same pages table as HTML does -- an
+opaque ``binary`` column plus typed metadata columns.
+:func:`decode_media` turns each payload into one (n_bytes, width,
+height, duration_ms, status) row on the shared media decode stage
+(:func:`tika_spark.analysis.spread.decode_stage`: one Arrow pass,
+binary never re-shuffled, a corrupt payload becomes an 'error' row):
 
-Decode tiers:
+1. **Header parse.** Image dimensions come from the from-scratch
+   header readers of the media parser (:mod:`tika_spark.media`:
+   PNG/GIF/BMP/JPEG/TIFF/PSD/WebP/ICO/...); MP3 duration is
+   estimated from the first MPEG frame header's bitrate.
+2. **Deterministic fake.** Payloads whose type has no header reader
+   (e.g. the synthetic ``image/fake``) get metadata derived from the
+   payload length, so tests and oracles can pin values.
 
-1. **Header parse (real).** Image dimensions come from the same
-   from-scratch header readers the media parser uses
-   (tika_spark.media: PNG/GIF/BMP/JPEG/TIFF/PSD/WebP/ICO); MP3
-   duration is estimated from the first MPEG frame header's bitrate.
-   No codec library needed — this tier runs everywhere.
-2. **Full decode.** Images decode for REAL — PNG / GIF (incl.
-   animated compositing) / BMP / TIFF / ICO in
-   :mod:`tika_spark.analysis.pixels` and baseline JPEG in
-   :mod:`tika_spark.analysis.jpegcodec`; audio as WAV PCM + G.711
-   μ-law/A-law in :mod:`tika_spark.analysis.pcm` and FLAC
-   (STREAMINFO-MD5 self-verified) in
-   :mod:`tika_spark.analysis.flac`, MP3 in
-   :mod:`tika_spark.analysis.mp3codec` and ADTS AAC-LC in
-   :mod:`tika_spark.analysis.aaccodec`; video frames via MJPEG-AVI
-   demux and animated-GIF/APNG sampling in
-   :mod:`tika_spark.analysis.video`, with real inter-frame paths
-   (MS-RLE8, MS Video 1) and full motion-compensated MPEG-1 I/P/B
-   decode with display reordering and ISO 11172-1 program-stream
-   demux in :mod:`tika_spark.analysis.mpegvideo`, and H.264/AVC
-   intra (I-slice CAVLC) in :mod:`tika_spark.analysis.h264` plus
-   motion-compensated P slices in
-   :mod:`tika_spark.analysis.h264inter` (P and B slices), across
-   its three containers (MP4 avc1, MPEG-TS stream_type 0x1B, FLV
-   codec 7) — all pure Python+numpy, with exact micro-unit stats
-   and deterministic resize on top. Codecs with no decoder here
-   (Opus audio, CABAC H.264, H.265) go through ``real_decode``, the
-   clearly-marked hook that raises NotImplementedError until a
-   codec lands.
-3. **Deterministic fake.** Payloads whose type has no header reader
-   (e.g. the synthetic ``image/fake``) fall back to metadata derived
-   from payload length, so tests/oracles can pin values.
+Full decodes live with the operators that need pixels or samples:
+the image table :func:`tika_spark.analysis.pixels.image_decoders`,
+the audio table :func:`tika_spark.analysis.pcm.audio_decoders` and
+the video demuxer behind :func:`tika_spark.analysis.video.frame_rows`.
 """
 
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 MEDIA_META_SCHEMA = ("id long, media_type string, n_bytes long, "
@@ -55,95 +35,6 @@ MEDIA_META_SCHEMA = ("id long, media_type string, n_bytes long, "
 # MPEG1 Layer III bitrate table (kbps), index 1-14 (header bits 12-15)
 _MP3_BITRATES = (0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192,
                  224, 256, 320)
-
-
-def real_decode(payload: bytes, media_type: str):
-    """Full pixel/PCM decode. PNG is handled by the from-scratch
-    decoder (tika_spark.analysis.pixels — zlib + numpy unfiltering);
-    everything else is the integration point for a codec library
-    (PIL.Image.open / soundfile / pyav) not present in this
-    container."""
-    if media_type == "image/png":
-        from tika_spark.analysis.pixels import decode_png
-        return decode_png(payload)
-    if media_type == "image/gif":
-        from tika_spark.analysis.pixels import decode_gif
-        return decode_gif(payload)
-    if media_type in ("image/bmp", "image/x-ms-bmp"):
-        from tika_spark.analysis.pixels import decode_bmp
-        return decode_bmp(payload)
-    if media_type in ("image/jpeg", "image/jpg"):
-        from tika_spark.analysis.jpegcodec import decode_jpeg
-        return decode_jpeg(payload)
-    if media_type == "image/tiff":
-        from tika_spark.analysis.pixels import decode_tiff
-        return decode_tiff(payload)
-    if media_type == "image/webp":
-        from tika_spark.analysis.webp import decode_webp
-        return decode_webp(payload)
-    if media_type in ("image/x-icon", "image/vnd.microsoft.icon"):
-        from tika_spark.analysis.pixels import decode_ico
-        return decode_ico(payload)
-    if media_type in ("audio/wav", "audio/x-wav", "audio/vnd.wave"):
-        from tika_spark.analysis.pcm import decode_wav
-        return decode_wav(payload)
-    if media_type in ("audio/flac", "audio/x-flac"):
-        from tika_spark.analysis.flac import decode_flac
-        return decode_flac(payload)
-    if media_type == "audio/basic":
-        from tika_spark.analysis.pcm import decode_au
-        return decode_au(payload)
-    if media_type == "audio/x-aiff":
-        from tika_spark.analysis.pcm import decode_aiff
-        return decode_aiff(payload)
-    if media_type in ("audio/mpeg", "audio/mp3"):
-        from tika_spark.analysis.mp2codec import decode_mpeg_audio
-        return decode_mpeg_audio(payload)    # layer sniff: II or III
-    if media_type in ("audio/x-aac", "audio/aac"):
-        from tika_spark.analysis.aaccodec import decode_aac
-        return decode_aac(payload)
-    if media_type in ("audio/mp4", "audio/x-m4a"):
-        from tika_spark.analysis.isobmff import decode_mp4_audio
-        return decode_mp4_audio(payload)
-    if media_type == "video/x-flv":
-        from tika_spark.analysis.flvdemux import decode_flv_audio
-        return decode_flv_audio(payload)
-    if media_type in ("audio/ogg", "application/ogg"):
-        from tika_spark.analysis.oggdemux import decode_ogg_audio
-        return decode_ogg_audio(payload)
-    if media_type in ("video/webm", "video/x-matroska"):
-        from tika_spark.analysis.ebml import decode_mkv_vorbis
-        return decode_mkv_vorbis(payload)
-    if media_type == "video/mpeg" \
-            and payload[:4] == b"\x00\x00\x01\xb3":
-        from tika_spark.analysis.mpegvideo import decode_mpeg1
-        return decode_mpeg1(payload)
-    if media_type == "video/mpeg" \
-            and payload[:4] == b"\x00\x00\x01\xba":
-        from tika_spark.analysis.mpegvideo import (decode_mpeg1,
-                                                   ps_video_es)
-        return decode_mpeg1(ps_video_es(payload))
-    if media_type == "video/mp2t":
-        from tika_spark.analysis.mpegts import ts_video
-        from tika_spark.analysis.mpegvideo import decode_mpeg1
-        stype, es = ts_video(payload)
-        if stype == 0x1B:
-            from tika_spark.analysis.h264 import decode_h264_annexb
-            return decode_h264_annexb(es)
-        return decode_mpeg1(es)
-    if media_type == "video/mp4":
-        from tika_spark.analysis.isobmff import mp4_h264_frames
-        return mp4_h264_frames(payload)
-    raise NotImplementedError(
-        "codec libraries for the remaining compressed media "
-        "(Opus audio, AV1/HEVC video, CABAC H.264) are not installed "
-        "in this environment, and their entropy/probability tables "
-        "are spec data with no in-container source to extract — a "
-        "from-memory transcription would silently MIS-decode real "
-        "streams instead of raising here (see BENCH/CONFORMANCE.md "
-        "'H.264 CABAC' for the full rationale). The census tiers "
-        "(oggdemux.opus_packet_stats, video.mp4_slice_census, "
-        "av1.obu stats) cover these formats structurally.")
 
 
 def _mp3_duration_ms(payload: bytes) -> int:
@@ -209,28 +100,19 @@ def decode_payload(payload: bytes, media_type: str) -> dict:
 def decode_media(df: DataFrame, id_col: str = "id",
                  payload_col: str = "payload",
                  type_col: str = "media_type") -> DataFrame:
-    """mapInPandas media-metadata stage.
+    """mapInPandas media-metadata stage: (id, payload, type) -> (id,
+    type, n_bytes, width, height, duration_ms, status) per payload.
 
     Same scale contract as the extraction job: the binary column enters
     Python once per batch and is absent from the output schema; a
     corrupt payload yields a status='error' row, never a task failure.
     """
-    cols = [id_col, payload_col, type_col]
-    slim = df.select(*cols)  # prune before the Python stage
+    from tika_spark.analysis.spread import decode_stage
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                try:
-                    meta = decode_payload(bytes(payload or b""), mt or "")
-                    rows.append({"id": i, "media_type": mt,
-                                 **meta, "status": "ok"})
-                except Exception:
-                    rows.append({"id": i, "media_type": mt, "n_bytes": 0,
-                                 "width": 0, "height": 0,
-                                 "duration_ms": 0, "status": "error"})
-            yield pd.DataFrame(rows)
+    def meta(payload: bytes, media_type: str | None):
+        m = decode_payload(payload, media_type or "")
+        return [(m["n_bytes"], m["width"], m["height"],
+                 m["duration_ms"], "ok")]
 
-    return slim.mapInPandas(run, schema=MEDIA_META_SCHEMA)
+    return decode_stage(df, MEDIA_META_SCHEMA, meta, (0, 0, 0, 0, "error"),
+                        id_col, payload_col, type_col, echo_type=True)

@@ -16,10 +16,12 @@ Decode tiers on top of the demux:
   a native STREAMINFO block, and the audio packets are native FLAC
   frames, so reassembling ``fLaC`` + STREAMINFO + frames feeds the
   existing self-verifying decoder (:mod:`tika_spark.analysis.flac`).
-* **Vorbis and Opus surface their identification + comment headers**
-  (rate/channels/vendor/tags) for the metadata tier; their transform
-  decode needs codec work outside the shipped set and remains the
-  documented hook in multimodal.real_decode.
+* **Vorbis decodes fully** through the from-scratch Vorbis I decoder
+  (:mod:`tika_spark.analysis.vorbis`).
+* **Opus surfaces its identification + comment headers**
+  (rate/channels/vendor/tags) for the metadata tier and per-packet
+  stats (:func:`opus_packet_stats`); it has no transform decoder, so
+  :func:`decode_ogg_audio` raises on it.
 
 Reference parity: the reference detects and tags Ogg types
 (``tika-parsers`` delegates to an external Vorbis library for

@@ -1,35 +1,34 @@
-"""Real PCM decode for the multimodal audio tier: WAV, pure numpy.
+"""Real PCM decode for the multimodal audio tier, pure numpy: WAV
+PCM, the G.711 companded telephony formats (mu-law format 7, A-law
+format 6, through the classic 256-entry expansion tables), Sun AU and
+AIFF.
 
-RIFF/WAVE PCM needs no codec library — the container is a chunk list
-and the samples are raw little-endian integers — so, like PNG in
-:mod:`tika_spark.analysis.pixels`, the ``real_decode`` hook can be a
-working decoder instead of a stub for the most common uncompressed
-audio format. The G.711 companded telephony formats (μ-law format 7,
-A-law format 6) also decode for real through the classic 256-entry
-expansion tables. MP3 decodes for real through the from-scratch
-Layer III decoder (:mod:`tika_spark.analysis.mp3codec`), and ADTS
-AAC-LC through :mod:`tika_spark.analysis.aaccodec`, Vorbis through
-:mod:`tika_spark.analysis.vorbis`, and FLAC-in-Ogg through the Ogg
-packet layer; the remaining perceptual codec (Opus) stays behind
-the NotImplementedError hook.
+The compressed codecs decode in their own modules -- FLAC
+(:mod:`tika_spark.analysis.flac`), MPEG audio layers I-III
+(:mod:`tika_spark.analysis.mp2codec`), ADTS AAC-LC
+(:mod:`tika_spark.analysis.aaccodec`), Vorbis and FLAC-in-Ogg
+(:mod:`tika_spark.analysis.oggdemux`), and the M4A, FLV and WebM
+containers -- and :func:`audio_decoders` is the one media type ->
+decoder table over all of them.  Opus has no decoder: an Ogg Opus
+payload raises, which the operators turn into an 'error' row.
 
 Stats are exact micro-units over the normalized [-1, 1) signal:
 integer sums of squares are order-independent, so the distributed
 outputs are hash-checkable cross-engine.
 
-Scale contract: identical to the image operator — per-row CPU work,
+Scale contract: identical to the image operator -- both run on
+:func:`tika_spark.analysis.spread.decode_stage`: per-row CPU work,
 no shuffle, binary enters Python once per Arrow batch, corrupt
 payloads become status rows.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 PCM_STATS_SCHEMA = ("id long, n_channels int, sample_rate int, "
@@ -253,80 +252,66 @@ def wav_bytes_g711(codes: np.ndarray, rate: int,
     return b"RIFF" + struct.pack("<I", len(payload) + 4) + payload
 
 
-def audio_pcm_stats(df: DataFrame, id_col: str = "id",
-                    payload_col: str = "payload",
-                    type_col: str = "media_type") -> DataFrame:
-    """mapInPandas full-decode stage for audio: WAV PCM decodes for
-    real; other media types / corrupt payloads yield status rows."""
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(
-        df.select(id_col, payload_col, type_col), id_col)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                row = {"id": i, "n_channels": 0, "sample_rate": 0,
-                       "n_samples": 0, "duration_ms": 0,
-                       "rms_micro": 0, "peak_micro": 0,
-                       "status": "unsupported"}
-                mt = mt or ""
-                if mt in AUDIO_TYPES:
-                    try:
-                        arr, rate = decode_audio(
-                            bytes(payload or b""), mt)
-                        row.update(n_channels=arr.shape[1],
-                                   sample_rate=rate,
-                                   **pcm_stats(arr, rate),
-                                   status="ok")
-                    except Exception:
-                        row["status"] = "error"
-                rows.append(row)
-            yield pd.DataFrame(rows)
-
-    return slim.mapInPandas(run, schema=PCM_STATS_SCHEMA)
-
-
-AUDIO_TYPES = frozenset({
-    "audio/wav", "audio/x-wav", "audio/vnd.wave", "audio/flac",
-    "audio/x-flac", "audio/basic", "audio/x-aiff", "audio/mpeg",
-    "audio/mp3", "audio/x-aac", "audio/aac", "audio/mp4",
-    "audio/x-m4a", "video/x-flv", "audio/ogg", "application/ogg",
-    "video/webm", "video/x-matroska"})
+@functools.cache
+def audio_decoders() -> dict:
+    """The one media type -> decoder table of the audio operators (PCM
+    stats, features, fingerprints); each decoder returns
+    ``(int16 [n, ch], rate)``.  Built on first use, so importing this
+    module does not import every codec."""
+    from tika_spark.analysis.aaccodec import decode_aac
+    from tika_spark.analysis.ebml import decode_mkv_vorbis
+    from tika_spark.analysis.flac import decode_flac
+    from tika_spark.analysis.flvdemux import decode_flv_audio
+    from tika_spark.analysis.isobmff import decode_mp4_audio
+    from tika_spark.analysis.mp2codec import decode_mpeg_audio
+    from tika_spark.analysis.oggdemux import decode_ogg_audio
+    return {"audio/wav": decode_wav, "audio/x-wav": decode_wav,
+            "audio/vnd.wave": decode_wav,
+            "audio/flac": decode_flac, "audio/x-flac": decode_flac,
+            "audio/basic": decode_au, "audio/x-aiff": decode_aiff,
+            # layer sniff: MPEG audio layer I, II or III
+            "audio/mpeg": decode_mpeg_audio,
+            "audio/mp3": decode_mpeg_audio,
+            "audio/x-aac": decode_aac, "audio/aac": decode_aac,
+            "audio/mp4": decode_mp4_audio, "audio/x-m4a": decode_mp4_audio,
+            "video/x-flv": decode_flv_audio,
+            # FLAC-in-Ogg and Vorbis decode; Opus raises (a status row)
+            "audio/ogg": decode_ogg_audio,
+            "application/ogg": decode_ogg_audio,
+            "video/webm": decode_mkv_vorbis,
+            "video/x-matroska": decode_mkv_vorbis}
 
 
 def decode_audio(payload: bytes, media_type: str
                  ) -> tuple[np.ndarray, int]:
-    """Route a payload to its decoder: (int16 [n, ch], rate)."""
-    if media_type in ("audio/mpeg", "audio/mp3"):
-        from tika_spark.analysis.mp2codec import decode_mpeg_audio
-        return decode_mpeg_audio(payload)    # layer sniff: II or III
-    if media_type in ("audio/x-aac", "audio/aac"):
-        from tika_spark.analysis.aaccodec import decode_aac
-        return decode_aac(payload)
-    if media_type in ("audio/mp4", "audio/x-m4a"):
-        from tika_spark.analysis.isobmff import decode_mp4_audio
-        return decode_mp4_audio(payload)
-    if media_type == "video/x-flv":
-        from tika_spark.analysis.flvdemux import decode_flv_audio
-        return decode_flv_audio(payload)
-    if media_type in ("audio/ogg", "application/ogg"):
-        # FLAC-in-Ogg and Vorbis decode fully; Opus raises (status
-        # row)
-        from tika_spark.analysis.oggdemux import decode_ogg_audio
-        return decode_ogg_audio(payload)
-    if media_type in ("video/webm", "video/x-matroska"):
-        from tika_spark.analysis.ebml import decode_mkv_vorbis
-        return decode_mkv_vorbis(payload)
-    if media_type.endswith("flac"):
-        from tika_spark.analysis.flac import decode_flac
-        return decode_flac(payload)
-    if media_type == "audio/basic":
-        return decode_au(payload)
-    if media_type == "audio/x-aiff":
-        return decode_aiff(payload)
-    return decode_wav(payload)
+    """Decode through :func:`audio_decoders`: (int16 [n, ch], rate);
+    ValueError for a type the table lacks."""
+    decode = audio_decoders().get(media_type)
+    if decode is None:
+        raise ValueError(f"no audio decoder for {media_type!r}")
+    return decode(payload)
+
+
+def audio_pcm_stats(df: DataFrame, id_col: str = "id",
+                    payload_col: str = "payload",
+                    type_col: str = "media_type") -> DataFrame:
+    """(id, payload, type) -> channels, rate and exact PCM stats per
+    clip through :func:`audio_decoders`; other types are
+    'unsupported' rows and corrupt payloads 'error' rows."""
+    from tika_spark.analysis.spread import decode_stage
+
+    def stats(payload: bytes, media_type: str | None):
+        decode = audio_decoders().get(media_type)
+        if decode is None:
+            return [(0, 0, 0, 0, 0, 0, "unsupported")]
+        arr, rate = decode(payload)
+        s = pcm_stats(arr, rate)
+        return [(arr.shape[1], rate, s["n_samples"], s["duration_ms"],
+                 s["rms_micro"], s["peak_micro"], "ok")]
+
+    return decode_stage(df, PCM_STATS_SCHEMA, stats,
+                        (0, 0, 0, 0, 0, 0, "error"), id_col, payload_col,
+                        type_col)
 
 
 FEATURES_SCHEMA = ("id long, n_samples long, zero_crossings long, "
@@ -359,39 +344,22 @@ def audio_features(df: DataFrame, id_col: str = "id",
     Same scale contract as :func:`audio_pcm_stats`: per-row work in
     mapInPandas, no shuffle, corrupt payloads become status rows.
     """
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(
-        df.select(id_col, payload_col, type_col), id_col)
+    from tika_spark.analysis.spread import decode_stage
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                row = {"id": i, "n_samples": 0, "zero_crossings": 0,
-                       "peak_bin": 0, "peak_hz": 0, "sum_amp": 0,
-                       "status": "unsupported"}
-                mt = mt or ""
-                if mt in AUDIO_TYPES:
-                    try:
-                        arr, rate = decode_audio(
-                            bytes(payload or b""), mt)
-                        x = arr[:, 0].astype(np.int64)
-                        s = np.sign(x)
-                        nz = s[s != 0]
-                        zc = int((nz[:-1] * nz[1:] < 0).sum()) \
-                            if len(nz) > 1 else 0
-                        head = x[:max_fft].astype(np.float64)
-                        pk = (int(np.argmax(np.abs(
-                            np.fft.rfft(head)))) if len(head) else 0)
-                        row.update(
-                            n_samples=int(arr.shape[0]),
-                            zero_crossings=zc, peak_bin=pk,
-                            peak_hz=pk * rate // max(len(head), 1),
-                            sum_amp=int(x.sum()), status="ok")
-                    except Exception:
-                        row["status"] = "error"
-                rows.append(row)
-            yield pd.DataFrame(rows)
+    def features(payload: bytes, media_type: str | None):
+        decode = audio_decoders().get(media_type)
+        if decode is None:
+            return [(0, 0, 0, 0, 0, "unsupported")]
+        arr, rate = decode(payload)
+        x = arr[:, 0].astype(np.int64)
+        s = np.sign(x)
+        nz = s[s != 0]
+        zc = int((nz[:-1] * nz[1:] < 0).sum()) if len(nz) > 1 else 0
+        head = x[:max_fft].astype(np.float64)
+        pk = int(np.argmax(np.abs(np.fft.rfft(head)))) if len(head) else 0
+        return [(int(arr.shape[0]), zc, pk,
+                 pk * rate // max(len(head), 1), int(x.sum()), "ok")]
 
-    return slim.mapInPandas(run, schema=FEATURES_SCHEMA)
+    return decode_stage(df, FEATURES_SCHEMA, features,
+                        (0, 0, 0, 0, 0, "error"), id_col, payload_col,
+                        type_col)

@@ -1,29 +1,28 @@
-"""Real pixel decode for the multimodal tier: PNG + GIF, pure numpy.
+"""Real pixel decode for the multimodal tier, pure numpy: PNG (and
+APNG frames), GIF (and animation compositing), BMP, TIFF, PNM and ICO.
 
-Upgrades the multimodal ``real_decode`` integration point from a stub
-to working decoders for the web's common lossless formats (no codec
-library needed):
-
-- **PNG** (RFC 2083 — DEFLATE + per-row prediction filters): 8-bit
+- **PNG** (RFC 2083 -- DEFLATE + per-row prediction filters): 8-bit
   grayscale / gray+alpha / RGB / RGBA / palette, all five row
   filters, non-interlaced.
 - **GIF** (87a/89a): from-scratch GIF-variant LZW (LSB-first
   packing, CLEAR/EOI, 12-bit cap), global/local color tables,
   interlaced row reordering.
 
-JPEG entropy decode and video remain behind the clearly-marked
-NotImplementedError hook in :mod:`tika_spark.analysis.multimodal`;
-WAV PCM decodes for real in :mod:`tika_spark.analysis.pcm`.
+Baseline/progressive JPEG decodes in
+:mod:`tika_spark.analysis.jpegcodec` and WebP in
+:mod:`tika_spark.analysis.webp`; :func:`image_decoders` is the one
+media type -> decoder table over all of them.
 
-On top of the decoder sit the training-pipeline image ops:
+On top of the decoders sit the training-pipeline image ops:
 per-channel statistics in exact micro-units (integer pixel sums are
 order-independent, so the distributed outputs are hash-checkable) and
-deterministic block-average / nearest-neighbor resize. The Spark
-operator follows the extraction job's contract: binary column enters
-Python once per Arrow batch, never returns, corrupt payloads become
-status rows.
+deterministic block-average / nearest-neighbor resize.
+:func:`image_pixel_stats` runs on the shared media decode stage
+(:func:`tika_spark.analysis.spread.decode_stage`): the binary column
+enters Python once per Arrow batch, never returns, and corrupt
+payloads become status rows.
 
-Scale: decode is per-row CPU work with no shuffle — the operator is
+Scale: decode is per-row CPU work with no shuffle -- the operator is
 embarrassingly parallel and the output is a few numbers per image, so
 a 100 TB image corpus is bounded by scan + decode CPU, exactly like
 the text-extraction map.
@@ -31,12 +30,11 @@ the text-extraction map.
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 _SIG = b"\x89PNG\r\n\x1a\n"
@@ -1185,53 +1183,43 @@ def resize_image(arr: np.ndarray, th: int, tw: int) -> np.ndarray:
     return arr[ys][:, xs]
 
 
+@functools.cache
+def image_decoders() -> dict:
+    """The one media type -> decoder table of the image operators
+    (pixel stats, pHash, dHash); each decoder returns a uint8 (h, w, c)
+    array.  Built on first use: jpegcodec and webp import this
+    module."""
+    from tika_spark.analysis.jpegcodec import decode_jpeg
+    from tika_spark.analysis.webp import decode_webp
+    return {"image/png": decode_png, "image/gif": decode_gif,
+            "image/bmp": decode_bmp, "image/x-ms-bmp": decode_bmp,
+            "image/jpeg": decode_jpeg, "image/tiff": decode_tiff,
+            "image/webp": decode_webp, "image/x-icon": decode_ico,
+            "image/vnd.microsoft.icon": decode_ico,
+            "image/x-portable-bitmap": decode_pnm,
+            "image/x-portable-graymap": decode_pnm,
+            "image/x-portable-pixmap": decode_pnm,
+            "image/x-portable-anymap": decode_pnm}
+
+
 def image_pixel_stats(df: DataFrame, id_col: str = "id",
                       payload_col: str = "payload",
                       type_col: str = "media_type") -> DataFrame:
-    """mapInPandas full-decode stage: (id, payload, type) →
-    per-image dimensions and exact per-channel micro-unit means.
-    PNG decodes for real; other media types and corrupt payloads
-    yield status rows ('unsupported' / 'error'), never task failures
-    — the H1 fault-isolation contract."""
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(
-        df.select(id_col, payload_col, type_col), id_col)
+    """(id, payload, type) -> per-image dimensions and exact
+    per-channel micro-unit means, through :func:`image_decoders`;
+    other types are 'unsupported' rows and corrupt payloads 'error'
+    rows (the H1 fault-isolation contract of
+    :func:`~tika_spark.analysis.spread.decode_stage`)."""
+    from tika_spark.analysis.spread import decode_stage
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload, mt in zip(pdf[id_col], pdf[payload_col],
-                                      pdf[type_col]):
-                row = {"id": i, "width": 0, "height": 0,
-                       "n_channels": 0, "mean_micro": [],
-                       "status": "unsupported"}
-                from tika_spark.analysis.jpegcodec import decode_jpeg
-                from tika_spark.analysis.webp import decode_webp
-                decoder = {"image/png": decode_png,
-                           "image/gif": decode_gif,
-                           "image/bmp": decode_bmp,
-                           "image/x-ms-bmp": decode_bmp,
-                           "image/jpeg": decode_jpeg,
-                           "image/tiff": decode_tiff,
-                           "image/webp": decode_webp,
-                           "image/x-icon": decode_ico,
-                           "image/vnd.microsoft.icon": decode_ico,
-                           "image/x-portable-bitmap": decode_pnm,
-                           "image/x-portable-graymap": decode_pnm,
-                           "image/x-portable-pixmap": decode_pnm,
-                           "image/x-portable-anymap": decode_pnm,
-                           }.get(mt or "")
-                if decoder is not None:
-                    try:
-                        arr = decoder(bytes(payload or b""))
-                        row.update(width=arr.shape[1],
-                                   height=arr.shape[0],
-                                   n_channels=arr.shape[2],
-                                   mean_micro=channel_means_micro(arr),
-                                   status="ok")
-                    except Exception:
-                        row["status"] = "error"
-                rows.append(row)
-            yield pd.DataFrame(rows)
+    def stats(payload: bytes, media_type: str | None):
+        decode = image_decoders().get(media_type)
+        if decode is None:
+            return [(0, 0, 0, [], "unsupported")]
+        arr = decode(payload)
+        return [(arr.shape[1], arr.shape[0], arr.shape[2],
+                 channel_means_micro(arr), "ok")]
 
-    return slim.mapInPandas(run, schema=PIXEL_STATS_SCHEMA)
+    return decode_stage(df, PIXEL_STATS_SCHEMA, stats,
+                        (0, 0, 0, [], "error"), id_col, payload_col,
+                        type_col)

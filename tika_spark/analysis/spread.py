@@ -17,12 +17,19 @@ count, a cached relation's plan -- and never runs a Spark job (not even
 under AQE, where materializing ``df.rdd`` runs every upstream shuffle).
 :func:`spread_width` turns that into the decision: spread to
 ``defaultParallelism`` partitions, or keep the input's own splits.
+
+:func:`decode_stage` is the one ``mapInPandas`` stage the media
+operators (pixel/hash/PCM/feature/fingerprint/frame/census/metadata)
+run on: width guard, Arrow batch loop, and the rule that a document
+whose decode raises becomes one status row (or none), never a task
+failure.  Each operator supplies only its per-document function.
 """
 
 from __future__ import annotations
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def _plan_width(node) -> int:
@@ -69,3 +76,36 @@ def spread_for_decode(df: DataFrame, *key_cols: str) -> DataFrame:
     if not n:
         return df
     return df.repartition(n, *key_cols) if key_cols else df.repartition(n)
+
+
+def decode_stage(df: DataFrame, schema: str, decode, error: tuple | None,
+                 id_col: str, payload_col: str, type_col: str | None = None,
+                 echo_type: bool = False) -> DataFrame:
+    """``mapInPandas`` over ``(id, payload[, media_type])`` behind the
+    width guard.  ``decode(payload[, media_type])`` returns the list
+    of output rows of one document (a null payload arrives as
+    ``b""``), each a tuple of the ``schema`` columns after ``id`` --
+    after ``id, media_type`` when ``echo_type`` copies the input's
+    type into the second column.  A document whose decode raises
+    yields the one row ``error`` (same shape) instead, or no row when
+    ``error`` is None."""
+    cols = [id_col, payload_col] + ([type_col] if type_col else [])
+    slim = spread_for_decode(df.select(*cols), id_col)
+    out_schema = StructType.fromDDL(schema)
+    names = out_schema.fieldNames()
+    failed = () if error is None else (error,)
+
+    def run(batches):
+        import pandas as pd
+        for pdf in batches:
+            rows = []
+            for i, payload, *mt in zip(*(pdf[c] for c in cols)):
+                key = (i, *mt) if echo_type else (i,)
+                try:
+                    out = decode(bytes(payload or b""), *mt)
+                except Exception:
+                    out = failed
+                rows.extend(key + r for r in out)
+            yield pd.DataFrame(rows, columns=names)
+
+    return slim.mapInPandas(run, schema=out_schema)

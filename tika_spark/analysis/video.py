@@ -17,10 +17,16 @@ whose multi-block skip codes do the same over 4×4 vector-quantized
 blocks — frames compose across the chain exactly like the GIF
 disposal rules. MPEG-1 gets the full motion-compensated transform
 treatment (I/P/B pictures, display reordering, program-stream
-demux) in :mod:`tika_spark.analysis.mpegvideo`; H.264/AVC intra
-decodes for real via :mod:`tika_spark.analysis.h264` (MP4 avc1,
-MPEG-TS 0x1B, FLV); inter-coded/CABAC H.26x remains the documented
-``NotImplementedError`` hook in multimodal.real_decode.
+demux) in :mod:`tika_spark.analysis.mpegvideo`; H.264/AVC CAVLC
+I/P/B slices decode for real via :mod:`tika_spark.analysis.h264` and
+:mod:`tika_spark.analysis.h264inter` (MP4 avc1, MPEG-TS 0x1B, FLV,
+Matroska), and VP8 via :mod:`tika_spark.analysis.vp8inter`. A stream
+no decoder here reads (CABAC H.264, H.265) raises, which the
+operators turn into a status row.
+
+:func:`frame_rows` is the one per-frame walk of the frame operators
+(:func:`sample_frame_stats` here, ``videohash.video_dhash``); both run
+on :func:`tika_spark.analysis.spread.decode_stage`.
 
 Scale design: frame sampling is per-row work (no shuffle); the
 binary column crosses into Python once; sampled-frame stats rows are
@@ -33,10 +39,8 @@ duration) — frame decode is the pipeline extension, not a port.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 VIDEO_FRAME_SCHEMA = ("id long, frame_idx int, n_frames int, "
@@ -477,54 +481,45 @@ def _demux(payload: bytes):
     raise ValueError("not a supported video container")
 
 
+def frame_rows(payload: bytes, every: int, values, blank: tuple
+               ) -> list[tuple]:
+    """The per-frame walk of the frame operators: demux ``payload``,
+    then one ``(frame_idx, n_frames, *values(rgb), 'ok')`` row per
+    sampled frame (indices 0, every, 2*every, ...), or
+    ``(frame_idx, n_frames, *blank, 'error')`` when that frame does
+    not decode.  A container that does not demux raises."""
+    from tika_spark.analysis.jpegcodec import decode_jpeg
+    kind, frames = _demux(payload)
+    n = len(frames)
+    rows = []
+    for idx in range(0, n, max(every, 1)):
+        try:
+            arr = decode_jpeg(frames[idx]) if kind == "jpeg" \
+                else frames[idx]
+            rows.append((idx, n, *values(arr), "ok"))
+        except Exception:
+            rows.append((idx, n, *blank, "error"))
+    return rows
+
+
 def sample_frame_stats(df: DataFrame, every: int = 2,
                        id_col: str = "id",
                        payload_col: str = "payload") -> DataFrame:
-    """mapInPandas frame-sampling stage: (id, payload) → one row per
-    sampled frame (indices 0, every, 2*every, …) with decoded
-    dimensions and exact per-channel micro-unit means. Containers:
-    MJPEG AVI (frames decoded through the from-scratch baseline JPEG
-    decoder) and animated GIF (frames composited per the GIF89a
-    disposal rules). Corrupt containers or frames yield status rows,
-    never task failures."""
-    from tika_spark.analysis.jpegcodec import decode_jpeg
+    """(id, payload) -> one row per sampled frame (indices 0, every,
+    2*every, ...) with decoded dimensions and exact per-channel
+    micro-unit means, over every container :func:`_demux` reads.
+    Corrupt containers or frames yield status rows, never task
+    failures."""
     from tika_spark.analysis.pixels import channel_means_micro
-    from tika_spark.analysis.spread import spread_for_decode
+    from tika_spark.analysis.spread import decode_stage
 
-    slim = spread_for_decode(df.select(id_col, payload_col), id_col)
+    def stats(arr):
+        return arr.shape[1], arr.shape[0], channel_means_micro(arr)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    kind, frames = _demux(bytes(payload or b""))
-                except Exception:
-                    rows.append({"id": i, "frame_idx": -1,
-                                 "n_frames": 0, "width": 0,
-                                 "height": 0, "mean_micro": [],
-                                 "status": "error"})
-                    continue
-                n = len(frames)
-                for idx in range(0, n, max(every, 1)):
-                    row = {"id": i, "frame_idx": idx, "n_frames": n,
-                           "width": 0, "height": 0, "mean_micro": [],
-                           "status": "error"}
-                    try:
-                        arr = decode_jpeg(frames[idx]) \
-                            if kind == "jpeg" else frames[idx]
-                        row.update(width=arr.shape[1],
-                                   height=arr.shape[0],
-                                   mean_micro=channel_means_micro(arr),
-                                   status="ok")
-                    except Exception:
-                        pass
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=[
-                "id", "frame_idx", "n_frames", "width", "height",
-                "mean_micro", "status"])
-
-    return slim.mapInPandas(run, schema=VIDEO_FRAME_SCHEMA)
+    return decode_stage(
+        df, VIDEO_FRAME_SCHEMA,
+        lambda payload: frame_rows(payload, every, stats, (0, 0, [])),
+        (-1, 0, 0, 0, [], "error"), id_col, payload_col)
 
 
 SLICE_CENSUS_SCHEMA = ("id long, slice_idx int, slice_type string, "
@@ -534,41 +529,23 @@ SLICE_CENSUS_SCHEMA = ("id long, slice_idx int, slice_type string, "
 
 def mp4_slice_census(df: DataFrame, id_col: str = "id",
                      payload_col: str = "payload") -> DataFrame:
-    """mapInPandas H.264 frame-census stage: (id, payload) → one row
-    per slice NAL of the first avc1 track with slice type, frame_num,
-    POC lsb, IDR flag, entropy mode and NAL size. Entropy-mode
-    independent (slice headers are Exp-Golomb even in CABAC
-    Main/High-profile streams — the web MP4 majority the CAVLC pixel
-    decoder must refuse), so keyframe cadence / GOP structure / IBP
-    mix census works on every H.264 MP4. Unparsable payloads yield
-    zero rows (H1 fault isolation); no shuffle."""
+    """(id, payload) -> one row per slice NAL of the first avc1 track
+    with slice type, frame_num, POC lsb, IDR flag, entropy mode and
+    NAL size. Entropy-mode independent (slice headers are Exp-Golomb
+    even in CABAC Main/High-profile streams -- the web MP4 majority
+    the CAVLC pixel decoder must refuse), so keyframe cadence / GOP
+    structure / IBP mix census works on every H.264 MP4. Unparsable
+    payloads yield zero rows (H1 fault isolation); no shuffle."""
     from tika_spark.analysis.isobmff import mp4_h264_slice_census
-    from tika_spark.analysis.spread import spread_for_decode
+    from tika_spark.analysis.spread import decode_stage
 
-    slim = spread_for_decode(df.select(id_col, payload_col), id_col)
+    def census(payload: bytes):
+        return [(k, r["slice_type"], r["frame_num"], r["poc_lsb"],
+                 bool(r["idr"]), r["entropy"], r["nal_bytes"])
+                for k, r in enumerate(mp4_h264_slice_census(payload))]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    census = mp4_h264_slice_census(
-                        bytes(payload or b""))
-                except Exception:
-                    census = []
-                for k, r in enumerate(census):
-                    rows.append({"id": i, "slice_idx": k,
-                                 "slice_type": r["slice_type"],
-                                 "frame_num": r["frame_num"],
-                                 "poc_lsb": r["poc_lsb"],
-                                 "idr": bool(r["idr"]),
-                                 "entropy": r["entropy"],
-                                 "nal_bytes": r["nal_bytes"]})
-            yield pd.DataFrame(rows, columns=[
-                "id", "slice_idx", "slice_type", "frame_num",
-                "poc_lsb", "idr", "entropy", "nal_bytes"])
-
-    return slim.mapInPandas(run, schema=SLICE_CENSUS_SCHEMA)
+    return decode_stage(df, SLICE_CENSUS_SCHEMA, census, None, id_col,
+                        payload_col)
 
 
 def video_rle_fixture(doc_id: int) -> bytes:

@@ -28,10 +28,7 @@ this is a training-pipeline extension operator.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -42,42 +39,20 @@ VIDEO_DHASH_SCHEMA = ("id long, frame_idx int, n_frames int, "
 def video_dhash(df: DataFrame, every: int = 1, id_col: str = "id",
                 payload_col: str = "payload") -> DataFrame:
     """(id, payload) -> one row per sampled frame with its 64-bit
-    dHash; corrupt containers yield status rows, never task
-    failures."""
+    dHash (the per-frame walk of
+    :func:`tika_spark.analysis.video.frame_rows`); corrupt containers
+    yield status rows, never task failures."""
     from tika_spark.analysis.imagehash import dhash_bits
-    from tika_spark.analysis.video import _demux
+    from tika_spark.analysis.spread import decode_stage
+    from tika_spark.analysis.video import frame_rows
 
-    from tika_spark.analysis.spread import spread_for_decode
-    slim = spread_for_decode(df.select(id_col, payload_col), id_col)
+    def dhash(arr):
+        return (dhash_bits(arr),)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tika_spark.analysis.jpegcodec import decode_jpeg
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    kind, frames = _demux(bytes(payload or b""))
-                except Exception:
-                    rows.append({"id": i, "frame_idx": -1,
-                                 "n_frames": 0, "dhash": 0,
-                                 "status": "error"})
-                    continue
-                n = len(frames)
-                for idx in range(0, n, max(every, 1)):
-                    row = {"id": i, "frame_idx": idx, "n_frames": n,
-                           "dhash": 0, "status": "error"}
-                    try:
-                        arr = decode_jpeg(frames[idx]) \
-                            if kind == "jpeg" else frames[idx]
-                        row.update(dhash=dhash_bits(arr),
-                                   status="ok")
-                    except Exception:
-                        pass
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=[
-                "id", "frame_idx", "n_frames", "dhash", "status"])
-
-    return slim.mapInPandas(run, schema=VIDEO_DHASH_SCHEMA)
+    return decode_stage(
+        df, VIDEO_DHASH_SCHEMA,
+        lambda payload: frame_rows(payload, every, dhash, (0,)),
+        (-1, 0, 0, "error"), id_col, payload_col)
 
 
 def video_neardup_pairs(fingerprints: DataFrame, min_shared: int = 2,

@@ -9,6 +9,7 @@ the reference's fixture corpus (testPDF.pdf, testPDFTwoTextBoxes.pdf).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import zlib
 
@@ -68,6 +69,7 @@ def _std_crypt_material_r4() -> tuple[bytes, bytes, bytes]:
     return key, o_val, u_val + b"\x00" * 16
 
 
+@functools.cache
 def _std_crypt_material_r6() -> tuple[bytes, bytes, bytes, bytes]:
     """(file_key, U, UE, O48) for V5/R6 AES-256 with an empty user
     password (ISO 32000-2 Algorithm 8/9 shapes; deterministic salts

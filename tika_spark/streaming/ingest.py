@@ -13,15 +13,18 @@ Design:
   pages, so executor memory is insensitive to backlog size;
 - `foreachBatch` applies the identical ``extract()`` DataFrame job —
   one code path for batch and streaming (no semantic drift);
-- append-mode parquet/Iceberg sink partitioned like the batch runner;
+- one parquet hive partition per micro-batch (``batch_id=N``), written
+  in overwrite mode, so a replayed batch replaces its own rows;
 - no watermarks/stateful ops needed: extraction is per-row pure, so
-  the pipeline is trivially exactly-once under the checkpoint.
+  the checkpoint plus the idempotent batch write is exactly-once.
 
 ``trigger_available_now=True`` drains the current backlog and stops —
 the batch-catchup mode (and what the tests use).
 """
 
 from __future__ import annotations
+
+import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
@@ -38,15 +41,24 @@ def extract_stream(spark: SparkSession, input_dir: str, output_dir: str,
                    config: ExtractConfig | None = None,
                    trigger_available_now: bool = False):
     """Start (and return) the streaming query. Caller owns lifecycle
-    (``.awaitTermination()`` / ``.stop()``)."""
+    (``.awaitTermination()`` / ``.stop()``).
+
+    Exactly-once: the checkpoint tracks file offsets and each
+    micro-batch overwrites ``output_dir/batch_id=N``, so a batch
+    replayed after a crash (its offsets logged, its commit not)
+    rewrites the same rows; reading ``output_dir`` yields ``batch_id``
+    as a partition column."""
     pages = (spark.readStream.schema(schema)
              .option("maxFilesPerTrigger", max_files_per_trigger)
              .parquet(input_dir))
 
     def process(batch_df, batch_id: int):
+        # one hive partition per batch, overwritten: a batch replayed
+        # after a crash rewrites its own rows instead of appending them
+        # twice (the same rule as curate_stream's sinks)
         out = extract(batch_df, mode=mode, config=config)
-        (out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append").parquet(output_dir))
+        out.write.mode("overwrite").parquet(
+            os.path.join(output_dir, f"batch_id={batch_id}"))
 
     writer = (pages.writeStream
               .foreachBatch(process)
@@ -91,7 +103,6 @@ def curate_stream(spark: SparkSession, input_dir: str, output_dir: str,
     state the original attempt saw, whether the crash hit before,
     between, or after the two writes.
     """
-    import os
 
     from tika_spark.analysis.curation import (pii_scrub,
                                               snapshot_delta_dedup)
