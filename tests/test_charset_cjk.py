@@ -116,6 +116,19 @@ class TestWidenedSbcs:
               "that should resolve to the generic ebcdic layout ") * 5
         assert detect_statistical(en.encode("cp500")) == "cp500"
 
+    def test_ebcdic_scores_compete_with_declared_hint(self):
+        # an EBCDIC-script hit joins the shared score table: the
+        # declared-charset bonus and the cp500 score compete with it
+        he = ("שלום לכם קוראים יקרים זהו מסמך בדיקה חדש לגמרי "
+              "ובו מילים רבות שלא הופיעו בקורפוס האימון כלל "
+              "והמערכת צריכה לזהות את הקידוד בכל זאת") * 3
+        raw = he.encode("cp424", "ignore")
+        assert detect_statistical(raw) == "cp424"
+        assert detect_statistical(raw, declared="cp500") == "cp500"
+        en = ("plain english ebcdic document with ordinary words "
+              "that should resolve to the generic ebcdic layout ") * 5
+        assert detect_statistical(en.encode("cp500")) == "cp500"
+
     def test_cp420_codec_tables_and_held_out_text(self):
         # round-5 gap close (VERDICT r4 task 7): the JDK-dumped CDRA
         # code page 420 tables give Python a real cp420 codec — exact

@@ -222,39 +222,100 @@ class TestBatch:
             b"<?xml version='1.0'?><rss><channel/></rss>",
             b"plain text here", b"\x00\x01\x02\x03", b"",
             b"PK\x03\x04zipdata", b"\x1f\x8bgz",
+            # comment-led feeds and SVG take their root type
+            b"<!-- generated -->\n<?xml version='1.0'?><rss><channel>"
+            b"<title>Feed T</title></channel></rss>",
+            b"<!-- x -->\n<feed xmlns='http://www.w3.org/2005/Atom'>"
+            b"<title>A</title></feed>",
+            b"<!-- x --><svg xmlns='http://www.w3.org/2000/svg'/>",
+            b'<html xmlns="http://www.w3.org/1999/xhtml"><body/></html>',
+            b"<!--[if IE]><![endif]--><p>hi",
+            b"<?xml version='1.0'?><rss><channel/></rss>",
+            # no magic at offset 0 and no known root: the text sniff
+            b"  <!-- note --> hello",
         ]
         urls = [None, "http://a/x.html", None, "http://a/notes.txt",
-                None, None, "http://a/a.zip", None]
+                None, None, "http://a/a.zip", None,
+                None, None, None, None, None, "http://a/feed.xml", None]
         s = pd.Series(payloads)
         u = pd.Series(urls)
         got = detector.detect_batch(s, u).tolist()
         want = [detector.detect(p, uu) for p, uu in zip(payloads, urls)]
         assert got == want
+        assert got[8:13] == [
+            "application/rss+xml", "application/atom+xml",
+            "image/svg+xml", "application/xhtml+xml", "text/html"]
+        assert got[14] == "text/plain"
 
     def test_batch_hint_specialization_on_hot_path(self):
         s = pd.Series([b"<?xml version='1.0'?><html xmlns='http://www.w3.org/1999/xhtml'/>"])
         u = pd.Series(["http://a/page.xhtml"])
         assert detector.detect_batch(s, u).tolist() == ["application/xhtml+xml"]
 
+    def test_comment_led_rss_routes_to_feed(self):
+        from tika_spark.config import ExtractConfig
+        from tika_spark.pipeline import stages
+        pdf = pd.DataFrame({
+            "url": ["http://a/feed", "http://a/page"],
+            "html": [b"<!-- generated -->\n<rss version='2.0'><channel>"
+                     b"<title>Feed T</title><item><title>Item one</title>"
+                     b"<link>http://a/1</link>"
+                     b"<description>Body one</description></item>"
+                     b"</channel></rss>",
+                     b"<!-- generated -->\n<p>Body two</p>"]})
+        out = stages.process_batch(pdf, ExtractConfig(mode="text"))
+        assert out["mime"].tolist() == ["application/rss+xml", "text/html"]
+        assert [stages.route_for_mime(m) for m in out["mime"]] == [
+            "feed", "html"]
+        assert out["status"].tolist() == ["ok", "ok"]
+        assert out["title"][0] == "Feed T"
+        assert "Body one" in out["text"][0]
+        assert out["links"][0][0]["uri"] == "http://a/1"
+
+
+def _linear_match_magic(prefix: bytes) -> str | None:
+    """Reference scan: every rule in priority order, no index."""
+    if not prefix:
+        return None
+    for rule in magic.MAGIC_RULES:
+        if any(magic._clause_matches(prefix, c) for c in rule.clauses):
+            if rule.confirm is None or all(
+                    magic._clause_matches(prefix, c) for c in rule.confirm):
+                return rule.mime
+    return None
+
+
+def test_magic_index_matches_linear_scan():
+    import random
+    rng = random.Random(11)
+    clauses = [c for r in magic.MAGIC_RULES
+               for c in r.clauses + (r.confirm or ())]
+    probes = []
+    for c in clauses:
+        for at in (c.lo, c.hi):
+            pad = rng.randbytes(at)
+            tail = rng.randbytes(rng.randrange(0, 48))
+            probes += [pad + c.pattern + tail, pad + c.pattern,
+                       pad + c.pattern[:1] + tail, pad + c.pattern[:-1]]
+    for _ in range(6000):
+        probes.append(rng.randbytes(rng.randrange(0, 96)))
+    for _ in range(6000):
+        # a random clause planted inside its window over random bytes
+        c = rng.choice(clauses)
+        at = rng.randint(c.lo, c.hi)
+        buf = bytearray(rng.randbytes(at + len(c.pattern)
+                                      + rng.randrange(0, 600)))
+        buf[at:at + len(c.pattern)] = c.pattern
+        probes.append(bytes(buf[:rng.randrange(1, len(buf) + 1)]))
+    assert len(probes) >= 10_000
+    bad = [p[:16] for p in probes
+           if magic.match_magic(p) != _linear_match_magic(p)]
+    assert bad == []
+
 
 if __name__ == "__main__":
     import sys
     sys.exit(pytest.main([__file__, "-q"]))
-
-
-def test_no_glob_specializes_hot_paths():
-    """detect_batch skips the per-row hint loop for url-only rows on
-    the pdf/html hot paths; that is only sound while no glob extension
-    maps to a specialization of those types. Pin it."""
-    from tika_spark.mime import lattice
-    from tika_spark.mime.globs import EXT_MAP
-    for base in ("text/html", "application/pdf"):
-        offending = [
-            (ext, mime) for ext, mime in EXT_MAP.items()
-            if base in list(lattice.supertype_chain(mime))[1:]]
-        assert offending == [], (
-            f"glob now specializes {base}: {offending} — re-enable the "
-            "name-hint loop in detect_batch for these rows")
 
 
 def test_widened_signature_table():

@@ -488,28 +488,27 @@ def detect_statistical(data: bytes, declared: str | None = None) -> str:
     scores["cp500"] = _score_cp500(buf)
     ebcdic = _score_ebcdic_script(raw, buf)
     scores.update(ebcdic)
-    if ebcdic:
-        # a trained EBCDIC-script hit behind the structural gate
-        # (space = 0x40 frequent, ASCII control region near-empty) is
-        # mutually exclusive with every ASCII-compatible encoding —
-        # don't let an MBCS validity score (gb18030 accepts most byte
-        # soup) outbid it on byte-pattern coincidence
-        return max(ebcdic.items(), key=lambda kv: kv[1])[0]
-    if has_high:
+    # a trained EBCDIC-script hit behind the structural gate (space =
+    # 0x40 frequent, ASCII control region near-empty) is mutually
+    # exclusive with every ASCII-compatible encoding: skip their
+    # candidates, so an MBCS validity score (gb18030 accepts most byte
+    # soup) cannot outbid it, while cp500 and the declared-hint bonus
+    # still compete
+    if has_high and not ebcdic:
         # single-byte Cyrillic heuristics
         scores["cp866"] = _score_sbcs_cyrillic(buf,
                                                [(0x80, 0xAF), (0xE0, 0xF1)])
         scores["koi8-r"] = _score_sbcs_cyrillic(buf, [(0xC0, 0xFF)])
-    if has_high and scores["utf-8"] < 60:  # CJK/sbcs only when not UTF-8
-        for codec, prior, gate, ranges, distinctive in _MBCS_CANDIDATES:
-            scores[codec] = _score_mbcs(raw, codec, prior, gate, ranges,
-                                        distinctive)
-        rel = _sbcs_rel_bigrams(buf)
-        if rel is not None:
-            for codec, grams in _sbcs_models():
-                scores[codec] = _score_sbcs_ngram(rel, grams)
-        scores["windows-1252"] = max(scores.get("windows-1252", 0),
-                                     _score_cp1252_punct(buf))
+        if scores["utf-8"] < 60:  # CJK/sbcs only when not UTF-8
+            for codec, prior, gate, ranges, distinctive in _MBCS_CANDIDATES:
+                scores[codec] = _score_mbcs(raw, codec, prior, gate,
+                                            ranges, distinctive)
+            rel = _sbcs_rel_bigrams(buf)
+            if rel is not None:
+                for codec, grams in _sbcs_models():
+                    scores[codec] = _score_sbcs_ngram(rel, grams)
+            scores["windows-1252"] = max(scores.get("windows-1252", 0),
+                                         _score_cp1252_punct(buf))
 
     declared = clean_charset(declared)
     if declared:

@@ -14,10 +14,9 @@ tika-core/.../mime/MimeTypes.java:505-561):
    of the current answer;
 5. the declared Content-Type hint likewise.
 
-``detect_batch`` is the vectorized entry point used inside pandas
-UDFs: hot prefixes (pdf/html/xml) short-circuit via numpy/pandas str
-ops; the tail falls back to the per-element path — still one Python
-call per Arrow batch, never a per-row Spark UDF.
+:func:`detect` is the only detection path. ``detect_batch`` runs it
+over one Arrow batch inside the extraction stage: one Python call per
+batch, never a per-row Spark UDF.
 """
 
 from __future__ import annotations
@@ -107,10 +106,7 @@ _XML_ROOT_PREFIX = 8192  # root-tag scan window (regex + possible
 
 def refine_xml_root(prefix: bytes) -> str | None:
     """Media type from the first start-tag local name, else None."""
-    body = prefix[:_XML_ROOT_PREFIX]
-    for bom in (b"\xef\xbb\xbf",):
-        if body.startswith(bom):
-            body = body[len(bom):]
+    body = prefix[:_XML_ROOT_PREFIX].removeprefix(b"\xef\xbb\xbf")
     if body[:2] in (b"\xff\xfe", b"\xfe\xff"):
         try:
             body = body.decode(
@@ -200,52 +196,12 @@ def detect(data: bytes | None, url: str | None = None,
     return mime
 
 
-# --- vectorized batch entry point ----------------------------------------
-
-_HOT_HTML = re.compile(
-    r"^\s{0,60}<(?:!doctype\s+html|html|head|body|title|h1|!--)",
-    re.IGNORECASE)
-
-
 def detect_batch(html: pd.Series, url: pd.Series | None = None,
                  declared: pd.Series | None = None) -> pd.Series:
-    """Vectorized detection over a batch of byte payloads.
-
-    Hot paths (pdf / gzip / zip / png / html-tag / <?xml prefixes cover
-    the overwhelming majority of a web crawl) are resolved with pandas
-    str ops on a short latin-1 prefix view; the remainder goes through
-    the exact per-element path. One Python invocation per Arrow batch.
-    """
+    """:func:`detect` over a batch of payloads, aligned on ``html``'s
+    index; ``url`` and ``declared`` are optional per-row hints."""
     n = len(html)
-    out = pd.Series([None] * n, index=html.index, dtype=object)
-    data = html.fillna(b"")
-    # cheap latin-1 text view of the first 80 bytes for prefix routing
-    head = data.map(lambda b: bytes(b[:80]).decode("latin-1"))
-
-    is_pdf = head.str.startswith("%PDF-")
-    out[is_pdf] = "application/pdf"
-    todo = ~is_pdf
-
-    hot_html = todo & head.map(lambda s: bool(_HOT_HTML.match(s)))
-    out[hot_html] = "text/html"
-    todo &= ~hot_html
-
-    hot_xml = todo & head.str.startswith("<?xml")
-    todo_idx = out.index[todo | hot_xml]
-
-    urls = url if url is not None else pd.Series([None] * n, index=html.index)
-    decl = declared if declared is not None else pd.Series([None] * n, index=html.index)
-    for i in todo_idx:
-        out[i] = detect(data[i], urls[i], decl[i])
-
-    # declared hints can still specialize the hot-path answers; name
-    # hints cannot — no glob extension maps to a specialization of
-    # text/html or application/pdf (invariant pinned by
-    # test_no_glob_specializes_hot_paths), so url-only rows skip the
-    # python loop entirely (the census hot path)
-    if declared is not None and decl.notna().any():
-        fast_idx = out.index[(is_pdf | hot_html) & decl.notna()]
-        for i in fast_idx:
-            m = _apply_hint(out[i], globs.match_name(urls[i]))
-            out[i] = _apply_hint(m, decl[i])
-    return out
+    urls = url if url is not None else [None] * n
+    decl = declared if declared is not None else [None] * n
+    return pd.Series([detect(d, u, t) for d, u, t in zip(html, urls, decl)],
+                     index=html.index, dtype=object)

@@ -16,6 +16,7 @@ plus common container signatures routed to status rows.
 
 from __future__ import annotations
 
+from collections import defaultdict
 from typing import NamedTuple
 
 from tika_spark.config import MAGIC_PREFIX
@@ -98,7 +99,10 @@ MAGIC_RULES: list[MagicRule] = [
     # vnd.ms-htmlhelp block)
     _m("application/vnd.ms-htmlhelp", 50,
        Clause(0, 0, b"ITSF\x03\x00\x00\x00")),
-    _m("text/html", 40, *[Clause(0, 64, t, ci=True) for t in _HTML_TOKENS]),
+    # a comment at offset 0 reads as HTML; detector.refine_xml_root
+    # then gives a comment-led feed or SVG its root type
+    _m("text/html", 40, *[Clause(0, 64, t, ci=True) for t in _HTML_TOKENS],
+       Clause(0, 0, b"<!--")),
     # mbox before rfc822: "From " (envelope) vs "From:" (header) —
     # tika-mimetypes.xml mbox/message blocks
     _m("application/mbox", 40, Clause(0, 0, b"From ")),
@@ -401,20 +405,23 @@ MAGIC_RULES: list[MagicRule] = [
 # first match wins (Magic.java:67-79 ordering).
 MAGIC_RULES.sort(key=lambda r: (-r.priority, -max(len(c.pattern) for c in r.clauses)))
 
-# First-byte fast-reject index: a rule whose clauses are ALL exact
-# anchored-at-0 prefixes can only match if the document's first byte is
-# one of the clauses' first bytes — one frozenset probe skips ~80% of
-# the table per document, keeping the per-doc scan flat as the rule
-# count grows (the widened table doubled it). Rules with windowed /
-# masked / case-insensitive clauses always run the full check.
-_PREPARED: list[tuple[MagicRule, frozenset | None]] = []
-for _rule in MAGIC_RULES:
-    if all(c.lo == 0 and c.hi == 0 and c.mask is None and not c.ci
-           for c in _rule.clauses):
-        _first = frozenset(c.pattern[0] for c in _rule.clauses)
+# (offset, first byte) index. Rule k of the sorted table is bit k of a
+# candidate mask. A rule whose clauses all sit at fixed offsets and
+# compare their first byte exactly (unmasked, or mask byte 0xFF; not
+# case-insensitive) can only match if, for one of its clauses, the
+# document's byte at ``lo`` is the pattern's first byte: _BY_OFFSET maps
+# offset -> byte -> mask of such rules. Windowed and case-insensitive
+# rules are in _ALWAYS. A document tests only its candidates, lowest
+# bit (highest priority) first.
+_ALWAYS = 0
+_BY_OFFSET: dict[int, dict[int, int]] = defaultdict(lambda: defaultdict(int))
+for _k, _rule in enumerate(MAGIC_RULES):
+    if all(c.lo == c.hi and not c.ci
+           and (c.mask is None or c.mask[0] == 0xFF) for c in _rule.clauses):
+        for _c in _rule.clauses:
+            _BY_OFFSET[_c.lo][_c.pattern[0]] |= 1 << _k
     else:
-        _first = None
-    _PREPARED.append((_rule, _first))
+        _ALWAYS |= 1 << _k
     for _c in _rule.clauses + (_rule.confirm or ()):
         assert _c.hi + len(_c.pattern) <= MAGIC_PREFIX, _rule.mime
 
@@ -447,11 +454,16 @@ def match_magic(prefix: bytes) -> str | None:
         return None
     # no upfront prefix copy: every clause slices only its own tiny
     # (lo, hi+len) window, and all rule offsets are < MAGIC_PREFIX by
-    # construction (asserted below at import time)
-    b0 = prefix[0]
-    for rule, first_bytes in _PREPARED:
-        if first_bytes is not None and b0 not in first_bytes:
-            continue
+    # construction (asserted at import time)
+    n = len(prefix)
+    cand = _ALWAYS
+    for at, col in _BY_OFFSET.items():
+        if at < n:
+            cand |= col.get(prefix[at], 0)
+    while cand:
+        low = cand & -cand
+        cand ^= low
+        rule = MAGIC_RULES[low.bit_length() - 1]
         for c in rule.clauses:
             if _clause_matches(prefix, c):
                 if rule.confirm is None or all(

@@ -339,50 +339,17 @@ def _empty_result() -> dict:
             "links": [], "metadata": {}, "status": "no_parser"}
 
 
-def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
-                  part_id: int = -1) -> pd.DataFrame:
-    """Extract one Arrow batch (pandas DataFrame in/out)."""
-    t0 = time.perf_counter()
-    n = len(pdf)
-    if config.trace_dir:
-        import os
-        import uuid
-        with open(os.path.join(config.trace_dir,
-                               f"{uuid.uuid4().hex}_{n}"), "w"):
-            pass
-    html = pdf["html"]
-    urls = pdf["url"] if "url" in pdf else pd.Series([None] * n,
-                                                     index=pdf.index)
-    declared = pdf["declared_type"] if "declared_type" in pdf else None
-
-    mimes = detect_batch(html, urls, declared)
-
-    if config.mode == "detect":
-        # -d CLI mode (H4): type census only — no parsing, no language
-        # id; the cheap scan path for fleet-wide mime distribution
-        batch_ms = (time.perf_counter() - t0) * 1000.0
-        return pd.DataFrame({
-            "url": urls.values,
-            "warc_ts": (pdf["warc_ts"].values if "warc_ts" in pdf
-                        else [None] * n),
-            "mime": mimes.values,
-            "charset": None, "lang": None, "lang_distance": None,
-            "title": None, "text": "",
-            "spans": [[] for _ in range(n)],
-            "links": [[] for _ in range(n)],
-            "metadata": [{} for _ in range(n)],
-            "status": "detected", "error": None,
-            "children": [[] for _ in range(n)],
-            "n_bytes": html.map(lambda b: len(b) if b is not None
-                                else 0).values,
-            "n_chars": 0, "part_id": part_id, "batch_ms": batch_ms,
-        })
-
+def _parse_rows(html: pd.Series, urls: pd.Series,
+                declared: pd.Series | None, mimes: pd.Series,
+                config: ExtractConfig) -> list[dict]:
+    """Run each row's route extractor, then the xhtml/xmp/json text
+    rewrite; one result dict per row, in batch order."""
+    n = len(html)
     results: list[dict] = [None] * n  # type: ignore[list-item]
-    routes = mimes.map(lambda m: route_for_mime(m))
-
-    # group rows by route, run each group's extractor in batch order
-    positions = {i: k for k, i in enumerate(pdf.index)}
+    # group rows by route ("" for none), run each group's extractor in
+    # batch order
+    routes = mimes.map(route_for_mime).fillna("")
+    positions = {i: k for k, i in enumerate(html.index)}
     cap = config.max_input_bytes
     for route, idx in routes.groupby(routes).groups.items():
         fn = _EXTRACTORS.get(route)
@@ -420,9 +387,6 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
                 r = _empty_result()
                 r["status"], r["error"] = "error", repr(e)[:1000]
                 results[k] = r
-    for k in range(n):
-        if results[k] is None:
-            results[k] = _empty_result()
 
     if config.mode == "xhtml":
         # -x CLI mode (A4): non-DOM routes wrap their text in the
@@ -438,8 +402,7 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
     elif config.mode == "xmp":
         # -y CLI mode (TikaCLI.java:147-246): the metadata map as an
         # XMP packet in the text column
-        for k in range(n):
-            r = results[k]
+        for r in results:
             r["text"] = xmp_serialize(r.get("metadata", {}))
             r["spans"] = []
     elif config.mode == "json":
@@ -448,27 +411,51 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
         # single-value lists collapse to scalars, as the reference's
         # Metadata#get/isMultiValued split does
         import json as _json
-        for k in range(n):
-            r = results[k]
+        for r in results:
             md = {key: (vs[0] if len(vs) == 1 else vs)
                   for key, vs in sorted(r.get("metadata", {}).items())}
             r["text"] = _json.dumps(md, ensure_ascii=False,
                                     sort_keys=True)
             r["spans"] = []
+    return results
 
+
+def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
+                  part_id: int = -1) -> pd.DataFrame:
+    """Extract one Arrow batch (pandas DataFrame in/out)."""
+    t0 = time.perf_counter()
+    n = len(pdf)
+    if config.trace_dir:
+        import os
+        import uuid
+        with open(os.path.join(config.trace_dir,
+                               f"{uuid.uuid4().hex}_{n}"), "w"):
+            pass
+    html = pdf["html"]
+    urls = pdf["url"] if "url" in pdf else pd.Series([None] * n,
+                                                     index=pdf.index)
+    declared = pdf["declared_type"] if "declared_type" in pdf else None
+
+    mimes = detect_batch(html, urls, declared)
+
+    if config.mode == "detect":
+        # -d CLI mode (H4): type census only — no parsing, no language
+        # id; the cheap scan path for fleet-wide mime distribution
+        results = [dict(_empty_result(), status="detected")
+                   for _ in range(n)]
+        langs = dists = [None] * n
+    else:
+        results = _parse_rows(html, urls, declared, mimes, config)
+        from tika_spark.language import default_model
+        ident = default_model().identify_batch(
+            pd.Series([r["text"] for r in results], index=pdf.index))
+        langs = ident["lang"].tolist()
+        dists = ident["lang_distance"].tolist()
+        if config.mode == "language":
+            # -l CLI mode: the identified language IS the output text
+            for r, lg in zip(results, langs):
+                r["text"], r["spans"] = lg or "unknown", []
     texts = pd.Series([r["text"] for r in results], index=pdf.index)
-
-    from tika_spark.language import default_model
-    ident = default_model().identify_batch(texts)
-    langs = ident["lang"].tolist()
-    dists = ident["lang_distance"].tolist()
-
-    if config.mode == "language":
-        # -l CLI mode: the identified language IS the output text
-        texts = pd.Series([lg or "unknown" for lg in langs],
-                          index=pdf.index)
-        for r in results:
-            r["spans"] = []
 
     batch_ms = (time.perf_counter() - t0) * 1000.0
     out = pd.DataFrame({
