@@ -6834,8 +6834,8 @@ def _q_media_webm_vp8_frames(spark, sf_dir):
     "CASE WHEN frame_idx = 0 THEN (bb0 + bb1) * 500000 "
     "ELSE bb1 * 1000000 END AS mean_b FROM rt"))
 def _q_media_webm_vp8p_frames(spark, sf_dir):
-    """WebM VP8 INTER-frame sampling (analysis/vp8inter.py — closes
-    the keyframe tier's inter-coded hook): each stream opens on a
+    """WebM VP8 INTER-frame sampling (analysis/vp8inter.py
+    VP8Decoder over the vp8.py macroblock loop): each stream opens on a
     two-tone exact keyframe (left MB c0, right MB c1) and pans left
     by one MB per interframe (NEWMV then NEARESTMV through the
     near-MV survey, motion compensation off the edge-extended last
@@ -6916,7 +6916,7 @@ def _q_media_mp4_cmaf_frames(spark, sf_dir):
 def _q_media_mp4_frames(spark, sf_dir):
     """MP4 (ISO-BMFF) H.264/AVC video frame sampling: avc1 track
     demux (analysis/isobmff.py mp4_avc_track, length-prefixed NALs
-    per avcC) + the from-scratch H.264 intra decoder
+    per avcC) + the from-scratch H.264 decoder
     (analysis/h264.py — CAVLC, Intra_4x4/16x16/chroma prediction,
     integer transforms), one row per sampled frame.  Fixture frames
     are solid 16x16 grays; even ids are I_PCM streams (bit-exact)
@@ -6950,7 +6950,7 @@ def _q_media_mp4_frames(spark, sf_dir):
     "ELSE g1 * 1000000 END AS mean_gray FROM g"))
 def _q_media_mp4_pframes(spark, sf_dir):
     """MP4 IPPP decode: an IDR keyframe followed by motion-compensated
-    P slices (analysis/h264inter.py — mb_skip_run, P_L0_16x16,
+    P slices (analysis/h264.py H264Decoder — mb_skip_run, P_L0_16x16,
     median MV prediction, quarter-pel-capable MC).  Fixture: 32x16
     two-tone keyframe (left gray c0, right c1), each P frame pans one
     MB left with zero residual, so frame 0's mean is the two-gray
@@ -7152,10 +7152,10 @@ def _q_media_mp4_slice_census(spark, sf_dir):
     "/ 256.0) AS BIGINT))) * 1000000 AS mean_gray FROM f"))
 def _q_media_mp4_bframes(spark, sf_dir):
     """MP4 IBP decode with display reordering: B slices
-    (analysis/h264inter.py H264BiEncoder/_mb_b — B_L0/L1/Bi 16x16,
+    (h264inter.py H264BiEncoder, h264.py _mb_b — B_L0/L1/Bi 16x16,
     per-list median MV prediction, bi-predictive averaging,
     non-reference NALs) stored in decode order (I P B [P]) and
-    re-ordered by picture order count at the demuxer.  Fixture grays
+    re-ordered by picture order count (H264Decoder.decode).  Fixture grays
     are multiples of 8 so every P/B residual divides the qp=28
     quantizer exactly — each displayed frame is its closed-form
     gray, and a wrong/missing POC sort scrambles frames 1 and 2."""
@@ -7507,7 +7507,7 @@ def _q_media_flv_avc_frames(spark, sf_dir):
     """FLV (Flash video) AVC frame sampling: VIDEODATA tag walk with
     back-pointer validation (analysis/flvdemux.py flv_video — avcC
     sequence header + length-prefixed NALU packets) through the
-    from-scratch H.264 intra decoder.  Fixtures alternate I_PCM and
+    from-scratch H.264 decoder.  Fixtures alternate I_PCM and
     Intra_16x16-DC@qp28 streams, both exactly lossless, so frame
     means pin to the BT.601 closed form.  Reference parity:
     video/FLVParser.java is metadata-only."""
@@ -7534,7 +7534,7 @@ def _q_media_flv_avc_frames(spark, sf_dir):
 def _q_media_ts_h264_frames(spark, sf_dir):
     """MPEG transport stream carrying an H.264 elementary stream
     (PMT stream_type 0x1B): the PSI/PES walk (analysis/mpegts.py)
-    routes the Annex-B ES to the intra decoder instead of the
+    routes the Annex-B ES to the H.264 decoder instead of the
     MPEG-1/2 path — the dual of media_ts_mpeg2_decode on the same
     container."""
     import numpy as np

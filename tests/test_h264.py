@@ -247,6 +247,54 @@ def test_mp4_fixture_closed_form():
             assert (f[:, :, 2] == exp).all()
 
 
+def _huge_sps() -> bytes:
+    """An SPS NAL unit declaring 4000 x 4000 macroblocks."""
+    from tika_spark.analysis.h264 import _nal
+    w = BitWriter()
+    w.write(66, 8)                         # profile_idc (Baseline)
+    w.write(0, 8)                          # constraint flags
+    w.write(30, 8)                         # level_idc
+    w.ue(0)                                # sps_id
+    w.ue(0)                                # log2_max_frame_num - 4
+    w.ue(2)                                # poc_type
+    w.ue(1)                                # max_num_ref_frames
+    w.write(0, 1)                          # gaps_in_frame_num
+    w.ue(3999)                             # pic_width_in_mbs - 1
+    w.ue(3999)                             # pic_height_in_map_units - 1
+    w.write(1, 1)                          # frame_mbs_only
+    w.write(1, 1)                          # direct_8x8_inference
+    w.write(0, 1)                          # frame_cropping
+    w.write(0, 1)                          # vui_parameters_present
+    w.rbsp_trailing()
+    return _nal(7, w.bytes())
+
+
+def test_sps_frame_size_guard():
+    """A 64000 x 64000 SPS is refused while it is parsed, so no slice
+    can allocate its planes."""
+    nal = _huge_sps()
+    with pytest.raises(H264Error, match="SPS frame size"):
+        parse_sps(rbsp_unescape(nal[1:]))
+    dec = H264Decoder()
+    with pytest.raises(H264Error):
+        dec.push(nal)
+    assert dec.sps == {} and dec.frames == []
+
+
+def test_oversized_sps_mp4_is_one_error_row(spark):
+    from tika_spark.analysis.h264 import H264Encoder, _nal
+    from tika_spark.analysis.isobmff import _mux_avc
+    from tika_spark.analysis.video import sample_frame_stats
+    enc = H264Encoder(16, 16)
+    c = np.full((8, 8), 128, np.uint8)
+    idr = _nal(5, enc.encode_frame(np.full((16, 16), 9, np.uint8), c, c))
+    mp4 = _mux_avc([len(idr).to_bytes(4, "big") + idr], _huge_sps(),
+                   _nal(8, enc.pps_rbsp()), 16, 16, 25)
+    df = spark.createDataFrame([(1, mp4)], "id long, payload binary")
+    rows = sample_frame_stats(df, every=1).collect()
+    assert len(rows) == 1 and rows[0]["status"] == "error"
+
+
 def test_mp4_track_metadata():
     mp4 = video_h264_fixture(3)
     track, avcc = mp4_avc_track(mp4)

@@ -1,13 +1,13 @@
-"""H.264 P-slice (inter) decode tests — analysis/h264inter.py."""
+"""H.264 P and B slice decode (analysis/h264.py) of the inter fixture
+encoders (analysis/h264inter.py)."""
 
 import numpy as np
 import pytest
 
-from tika_spark.analysis.h264 import H264Error, split_annexb
-from tika_spark.analysis.h264inter import (H264InterDecoder,
-                                           decode_h264p_annexb,
-                                           encode_h264p, mc_chroma,
-                                           mc_luma)
+from tika_spark.analysis.h264 import (H264Decoder, H264Error,
+                                      decode_h264_annexb, mc_chroma,
+                                      mc_luma, split_annexb)
+from tika_spark.analysis.h264inter import encode_h264p
 
 
 def _planes(dec, bs):
@@ -82,7 +82,7 @@ def test_pan_closed_form():
     u = np.full((8, 16), 128, np.uint8)
     bs = encode_h264p([(f0, u, u), (f1, u, u), (f1, u, u)], 32, 16,
                       qp=28, plan="pan16", base_mv=(64, 0))
-    out = decode_h264p_annexb(bs)
+    out = decode_h264_annexb(bs)
     e0 = (298 * (c0 - 16) + 128) >> 8
     e1 = (298 * (c1 - 16) + 128) >> 8
     assert len(out) == 3
@@ -105,7 +105,7 @@ def test_partition_plans_roundtrip():
     for plan in ("pan16", "parts", "mixed"):
         bs = encode_h264p(frames, 64, 48, qp=10, plan=plan,
                           base_mv=(16, 0))
-        dec = H264InterDecoder()
+        dec = H264Decoder()
         _planes(dec, bs)
         assert len(dec.frames) == 3
         for (y, _u, _v), (dy, du, dv) in zip(frames, dec.frames):
@@ -123,7 +123,7 @@ def test_fractional_mv_roundtrip():
     frames = [(base, u0, v0), (_shift(base, 2), u0, v0)]
     bs = encode_h264p(frames, 32, 32, qp=4, plan="parts",
                       base_mv=(17, 5))
-    dec = H264InterDecoder()
+    dec = H264Decoder()
     _planes(dec, bs)
     for (y, _u, _v), (dy, _du, _dv) in zip(frames, dec.frames):
         assert float(np.abs(dy.astype(int)
@@ -140,7 +140,7 @@ def test_intra_in_p_slice():
     frames = [(y, u, v), (y, u, v)]
     bs = encode_h264p(frames, 48, 32, qp=8, plan="mixed",
                       base_mv=(0, 0))
-    dec = H264InterDecoder()
+    dec = H264Decoder()
     _planes(dec, bs)
     dy = dec.frames[1][0]
     assert float(np.abs(dy.astype(int) - y.astype(int)).mean()) < 1.0
@@ -151,7 +151,7 @@ def test_p_without_reference_raises():
     f = np.full((16, 32), 9, np.uint8)
     bs = encode_h264p([(f, c, c), (f, c, c)], 32, 16)
     nals = split_annexb(bs)
-    dec = H264InterDecoder()
+    dec = H264Decoder()
     dec.push(nals[0])
     dec.push(nals[1])
     with pytest.raises(H264Error):
@@ -163,7 +163,7 @@ def test_intra_only_streams_still_decode():
     y = np.full((16, 16), 80, np.uint8)
     c = np.full((8, 8), 128, np.uint8)
     bs = encode_h264([(y, c, c)] * 2, 16, 16, qp=28, plan="i16dc")
-    out = decode_h264p_annexb(bs)
+    out = decode_h264_annexb(bs)
     exp = (298 * (80 - 16) + 128) >> 8
     assert len(out) == 2 and (out[0][:, :, 0] == exp).all()
 
@@ -233,7 +233,7 @@ def test_b_slices_solid_exact():
     vals = (40, 100, 160, 220, 72)
     frames = [(np.full((16, 32), v, np.uint8), u, u) for v in vals]
     bs = encode_h264b(frames, 32, 16, qp=28)
-    out = decode_h264p_annexb(bs)
+    out = decode_h264_annexb(bs)
     exp = [max(0, min(255, (298 * (v - 16) + 128) >> 8))
            for v in vals]
     assert [int(f[0, 0, 0]) for f in out] == exp
@@ -248,7 +248,7 @@ def test_b_slices_textured_roundtrip():
     u2 = np.full((16, 16), 90, np.uint8)
     v2 = np.full((16, 16), 170, np.uint8)
     bs = encode_h264b([(base, u2, v2)] * 5, 32, 32, qp=10)
-    dec = H264InterDecoder()
+    dec = H264Decoder()
     _planes(dec, bs)
     assert len(dec.frames) == 5
     assert sorted(dec.pocs) == [0, 2, 4, 6, 8]
@@ -267,14 +267,34 @@ def test_b_decode_order_differs_from_display():
     vals = (0, 80, 160)
     frames = [(np.full((16, 16), v, np.uint8), u, u) for v in vals]
     bs = encode_h264b(frames, 16, 16, qp=28)
-    dec = H264InterDecoder()
+    dec = H264Decoder()
     _planes(dec, bs)
     # decode order: poc 0, 4, 2
     assert dec.pocs == [0, 4, 2]
-    out = decode_h264p_annexb(bs)
+    out = decode_h264_annexb(bs)
     exp = [max(0, min(255, (298 * (v - 16) + 128) >> 8))
            for v in vals]
     assert [int(f[0, 0, 0]) for f in out] == exp
+
+
+def test_display_order_restarts_at_each_idr():
+    """Two IBP streams back to back: each IDR starts a new POC
+    group, so stream a's frames all come out before stream b's."""
+    from tika_spark.analysis.h264inter import encode_h264b
+    u = np.full((8, 8), 128, np.uint8)
+
+    def stream(vals):
+        return encode_h264b([(np.full((16, 16), v, np.uint8), u, u)
+                             for v in vals], 16, 16, qp=28)
+
+    def means(frames):
+        return [round(float(f[:, :, 1].mean())) for f in frames]
+
+    a, b = stream((20, 40, 60)), stream((200, 220, 240))
+    got = means(decode_h264_annexb(a + b))
+    assert got == means(decode_h264_annexb(a)) + means(
+        decode_h264_annexb(b))
+    assert got == sorted(got) and len(got) == 6
 
 
 def test_b_without_future_ref_raises():
@@ -283,7 +303,7 @@ def test_b_without_future_ref_raises():
     enc = H264BiEncoder(16, 16)
     u = np.full((8, 8), 128, np.uint8)
     y = np.full((16, 16), 50, np.uint8)
-    dec = H264InterDecoder()
+    dec = H264Decoder()
     dec.push(_nal(7, enc.sps_rbsp()))
     dec.push(_nal(8, enc.pps_rbsp()))
     enc._poc_lsb = 0

@@ -40,6 +40,69 @@ def _inter_roundtrip(dec, mv, q=10, intra_every=0, filter_level=0,
     return payload
 
 
+def _padded_keyframe(H, W, q=10, seed=7, **kw):
+    """A key frame of a random H x W image and its MB-aligned
+    reconstruction: the same macroblocks coded at the padded size,
+    whose bitstream differs only in the frame-size field."""
+    rng = np.random.RandomState(seed)
+    y = rng.randint(0, 256, (H, W))
+    u = rng.randint(0, 256, ((H + 1) // 2, (W + 1) // 2))
+    v = rng.randint(0, 256, ((H + 1) // 2, (W + 1) // 2))
+    mb_h, mb_w = (H + 15) // 16, (W + 15) // 16
+    padded = [np.pad(p, ((0, n * mb_h - p.shape[0]),
+                         (0, n * mb_w - p.shape[1])), mode="edge")
+              for p, n in ((y, 16), (u, 8), (v, 8))]
+    kf, _ = vp8.encode_vp8_yuv(y, u, v, qindex=q, **kw)
+    kf_pad, recon = vp8.encode_vp8_yuv(*padded, qindex=q, **kw)
+    assert kf[:6] == kf_pad[:6] and kf[10:] == kf_pad[10:]
+    return kf, tuple(p.astype(np.int32) for p in recon)
+
+
+def test_keyframe_keeps_decoded_padding():
+    """A key frame refreshes last/golden/altref with its decoded
+    MB-aligned planes, padding included (as libvpx does), not with an
+    edge replication of the cropped frame."""
+    kf, padded = _padded_keyframe(20, 20)
+    dec = vp8inter.VP8Decoder()
+    dec.decode_yuv(kf)
+    for planes in (dec.last, dec.golden, dec.altref):
+        for got, want in zip(planes, padded):
+            assert np.array_equal(got, want)
+
+
+@pytest.mark.parametrize("H,W", [(20, 20), (24, 40)])
+def test_nonaligned_frame_chain_roundtrip(H, W):
+    """Key and inter frames of a size that is not whole macroblocks:
+    MVs that read the decoded padding, intra MBs, a golden reference
+    and the loop filter all decode to the encoder's reconstruction."""
+    kf, key = _padded_keyframe(H, W, q=12, filter_level=10)
+    dec = vp8inter.VP8Decoder()
+    dec.decode_yuv(kf)
+    refs = dict.fromkeys(("last", "golden", "altref"), key)
+    ch, cw = (H + 1) // 2, (W + 1) // 2
+    for mv, every, level, ref, refresh in (
+            ((16, 16), 0, 0, "last", ("last",)),
+            ((32, 32), 3, 0, "last", ("last", "golden")),
+            ((16, 0), 0, 16, "last", ("last",)),
+            ((48, 48), 2, 0, "golden", ("last",)),
+            ((0, 16), 0, 8, "golden", ("last", "altref"))):
+        prev = refs[ref]
+        src = np.roll(prev[0], (mv[0] // 8, mv[1] // 8), axis=(0, 1))
+        payload, recon = vp8inter.encode_vp8_inter_yuv(
+            prev, src[:H, :W], prev[1][:ch, :cw], prev[2][:ch, :cw],
+            mv=mv, qindex=8, intra_every=every, filter_level=level,
+            ref=ref, refresh=refresh)
+        for name in refresh:
+            refs[name] = recon
+        got = dec.decode_yuv(payload)
+        for g, want in zip(got, (recon[0][:H, :W], recon[1][:ch, :cw],
+                                 recon[2][:ch, :cw])):
+            assert np.array_equal(g, want.astype(np.uint8))
+        for name in ("last", "golden", "altref"):
+            for g, want in zip(getattr(dec, name), refs[name]):
+                assert np.array_equal(g, want)
+
+
 class TestMvEntropy:
     @given(st.integers(-1000, 1000))
     @settings(max_examples=200, deadline=None)

@@ -19,9 +19,9 @@ Two tiers on top of the walk:
   (0x02 count prefix) and the blocks carry audio packets — exactly
   what :func:`tika_spark.analysis.vorbis.decode_vorbis_packets`
   consumes. Video decodes fully for V_VP8 (keyframes + motion-
-  compensated interframes, vp8.py/vp8inter.py) and V_MPEG4/ISO/AVC
-  (H.264 intra + P slices via the avcC CodecPrivate record,
-  h264.py/h264inter.py); VP9/AV1/Opus tracks surface metadata only
+  compensated interframes, vp8inter.VP8Decoder) and V_MPEG4/ISO/AVC
+  (H.264 I/P/B slices via the avcC CodecPrivate record,
+  h264.H264Decoder); VP9/AV1/Opus tracks surface metadata only
   (documented codec hooks).
 
 Scale: per-row work in mapInPandas, no shuffle.
@@ -30,6 +30,7 @@ Scale: per-row work in mapInPandas, no shuffle.
 from __future__ import annotations
 
 import struct
+from itertools import chain
 
 import numpy as np
 
@@ -453,32 +454,23 @@ def mkv_video_frames(data: bytes) -> list:
     """Decoded RGB frames of the first supported video track: V_VP8
     through the VP8 decoder, V_MPEG4/ISO/AVC (H.264 in Matroska —
     avcC record in CodecPrivate, length-prefixed NALs per block)
-    through the intra+P H.264 decoder."""
+    through :meth:`h264.H264Decoder.decode` (display order)."""
     info = mkv_info(data)
     for t in info["tracks"]:
         codec = t.get("codec", "")
         if codec == "V_VP8":
             return webm_vp8_frames(data)
         if codec == "V_MPEG4/ISO/AVC":
-            from tika_spark.analysis.h264 import split_avcc
-            from tika_spark.analysis.h264inter import H264InterDecoder
+            from tika_spark.analysis.h264 import H264Decoder, split_avcc
             from tika_spark.analysis.isobmff import parse_avcc
-            from tika_spark.analysis.vp8 import yuv_to_rgb
             cp = t.get("codec_private")
             if not cp:
                 raise EbmlError("AVC track without CodecPrivate")
             cfg = parse_avcc(cp, 0, len(cp))
-            dec = H264InterDecoder()
-            for nal in cfg["sps"] + cfg["pps"]:
-                dec.push(nal)
-            for blk in mkv_track_frames(data, t.get("number", 1)):
-                for nal in split_avcc(blk, cfg["length_size"]):
-                    dec.push(nal)
-            if not dec.frames:
-                raise EbmlError("AVC track decoded no frames")
-            order = sorted(range(len(dec.frames)),
-                           key=lambda k: (dec.pocs[k], k))
-            return [yuv_to_rgb(*dec.frames[k]) for k in order]
+            nals = (nal for blk in mkv_track_frames(data, t.get("number", 1))
+                    for nal in split_avcc(blk, cfg["length_size"]))
+            return H264Decoder().decode(
+                chain(cfg["sps"] + cfg["pps"], nals), EbmlError)
     raise EbmlError("no decodable video track (V_VP8 or "
                     "V_MPEG4/ISO/AVC)")
 

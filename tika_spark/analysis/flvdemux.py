@@ -20,6 +20,8 @@ the demux itself.
 
 from __future__ import annotations
 
+from itertools import chain
+
 import numpy as np
 
 
@@ -177,10 +179,10 @@ def flv_fixture(doc_id: int) -> bytes:
 # FLV VIDEODATA tags (type 9): codec id 7 = AVC, carrying an
 # AVCDecoderConfigurationRecord (packet type 0) then length-prefixed
 # NALU packets (type 1) — the same wire forms the MP4 avc1 tier
-# parses.  Decode goes through the from-scratch H.264 intra decoder
-# (tika_spark.analysis.h264); Sorenson H.263 and VP6 remain the
-# documented hook.  Reference parity: video/FLVParser.java is
-# metadata-only.
+# parses.  Decode goes through the from-scratch H.264 decoder
+# (tika_spark.analysis.h264.H264Decoder); Sorenson H.263 and VP6
+# remain the documented hook.  Reference parity: video/FLVParser.java
+# is metadata-only.
 
 AVC_CODEC = 7
 
@@ -208,23 +210,14 @@ def flv_video(data: bytes) -> tuple[bytes, list[bytes]]:
 
 def decode_flv_video(data: bytes) -> list:
     """Full FLV AVC decode -> list of (h, w, 3) RGB frames."""
-    from tika_spark.analysis.h264 import split_avcc
-    from tika_spark.analysis.h264inter import H264InterDecoder
+    from tika_spark.analysis.h264 import H264Decoder, split_avcc
     from tika_spark.analysis.isobmff import parse_avcc
-    from tika_spark.analysis.vp8 import yuv_to_rgb
     avcc_rec, payloads = flv_video(bytes(data or b""))
     cfg = parse_avcc(avcc_rec, 0, len(avcc_rec))
-    dec = H264InterDecoder()
-    for nal in cfg["sps"] + cfg["pps"]:
-        dec.push(nal)
-    for p in payloads:
-        for nal in split_avcc(p, cfg["length_size"]):
-            dec.push(nal)
-    if not dec.frames:
-        raise FlvError("AVC track decoded no frames")
-    order = sorted(range(len(dec.frames)),
-                   key=lambda k: (dec.pocs[k], k))   # display order
-    return [yuv_to_rgb(*dec.frames[k]) for k in order]
+    nals = (nal for p in payloads
+            for nal in split_avcc(p, cfg["length_size"]))
+    return H264Decoder().decode(chain(cfg["sps"] + cfg["pps"], nals),
+                                FlvError)
 
 
 def flv_wrap_video(frames: list, width: int, height: int,

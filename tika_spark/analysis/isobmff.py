@@ -15,8 +15,8 @@ full moov with a correct sample-table set).
 
 Video tracks decode for REAL when they are H.264/AVC (``avc1``):
 :func:`mp4_h264_frames` resolves the avcC record + length-prefixed
-samples and runs the from-scratch intra+P decoder
-(:mod:`tika_spark.analysis.h264` / ``h264inter``); other video
+samples and runs the from-scratch I/P/B decoder
+(:class:`tika_spark.analysis.h264.H264Decoder`); other video
 fourccs surface codec + sample layout only and raise on pixel
 decode.
 
@@ -610,31 +610,23 @@ def fmp4_samples(data: bytes) -> list[tuple[int, int]]:
 
 
 def mp4_h264_frames(data: bytes) -> list:
-    """Demux + full decode (intra + P slices) of the first avc1
+    """Demux + full decode (I, P and B slices) of the first avc1
     track -> list of (h, w, 3) RGB uint8 frames. Classic and
     fragmented (CMAF) layouts both work: stbl samples first, then
     any moof-carried samples in fragment order."""
-    from tika_spark.analysis.h264 import split_avcc
-    from tika_spark.analysis.h264inter import H264InterDecoder
-    from tika_spark.analysis.vp8 import yuv_to_rgb
+    from tika_spark.analysis.h264 import H264Decoder, split_avcc
     data = bytes(data or b"")
     track, avcc = mp4_avc_track(data)
-    track = dict(track,
-                 samples=list(track["samples"]) + fmp4_samples(data))
-    dec = H264InterDecoder()
-    for nal in avcc["sps"] + avcc["pps"]:
-        dec.push(nal)
-    for off, size in track["samples"]:
-        if off + size > len(data):
-            raise Mp4Error("sample range beyond file end")
-        for nal in split_avcc(data[off:off + size],
-                              avcc["length_size"]):
-            dec.push(nal)
-    if not dec.frames:
-        raise Mp4Error("avc1 track decoded no frames")
-    order = sorted(range(len(dec.frames)),
-                   key=lambda k: (dec.pocs[k], k))   # display order
-    return [yuv_to_rgb(*dec.frames[k]) for k in order]
+    samples = list(track["samples"]) + fmp4_samples(data)
+
+    def nals():
+        yield from avcc["sps"] + avcc["pps"]
+        for off, size in samples:
+            if off + size > len(data):
+                raise Mp4Error("sample range beyond file end")
+            yield from split_avcc(data[off:off + size],
+                                  avcc["length_size"])
+    return H264Decoder().decode(nals(), Mp4Error)
 
 
 def mp4_h264_slice_census(data: bytes) -> list[dict]:

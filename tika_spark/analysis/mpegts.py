@@ -176,11 +176,12 @@ def ts_video_es(data: bytes) -> bytes:
 
 def ts_video_frames(data: bytes) -> list:
     """Full video decode of the first stream: MPEG-1/2 through
-    mpegvideo, H.264 (stream_type 0x1B) through the intra decoder."""
+    mpegvideo, H.264 (stream_type 0x1B) through
+    h264.decode_h264_annexb."""
     stype, es = ts_video(data)
     if stype == 0x1B:
-        from tika_spark.analysis.h264inter import decode_h264p_annexb
-        return decode_h264p_annexb(es)
+        from tika_spark.analysis.h264 import decode_h264_annexb
+        return decode_h264_annexb(es)
     from tika_spark.analysis.mpegvideo import decode_mpeg1
     return decode_mpeg1(es)[0]
 

@@ -18,9 +18,9 @@ blocks — frames compose across the chain exactly like the GIF
 disposal rules. MPEG-1 gets the full motion-compensated transform
 treatment (I/P/B pictures, display reordering, program-stream
 demux) in :mod:`tika_spark.analysis.mpegvideo`; H.264/AVC CAVLC
-I/P/B slices decode for real via :mod:`tika_spark.analysis.h264` and
-:mod:`tika_spark.analysis.h264inter` (MP4 avc1, MPEG-TS 0x1B, FLV,
-Matroska), and VP8 via :mod:`tika_spark.analysis.vp8inter`. A stream
+I/P/B slices decode for real via :class:`tika_spark.analysis.h264.
+H264Decoder` (MP4 avc1, MPEG-TS 0x1B, FLV, Matroska), and VP8 via
+:mod:`tika_spark.analysis.vp8inter`. A stream
 no decoder here reads (CABAC H.264, H.265) raises, which the
 operators turn into a status row.
 

@@ -1,5 +1,5 @@
-"""From-scratch VP8 intra (keyframe) codec — WebP lossy (pure
-Python + numpy).
+"""From-scratch VP8 codec core — WebP lossy stills and the frame
+loop of VP8 video (pure Python + numpy).
 
 Decoder for the VP8 keyframe bitstream inside a RIFF/WEBP ``VP8 ``
 chunk (RFC 6386): the boolean arithmetic decoder, segmentation and
@@ -9,7 +9,10 @@ keyframe intra modes (16x16 DC/V/H/TM, B_PRED with all ten 4x4
 submodes, chroma 8x8), token decoding with band/context modelling,
 the exact integer inverse DCT and inverse Walsh-Hadamard transforms,
 reconstruction with edge-pixel conventions (127 above / 129 left),
-and the simple + normal in-loop deblocking filters.
+and the simple + normal in-loop deblocking filters. ``_reconstruct``
+is the one macroblock loop of every frame: a key frame is the case
+where all MBs are intra; interframe MBs (parsed in vp8inter.py) take
+six-tap motion compensation from edge-extended reference planes.
 
 Reference parity: the reference (tballison/tika) detects WebP and
 reads dimensions only (`image/ImageParser.java` family, matched in
@@ -710,8 +713,8 @@ def _parse_headers(data: bytes):
         raise ValueError("short VP8 payload")
     tag = data[0] | (data[1] << 8) | (data[2] << 16)
     if tag & 1:
-        raise ValueError("VP8 interframe without a keyframe context "
-                         "(still-image decode handles keyframes; "
+        raise ValueError("VP8 interframe where a key frame is due "
+                         "(a still is one key frame; "
                          "vp8inter.VP8Decoder decodes frame chains)")
     part1_size = tag >> 5
     if data[3:6] != b"\x9d\x01\x2a":
@@ -763,8 +766,6 @@ def _token_partitions(data: bytes, h: _FrameHeader):
 
 
 # ------------------------------------------------------ token coding
-
-
 
 
 def _read_block(bd, probs, first, ctx):
@@ -1062,58 +1063,68 @@ def _mb_skip_ctx(ctx, mx, has_y2):
         ctx.left_y2 = False
 
 
+def _pred_mb(mode, plane, mx, my, n: int) -> np.ndarray:
+    """Whole-MB intra prediction (16x16 luma or 8x8 chroma, ``n``)
+    of MB (mx, my) from ``plane``'s reconstructed neighbours."""
+    x0, y0 = mx * n, my * n
+    above = plane[y0 - 1, x0:x0 + n] if my > 0 else None
+    left = plane[y0:y0 + n, x0 - 1] if mx > 0 else None
+    aleft = plane[y0 - 1, x0 - 1] if (mx > 0 and my > 0) else None
+    return _pred16(mode, above, left, aleft, n)
+
+
+def _pred_sub(plane, mode, i, mx, my, mb_w) -> np.ndarray:
+    """B_PRED prediction of luma subblock ``i`` of MB (mx, my) with
+    the RFC edge conventions (127 above / 129 left)."""
+    x0, y0 = mx * 16, my * 16
+    r, c = i >> 2, i & 3
+    bx, by = x0 + c * 4, y0 + r * 4
+    left_ok = bx > 0 or mx > 0
+    if r == 0 and my == 0:
+        a = np.full(4, 127, np.int32)
+        ar = np.full(4, 127, np.int32)
+        al = 127
+    else:
+        a = plane[by - 1, bx:bx + 4].copy()
+        # above-right: real pixels when available; for the MB's
+        # right column below the first subblock row, VP8 reuses
+        # the pixel row above the MB (RFC 6386 section 12.3)
+        if c < 3:
+            ar = plane[by - 1, bx + 4:bx + 8].copy()
+        elif my == 0:
+            ar = np.full(4, 127, np.int32)
+        elif mx == mb_w - 1:
+            ar = np.full(4, int(plane[y0 - 1, x0 + 15]), np.int32)
+        else:
+            ar = plane[y0 - 1, x0 + 16:x0 + 20].copy()
+        al = int(plane[by - 1, bx - 1]) if left_ok else 129
+    if left_ok:
+        ll = plane[by:by + 4, bx - 1].copy()
+    else:
+        ll = np.full(4, 129, np.int32)
+    return _pred4(mode, a, al, ll, ar)
+
+
 def _predict_luma(mb, plane, mx, my, mb_w, y_res):
-    """Reconstruct one MB's luma into ``plane`` (padded frame plane,
-    int32) given its residual. Handles 16x16 modes and B_PRED with
-    the RFC edge conventions."""
+    """Reconstruct one intra MB's luma into ``plane`` (padded frame
+    plane, int32) given its residual: 16x16 modes or B_PRED."""
     x0, y0 = mx * 16, my * 16
     if mb.ymode != B_PRED:
-        above = plane[y0 - 1, x0:x0 + 16] if my > 0 else None
-        left = plane[y0:y0 + 16, x0 - 1] if mx > 0 else None
-        aleft = plane[y0 - 1, x0 - 1] if (mx > 0 and my > 0) else None
-        pred = _pred16(mb.ymode, above, left, aleft, 16)
-        plane[y0:y0 + 16, x0:x0 + 16] = np.clip(pred + y_res, 0, 255)
+        plane[y0:y0 + 16, x0:x0 + 16] = np.clip(
+            _pred_mb(mb.ymode, plane, mx, my, 16) + y_res, 0, 255)
         return
     for i in range(16):
-        r, c = i >> 2, i & 3
-        bx, by = x0 + c * 4, y0 + r * 4
-        left_ok = bx > 0 or mx > 0
-        if r == 0 and my == 0:
-            a = np.full(4, 127, np.int32)
-            ar = np.full(4, 127, np.int32)
-            al = 127
-        else:
-            a = plane[by - 1, bx:bx + 4].copy()
-            # above-right: real pixels when available; for the MB's
-            # right column below the first subblock row, VP8 reuses
-            # the pixel row above the MB (RFC 6386 section 12.3)
-            if c < 3:
-                ar = plane[by - 1, bx + 4:bx + 8].copy()
-            else:
-                src_y = y0 - 1
-                if my == 0:
-                    ar = np.full(4, 127, np.int32)
-                elif mx == mb_w - 1:
-                    ar = np.full(4, int(plane[src_y, x0 + 15]), np.int32)
-                else:
-                    ar = plane[src_y, x0 + 16:x0 + 20].copy()
-            al = int(plane[by - 1, bx - 1]) if left_ok else 129
-        if left_ok:
-            ll = plane[by:by + 4, bx - 1].copy()
-        else:
-            ll = np.full(4, 129, np.int32)
-        pred = _pred4(mb.bmodes[i], a, al, ll, ar)
+        by, bx = y0 + (i >> 2) * 4, x0 + (i & 3) * 4
+        pred = _pred_sub(plane, mb.bmodes[i], i, mx, my, mb_w)
         plane[by:by + 4, bx:bx + 4] = np.clip(
-            pred + y_res[r * 4:r * 4 + 4, c * 4:c * 4 + 4], 0, 255)
+            pred + y_res[by - y0:by - y0 + 4, bx - x0:bx - x0 + 4],
+            0, 255)
 
 
 def _predict_chroma(mode, plane, mx, my, res):
     x0, y0 = mx * 8, my * 8
-    above = plane[y0 - 1, x0:x0 + 8] if my > 0 else None
-    left = plane[y0:y0 + 8, x0 - 1] if mx > 0 else None
-    aleft = plane[y0 - 1, x0 - 1] if (mx > 0 and my > 0) else None
-    pred = _pred16(mode, above, left, aleft, 8)
-    plane[y0:y0 + 8, x0:x0 + 8] = np.clip(pred + res, 0, 255)
+    plane[y0:y0 + 8, x0:x0 + 8] = np.clip(
+        _pred_mb(mode, plane, mx, my, 8) + res, 0, 255)
 
 
 # ----------------------------------------------------------- loop filter
@@ -1289,57 +1300,162 @@ def _apply_loop_filter(h, mbs, yp, up, vp, mb_w, mb_h):
                                   hev_t, False)
 
 
+# ------------------------------------------------ motion compensation
+
+# 8-phase six-tap subpixel filters (RFC 6386 section 14.1)
+SIXTAP = (
+    (0, 0, 128, 0, 0, 0),
+    (0, -6, 123, 12, -1, 0),
+    (2, -11, 108, 36, -8, 1),
+    (0, -9, 93, 50, -6, 0),
+    (3, -16, 77, 77, -16, 3),
+    (0, -6, 50, 93, -9, 0),
+    (1, -8, 36, 108, -11, 2),
+    (0, -1, 12, 123, -6, 0),
+)
+
+_BORDER = 32          # reference-plane edge extension (pixels)
+
+
+def _extend(plane: np.ndarray) -> np.ndarray:
+    """Edge-replicate by _BORDER on all sides (int32)."""
+    return np.pad(plane, _BORDER, mode="edge").astype(np.int32)
+
+
+def _mc_block(ext: np.ndarray, y0: int, x0: int, bh: int, bw: int,
+              mvy: int, mvx: int) -> np.ndarray:
+    """Six-tap motion-compensated (bh, bw) block from the extended
+    plane. ``y0``/``x0`` are unextended coordinates; MVs eighth-pel.
+    Two-pass filter with intermediate clamping; phase 0 short-cuts
+    to a copy."""
+    fy, fx = mvy & 7, mvx & 7
+    iy = y0 + (mvy >> 3) + _BORDER
+    ix = x0 + (mvx >> 3) + _BORDER
+    # clamp the access window into the extended plane (a wild NEWMV
+    # stays defined: the border replicates, like the reference's
+    # extended frame buffers)
+    h_ext, w_ext = ext.shape
+    iy = min(max(iy, 2), h_ext - bh - 3)
+    ix = min(max(ix, 2), w_ext - bw - 3)
+    if fx == 0 and fy == 0:
+        return ext[iy:iy + bh, ix:ix + bw].copy()
+    rows = bh + (5 if fy else 0)
+    ry0 = iy - (2 if fy else 0)
+    if fx:
+        t = SIXTAP[fx]
+        src = ext[ry0:ry0 + rows, ix - 2:ix + bw + 3]
+        acc = np.zeros((rows, bw), dtype=np.int32)
+        for k in range(6):
+            if t[k]:
+                acc += t[k] * src[:, k:k + bw]
+        tmp = np.clip((acc + 64) >> 7, 0, 255)
+    else:
+        tmp = ext[ry0:ry0 + rows, ix:ix + bw]
+    if fy:
+        t = SIXTAP[fy]
+        acc = np.zeros((bh, bw), dtype=np.int32)
+        for k in range(6):
+            if t[k]:
+                acc += t[k] * tmp[k:k + bh, :]
+        return np.clip((acc + 64) >> 7, 0, 255)
+    return tmp.astype(np.int32)
+
+
+def _chroma_mv(mv: tuple[int, int]) -> tuple[int, int]:
+    """Luma MV -> chroma MV at half resolution (truncate toward zero
+    — documented stand-in convention; fixtures use even-full-pel MVs
+    where all conventions coincide)."""
+    def half(c):
+        return -((-c) // 2) if c < 0 else c // 2
+    return half(mv[0]), half(mv[1])
+
+
 # ------------------------------------------------------------- decode
 
 
-def decode_vp8_yuv(data: bytes):
-    """Decode a VP8 keyframe -> (y, u, v, width, height); planes are
-    uint8 numpy arrays cropped to the frame size (u/v at half
-    resolution, ceil-divided)."""
-    h, bd = _parse_headers(data)
-    mb_w, mb_h = h.mb_w, h.mb_h
-    if mb_w * mb_h > 1 << 16:
-        raise ValueError("VP8 frame too large for the fixture tier")
-    mbs = _read_modes(bd, h, mb_w, mb_h)
-    parts = _token_partitions(data, h)
+def _frame_quants(h) -> list:
+    """One _Quant per segment (all four equal without segmentation)."""
     quants = []
     for seg in range(4):
-        if h.segmentation:
-            qi = (h.seg_qi[seg] if h.seg_abs
-                  else h.q_index + h.seg_qi[seg])
-        else:
-            qi = h.q_index
-        d = h.q_deltas
-        quants.append(_Quant(_clamp_qi(qi), d[0], d[1], d[2], d[3], d[4]))
+        qi = ((h.seg_qi[seg] if h.seg_abs
+               else h.q_index + h.seg_qi[seg])
+              if h.segmentation else h.q_index)
+        quants.append(_Quant(_clamp_qi(qi), *h.q_deltas))
+    return quants
+
+
+def _reconstruct(h, mbs, data: bytes, refs=None):
+    """The macroblock loop of every VP8 frame: per-segment quantizers,
+    skip or coefficient read, intra prediction or motion compensation
+    from ``refs`` (reference name -> MB-aligned (y, u, v) planes), then
+    the loop filter. A key frame is a frame whose MBs are all intra.
+    Returns the MB-aligned (yp, up, vp) int32 planes."""
+    parts = _token_partitions(data, h)
+    quants = _frame_quants(h)
+    mb_w, mb_h = h.mb_w, h.mb_h
     yp = np.zeros((mb_h * 16, mb_w * 16), dtype=np.int32)
     up = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
     vp = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
+    ext = {}                    # reference name -> extended planes
     ctx = _NzCtx(mb_w)
     for my in range(mb_h):
         ctx.start_row()
         bd_t = parts[my % len(parts)]
         for mx in range(mb_w):
             mb = mbs[my][mx]
-            has_y2 = mb.ymode != B_PRED
+            has_y2 = mb.is_inter or mb.ymode != B_PRED
             if mb.skip:
                 y_res = np.zeros((16, 16), dtype=np.int32)
-                u_res = np.zeros((8, 8), dtype=np.int32)
-                v_res = np.zeros((8, 8), dtype=np.int32)
+                u_res = v_res = np.zeros((8, 8), dtype=np.int32)
                 _mb_skip_ctx(ctx, mx, has_y2)
                 mb.has_nonzero = False
             else:
-                q = quants[mb.segment]
-                y_res, u_res, v_res, any_nz = _mb_coeffs(
-                    bd_t, h, q, ctx, mx, has_y2)
-                mb.has_nonzero = any_nz
-            _predict_luma(mb, yp, mx, my, mb_w, y_res)
-            _predict_chroma(mb.uvmode, up, mx, my, u_res)
-            _predict_chroma(mb.uvmode, vp, mx, my, v_res)
+                y_res, u_res, v_res, mb.has_nonzero = _mb_coeffs(
+                    bd_t, h, quants[mb.segment], ctx, mx, has_y2)
+            if not mb.is_inter:
+                _predict_luma(mb, yp, mx, my, mb_w, y_res)
+                _predict_chroma(mb.uvmode, up, mx, my, u_res)
+                _predict_chroma(mb.uvmode, vp, mx, my, v_res)
+                continue
+            if mb.ref not in ext:
+                ext[mb.ref] = tuple(_extend(p) for p in refs[mb.ref])
+            ey, eu, ev = ext[mb.ref]
+            pred = _mc_block(ey, my * 16, mx * 16, 16, 16, *mb.mv)
+            yp[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = np.clip(
+                pred + y_res, 0, 255)
+            cmv = _chroma_mv(mb.mv)
+            for eplane, out, res in ((eu, up, u_res), (ev, vp, v_res)):
+                pred = _mc_block(eplane, my * 8, mx * 8, 8, 8, *cmv)
+                out[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = np.clip(
+                    pred + res, 0, 255)
     _apply_loop_filter(h, mbs, yp, up, vp, mb_w, mb_h)
-    w, hh = h.width, h.height
+    return yp, up, vp
+
+
+def _crop(planes, w: int, hh: int):
+    """MB-aligned planes -> uint8 (y, u, v) of the frame size (u/v at
+    half resolution, ceil-divided)."""
+    yp, up, vp = planes
     cw, ch = (w + 1) // 2, (hh + 1) // 2
     return (yp[:hh, :w].astype(np.uint8), up[:ch, :cw].astype(np.uint8),
-            vp[:ch, :cw].astype(np.uint8), w, hh)
+            vp[:ch, :cw].astype(np.uint8))
+
+
+def _keyframe(data: bytes):
+    """Key-frame header and mode records -> (header, MB grid)."""
+    h, bd = _parse_headers(data)
+    if h.mb_w * h.mb_h > 1 << 16:
+        raise ValueError("VP8 frame too large for the fixture tier")
+    return h, _read_modes(bd, h, h.mb_w, h.mb_h)
+
+
+def decode_vp8_yuv(data: bytes):
+    """Decode a VP8 keyframe -> (y, u, v, width, height); planes are
+    uint8 numpy arrays cropped to the frame size (u/v at half
+    resolution, ceil-divided)."""
+    h, mbs = _keyframe(data)
+    y, u, v = _crop(_reconstruct(h, mbs, data), h.width, h.height)
+    return y, u, v, h.width, h.height
 
 
 def yuv_to_rgb(y: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.ndarray:
@@ -1389,14 +1505,17 @@ def rgb_to_yuv420(img: np.ndarray):
             np.clip(vs, 0, 255).astype(np.uint8))
 
 
-def decode_vp8(data: bytes) -> np.ndarray:
-    """VP8 keyframe -> (h, w, 4) RGBA uint8 (opaque alpha)."""
-    y, u, v, w, hh = decode_vp8_yuv(data)
-    rgb = yuv_to_rgb(y, u, v)
-    out = np.empty((hh, w, 4), dtype=np.uint8)
-    out[:, :, :3] = rgb
+def yuv_to_rgba(y: np.ndarray, u: np.ndarray, v: np.ndarray) -> np.ndarray:
+    """:func:`yuv_to_rgb` with an opaque alpha channel."""
+    out = np.empty((*y.shape, 4), dtype=np.uint8)
+    out[:, :, :3] = yuv_to_rgb(y, u, v)
     out[:, :, 3] = 255
     return out
+
+
+def decode_vp8(data: bytes) -> np.ndarray:
+    """VP8 keyframe -> (h, w, 4) RGBA uint8 (opaque alpha)."""
+    return yuv_to_rgba(*decode_vp8_yuv(data)[:3])
 
 
 # ------------------------------------------------------------- encoder
@@ -1428,15 +1547,239 @@ def _choose_modes(mb_w, mb_h, plan: str):
     return mbs
 
 
-def _quantize_block(res4, qdc, qac):
-    """Truncating quantizer -> natural-order int coeff list[16]."""
-    co = fdct4x4(res4)
-    out = [0] * 16
+def _qdiv(c: int, q: int) -> int:
+    """Truncating quantizer step (rounds toward zero)."""
+    return int(np.sign(c)) * (abs(c) // q)
+
+
+def _code_block(blk, qdc: int, qac: int, exact: bool, what: str):
+    """Quantize one 4x4 residual -> natural-order coeff list[16].
+    ``exact`` codes a constant block so it reconstructs exactly."""
+    if exact:
+        r0 = int(blk[0, 0])
+        if not np.all(blk == r0):
+            raise ValueError(f"exact VP8 encode needs {what}")
+        return [2 * r0] + [0] * 15
+    co = fdct4x4(blk)
+    return [_qdiv(int(co[i >> 2][i & 3]), qdc if i == 0 else qac)
+            for i in range(16)]
+
+
+def _code_luma16(src, pred, q, exact: bool):
+    """Code a 16x16-predicted luma MB (Y2 + 16 AC blocks) -> (y2
+    coeffs, subblock coeffs, reconstruction through the decoder's
+    inverse path)."""
+    resid = src - pred
+    if exact:
+        r0 = int(resid[0, 0])
+        if not np.all(resid == r0):
+            raise ValueError("exact VP8 encode needs per-MB-constant "
+                             "luma")
+        y2q = [8 * r0] + [0] * 15
+        subq = [[0] * 16 for _ in range(16)]
+    else:
+        raw = [fdct4x4(resid[(i >> 2) * 4:(i >> 2) * 4 + 4,
+                             (i & 3) * 4:(i & 3) * 4 + 4])
+               for i in range(16)]
+        dcs = np.array([co[0][0] for co in raw],
+                       dtype=np.int32).reshape(4, 4)
+        y2co = fwalsh4x4(dcs)
+        y2q = [_qdiv(int(y2co[i >> 2][i & 3]), q.y2dc if i == 0
+                     else q.y2ac) for i in range(16)]
+        subq = [[0] + [_qdiv(int(co[i >> 2][i & 3]), q.y1ac)
+                       for i in range(1, 16)] for co in raw]
+    dcs_dq = iwalsh4x4(_dequant(y2q, q.y2dc, q.y2ac))
+    y_res = np.zeros((16, 16), dtype=np.int32)
     for i in range(16):
-        q = qdc if i == 0 else qac
-        c = int(co[i >> 2][i & 3])
-        out[i] = int(np.sign(c)) * (abs(c) // q)
+        r4, c4 = i >> 2, i & 3
+        dq = _dequant(subq[i], q.y1dc, q.y1ac)
+        dq[0][0] = int(dcs_dq[r4][c4])
+        y_res[r4 * 4:r4 * 4 + 4, c4 * 4:c4 * 4 + 4] = idct4x4(dq)
+    return y2q, subq, np.clip(pred + y_res, 0, 255)
+
+
+def _code_bpred(mb, src, recon, mx, my, mb_w, q, exact: bool):
+    """B_PRED luma: predict, code and reconstruct each subblock in
+    scan order (prediction depends on reconstruction)."""
+    subq = []
+    for i in range(16):
+        by, bx = my * 16 + (i >> 2) * 4, mx * 16 + (i & 3) * 4
+        pred = _pred_sub(recon, mb.bmodes[i], i, mx, my, mb_w)
+        bq = _code_block(src[by:by + 4, bx:bx + 4] - pred, q.y1dc,
+                         q.y1ac, exact, "per-subblock-constant luma")
+        subq.append(bq)
+        recon[by:by + 4, bx:bx + 4] = np.clip(
+            pred + idct4x4(_dequant(bq, q.y1dc, q.y1ac)), 0, 255)
+    return subq
+
+
+def _code_chroma(src, pred, q, exact: bool):
+    """Code one 8x8 chroma MB -> (4 coeff lists, reconstruction)."""
+    resid = src - pred
+    qs = []
+    res = np.zeros((8, 8), dtype=np.int32)
+    for i in range(4):
+        r2, c2 = i >> 1, i & 1
+        bq = _code_block(resid[r2 * 4:r2 * 4 + 4, c2 * 4:c2 * 4 + 4],
+                         q.uvdc, q.uvac, exact, "per-MB-constant chroma")
+        qs.append(bq)
+        res[r2 * 4:r2 * 4 + 4, c2 * 4:c2 * 4 + 4] = idct4x4(
+            _dequant(bq, q.uvdc, q.uvac))
+    return qs, np.clip(pred + res, 0, 255)
+
+
+def _pad_source(y, u, v, mb_w: int, mb_h: int):
+    """Source planes -> MB-aligned int32 planes by edge replication."""
+    out = []
+    for src, n in ((y, 16), (u, 8), (v, 8)):
+        sh, sw = src.shape
+        dst = np.zeros((mb_h * n, mb_w * n), dtype=np.int32)
+        dst[:sh, :sw] = src
+        dst[:sh, sw:] = src[:, -1:]
+        dst[sh:, :] = dst[sh - 1:sh, :]
+        out.append(dst)
     return out
+
+
+def _code_mb(mb, src, recon, mx, my, mb_w, q, exact=False, ext=None):
+    """The encoder side of :func:`_reconstruct` for one MB: predict
+    (intra, or motion-compensated from the extended reference planes
+    ``ext``), code and reconstruct luma and chroma into ``recon``, and
+    set the MB's skip flag. Returns its coefficient blocks."""
+    (yp, up, vp), (ry, ru, rv) = src, recon
+    x0, y0, cx0, cy0 = mx * 16, my * 16, mx * 8, my * 8
+    blocks = {"y2": None}
+    if mb.is_inter or mb.ymode != B_PRED:
+        pred = (_mc_block(ext[0], y0, x0, 16, 16, *mb.mv) if mb.is_inter
+                else _pred_mb(mb.ymode, ry, mx, my, 16))
+        blocks["y2"], blocks["y"], ry[y0:y0 + 16, x0:x0 + 16] = \
+            _code_luma16(yp[y0:y0 + 16, x0:x0 + 16], pred, q, exact)
+    else:
+        blocks["y"] = _code_bpred(mb, yp, ry, mx, my, mb_w, q, exact)
+    cmv = _chroma_mv(mb.mv)
+    for key, plane, rplane, k in (("u", up, ru, 1), ("v", vp, rv, 2)):
+        pred = (_mc_block(ext[k], cy0, cx0, 8, 8, *cmv) if mb.is_inter
+                else _pred_mb(mb.uvmode, rplane, mx, my, 8))
+        blocks[key], rplane[cy0:cy0 + 8, cx0:cx0 + 8] = _code_chroma(
+            plane[cy0:cy0 + 8, cx0:cx0 + 8], pred, q, exact)
+    mb.skip = int(not any(any(b) for b in (
+        *blocks["y"], *blocks["u"], *blocks["v"], blocks["y2"] or ())))
+    mb.has_nonzero = not mb.skip
+    return blocks
+
+
+def _write_segment_filter_quant(be, seg_deltas, filter_type: int,
+                                filter_level: int, sharpness: int,
+                                partitions: int, qindex: int):
+    """Mirror of :func:`_read_segment_filter_quant`: delta segment
+    quantizers from ``seg_deltas`` (None: segmentation off), no
+    loop-filter or quantizer deltas."""
+    be.put(1 if seg_deltas else 0)  # segmentation_enabled
+    if seg_deltas:
+        be.put(1)  # update_mb_segmentation_map
+        be.put(1)  # update_segment_feature_data
+        be.put(0)  # delta (not absolute) quantizers
+        for d in seg_deltas:
+            if d:
+                be.put(1)
+                be.signed(d, 7)
+            else:
+                be.put(0)
+        for _ in range(4):
+            be.put(0)  # no per-segment loop-filter deltas
+        for _ in range(3):
+            be.put(0)  # segment tree probs stay at 255
+    be.put(filter_type & 1)
+    be.literal(filter_level, 6)
+    be.literal(sharpness, 3)
+    be.put(0)  # lf delta
+    be.literal({1: 0, 2: 1, 4: 2, 8: 3}[partitions], 2)
+    be.literal(qindex, 7)
+    for _ in range(5):
+        be.put(0)  # q deltas absent
+
+
+def _write_coeff_probs(be, skip_prob: int):
+    """Mirror of :func:`_read_coeff_probs`: no probability updates,
+    skip flag on."""
+    for t in range(4):
+        for b in range(8):
+            for c in range(3):
+                for k in range(11):
+                    be.put(0, COEFF_UPDATE_PROBS[t][b][c][k])
+    be.put(1)  # mb_no_coeff_skip
+    be.literal(skip_prob, 8)
+
+
+def _write_tokens(mbs, coeffs, mb_w: int, mb_h: int,
+                  partitions: int) -> list:
+    """Token partitions, the mirror of the decoder's contexts ->
+    bytes per partition (MB rows round-robin)."""
+    encs = [_BoolEnc() for _ in range(partitions)]
+    probs = DEFAULT_COEFF_PROBS
+    ctx = _NzCtx(mb_w)
+    for my in range(mb_h):
+        ctx.start_row()
+        et = encs[my % partitions]
+        for mx in range(mb_w):
+            mb = mbs[my][mx]
+            has_y2 = mb.is_inter or mb.ymode != B_PRED
+            if mb.skip:
+                _mb_skip_ctx(ctx, mx, has_y2)
+                continue
+            blocks = coeffs[my][mx]
+            if has_y2:
+                c = ((1 if ctx.above_y2[mx] else 0)
+                     + (1 if ctx.left_y2 else 0))
+                nz = _write_block(et, probs[1], 0, c, blocks["y2"])
+                ctx.above_y2[mx] = ctx.left_y2 = nz
+                first, ptype = 1, 0
+            else:
+                first, ptype = 0, 3
+            for i in range(16):
+                r4, c4 = i >> 2, i & 3
+                c = ((1 if ctx.above_y[mx][c4] else 0)
+                     + (1 if ctx.left_y[r4] else 0))
+                nz = _write_block(et, probs[ptype], first, c,
+                                  blocks["y"][i])
+                ctx.above_y[mx][c4] = ctx.left_y[r4] = nz
+            for key, anz, lnz in (("u", ctx.above_u, ctx.left_u),
+                                  ("v", ctx.above_v, ctx.left_v)):
+                for i in range(4):
+                    r2, c2 = i >> 1, i & 1
+                    c = ((1 if anz[mx][c2] else 0)
+                         + (1 if lnz[r2] else 0))
+                    nz = _write_block(et, probs[2], 0, c,
+                                      blocks[key][i])
+                    anz[mx][c2] = lnz[r2] = nz
+    return [e.bytes() for e in encs]
+
+
+def _finish_frame(part1: bytes, parts: list, mbs, recon, mb_w: int,
+                  mb_h: int, filter_level: int, filter_type: int = 0,
+                  sharpness: int = 0, size=None) -> bytes:
+    """Run the decoder's loop filter over the encoder's ``recon``
+    planes (in place) and assemble the frame: tag, then for a key
+    frame (``size`` = (w, h)) the start code and dimensions, the first
+    partition, the partition size table and the token partitions."""
+    fh = _FrameHeader()
+    fh.filter_type = filter_type & 1
+    fh.filter_level = filter_level
+    fh.sharpness = sharpness
+    fh.segmentation = 0
+    fh.lf_delta = 0
+    _apply_loop_filter(fh, mbs, *recon, mb_w, mb_h)
+    tag = (len(part1) << 5) | (1 << 4) | (0 if size else 1)  # shown
+    out = bytearray((tag & 0xFFFFFF).to_bytes(3, "little"))
+    if size:
+        out += b"\x9d\x01\x2a"
+        out += size[0].to_bytes(2, "little") + size[1].to_bytes(2, "little")
+    out += part1
+    for p in parts[:-1]:
+        out += (len(p) & 0xFFFFFF).to_bytes(3, "little")
+    for p in parts:
+        out += p
+    return bytes(out)
 
 
 def encode_vp8_yuv(y, u, v, qindex: int = 0, plan: str = "dc",
@@ -1475,277 +1818,35 @@ def encode_vp8_yuv(y, u, v, qindex: int = 0, plan: str = "dc",
         raise ValueError("partitions must be 1/2/4/8")
     mb_w = (w + 15) >> 4
     mb_h = (hh + 15) >> 4
-    # pad planes to MB multiples by edge replication
-    yp = np.zeros((mb_h * 16, mb_w * 16), dtype=np.int32)
-    yp[:hh, :w] = y
-    yp[:hh, w:] = y[:, -1:]
-    yp[hh:, :] = yp[hh - 1:hh, :]
-    ch, cw = u.shape
-    up = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-    vp = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-    for src, dst in ((u, up), (v, vp)):
-        dst[:ch, :cw] = src
-        dst[:ch, cw:] = src[:, -1:]
-        dst[ch:, :] = dst[ch - 1:ch, :]
+    src = _pad_source(y, u, v, mb_w, mb_h)
     seg_deltas = list(segments or []) + [0] * (4 - len(segments or []))
     quants = [_Quant(_clamp_qi(qindex + d)) for d in seg_deltas]
     mbs = _choose_modes(mb_w, mb_h, plan)
     n_seg = len(segments) if segments else 0
-    for my in range(mb_h):
-        for mx in range(mb_w):
-            mbs[my][mx].segment = (mx + my) % n_seg if n_seg else 0
-    # ---- pass 1: plan coefficients + reconstruct (shared inverse)
-    ry = np.zeros_like(yp)
-    ru = np.zeros_like(up)
-    rv = np.zeros_like(vp)
-    coeff_store = [[None] * mb_w for _ in range(mb_h)]
+    recon = [np.zeros_like(p) for p in src]
+    coeffs = [[None] * mb_w for _ in range(mb_h)]
     for my in range(mb_h):
         for mx in range(mb_w):
             mb = mbs[my][mx]
-            q = quants[mb.segment]
-            has_y2 = mb.ymode != B_PRED
-            x0, y0 = mx * 16, my * 16
-            blocks = {"y2": None, "y": [], "u": [], "v": []}
-            if mb.ymode != B_PRED:
-                above = ry[y0 - 1, x0:x0 + 16] if my > 0 else None
-                left = ry[y0:y0 + 16, x0 - 1] if mx > 0 else None
-                aleft = (ry[y0 - 1, x0 - 1]
-                         if (mx > 0 and my > 0) else None)
-                pred = _pred16(mb.ymode, above, left, aleft, 16)
-                resid = yp[y0:y0 + 16, x0:x0 + 16] - pred
-                if exact:
-                    r0 = int(resid[0, 0])
-                    if not np.all(resid == r0):
-                        raise ValueError(
-                            "exact VP8 encode needs per-MB-constant "
-                            "luma")
-                    blocks["y2"] = [8 * r0] + [0] * 15
-                    blocks["y"] = [[0] * 16 for _ in range(16)]
-                else:
-                    subq = []
-                    dcs = np.zeros((4, 4), dtype=np.int32)
-                    raw = []
-                    for i in range(16):
-                        r4, c4 = i >> 2, i & 3
-                        blk = resid[r4 * 4:r4 * 4 + 4, c4 * 4:c4 * 4 + 4]
-                        co = fdct4x4(blk)
-                        dcs[r4][c4] = co[0][0]
-                        raw.append(co)
-                    y2co = fwalsh4x4(dcs)
-                    y2q = [0] * 16
-                    for i in range(16):
-                        qq = q.y2dc if i == 0 else q.y2ac
-                        c = int(y2co[i >> 2][i & 3])
-                        y2q[i] = int(np.sign(c)) * (abs(c) // qq)
-                    blocks["y2"] = y2q
-                    for co in raw:
-                        bq = [0] * 16
-                        for i in range(1, 16):
-                            c = int(co[i >> 2][i & 3])
-                            bq[i] = int(np.sign(c)) * (abs(c) // q.y1ac)
-                        subq.append(bq)
-                    blocks["y"] = subq
-                # reconstruct luma through the shared inverse
-                dcs_dq = iwalsh4x4(_dequant(blocks["y2"], q.y2dc, q.y2ac))
-                y_res = np.zeros((16, 16), dtype=np.int32)
-                for i in range(16):
-                    r4, c4 = i >> 2, i & 3
-                    dq = _dequant(blocks["y"][i], q.y1dc, q.y1ac)
-                    dq[0][0] = int(dcs_dq[r4][c4])
-                    y_res[r4 * 4:r4 * 4 + 4, c4 * 4:c4 * 4 + 4] = \
-                        idct4x4(dq)
-                ry[y0:y0 + 16, x0:x0 + 16] = np.clip(pred + y_res, 0, 255)
-            else:
-                # B_PRED: per-subblock predict/encode/reconstruct in
-                # scan order (prediction depends on reconstruction)
-                y_res = np.zeros((16, 16), dtype=np.int32)
-                subq = []
-                for i in range(16):
-                    r4, c4 = i >> 2, i & 3
-                    bx, by = x0 + c4 * 4, y0 + r4 * 4
-                    # mirror _predict_luma's edge conventions
-                    if r4 == 0 and my == 0:
-                        a = np.full(4, 127, np.int32)
-                        ar = np.full(4, 127, np.int32)
-                        al = 127
-                    else:
-                        a = ry[by - 1, bx:bx + 4].copy()
-                        if c4 < 3:
-                            ar = ry[by - 1, bx + 4:bx + 8].copy()
-                        else:
-                            if my == 0:
-                                ar = np.full(4, 127, np.int32)
-                            elif mx == mb_w - 1:
-                                ar = np.full(4, int(ry[y0 - 1, x0 + 15]),
-                                             np.int32)
-                            else:
-                                ar = ry[y0 - 1, x0 + 16:x0 + 20].copy()
-                        left_ok = bx > 0 or mx > 0
-                        al = int(ry[by - 1, bx - 1]) if left_ok else 129
-                    ll = (ry[by:by + 4, bx - 1].copy()
-                          if (bx > 0 or mx > 0)
-                          else np.full(4, 129, np.int32))
-                    pred = _pred4(mb.bmodes[i], a, al, ll, ar)
-                    blk = yp[by:by + 4, bx:bx + 4] - pred
-                    if exact:
-                        r0 = int(blk[0, 0])
-                        if not np.all(blk == r0):
-                            raise ValueError("exact VP8 encode needs "
-                                             "per-subblock-constant "
-                                             "luma")
-                        bq = [2 * r0] + [0] * 15
-                    else:
-                        bq = _quantize_block(blk, q.y1dc, q.y1ac)
-                    subq.append(bq)
-                    res = idct4x4(_dequant(bq, q.y1dc, q.y1ac))
-                    y_res[r4 * 4:r4 * 4 + 4, c4 * 4:c4 * 4 + 4] = res
-                    ry[by:by + 4, bx:bx + 4] = np.clip(pred + res, 0, 255)
-                blocks["y"] = subq
-            # chroma (shared for both luma paths)
-            for plane, rplane, key in ((up, ru, "u"), (vp, rv, "v")):
-                cx0, cy0 = mx * 8, my * 8
-                above = rplane[cy0 - 1, cx0:cx0 + 8] if my > 0 else None
-                left = rplane[cy0:cy0 + 8, cx0 - 1] if mx > 0 else None
-                aleft = (rplane[cy0 - 1, cx0 - 1]
-                         if (mx > 0 and my > 0) else None)
-                pred = _pred16(mb.uvmode, above, left, aleft, 8)
-                resid = plane[cy0:cy0 + 8, cx0:cx0 + 8] - pred
-                qs = []
-                res = np.zeros((8, 8), dtype=np.int32)
-                for i in range(4):
-                    r2, c2 = i >> 1, i & 1
-                    blk = resid[r2 * 4:r2 * 4 + 4, c2 * 4:c2 * 4 + 4]
-                    if exact:
-                        r0 = int(blk[0, 0])
-                        if not np.all(blk == r0):
-                            raise ValueError("exact VP8 encode needs "
-                                             "per-MB-constant chroma")
-                        bq = [2 * r0] + [0] * 15
-                    else:
-                        bq = _quantize_block(blk, q.uvdc, q.uvac)
-                    qs.append(bq)
-                    res[r2 * 4:r2 * 4 + 4, c2 * 4:c2 * 4 + 4] = idct4x4(
-                        _dequant(bq, q.uvdc, q.uvac))
-                blocks[key] = qs
-                rplane[cy0:cy0 + 8, cx0:cx0 + 8] = np.clip(
-                    pred + res, 0, 255)
-            coeff_store[my][mx] = blocks
-            mb.skip = int(
-                all(all(cc == 0 for cc in b) for b in blocks["y"])
-                and all(all(cc == 0 for cc in b) for b in blocks["u"])
-                and all(all(cc == 0 for cc in b) for b in blocks["v"])
-                and (blocks["y2"] is None
-                     or all(cc == 0 for cc in blocks["y2"])))
-            mb.has_nonzero = not mb.skip
-    # ---- pass 2: first partition (headers + modes)
+            mb.segment = (mx + my) % n_seg if n_seg else 0
+            coeffs[my][mx] = _code_mb(mb, src, recon, mx, my, mb_w,
+                                      quants[mb.segment], exact)
     be = _BoolEnc()
     be.put(0)  # color space
     be.put(0)  # clamping
-    if segments:
-        be.put(1)  # segmentation_enabled
-        be.put(1)  # update_mb_segmentation_map
-        be.put(1)  # update_segment_feature_data
-        be.put(0)  # delta (not absolute) quantizers
-        for d in seg_deltas:
-            if d:
-                be.put(1)
-                be.signed(d, 7)
-            else:
-                be.put(0)
-        for _ in range(4):
-            be.put(0)  # no per-segment loop-filter deltas
-        for _ in range(3):
-            be.put(0)  # segment tree probs stay at 255
-    else:
-        be.put(0)  # segmentation_enabled
-    be.put(filter_type & 1)
-    be.literal(filter_level, 6)
-    be.literal(sharpness, 3)
-    be.put(0)  # lf delta
-    be.literal({1: 0, 2: 1, 4: 2, 8: 3}[partitions], 2)
-    be.literal(qindex, 7)
-    for _ in range(5):
-        be.put(0)  # q deltas absent
+    _write_segment_filter_quant(be, seg_deltas if segments else None,
+                                filter_type, filter_level, sharpness,
+                                partitions, qindex)
     be.put(0)  # refresh entropy
-    for t in range(4):
-        for b in range(8):
-            for c in range(3):
-                for k in range(11):
-                    be.put(0, COEFF_UPDATE_PROBS[t][b][c][k])
     skip_prob = 128
-    be.put(1)  # mb_no_coeff_skip
-    be.literal(skip_prob, 8)
+    _write_coeff_probs(be, skip_prob)
     _write_modes(be, skip_prob, mbs, mb_w, mb_h, True,
                  seg_enabled=bool(segments))
-    part1 = be.bytes()
-    # ---- pass 3: token partitions (mirror the decoder's contexts)
-    encs = [_BoolEnc() for _ in range(partitions)]
-    ctx = _NzCtx(mb_w)
-    for my in range(mb_h):
-        ctx.start_row()
-        et = encs[my % partitions]
-        for mx in range(mb_w):
-            mb = mbs[my][mx]
-            has_y2 = mb.ymode != B_PRED
-            if mb.skip:
-                _mb_skip_ctx(ctx, mx, has_y2)
-                continue
-            blocks = coeff_store[my][mx]
-            probs = [[[DEFAULT_COEFF_PROBS[t][b][c] for c in range(3)]
-                      for b in range(8)] for t in range(4)]
-            if has_y2:
-                c = ((1 if ctx.above_y2[mx] else 0)
-                     + (1 if ctx.left_y2 else 0))
-                nz = _write_block(et, probs[1], 0, c, blocks["y2"])
-                ctx.above_y2[mx] = ctx.left_y2 = nz
-                first, ptype = 1, 0
-            else:
-                first, ptype = 0, 3
-            for i in range(16):
-                r4, c4 = i >> 2, i & 3
-                c = ((1 if ctx.above_y[mx][c4] else 0)
-                     + (1 if ctx.left_y[r4] else 0))
-                nz = _write_block(et, probs[ptype], first, c,
-                                  blocks["y"][i])
-                ctx.above_y[mx][c4] = ctx.left_y[r4] = nz
-            for key, anz, lnz in (("u", ctx.above_u, ctx.left_u),
-                                  ("v", ctx.above_v, ctx.left_v)):
-                for i in range(4):
-                    r2, c2 = i >> 1, i & 1
-                    c = ((1 if anz[mx][c2] else 0)
-                         + (1 if lnz[r2] else 0))
-                    nz = _write_block(et, probs[2], 0, c,
-                                      blocks[key][i])
-                    anz[mx][c2] = lnz[r2] = nz
-    parts = [e.bytes() for e in encs]
-    # ---- assemble
-    tag = (len(part1) << 5) | (0 << 4) | (0 << 1) | 0
-    tag |= 1 << 4  # show_frame
-    out = bytearray()
-    out += bytes((tag & 0xFF, (tag >> 8) & 0xFF, (tag >> 16) & 0xFF))
-    out += b"\x9d\x01\x2a"
-    out += bytes((w & 0xFF, (w >> 8) & 0x3F))
-    out += bytes((hh & 0xFF, (hh >> 8) & 0x3F))
-    out += part1
-    for p in parts[:-1]:
-        out += bytes((len(p) & 0xFF, (len(p) >> 8) & 0xFF,
-                      (len(p) >> 16) & 0xFF))
-    for p in parts:
-        out += p
-    # expected output: encoder reconstruction + the shared loop filter
-    if filter_level > 0:
-        fh = _FrameHeader()
-        fh.filter_type = filter_type & 1
-        fh.filter_level = filter_level
-        fh.sharpness = sharpness
-        fh.segmentation = 0
-        fh.lf_delta = 0
-        _apply_loop_filter(fh, mbs, ry, ru, rv, mb_w, mb_h)
-    cw2, ch2 = (w + 1) // 2, (hh + 1) // 2
-    recon = (ry[:hh, :w].astype(np.uint8),
-             ru[:ch2, :cw2].astype(np.uint8),
-             rv[:ch2, :cw2].astype(np.uint8))
-    return bytes(out), recon
+    payload = _finish_frame(
+        be.bytes(), _write_tokens(mbs, coeffs, mb_w, mb_h, partitions),
+        mbs, recon, mb_w, mb_h, filter_level, filter_type, sharpness,
+        size=(w, hh))
+    return payload, _crop(recon, w, hh)
 
 
 def webp_lossy_bytes(payload: bytes) -> bytes:
@@ -1768,12 +1869,7 @@ def webp_lossy_from_rgb(img: np.ndarray, qindex: int = 0,
         y, u, v, qindex=qindex, plan=plan, exact=exact,
         filter_level=filter_level, filter_type=filter_type,
         partitions=partitions)
-    rgb = yuv_to_rgb(ry, ru, rv)
-    hh, w = ry.shape
-    expect = np.empty((hh, w, 4), dtype=np.uint8)
-    expect[:, :, :3] = rgb
-    expect[:, :, 3] = 255
-    return webp_lossy_bytes(payload), expect
+    return webp_lossy_bytes(payload), yuv_to_rgba(ry, ru, rv)
 
 
 def webp_lossy_rgba(img: np.ndarray, qindex: int = 0,

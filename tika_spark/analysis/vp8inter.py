@@ -1,19 +1,22 @@
-"""VP8 inter-frame (P-frame) decode + fixture encoder (RFC 6386).
+"""VP8 frame chains (RFC 6386): the stateful decoder, interframe
+parsing and the interframe fixture encoder.
 
-Closes the vp8.py keyframe decoder's documented inter-coded hook with
-real motion-compensated prediction: the interframe header layout
-(refresh/copy/sign-bias flags, prob_intra/last/gf, mode and MV prob
-update fields), per-MB inter mode parsing with the three-neighbor
-near-MV survey (weights 2/2/1, last-entry merge, count-indexed mode
-contexts, the zero-MV count slot, and the 16-pixel-border clamp), the
-ZEROMV / NEARESTMV / NEARMV / NEWMV modes with NEWMV coded as a
-residual against the survey's best MV, the two-stream MV component
-entropy coder (short tree 0-7, long form bits 0-2 then 9-4 with the
-forced bit 3 when no higher bit is set, trailing sign), and six-tap
-subpixel motion compensation (8-phase filters, two-pass with
-intermediate clamping) over edge-extended reference planes. Intra MBs
-inside interframes reconstruct through the shared keyframe predictors;
-golden / altref reference selection is parsed and buffered.
+:class:`VP8Decoder` decodes key and inter frames through the one
+macroblock loop in vp8.py (``_reconstruct``: intra prediction or
+six-tap motion compensation per MB, then the loop filter) and keeps
+the last / golden / altref references as the loop's MB-aligned
+planes, decoded padding included. This module parses what only
+interframes carry: the header layout (refresh/copy/sign-bias flags,
+prob_intra/last/gf, mode and MV prob update fields), per-MB inter
+mode records with the three-neighbor near-MV survey (weights 2/2/1,
+last-entry merge, count-indexed mode contexts, the zero-MV count
+slot, and the 16-pixel-border clamp), the ZEROMV / NEARESTMV /
+NEARMV / NEWMV modes with NEWMV coded as a residual against the
+survey's best MV, and the two-stream MV component entropy coder
+(short tree 0-7, long form bits 0-2 then 9-4 with the forced bit 3
+when no higher bit is set, trailing sign). The interframe encoder
+shares the key-frame encoder's per-MB code-and-reconstruct step,
+token writer and frame assembly.
 
 Deliberate drops (documented, raise cleanly): SPLITMV (per-subblock
 MVs) and the bilinear-filter profiles (version != 0).
@@ -43,14 +46,12 @@ from __future__ import annotations
 import numpy as np
 
 from tika_spark.analysis.vp8 import (
-    B_PRED, BMODE_TREE, COEFF_UPDATE_PROBS, DC_PRED,
-    DEFAULT_COEFF_PROBS, SEGMENT_TREE, UV_MODE_TREE, _BoolDec,
-    _BoolEnc, _FrameHeader, _MBInfo, _NzCtx, _Quant,
-    _apply_loop_filter, _clamp_qi, _dequant, _mb_coeffs,
-    _mb_skip_ctx, _pred16, _predict_chroma, _predict_luma,
-    _quantize_block, _read_coeff_probs, _read_segment_filter_quant,
-    _token_partitions, _write_block, decode_vp8_yuv,
-    fdct4x4, fwalsh4x4, idct4x4, iwalsh4x4,
+    B_PRED, BMODE_TREE, DC_PRED, SEGMENT_TREE, UV_MODE_TREE, _BoolDec,
+    _BoolEnc, _FrameHeader, _MBInfo, _Quant, _clamp_qi, _code_mb,
+    _crop, _extend, _finish_frame, _keyframe, _pad_source,
+    _read_coeff_probs, _read_segment_filter_quant, _reconstruct,
+    _write_coeff_probs, _write_segment_filter_quant, _write_tokens,
+    yuv_to_rgba,
 )
 
 # --------------------------------------------------- tables (RFC 6386)
@@ -91,20 +92,6 @@ MV_PROBS = (
 MV_UPDATE_PROBS = tuple(tuple([252] * 19) for _ in range(2))
 
 SHORT_MV_TREE = (2, 8, 4, 6, 0, -1, -2, -3, 10, 12, -4, -5, -6, -7)
-
-# 8-phase six-tap subpixel filters (RFC 6386 section 14.1)
-SIXTAP = (
-    (0, 0, 128, 0, 0, 0),
-    (0, -6, 123, 12, -1, 0),
-    (2, -11, 108, 36, -8, 1),
-    (0, -9, 93, 50, -6, 0),
-    (3, -16, 77, 77, -16, 3),
-    (0, -6, 50, 93, -9, 0),
-    (1, -8, 36, 108, -11, 2),
-    (0, -1, 12, 123, -6, 0),
-)
-
-_BORDER = 32          # reference-plane edge extension (pixels)
 
 
 # --------------------------------------------------------- MV entropy
@@ -213,62 +200,6 @@ def _find_near_mvs(mbs, mx, my, mb_w, mb_h):
 
 def _mv_ref_probs(cnt):
     return tuple(MODE_CONTEXTS[min(cnt[i], 5)][i] for i in range(4))
-
-
-# ------------------------------------------------ motion compensation
-
-
-def _extend(plane: np.ndarray) -> np.ndarray:
-    """Edge-replicate by _BORDER on all sides (int32)."""
-    return np.pad(plane, _BORDER, mode="edge").astype(np.int32)
-
-
-def _mc_block(ext: np.ndarray, y0: int, x0: int, bh: int, bw: int,
-              mvy: int, mvx: int) -> np.ndarray:
-    """Six-tap motion-compensated (bh, bw) block from the extended
-    plane. ``y0``/``x0`` are unextended coordinates; MVs eighth-pel.
-    Two-pass filter with intermediate clamping; phase 0 short-cuts
-    to a copy."""
-    fy, fx = mvy & 7, mvx & 7
-    iy = y0 + (mvy >> 3) + _BORDER
-    ix = x0 + (mvx >> 3) + _BORDER
-    # clamp the access window into the extended plane (a wild NEWMV
-    # stays defined: the border replicates, like the reference's
-    # extended frame buffers)
-    h_ext, w_ext = ext.shape
-    iy = min(max(iy, 2), h_ext - bh - 3)
-    ix = min(max(ix, 2), w_ext - bw - 3)
-    if fx == 0 and fy == 0:
-        return ext[iy:iy + bh, ix:ix + bw].copy()
-    rows = bh + (5 if fy else 0)
-    ry0 = iy - (2 if fy else 0)
-    if fx:
-        t = SIXTAP[fx]
-        src = ext[ry0:ry0 + rows, ix - 2:ix + bw + 3]
-        acc = np.zeros((rows, bw), dtype=np.int32)
-        for k in range(6):
-            if t[k]:
-                acc += t[k] * src[:, k:k + bw]
-        tmp = np.clip((acc + 64) >> 7, 0, 255)
-    else:
-        tmp = ext[ry0:ry0 + rows, ix:ix + bw]
-    if fy:
-        t = SIXTAP[fy]
-        acc = np.zeros((bh, bw), dtype=np.int32)
-        for k in range(6):
-            if t[k]:
-                acc += t[k] * tmp[k:k + bh, :]
-        return np.clip((acc + 64) >> 7, 0, 255)
-    return tmp.astype(np.int32)
-
-
-def _chroma_mv(mv: tuple[int, int]) -> tuple[int, int]:
-    """Luma MV -> chroma MV at half resolution (truncate toward zero
-    — documented stand-in convention; fixtures use even-full-pel MVs
-    where all conventions coincide)."""
-    def half(c):
-        return -((-c) // 2) if c < 0 else c // 2
-    return half(mv[0]), half(mv[1])
 
 
 # --------------------------------------------------- interframe parse
@@ -387,9 +318,16 @@ def _read_modes_inter(bd, h, inter, mb_w, mb_h):
 # ------------------------------------------------- stateful decoding
 
 
+# the reference refresh of a key frame: all three buffers
+_KEY_REFRESH = {"copy_to_golden": 0, "copy_to_alt": 0,
+                "refresh_golden": 1, "refresh_alt": 1, "refresh_last": 1}
+
+
 class VP8Decoder:
     """Keyframe + interframe VP8 decoder with last/golden/altref
-    buffers (one instance per elementary stream)."""
+    buffers (one instance per elementary stream). Every frame decodes
+    through :func:`vp8._reconstruct`, and the buffers hold its
+    MB-aligned planes, decoded padding included."""
 
     def __init__(self):
         self.last = None            # (yp, up, vp) padded planes
@@ -398,92 +336,23 @@ class VP8Decoder:
         self.width = None
         self.height = None
 
-    # -- keyframe path: reuse vp8.py wholesale, keep padded planes
-
-    def _decode_keyframe(self, data: bytes):
-        y, u, v, w, hh = decode_vp8_yuv(data)
-        self.width, self.height = w, hh
-        mb_w, mb_h = (w + 15) >> 4, (hh + 15) >> 4
-        yp = np.zeros((mb_h * 16, mb_w * 16), dtype=np.int32)
-        up = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-        vp = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-        for src, dst in ((y, yp), (u, up), (v, vp)):
-            sh, sw = src.shape
-            dst[:sh, :sw] = src
-            dst[:sh, sw:] = src[:, -1:]
-            dst[sh:, :] = dst[sh - 1:sh, :]
-        planes = (yp, up, vp)
-        self.last = self.golden = self.altref = planes
-        return y, u, v
-
     def decode_yuv(self, data: bytes):
         """One frame -> (y, u, v) uint8 planes (cropped)."""
         data = bytes(data)
         if len(data) < 3:
             raise ValueError("short VP8 payload")
         if not (data[0] & 1):
-            return self._decode_keyframe(data)
-        if self.last is None:
+            h, mbs = _keyframe(data)
+            inter = _KEY_REFRESH
+        elif self.last is None:
             raise ValueError("VP8 interframe before any keyframe")
-        h, inter, bd = _parse_inter_headers(data, self.width,
-                                            self.height)
-        mb_w, mb_h = h.mb_w, h.mb_h
-        mbs = _read_modes_inter(bd, h, inter, mb_w, mb_h)
-        parts = _token_partitions(data, h)
-        quants = []
-        for seg in range(4):
-            qi = ((h.seg_qi[seg] if h.seg_abs
-                   else h.q_index + h.seg_qi[seg])
-                  if h.segmentation else h.q_index)
-            d = h.q_deltas
-            quants.append(_Quant(_clamp_qi(qi), d[0], d[1], d[2],
-                                 d[3], d[4]))
-        refs = {"last": self.last, "golden": self.golden,
-                "altref": self.altref}
-        ext = {name: tuple(_extend(p) for p in planes)
-               for name, planes in refs.items()}
-        yp = np.zeros((mb_h * 16, mb_w * 16), dtype=np.int32)
-        up = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-        vp = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-        ctx = _NzCtx(mb_w)
-        for my in range(mb_h):
-            ctx.start_row()
-            bd_t = parts[my % len(parts)]
-            for mx in range(mb_w):
-                mb = mbs[my][mx]
-                has_y2 = (mb.ymode != B_PRED if not mb.is_inter
-                          else True)
-                if mb.skip:
-                    y_res = np.zeros((16, 16), dtype=np.int32)
-                    u_res = np.zeros((8, 8), dtype=np.int32)
-                    v_res = np.zeros((8, 8), dtype=np.int32)
-                    _mb_skip_ctx(ctx, mx, has_y2)
-                    mb.has_nonzero = False
-                else:
-                    q = quants[mb.segment]
-                    y_res, u_res, v_res, any_nz = _mb_coeffs(
-                        bd_t, h, q, ctx, mx, has_y2)
-                    mb.has_nonzero = any_nz
-                if mb.is_inter:
-                    ey, eu, ev = ext[mb.ref]
-                    mvy, mvx = mb.mv
-                    pred = _mc_block(ey, my * 16, mx * 16, 16, 16,
-                                     mvy, mvx)
-                    yp[my * 16:my * 16 + 16, mx * 16:mx * 16 + 16] = \
-                        np.clip(pred + y_res, 0, 255)
-                    cmy, cmx = _chroma_mv(mb.mv)
-                    for eplane, out, res in ((eu, up, u_res),
-                                             (ev, vp, v_res)):
-                        pred = _mc_block(eplane, my * 8, mx * 8, 8, 8,
-                                         cmy, cmx)
-                        out[my * 8:my * 8 + 8, mx * 8:mx * 8 + 8] = \
-                            np.clip(pred + res, 0, 255)
-                else:
-                    _predict_luma(mb, yp, mx, my, mb_w, y_res)
-                    _predict_chroma(mb.uvmode, up, mx, my, u_res)
-                    _predict_chroma(mb.uvmode, vp, mx, my, v_res)
-        _apply_loop_filter(h, mbs, yp, up, vp, mb_w, mb_h)
-        planes = (yp, up, vp)
+        else:
+            h, inter, bd = _parse_inter_headers(data, self.width,
+                                                self.height)
+            mbs = _read_modes_inter(bd, h, inter, h.mb_w, h.mb_h)
+        planes = _reconstruct(h, mbs, data, {
+            "last": self.last, "golden": self.golden,
+            "altref": self.altref})
         if inter["copy_to_golden"] == 1:
             self.golden = self.last
         elif inter["copy_to_golden"] == 2:
@@ -498,20 +367,11 @@ class VP8Decoder:
             self.altref = planes
         if inter["refresh_last"]:
             self.last = planes
-        w, hh = self.width, self.height
-        cw, ch = (w + 1) // 2, (hh + 1) // 2
-        return (yp[:hh, :w].astype(np.uint8),
-                up[:ch, :cw].astype(np.uint8),
-                vp[:ch, :cw].astype(np.uint8))
+        self.width, self.height = h.width, h.height
+        return _crop(planes, h.width, h.height)
 
     def decode_rgba(self, data: bytes) -> np.ndarray:
-        from tika_spark.analysis.vp8 import yuv_to_rgb
-        y, u, v = self.decode_yuv(data)
-        rgb = yuv_to_rgb(y, u, v)
-        out = np.empty((*y.shape, 4), dtype=np.uint8)
-        out[:, :, :3] = rgb
-        out[:, :, 3] = 255
-        return out
+        return yuv_to_rgba(*self.decode_yuv(data))
 
 
 # -------------------------------------------------- fixture encoder
@@ -545,131 +405,32 @@ def encode_vp8_inter_yuv(prev, y, u, v, mv=(0, 0), qindex: int = 0,
     v = np.asarray(v, dtype=np.int32)
     hh, w = y.shape
     mb_w, mb_h = (w + 15) >> 4, (hh + 15) >> 4
-    pyp, pup, pvp = prev
-    if pyp.shape != (mb_h * 16, mb_w * 16):
+    if prev[0].shape != (mb_h * 16, mb_w * 16):
         raise ValueError("previous reconstruction shape mismatch")
     if any(c & 1 for c in mv):
         raise ValueError("VP8 MVs are quarter-pel (even eighth-pel)")
-    # pad sources
-    yp = np.zeros((mb_h * 16, mb_w * 16), dtype=np.int32)
-    yp[:hh, :w] = y
-    yp[:hh, w:] = y[:, -1:]
-    yp[hh:, :] = yp[hh - 1:hh, :]
-    ch, cw = u.shape
-    up = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-    vp = np.zeros((mb_h * 8, mb_w * 8), dtype=np.int32)
-    for src, dst in ((u, up), (v, vp)):
-        dst[:ch, :cw] = src
-        dst[:ch, cw:] = src[:, -1:]
-        dst[ch:, :] = dst[ch - 1:ch, :]
+    src = _pad_source(y, u, v, mb_w, mb_h)
     q = _Quant(_clamp_qi(qindex))
-    exty, extu, extv = (_extend(p) for p in prev)
-    ry = np.zeros_like(yp)
-    ru = np.zeros_like(up)
-    rv = np.zeros_like(vp)
+    ext = [_extend(p) for p in prev]
+    recon = [np.zeros_like(p) for p in src]
     mbs = [[_MBInfo() for _ in range(mb_w)] for _ in range(mb_h)]
-    coeff_store = [[None] * mb_w for _ in range(mb_h)]
+    coeffs = [[None] * mb_w for _ in range(mb_h)]
     k = 0
     for my in range(mb_h):
         for mx in range(mb_w):
             mb = mbs[my][mx]
-            mb.segment = 0
             k += 1
             intra = intra_every and (k % intra_every == 0)
             mb.is_inter = not intra
             mb.mv = (0, 0) if intra else tuple(mv)
             mb.ref = ref
-            blocks = {"y2": None, "y": [], "u": [], "v": []}
-            x0, y0 = mx * 16, my * 16
-            if intra:
-                mb.ymode = DC_PRED
-                mb.uvmode = DC_PRED
-                above = ry[y0 - 1, x0:x0 + 16] if my > 0 else None
-                left = ry[y0:y0 + 16, x0 - 1] if mx > 0 else None
-                aleft = (ry[y0 - 1, x0 - 1]
-                         if (mx > 0 and my > 0) else None)
-                ypred = _pred16(DC_PRED, above, left, aleft, 16)
-            else:
-                ypred = _mc_block(exty, y0, x0, 16, 16, mv[0], mv[1])
-            resid = yp[y0:y0 + 16, x0:x0 + 16] - ypred
-            dcs = np.zeros((4, 4), dtype=np.int32)
-            raw = []
-            for i in range(16):
-                r4, c4 = i >> 2, i & 3
-                co = fdct4x4(resid[r4 * 4:r4 * 4 + 4,
-                                   c4 * 4:c4 * 4 + 4])
-                dcs[r4][c4] = co[0][0]
-                raw.append(co)
-            y2co = fwalsh4x4(dcs)
-            y2q = [0] * 16
-            for i in range(16):
-                qq = q.y2dc if i == 0 else q.y2ac
-                c = int(y2co[i >> 2][i & 3])
-                y2q[i] = int(np.sign(c)) * (abs(c) // qq)
-            blocks["y2"] = y2q
-            for co in raw:
-                bq = [0] * 16
-                for i in range(1, 16):
-                    c = int(co[i >> 2][i & 3])
-                    bq[i] = int(np.sign(c)) * (abs(c) // q.y1ac)
-                blocks["y"].append(bq)
-            dcs_dq = iwalsh4x4(_dequant(y2q, q.y2dc, q.y2ac))
-            y_res = np.zeros((16, 16), dtype=np.int32)
-            for i in range(16):
-                r4, c4 = i >> 2, i & 3
-                dq = _dequant(blocks["y"][i], q.y1dc, q.y1ac)
-                dq[0][0] = int(dcs_dq[r4][c4])
-                y_res[r4 * 4:r4 * 4 + 4, c4 * 4:c4 * 4 + 4] = \
-                    idct4x4(dq)
-            ry[y0:y0 + 16, x0:x0 + 16] = np.clip(ypred + y_res, 0, 255)
-            cx0, cy0 = mx * 8, my * 8
-            cmy, cmx = _chroma_mv(mb.mv)
-            for plane, rplane, eplane, key in (
-                    (up, ru, extu, "u"), (vp, rv, extv, "v")):
-                if intra:
-                    above = (rplane[cy0 - 1, cx0:cx0 + 8]
-                             if my > 0 else None)
-                    left = (rplane[cy0:cy0 + 8, cx0 - 1]
-                            if mx > 0 else None)
-                    aleft = (rplane[cy0 - 1, cx0 - 1]
-                             if (mx > 0 and my > 0) else None)
-                    cpred = _pred16(DC_PRED, above, left, aleft, 8)
-                else:
-                    cpred = _mc_block(eplane, cy0, cx0, 8, 8, cmy, cmx)
-                cres = plane[cy0:cy0 + 8, cx0:cx0 + 8] - cpred
-                qs = []
-                res = np.zeros((8, 8), dtype=np.int32)
-                for i in range(4):
-                    r2, c2 = i >> 1, i & 1
-                    bq = _quantize_block(
-                        cres[r2 * 4:r2 * 4 + 4, c2 * 4:c2 * 4 + 4],
-                        q.uvdc, q.uvac)
-                    qs.append(bq)
-                    res[r2 * 4:r2 * 4 + 4, c2 * 4:c2 * 4 + 4] = \
-                        idct4x4(_dequant(bq, q.uvdc, q.uvac))
-                blocks[key] = qs
-                rplane[cy0:cy0 + 8, cx0:cx0 + 8] = np.clip(
-                    cpred + res, 0, 255)
-            coeff_store[my][mx] = blocks
-            mb.skip = int(
-                all(all(c == 0 for c in b) for b in blocks["y"])
-                and all(all(c == 0 for c in b) for b in blocks["u"])
-                and all(all(c == 0 for c in b) for b in blocks["v"])
-                and all(c == 0 for c in blocks["y2"]))
-            mb.has_nonzero = not mb.skip
+            coeffs[my][mx] = _code_mb(mb, src, recon, mx, my, mb_w, q,
+                                      ext=ext)
     # ---- first partition
     skip_prob = 128
     prob_intra, prob_last, prob_gf = 128, 32, 128
     be = _BoolEnc()
-    be.put(0)                                 # segmentation
-    be.put(0)                                 # filter type
-    be.literal(filter_level, 6)
-    be.literal(0, 3)                          # sharpness
-    be.put(0)                                 # lf delta
-    be.literal(0, 2)                          # 1 token partition
-    be.literal(qindex, 7)
-    for _ in range(5):
-        be.put(0)                             # q deltas
+    _write_segment_filter_quant(be, None, 0, filter_level, 0, 1, qindex)
     be.put(1 if "golden" in refresh else 0)   # refresh golden
     be.put(1 if "altref" in refresh else 0)   # refresh alt
     if "golden" not in refresh:
@@ -680,13 +441,7 @@ def encode_vp8_inter_yuv(prev, y, u, v, mv=(0, 0), qindex: int = 0,
     be.put(0)                                 # sign bias alt
     be.put(0)                                 # refresh entropy
     be.put(1 if "last" in refresh else 0)     # refresh last
-    for t in range(4):
-        for b in range(8):
-            for c in range(3):
-                for kk in range(11):
-                    be.put(0, COEFF_UPDATE_PROBS[t][b][c][kk])
-    be.put(1)                                 # mb_no_coeff_skip
-    be.literal(skip_prob, 8)
+    _write_coeff_probs(be, skip_prob)
     be.literal(prob_intra, 8)
     be.literal(prob_last, 8)
     be.literal(prob_gf, 8)
@@ -724,51 +479,7 @@ def encode_vp8_inter_yuv(prev, y, u, v, mv=(0, 0), qindex: int = 0,
             else:
                 be.tree(YMODE_TREE, YMODE_PROB, DC_PRED)
                 be.tree(UV_MODE_TREE, UV_MODE_PROB, DC_PRED)
-    part1 = be.bytes()
-    # ---- token partition
-    et = _BoolEnc()
-    ctx = _NzCtx(mb_w)
-    probs = [[[DEFAULT_COEFF_PROBS[t][b][c] for c in range(3)]
-              for b in range(8)] for t in range(4)]
-    for my in range(mb_h):
-        ctx.start_row()
-        for mx in range(mb_w):
-            mb = mbs[my][mx]
-            if mb.skip:
-                _mb_skip_ctx(ctx, mx, True)
-                continue
-            blocks = coeff_store[my][mx]
-            c = ((1 if ctx.above_y2[mx] else 0)
-                 + (1 if ctx.left_y2 else 0))
-            nz = _write_block(et, probs[1], 0, c, blocks["y2"])
-            ctx.above_y2[mx] = ctx.left_y2 = nz
-            for i in range(16):
-                r4, c4 = i >> 2, i & 3
-                c = ((1 if ctx.above_y[mx][c4] else 0)
-                     + (1 if ctx.left_y[r4] else 0))
-                nz = _write_block(et, probs[0], 1, c, blocks["y"][i])
-                ctx.above_y[mx][c4] = ctx.left_y[r4] = nz
-            for key, anz, lnz in (("u", ctx.above_u, ctx.left_u),
-                                  ("v", ctx.above_v, ctx.left_v)):
-                for i in range(4):
-                    r2, c2 = i >> 1, i & 1
-                    c = ((1 if anz[mx][c2] else 0)
-                         + (1 if lnz[r2] else 0))
-                    nz = _write_block(et, probs[2], 0, c,
-                                      blocks[key][i])
-                    anz[mx][c2] = lnz[r2] = nz
-    tokens = et.bytes()
-    tag = 1 | (0 << 1) | (1 << 4) | (len(part1) << 5)
-    out = bytearray()
-    out += bytes((tag & 0xFF, (tag >> 8) & 0xFF, (tag >> 16) & 0xFF))
-    out += part1
-    out += tokens
-    if filter_level > 0:
-        fh = _FrameHeader()
-        fh.filter_type = 0
-        fh.filter_level = filter_level
-        fh.sharpness = 0
-        fh.segmentation = 0
-        fh.lf_delta = 0
-        _apply_loop_filter(fh, mbs, ry, ru, rv, mb_w, mb_h)
-    return bytes(out), (ry, ru, rv)
+    payload = _finish_frame(be.bytes(),
+                            _write_tokens(mbs, coeffs, mb_w, mb_h, 1),
+                            mbs, recon, mb_w, mb_h, filter_level)
+    return payload, tuple(recon)
