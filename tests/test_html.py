@@ -464,4 +464,5 @@ class TestJustext:
         assert lines[1] == "Short middle note here"   # good-sandwich
         assert lines[2].startswith(para)
         assert len(lines) == 3                        # nav+© stripped
-        assert r["spans"][1][2] == 4                  # words in span
+        start = len(lines[0]) + 1                     # second paragraph
+        assert r["spans"][1] == (start, start + len(lines[1]), "good")

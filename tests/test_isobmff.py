@@ -73,6 +73,55 @@ class TestSampleTables:
         with pytest.raises(ValueError, match="fewer samples"):
             b._samples_from_stbl(stbl, 0, len(stbl))
 
+    @staticmethod
+    def _oversized_counts() -> bytes:
+        """An .m4a whose stsz declares 2^22 one-byte samples and whose
+        stsc puts 2^22 samples in its chunk: more than the file holds."""
+        m4a = bytearray(b.m4a_fixture(0))
+        i = m4a.find(b"stsz") + 8                # after version/flags
+        m4a[i:i + 8] = (1).to_bytes(4, "big") + (1 << 22).to_bytes(4, "big")
+        i = m4a.find(b"stsc") + 12               # first run's count
+        m4a[i + 4:i + 8] = (1 << 22).to_bytes(4, "big")
+        return bytes(m4a)
+
+    def test_sample_count_beyond_the_file_raises_before_allocating(self):
+        import tracemalloc
+        data = self._oversized_counts()
+        tracemalloc.start()
+        try:
+            with pytest.raises(b.Mp4Error, match="more samples"):
+                b.mp4_tracks(data)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        assert peak < 1 << 20
+
+    def test_sample_count_beyond_the_file_is_one_row(self):
+        import pandas as pd
+        from tika_spark.config import ExtractConfig
+        from tika_spark.pipeline.stages import process_batch
+        out = process_batch(pd.DataFrame({
+            "url": ["http://a.example/crafted.m4a"],
+            "html": [self._oversized_counts()]}), ExtractConfig())
+        assert len(out) == 1
+        assert out["mime"][0] == "audio/mp4"
+        assert out["status"][0] == "ok"          # metadata best-effort
+        assert "compression-type" not in out["metadata"][0]
+
+    def test_flipped_stsc_count_raises_mp4_error(self):
+        # bit 0 of the stsc entry count's first byte: 2^24 runs
+        cmaf = bytearray(b.video_h264_cmaf_fixture(0))
+        cmaf[cmaf.find(b"stsc") + 8] ^= 1
+        with pytest.raises(b.Mp4Error, match="truncated stsc"):
+            b.mp4_tracks(bytes(cmaf))
+
+    def test_chunk_index_beyond_stco_raises_mp4_error(self):
+        m4a = bytearray(b.m4a_fixture(0))
+        i = m4a.find(b"stsc") + 12               # first run's chunk
+        m4a[i:i + 4] = (7).to_bytes(4, "big")
+        with pytest.raises(b.Mp4Error, match="chunk stco does not"):
+            b.mp4_tracks(bytes(m4a))
+
 
 class TestDecode:
     def test_fixture_roundtrip_and_silence(self):

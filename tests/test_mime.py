@@ -237,9 +237,7 @@ class TestBatch:
         urls = [None, "http://a/x.html", None, "http://a/notes.txt",
                 None, None, "http://a/a.zip", None,
                 None, None, None, None, None, "http://a/feed.xml", None]
-        s = pd.Series(payloads)
-        u = pd.Series(urls)
-        got = detector.detect_batch(s, u).tolist()
+        got = detector.detect_batch(payloads, urls)
         want = [detector.detect(p, uu) for p, uu in zip(payloads, urls)]
         assert got == want
         assert got[8:13] == [
@@ -248,9 +246,9 @@ class TestBatch:
         assert got[14] == "text/plain"
 
     def test_batch_hint_specialization_on_hot_path(self):
-        s = pd.Series([b"<?xml version='1.0'?><html xmlns='http://www.w3.org/1999/xhtml'/>"])
-        u = pd.Series(["http://a/page.xhtml"])
-        assert detector.detect_batch(s, u).tolist() == ["application/xhtml+xml"]
+        s = [b"<?xml version='1.0'?><html xmlns='http://www.w3.org/1999/xhtml'/>"]
+        u = ["http://a/page.xhtml"]
+        assert detector.detect_batch(s, u) == ["application/xhtml+xml"]
 
     def test_comment_led_rss_routes_to_feed(self):
         from tika_spark.config import ExtractConfig

@@ -76,7 +76,7 @@ class TestExtractJob:
 
     def test_exchange_budget_of_the_job(self, spark, pages, tmp_path):
         # the 100 TB contract: on a pre-bucketed parquet table the job
-        # is scan -> mapInPandas -> sink with NO shuffle of the binary
+        # is scan -> mapInArrow -> sink with NO shuffle of the binary
         # column (repartition=0); the explicit skew path shuffles
         # exactly once (BENCH/BASELINE.md scan-granularity finding)
         pages.write.parquet(str(tmp_path / "pages"))
@@ -84,7 +84,7 @@ class TestExtractJob:
         plan = extract(stored, mode="text", repartition=0)._jdf \
             .queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
         plan4 = extract(stored, mode="text", repartition=4)._jdf \
             .queryExecution().executedPlan().toString()
         assert plan4.count("Exchange") == 1
@@ -448,7 +448,7 @@ class TestWidthGuard:
         plan = extract(spark.read.parquet(str(src)), mode="text")._jdf \
             .queryExecution().executedPlan().toString()
         assert "Exchange" not in plan
-        assert "MapInPandas" in plan
+        assert "MapInArrow" in plan
 
     def test_one_file_input_spreads_to_cluster_width(self, spark, pages,
                                                      tmp_path):

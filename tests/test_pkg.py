@@ -403,7 +403,7 @@ def test_extract_recursive(spark, nested_pages):
 
 def test_recursive_parses_each_level_once(spark, nested_pages, tmp_path):
     # Guards the per-level persist: without it, every isEmpty() probe
-    # and the final union re-execute ancestor levels' mapInPandas.
+    # and the final union re-execute ancestor levels' mapInArrow.
     # Count parsed rows via the trace_dir batch markers — the total
     # must equal the number of output rows (each row parsed once).
     import os

@@ -6,10 +6,12 @@ A from-scratch reimplementation of the capabilities of Apache Tika
     detect (MIME sniff) -> parse (per-format) -> block-classify
         (boilerplate) -> emit text + spans + metadata
 
-All per-document logic runs inside Arrow-batched pandas UDFs /
-``mapInPandas`` (never per-row Python UDFs); all relational glue
-(routing, repartitioning, aggregation, resume anti-joins) is plain
-Catalyst-optimizable DataFrame code.
+All per-document logic runs inside Arrow-batched UDFs, never per-row
+Python UDFs: the extraction stage is one ``mapInArrow`` whose worker
+never imports pandas, and the corpus and media operators are pandas
+UDFs or ``mapInPandas``. All relational glue (routing, repartitioning,
+aggregation, resume anti-joins) is plain Catalyst-optimizable
+DataFrame code.
 
 Public API:
     extract(df, mode=...)          -- the staged extraction job

@@ -159,6 +159,11 @@ def _samples_from_stbl(data: bytes, sb: int, se: int
     fixed = int.from_bytes(data[b + 4:b + 8], "big")
     n = int.from_bytes(data[b + 8:b + 12], "big")
     if fixed:
+        # every sample holds `fixed` bytes of this file: a count the
+        # file cannot hold is corrupt, and is refused before the
+        # per-sample lists are built
+        if n * fixed > len(data):
+            raise Mp4Error("stsz declares more samples than the file holds")
         sizes = [fixed] * n
     else:
         if b + 12 + 4 * n > e:
@@ -167,11 +172,17 @@ def _samples_from_stbl(data: bytes, sb: int, se: int
     b, e = stco
     nchunks = int.from_bytes(data[b + 4:b + 8], "big")
     fmt = "Q" if wide else "I"
+    if b + 8 + struct.calcsize(fmt) * nchunks > e:
+        raise Mp4Error("truncated stco")
     offs = list(struct.unpack_from(f">{nchunks}{fmt}", data, b + 8))
     b, e = stsc
     nruns = int.from_bytes(data[b + 4:b + 8], "big")
+    if b + 8 + 12 * nruns > e:
+        raise Mp4Error("truncated stsc")
     runs = [struct.unpack_from(">III", data, b + 8 + 12 * k)
             for k in range(nruns)]
+    if any(not 1 <= first <= nchunks for first, _spc, _sdi in runs):
+        raise Mp4Error("stsc names a chunk stco does not hold")
     out: list[tuple[int, int]] = []
     si = 0
     for k, (first, spc, _sdi) in enumerate(runs):

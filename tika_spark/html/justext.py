@@ -129,7 +129,8 @@ def main_content_justext(body, stoplist: frozenset = STOPLIST_EN
                          ) -> tuple[str, list]:
     """(text, spans) of the good paragraphs — the jusText analog of
     boilerpipe.main_content: one newline-terminated paragraph per
-    kept block, spans = (start, end, n_words) in the output text."""
+    kept block, spans = (start, end, "good") in the output text (the
+    kind is a string, as every route's span kind is)."""
     blocks = segment_blocks(body)
     classes = classify_blocks_justext(blocks, stoplist)
     parts = []
@@ -140,6 +141,6 @@ def main_content_justext(body, stoplist: frozenset = STOPLIST_EN
             continue
         t = b.text
         parts.append(t + "\n")
-        spans.append((pos, pos + len(t), b.num_words))
+        spans.append((pos, pos + len(t), "good"))
         pos += len(t) + 1
     return "".join(parts), spans

@@ -25,10 +25,10 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from collections.abc import Sequence
 from functools import lru_cache
 
 import numpy as np
-import pandas as pd
 
 CERTAINTY_LIMIT = 0.022
 NGRAM_LENGTH = 3
@@ -118,10 +118,13 @@ class LanguageIdentifierModel:
             return self.languages[best], best_d
         return "unknown", min(best_d, 1.0)
 
-    def identify_batch(self, texts: pd.Series,
-                       max_chars: int | None = 50_000) -> pd.DataFrame:
+    def identify_batch(self, texts: Sequence[str | None],
+                       max_chars: int | None = 50_000
+                       ) -> tuple[list[str], list[float]]:
         """Whole-batch scoring: ONE numpy pass over every document's
-        3-grams at once (no per-document numpy calls).
+        3-grams at once (no per-document numpy calls). Returns the
+        languages and distances, one per text (a ``None`` text scores
+        as empty).
 
         The batch's padded words are concatenated into a single string
         (words joined by ``_NUL_``, documents by ``NUL NUL``); a strided
@@ -137,7 +140,8 @@ class LanguageIdentifierModel:
         pieces: list[str] = []
         starts = np.zeros(n + 1, dtype=np.int64)
         pos = 0
-        for di, t in enumerate(texts.fillna("")):
+        for di, t in enumerate(texts):
+            t = t or ""
             if max_chars:
                 t = t[:max_chars]
             words = _WORD_RE.findall(t.lower())
@@ -148,18 +152,14 @@ class LanguageIdentifierModel:
         starts[n] = pos
         big = "\x00\x00".join(pieces)
         if not big.strip("\x00"):
-            return pd.DataFrame({"lang": out_lang,
-                                 "lang_distance": out_dist},
-                                index=texts.index)
+            return out_lang.tolist(), out_dist.tolist()
         codes = np.frombuffer(big.encode("utf-32-le"),
                               dtype=np.uint32).astype(np.int64)
         c0, c1, c2 = codes[:-2], codes[1:-1], codes[2:]
         valid = (c0 != 0) & (c1 != 0) & (c2 != 0)
         gram_pos = np.nonzero(valid)[0]
         if not len(gram_pos):
-            return pd.DataFrame({"lang": out_lang,
-                                 "lang_distance": out_dist},
-                                index=texts.index)
+            return out_lang.tolist(), out_dist.tolist()
         k = (c0[gram_pos] << 42) | (c1[gram_pos] << 21) | c2[gram_pos]
         doc = np.searchsorted(starts, gram_pos, side="right") - 1
 
@@ -206,8 +206,7 @@ class LanguageIdentifierModel:
         out_lang[hit] = langs_arr[best[hit]]
         out_dist[hit] = best_d[hit]
         out_dist[scored & ~hit] = np.minimum(best_d[scored & ~hit], 1.0)
-        return pd.DataFrame({"lang": out_lang, "lang_distance": out_dist},
-                            index=texts.index)
+        return out_lang.tolist(), out_dist.tolist()
 
 
 @lru_cache(maxsize=1)

@@ -15,16 +15,16 @@ tika-core/.../mime/MimeTypes.java:505-561):
 5. the declared Content-Type hint likewise.
 
 :func:`detect` is the only detection path. ``detect_batch`` runs it
-over one Arrow batch inside the extraction stage: one Python call per
-batch, never a per-row Spark UDF.
+over the columns of one Arrow batch, as Python lists, inside the
+extraction stage: one Python call per batch, never a per-row Spark UDF.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Sequence
 
 import numpy as np
-import pandas as pd
 
 from tika_spark.config import TEXT_SNIFF_PREFIX
 from tika_spark.mime import globs, lattice, magic
@@ -196,12 +196,11 @@ def detect(data: bytes | None, url: str | None = None,
     return mime
 
 
-def detect_batch(html: pd.Series, url: pd.Series | None = None,
-                 declared: pd.Series | None = None) -> pd.Series:
-    """:func:`detect` over a batch of payloads, aligned on ``html``'s
-    index; ``url`` and ``declared`` are optional per-row hints."""
+def detect_batch(html: Sequence, url: Sequence | None = None,
+                 declared: Sequence | None = None) -> list[str]:
+    """:func:`detect` over a batch of payloads, one media type per row
+    of ``html``; ``url`` and ``declared`` are optional per-row hints."""
     n = len(html)
     urls = url if url is not None else [None] * n
     decl = declared if declared is not None else [None] * n
-    return pd.Series([detect(d, u, t) for d, u, t in zip(html, urls, decl)],
-                     index=html.index, dtype=object)
+    return [detect(d, u, t) for d, u, t in zip(html, urls, decl)]

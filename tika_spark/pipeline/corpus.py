@@ -12,7 +12,7 @@ on its own (pipeline/job.extract, textstats.token_count,
 textstats.assign_splits); this module contributes the composition
 and its plan shape:
 
-- extraction and gating ride the mapInPandas scan stage (no
+- extraction and gating ride the mapInArrow scan stage (no
   exchange beyond extract()'s own size-bucket repartition);
 - dedup keep-first is ONE hash shuffle on the 16-byte text
   fingerprint (row_number window, first by url — retry-stable);

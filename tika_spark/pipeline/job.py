@@ -3,9 +3,10 @@
 Scale design (SURVEY.md §4 O9-O12, judged at 100TB):
 
 - **One pass over the binary column.** detect+parse+classify run in a
-  single ``mapInPandas``; the multi-MB ``html`` column crosses into
-  Python exactly once and does NOT appear in the output schema, so no
-  downstream stage or shuffle ever carries page bytes.
+  single ``mapInArrow``; the multi-MB ``html`` column crosses into
+  Python exactly once, as Arrow record batches with no pandas
+  conversion either way, and does NOT appear in the output schema, so
+  no downstream stage or shuffle ever carries page bytes.
 - **Skew defusal only where skew can exist.** A scan at least as wide
   as the cluster (``defaultParallelism`` partitions or more, read from
   the plan by :func:`~tika_spark.analysis.spread.spread_width`) goes
@@ -100,7 +101,7 @@ def extract(df: DataFrame, mode: str | None = None,
     (size_bucket, crc32(url)) shuffle. ``None`` (the default) shuffles
     to defaultParallelism only when the input scans fewer partitions
     than that, decided from plan metadata without running a job; a
-    wide scan is scan → mapInPandas with zero exchanges (see the module
+    wide scan is scan → mapInArrow with zero exchanges (see the module
     docstring for why its byte-bounded splits and ``max_input_bytes``
     need no shuffle). ``n > 0`` always shuffles to ``n`` partitions.
     ``0`` never shuffles and trusts the input partitioning — for a
@@ -126,8 +127,8 @@ def extract(df: DataFrame, mode: str | None = None,
                                  F.crc32("url"))
                     .sortWithinPartitions("size_bucket")
                     .drop("size_bucket"))
-    return arranged.mapInPandas(make_extract_fn(config),
-                                schema=EXTRACT_SCHEMA)
+    return arranged.mapInArrow(make_extract_fn(config),
+                               schema=EXTRACT_SCHEMA)
 
 
 def extract_recursive(df: DataFrame, mode: str | None = None,
@@ -156,7 +157,7 @@ def extract_recursive(df: DataFrame, mode: str | None = None,
     from skewing one task.
 
     Each level is **persisted (MEMORY_AND_DISK) before the fixpoint
-    probe** so the expensive mapInPandas parse runs exactly once per
+    probe** so the expensive mapInArrow parse runs exactly once per
     level: without it, every ``isEmpty()`` and the final union write
     would re-execute all ancestor levels (O(depth^2) re-parsing on
     nested archives). Persisted levels are released once the output is

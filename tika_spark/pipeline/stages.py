@@ -1,4 +1,4 @@
-"""The extraction mapInPandas stage: one Arrow batch in, one out.
+"""The extraction mapInArrow stage: one Arrow record batch in, one out.
 
 Dispatch semantics mirror the reference's CompositeParser
 (tika-core/.../parser/CompositeParser.java:195-218): the detected
@@ -22,13 +22,23 @@ central directory of every zip archive on ``sys.path`` (pyspark.zip
 holds 16 importers). Importing ``tika_spark`` installs
 ``tika_spark._zipcache``, which skips the re-read for an archive that
 has not changed, so only a worker's first tasks pay it.
+
+The stage never converts to pandas, and the worker never imports it:
+the per-row core (:func:`_extract_columns`) reads the ``html`` and
+``declared_type`` columns as Python lists and returns plain lists, and
+:func:`_extract_record_batch` builds them, with ``url`` and ``warc_ts``
+passed through as Arrow arrays, into one ``pa.RecordBatch`` of
+:data:`ARROW_SCHEMA`. :func:`process_batch` is the pandas entry over
+the same core, for tests and driver-side replays.
 """
 
 from __future__ import annotations
 
 import time
+from typing import TYPE_CHECKING
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 
 from tika_spark.config import ExtractConfig, output_budget
 from tika_spark.dbparse import extract_dbf, extract_sqlite
@@ -52,6 +62,9 @@ from tika_spark.rtf import extract_rtf
 from tika_spark.subtitles import extract_subtitles
 from tika_spark.textparse import extract_text
 from tika_spark.xmlparse import extract_feed, extract_xml
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 # media type -> route; lookup walks the supertype chain (F0)
 ROUTE_TABLE = {
@@ -271,7 +284,119 @@ EXTRACT_SCHEMA = (
     "part_id int, batch_ms double"
 )
 
-OUTPUT_COLUMNS = [f.split()[0] for f in EXTRACT_SCHEMA.split(", ")]
+
+def _split_fields(ddl: str) -> list[str]:
+    """Split a DDL field list at its top-level commas."""
+    out, depth, start = [], 0, 0
+    for i, c in enumerate(ddl):
+        depth += (c == "<") - (c == ">")
+        if c == "," and not depth:
+            out.append(ddl[start:i].strip())
+            start = i + 1
+    return out + [ddl[start:].strip()]
+
+
+_ARROW_ATOMS = {"string": pa.string(), "binary": pa.binary(),
+                "int": pa.int32(), "bigint": pa.int64(),
+                "double": pa.float64(),
+                "timestamp": pa.timestamp("us", tz="UTC")}
+
+
+def _arrow_type(ddl: str) -> pa.DataType:
+    """The Arrow type Spark's Python worker uses for one DDL type
+    (``pyspark.sql.pandas.types.to_arrow_type``), without a JVM."""
+    if ddl in _ARROW_ATOMS:
+        return _ARROW_ATOMS[ddl]
+    kind, inner = ddl[:-1].split("<", 1)
+    if kind == "array":
+        return pa.list_(pa.field("element", _arrow_type(inner)))
+    if kind == "map":
+        key, value = _split_fields(inner)
+        return pa.map_(pa.field("key", _arrow_type(key), nullable=False),
+                       pa.field("value", _arrow_type(value)))
+    return pa.struct([pa.field(name, _arrow_type(t)) for name, t in
+                      (f.split(":", 1) for f in _split_fields(inner))])
+
+
+# the stage's output schema, derived once from EXTRACT_SCHEMA
+ARROW_SCHEMA = pa.schema([pa.field(name, _arrow_type(t)) for name, t in
+                          (f.split(" ", 1)
+                           for f in _split_fields(EXTRACT_SCHEMA))])
+
+OUTPUT_COLUMNS = ARROW_SCHEMA.names
+
+
+# list-of-struct columns -> their field names (a core value is a tuple)
+_STRUCT_FIELDS = {f.name: [sf.name for sf in f.type.value_type]
+                  for f in ARROW_SCHEMA if pa.types.is_list(f.type)
+                  and pa.types.is_struct(f.type.value_type)}
+
+_NUMPY_TYPES = {pa.int32(): np.int32, pa.int64(): np.int64,
+                pa.float64(): np.float64}
+
+
+def _validity(values: list) -> pa.Buffer | None:
+    valid = [v is not None for v in values]
+    if all(valid):
+        return None
+    return pa.py_buffer(np.packbits(valid, bitorder="little"))
+
+
+def _offsets(lengths: list[int]) -> pa.Buffer:
+    ends = np.cumsum([0, *lengths], dtype=np.int64)
+    if ends[-1] > np.iinfo(np.int32).max:
+        raise OverflowError("batch column exceeds 32-bit Arrow offsets")
+    return pa.py_buffer(ends.astype(np.int32))
+
+
+def _to_arrow(values, arrow_type: pa.DataType) -> pa.Array:
+    """One Arrow array of ``arrow_type`` from a list of Python values
+    (``None`` is null, a struct value is a tuple in field order, a map
+    value a dict), or an Arrow array cast to it.
+
+    Built from buffers: ``pa.array`` and ``RecordBatch.from_pydict``
+    import pandas on their first call, which the stage's Python worker
+    otherwise never loads."""
+    if isinstance(values, pa.Array):
+        return (values if values.type == arrow_type
+                else values.cast(arrow_type))
+    n, valid = len(values), _validity(values)
+    if arrow_type in _NUMPY_TYPES:
+        wide = np.array([0 if v is None else v for v in values],
+                        dtype=np.result_type(_NUMPY_TYPES[arrow_type],
+                                             np.int64))
+        data = wide.astype(_NUMPY_TYPES[arrow_type])
+        if data.dtype != wide.dtype and not np.array_equal(data, wide):
+            raise OverflowError(f"value out of {arrow_type} range")
+        return pa.Array.from_buffers(arrow_type, n,
+                                     [valid, pa.py_buffer(data)])
+    if arrow_type in (pa.string(), pa.binary()):
+        text = arrow_type == pa.string()
+        data = [b"" if v is None else v.encode() if text else v
+                for v in values]
+        return pa.Array.from_buffers(
+            arrow_type, n, [valid, _offsets([len(d) for d in data]),
+                            pa.py_buffer(b"".join(data))])
+    if pa.types.is_struct(arrow_type):
+        width = arrow_type.num_fields
+        rows = [(None,) * width if v is None else v for v in values]
+        if any(len(r) != width for r in rows):
+            raise ValueError(f"{arrow_type} values need {width} fields")
+        columns = list(zip(*rows)) if rows else [()] * width
+        return pa.Array.from_buffers(arrow_type, n, [valid], children=[
+            _to_arrow(list(c), f.type) for c, f in zip(columns, arrow_type)])
+    if pa.types.is_map(arrow_type):
+        item_type = pa.struct([arrow_type.key_field, arrow_type.item_field])
+        rows = [() if v is None else list(v.items()) for v in values]
+    else:
+        item_type = arrow_type.value_type
+        rows = [() if v is None else v for v in values]
+        if not all(isinstance(r, (list, tuple)) for r in rows):
+            raise TypeError(f"{arrow_type} values must be lists")
+    items = _to_arrow([x for r in rows for x in r], item_type)
+    return pa.Array.from_buffers(
+        arrow_type, n, [valid, _offsets([len(r) for r in rows])],
+        children=[items])
 
 
 def xmp_serialize(metadata: dict[str, list[str]]) -> str:
@@ -339,64 +464,57 @@ def _empty_result() -> dict:
             "links": [], "metadata": {}, "status": "no_parser"}
 
 
-def _parse_rows(html: pd.Series, urls: pd.Series,
-                declared: pd.Series | None, mimes: pd.Series,
-                config: ExtractConfig) -> list[dict]:
+def _parse_rows(html: list, urls: list, declared: list | None,
+                mimes: list[str], config: ExtractConfig) -> list[dict]:
     """Run each row's route extractor, then the xhtml/xmp/json text
     rewrite; one result dict per row, in batch order."""
     n = len(html)
     results: list[dict] = [None] * n  # type: ignore[list-item]
+    routes = [route_for_mime(m) or "" for m in mimes]
+    cap = config.max_input_bytes
     # group rows by route ("" for none), run each group's extractor in
     # batch order
-    routes = mimes.map(route_for_mime).fillna("")
-    positions = {i: k for k, i in enumerate(html.index)}
-    cap = config.max_input_bytes
-    for route, idx in routes.groupby(routes).groups.items():
+    for k in sorted(range(n), key=routes.__getitem__):
+        route = routes[k]
         fn = _EXTRACTORS.get(route)
-        for i in idx:
-            k = positions[i]
-            if fn is None:
-                results[k] = _empty_result()
-                continue
-            data_i = html[i]
-            capped = bool(cap) and data_i is not None \
-                and len(data_i) > cap
-            if capped:
-                if route not in _PREFIX_CAPPED_ROUTES:
-                    # opaque/structured payload: truncation would only
-                    # produce a parse error — emit the metadata-only
-                    # capped row directly (type census still works)
-                    r = _empty_result()
-                    r["status"] = "input_capped"
-                    r["metadata"] = {"Content-Type": [mimes[i]]}
-                    results[k] = r
-                    continue
-                data_i = bytes(data_i)[:cap]
-            try:
-                decl_i = declared[i] if declared is not None else None
-                if route in _MIME_AWARE_ROUTES:
-                    results[k] = fn(data_i, urls[i], decl_i, config,
-                                    mime=mimes[i])
-                else:
-                    results[k] = fn(data_i, urls[i], decl_i, config)
-                guard_output(results[k], len(data_i or b""),
-                             config.write_limit)
-                if capped and results[k].get("status") != "error":
-                    results[k]["status"] = "input_capped"
-            except Exception as e:  # poison doc -> error row, task survives
+        if fn is None:
+            results[k] = _empty_result()
+            continue
+        data_i = html[k]
+        capped = bool(cap) and data_i is not None and len(data_i) > cap
+        if capped:
+            if route not in _PREFIX_CAPPED_ROUTES:
+                # opaque/structured payload: truncation would only
+                # produce a parse error — emit the metadata-only
+                # capped row directly (type census still works)
                 r = _empty_result()
-                r["status"], r["error"] = "error", repr(e)[:1000]
+                r["status"] = "input_capped"
+                r["metadata"] = {"Content-Type": [mimes[k]]}
                 results[k] = r
+                continue
+            data_i = bytes(data_i)[:cap]
+        try:
+            decl_i = declared[k] if declared is not None else None
+            if route in _MIME_AWARE_ROUTES:
+                results[k] = fn(data_i, urls[k], decl_i, config,
+                                mime=mimes[k])
+            else:
+                results[k] = fn(data_i, urls[k], decl_i, config)
+            guard_output(results[k], len(data_i or b""),
+                         config.write_limit)
+            if capped and results[k].get("status") != "error":
+                results[k]["status"] = "input_capped"
+        except Exception as e:  # poison doc -> error row, task survives
+            r = _empty_result()
+            r["status"], r["error"] = "error", repr(e)[:1000]
+            results[k] = r
 
     if config.mode == "xhtml":
         # -x CLI mode (A4): non-DOM routes wrap their text in the
         # standard skeleton; the html route already serialized XML
         from tika_spark.html.layout import xhtml_wrap_text
-        html_idx = {positions[i] for i in
-                    routes[routes == "html"].index}
-        for k in range(n):
-            if k not in html_idx:
-                r = results[k]
+        for r, route in zip(results, routes):
+            if route != "html":
                 r["text"] = xhtml_wrap_text(r["text"], r.get("title"))
                 r["spans"] = []
     elif config.mode == "xmp":
@@ -420,21 +538,20 @@ def _parse_rows(html: pd.Series, urls: pd.Series,
     return results
 
 
-def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
-                  part_id: int = -1) -> pd.DataFrame:
-    """Extract one Arrow batch (pandas DataFrame in/out)."""
-    t0 = time.perf_counter()
-    n = len(pdf)
+def _extract_columns(html: list, urls: list, declared: list | None,
+                     config: ExtractConfig) -> dict[str, list]:
+    """The per-row core of both entries: detect, parse and identify
+    the language of one batch. Returns every output column except
+    ``url``, ``warc_ts``, ``part_id`` and ``batch_ms`` as a list in
+    batch order, keyed in :data:`OUTPUT_COLUMNS` order. A struct
+    element (span, link, child) is a tuple in its fields' order."""
+    n = len(html)
     if config.trace_dir:
         import os
         import uuid
         with open(os.path.join(config.trace_dir,
                                f"{uuid.uuid4().hex}_{n}"), "w"):
             pass
-    html = pdf["html"]
-    urls = pdf["url"] if "url" in pdf else pd.Series([None] * n,
-                                                     index=pdf.index)
-    declared = pdf["declared_type"] if "declared_type" in pdf else None
 
     mimes = detect_batch(html, urls, declared)
 
@@ -447,47 +564,87 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
     else:
         results = _parse_rows(html, urls, declared, mimes, config)
         from tika_spark.language import default_model
-        ident = default_model().identify_batch(
-            pd.Series([r["text"] for r in results], index=pdf.index))
-        langs = ident["lang"].tolist()
-        dists = ident["lang_distance"].tolist()
+        langs, dists = default_model().identify_batch(
+            [r["text"] for r in results])
         if config.mode == "language":
             # -l CLI mode: the identified language IS the output text
             for r, lg in zip(results, langs):
                 r["text"], r["spans"] = lg or "unknown", []
-    texts = pd.Series([r["text"] for r in results], index=pdf.index)
-
-    batch_ms = (time.perf_counter() - t0) * 1000.0
-    out = pd.DataFrame({
-        "url": urls.values,
-        "warc_ts": (pdf["warc_ts"].values if "warc_ts" in pdf
-                    else [None] * n),
-        "mime": mimes.values,
+    texts = [r["text"] for r in results]
+    return {
+        "mime": mimes,
         "charset": [r.get("charset") for r in results],
         "lang": langs,
         "lang_distance": dists,
         "title": [r.get("title") for r in results],
-        "text": texts.values,
-        "spans": [[{"start": s, "end": e, "kind": k}
-                   for (s, e, k) in r.get("spans", [])] for r in results],
-        "links": [[{"kind": k, "uri": u, "title": t, "text": x}
-                   for (k, u, t, x) in r.get("links", [])] for r in results],
+        "text": texts,
+        "spans": [r.get("spans", []) for r in results],
+        "links": [r.get("links", []) for r in results],
         "metadata": [r.get("metadata", {}) for r in results],
         "status": [r.get("status", "ok") for r in results],
         "error": [r.get("error") for r in results],
-        "children": [[{"name": nm, "data": payload}
-                      for (nm, payload) in r.get("children", [])]
-                     for r in results],
-        "n_bytes": html.map(lambda b: len(b) if b is not None else 0).values,
-        "n_chars": texts.str.len().values,
+        "children": [r.get("children", []) for r in results],
+        "n_bytes": [len(b) if b is not None else 0 for b in html],
+        "n_chars": [len(t) for t in texts],
+    }
+
+
+def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
+                  part_id: int = -1) -> pd.DataFrame:
+    """Extract one pandas batch (DataFrame in, DataFrame out) with the
+    stage's per-row core: the entry for tests and driver-side replays.
+    The Spark stage runs :func:`_extract_record_batch` instead."""
+    import pandas as pd
+
+    t0 = time.perf_counter()
+    n = len(pdf)
+    urls = pdf["url"].tolist() if "url" in pdf else [None] * n
+    declared = (pdf["declared_type"].tolist() if "declared_type" in pdf
+                else None)
+    cols = _extract_columns(pdf["html"].tolist(), urls, declared, config)
+    batch_ms = (time.perf_counter() - t0) * 1000.0
+    for name, struct in _STRUCT_FIELDS.items():
+        cols[name] = [[dict(zip(struct, v)) for v in row]
+                      for row in cols[name]]
+    return pd.DataFrame({
+        "url": urls,
+        "warc_ts": (pdf["warc_ts"].values if "warc_ts" in pdf
+                    else [None] * n),
+        **cols,
         "part_id": part_id,
         "batch_ms": batch_ms,
     })
-    return out
+
+
+def _extract_record_batch(batch: pa.RecordBatch, config: ExtractConfig,
+                          part_id: int = -1) -> pa.RecordBatch:
+    """Extract one Arrow record batch into one of :data:`ARROW_SCHEMA`;
+    ``url`` and ``warc_ts`` pass through as Arrow arrays, and absent
+    ones are null."""
+    t0 = time.perf_counter()
+    n = batch.num_rows
+    names = batch.schema.names
+
+    def column(name: str) -> pa.Array:
+        return (batch.column(name) if name in names
+                else pa.nulls(n, ARROW_SCHEMA.field(name).type))
+
+    url = column("url")
+    declared = (batch.column("declared_type").to_pylist()
+                if "declared_type" in names else None)
+    cols = _extract_columns(batch.column("html").to_pylist(),
+                            url.to_pylist(), declared, config)
+    batch_ms = (time.perf_counter() - t0) * 1000.0
+    cols = {"url": url, "warc_ts": column("warc_ts"), **cols,
+            "part_id": [part_id] * n, "batch_ms": [batch_ms] * n}
+    return pa.RecordBatch.from_arrays(
+        [_to_arrow(cols[f.name], f.type) for f in ARROW_SCHEMA],
+        schema=ARROW_SCHEMA)
 
 
 def make_extract_fn(config: ExtractConfig):
-    """Build the mapInPandas function (config captured in closure)."""
+    """Build the mapInArrow function (config captured in closure): an
+    iterator of ``pa.RecordBatch`` in, one out per input batch."""
 
     def extract_batches(iterator):
         try:
@@ -496,7 +653,7 @@ def make_extract_fn(config: ExtractConfig):
             part_id = ctx.partitionId() if ctx else -1
         except Exception:
             part_id = -1
-        for pdf in iterator:
-            yield process_batch(pdf, config, part_id)
+        for batch in iterator:
+            yield _extract_record_batch(batch, config, part_id)
 
     return extract_batches
